@@ -2,9 +2,9 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is executed to completion (collect) and timed wall-clock; a short
-warm-up query first absorbs JVM/session startup so per-query numbers measure
-the plans, not the JVM boot.
+Each row times `QUERIES[name]` — the same callable the parity gate checks —
+run to completion (collect), wall-clock; warm-up passes first absorb
+JVM/session startup so per-query numbers measure the plans, not the JVM boot.
 """
 
 from __future__ import annotations
@@ -16,15 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ophidia_server_spark.registry import BENCH_VARIANTS, QUERIES  # noqa: E402
-
-
-def _bench_fn(name):
-    """The plan bench times for `name`: the raw-operator variant when the
-    gate entry became a verdict grade in round 7 (BENCH_VARIANTS keeps the
-    recorded per-query numbers measuring the same work as rounds 1-6),
-    else the gate query itself."""
-    return BENCH_VARIANTS.get(name, QUERIES[name])
+from ophidia_server_spark import session  # noqa: E402
+from ophidia_server_spark.registry import QUERIES  # noqa: E402
 from ophidia_server_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -133,7 +126,7 @@ HEADLINE = [
     # round-7: real BPE tokenization (broadcast-rank Arrow map stage; the
     # merge training is amortized once per session via the registry cache),
     # the Bloom set-membership sketch, and the continuous-ingest novelty
-    # gate against the materialized MinHash index (raw-operator variant)
+    # gate against the materialized MinHash index
     "text_bpe_apply",
     "events_bloom_bits",
     "dedup_incremental_novelty",
@@ -294,7 +287,7 @@ def main() -> None:
         warm_dir = sf_dir
     for name in HEADLINE:
         try:
-            _bench_fn(name)(spark, warm_dir).collect()
+            QUERIES[name](spark, warm_dir).collect()
         except Exception:  # noqa: BLE001 - warm-up is best-effort
             pass
     # Pre-touch the target-SF parquet bytes: this microVM reclaims page cache
@@ -317,15 +310,14 @@ def main() -> None:
     # shapes (measured 2-3x first-run swings on the codegen-heavy queries).
     for name in HEADLINE:
         try:
-            _bench_fn(name)(spark, sf_dir).collect()
+            QUERIES[name](spark, sf_dir).collect()
         except Exception:  # noqa: BLE001 - warm-up is best-effort
             pass
     # the warm pass populated the build-once vector-store cache; clear it so
     # the timed sim_*_build rows measure a REAL build (training + partitioned
-    # write), not a cache hit — the probes then repopulate it in plan order
-    from ophidia_server_spark import registry as _registry
-
-    _registry._VSTORE_CACHE.clear()
+    # write), not a cache hit — the probes then repopulate it in plan order.
+    # The other session caches (tables, PQ, BPE, MinHash index) stay warm.
+    session.clear("vstore")
     # SPARK_GRAFT_BENCH_REPEATS=k timed interleaved passes (default 2),
     # per-query minimum as the headline number: this microVM's CPU
     # allocation swings run-to-run (identical code has measured 26-72 s for
@@ -345,7 +337,7 @@ def main() -> None:
             if rep and name in once:
                 continue
             t0 = time.perf_counter()
-            _bench_fn(name)(spark, sf_dir).collect()
+            QUERIES[name](spark, sf_dir).collect()
             samples[name].append(round(time.perf_counter() - t0, 3))
     timings = {n: min(s) for n, s in samples.items()}
 

@@ -32,12 +32,12 @@ resumed jobs regenerate identical starting points.
 from __future__ import annotations
 
 from typing import NamedTuple
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.ckpt import checkpoint as _ckpt
+from ophidia_server_spark.session import session_cached
 
 
 class ALSResult(NamedTuple):
@@ -217,21 +217,21 @@ class _ExprBundle(NamedTuple):
 # 10 s als() run at sf0.1 spent rebuilding the SAME O(k^3) expression
 # trees six times on the driver, serial and un-parallelizable. Unresolved
 # Column objects are immutable descriptors, so reusing them across
-# half-step plans is exactly equivalent to rebuilding them. Keyed WEAKLY
-# by session: Columns hold py4j references into that session's JVM, so a
-# stopped session's bundle must die with it (and does, with the key).
-_BUNDLES: WeakKeyDictionary = WeakKeyDictionary()
-
-
+# half-step plans is exactly equivalent to rebuilding them. Cached per
+# session (session.session_cached): Columns hold py4j references into
+# that session's JVM, so a stopped session's bundle must die with it.
 def _expr_bundle(spark, k: int, reg: float) -> _ExprBundle:
     # The solver gate is part of the key: _JVM_SOLVE_MAX_K / _MIN_REG are
     # module-level (tests monkeypatch them to force the Arrow path), so a
     # bundle built under one gate outcome must never serve the other.
     use_jvm = reg >= _JVM_SOLVE_MIN_REG and k <= _JVM_SOLVE_MAX_K
-    per_session = _BUNDLES.setdefault(spark, {})
-    bundle = per_session.get((k, reg, use_jvm))
-    if bundle is not None:
-        return bundle
+    return session_cached(
+        spark, ("als", k, reg, use_jvm),
+        lambda: _build_expr_bundle(k, reg, use_jvm),
+    )
+
+
+def _build_expr_bundle(k: int, reg: float, use_jvm: bool) -> _ExprBundle:
     v = F.col("__v")
     # packed symmetric outer product — k(k+1)/2 entries instead of k^2
     # (guide §2.3 shuffle-fewer-bytes; see _packed_pairs for the bit-exact
@@ -310,11 +310,9 @@ def _expr_bundle(spark, k: int, reg: float) -> _ExprBundle:
     # exactly non-negative already)
     e2 = F.greatest(F.lit(0.0), F.col("__r2") - 2.0 * ub + uau)
     obj = e2 + F.lit(reg) * (F.col("__n") * u2 + F.col("__v2"))
-    bundle = _ExprBundle(
+    return _ExprBundle(
         row_cols, agg_cols, solve_steps, udf_col, obj.alias("__obj")
     )
-    per_session[(k, reg, use_jvm)] = bundle
-    return bundle
 
 
 def _half_step_plan(
@@ -442,9 +440,9 @@ def als(
     # uf before any use, so counting the init table computed and cached
     # k md5-derived factor columns per user that nothing ever read (an
     # un-checkpointed count prunes them; a marked RDD's count cannot).
-    # Same row count either way; a fused single-job countDistinct gate
-    # was A/B-measured equal-to-slightly-worse (it recomputes the item
-    # distinct inside the broadcast build) and not kept.
+    # Same row count either way. A fused single-job countDistinct gate was
+    # considered and not kept: it would recompute the item distinct inside
+    # the broadcast build, and no valid measurement showed it faster.
     bc_items = _fits_broadcast(vf.count(), k)
     bc_users = _fits_broadcast(r.select("user").distinct().count(), k)
     objectives: list[float] = []

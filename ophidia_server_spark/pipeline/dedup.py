@@ -238,8 +238,8 @@ def _guard_banded_candidates(
     dropDuplicates) — with one grouped count + one scalar aggregate, before
     any quadratic work runs. The sf10 lesson promoted to code: at that
     decade dHash generated 19.5B candidates under clone cliques, a fact
-    previously discoverable only via a side probe script
-    (scripts/pair_law_probe.py); now every banded API totals it up front.
+    previously discoverable only via a side probe (BASELINE.md, banded
+    candidate law); now every banded API totals it up front.
 
     Above `max_candidates`, raises BucketCardinalityError naming the ten
     hottest buckets. `cap_bucket=k` deterministically truncates every
@@ -1631,7 +1631,7 @@ def duplicate_spans(
     DEFAULT since round 11) shuffles 8-byte xxhash64 codes instead of
     k-token strings — the sf10 probe measured the string keys at 5.4x the
     key bytes and 2.1x the wall time for byte-identical spans
-    (scripts/span_hashkey_probe.py, BASELINE.md round-11 decade section).
+    (BASELINE.md round-11 decade section).
     Exact modulo 64-bit collisions (~n_grams²/2^65 — vanishing below
     trillions of distinct grams); pass hash_key=False for the
     collision-free string keys when auditing."""

@@ -44,12 +44,12 @@ def _bc_rows_fit(n_rows: int, row_bytes: int = 48) -> bool:
 def clean_and_orient(
     edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
 ) -> tuple[DataFrame, DataFrame]:
-    """Triangle prelude, shared by `triangle_counts` and the decade
-    probe's estimate pass (scripts/triangle_estimate_probe.py) so the two
-    can never drift: drop self-loops, canonicalize direction + dedup
-    (`und`: (__a < __b)), then degree-orient every edge from the
-    lower-(degree, id) endpoint (`oriented`: (__lo, __hi)) — the Suri &
-    Vassilvitskii skew bound. Returns (und, oriented), both lazy."""
+    """Triangle prelude of `triangle_counts` (BASELINE.md's decade wedge
+    estimates were taken over this same prelude): drop self-loops,
+    canonicalize direction + dedup (`und`: (__a < __b)), then
+    degree-orient every edge from the lower-(degree, id) endpoint
+    (`oriented`: (__lo, __hi)) — the Suri & Vassilvitskii skew bound.
+    Returns (und, oriented), both lazy."""
     raw = edges.select(
         F.col(src_col).alias("__x"), F.col(dst_col).alias("__y")
     ).filter(F.col("__x") != F.col("__y"))

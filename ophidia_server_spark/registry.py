@@ -17,6 +17,9 @@ build -> array-op -> export chain.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,20 +43,27 @@ from ophidia_server_spark.pipeline import similarity as sim
 from ophidia_server_spark.pipeline import text as tx
 from ophidia_server_spark.pipeline import vector_store as vs
 from ophidia_server_spark.plans.workflow import WorkflowEngine
-from ophidia_server_spark.session import load_tables, ship_package
+from ophidia_server_spark.session import load_tables, session_cached, ship_package
 from ophidia_server_spark.streaming import windows as win
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
 
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (id(spark), sf_dir)
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = load_tables(spark, sf_dir)
-    return _TABLE_CACHE[key]
+    return session_cached(
+        spark, ("tables", sf_dir), lambda: load_tables(spark, sf_dir)
+    )
+
+
+def _scratch_dir(tag: str, sf_dir: str) -> str:
+    """Per-process temp path of a build-once artifact over `sf_dir`. The
+    FULL sf_dir is hashed in, so two datasets sharing a basename (/a/sf10
+    vs /b/sf10) never overwrite each other's store."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(
+        tempfile.gettempdir(), f"ophspark_{tag}_{digest}_{os.getpid()}"
+    )
 
 
 def q(name: str, oracle: str | None = None):
@@ -1195,30 +1205,22 @@ def _mf(spark, sf_dir, arg: str) -> DataFrame:
     return flt.compile_massive(cat, arg).select(F.col("cube_id").cast("long").alias("cube_id"))
 
 
-_SNAPCAT_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _snapcat(spark, sf_dir) -> str:
     """Write-once snapshot-store catalog per (session, dataset) — the
     persistent, continuously-appendable backend the 100 TB deployment
     registers cubes into (catalog.snapshot_catalog_write over layout.py's
     versioned store, file stats on container/level/path/cube_id)."""
-    import os as _os
     import shutil
-    import tempfile
 
-    key = (id(spark), sf_dir)
-    if key not in _SNAPCAT_CACHE:
-        base = _os.path.join(
-            tempfile.gettempdir(),
-            f"ophspark_snapcat_{_os.path.basename(sf_dir.rstrip('/'))}_{_os.getpid()}",
-        )
+    def build() -> str:
+        base = _scratch_dir("snapcat", sf_dir)
         shutil.rmtree(base, ignore_errors=True)
         cat_mod.snapshot_catalog_write(
             catalog_from_part(_t(spark, sf_dir)["part"]), base
         )
-        _SNAPCAT_CACHE[key] = base
-    return _SNAPCAT_CACHE[key]
+        return base
+
+    return session_cached(spark, ("snapcat", sf_dir), build)
 
 
 @q(
@@ -1786,42 +1788,31 @@ def dedup_cluster_exact(spark, sf_dir):
     )
 
 
-_VSTORE_CACHE: dict[tuple[int, str, str], "vs.VectorIndex"] = {}
-
-
 def _vstore(spark, sf_dir, kind: str):
     """Build-once vector store per (session, dataset): the import side of the
     reference's import-once/query-many model (oph_ophidiadb_query.h:48).
     First touch pays codebook training + assignment + partitioned write; every
     probe after that is a partition-pruned read with no Python stage."""
-    import os as _os
-    import tempfile
 
-    key = (id(spark), sf_dir, kind)
-    if key not in _VSTORE_CACHE:
-        path = _os.path.join(
-            tempfile.gettempdir(),
-            f"ophspark_vstore_{_os.path.basename(sf_dir.rstrip('/'))}_{kind}_{_os.getpid()}",
-        )
+    def build() -> "vs.VectorIndex":
+        path = _scratch_dir(f"vstore_{kind}", sf_dir)
         emb = _t(spark, sf_dir)["embeddings"]
         if kind == "ivf":
-            _VSTORE_CACHE[key] = vs.ivf_build(emb, path, n_cells=16)
-        elif kind == "ivfpq":
+            return vs.ivf_build(emb, path, n_cells=16)
+        if kind == "ivfpq":
             # PQ codes INSIDE the IVF cells (FAISS IVFPQ shape): probes
             # ADC-scan the 8-byte code column in the pruned partitions and
             # exact-rerank only the shortlist's float vectors
-            _VSTORE_CACHE[key] = vs.ivf_build(
-                emb, path, n_cells=16, codes="pq"
-            )
-        elif kind == "lsh_mt":
+            return vs.ivf_build(emb, path, n_cells=16, codes="pq")
+        if kind == "lsh_mt":
             # the multi-table dial (see lsh_build docstring): this corpus
             # is structureless (exact top-10 sit near cosine ~0.3), so the
             # >= 0.5 recall bar costs a wide dial — 12 tables of 5 bits,
             # hamming-2 multiprobe at query time
-            _VSTORE_CACHE[key] = vs.lsh_build(emb, path, bits=5, tables=12)
-        else:
-            _VSTORE_CACHE[key] = vs.lsh_build(emb, path, bits=8)
-    return _VSTORE_CACHE[key]
+            return vs.lsh_build(emb, path, bits=5, tables=12)
+        return vs.lsh_build(emb, path, bits=8)
+
+    return session_cached(spark, ("vstore", sf_dir, kind), build)
 
 
 def _topk_grade(spark, sf_dir, out, query_vec, k):
@@ -2044,7 +2035,17 @@ def dedup_embedding_removal(spark, sf_dir):
     return emb.join(losers, "vec_id", "left_anti").select("vec_id")
 
 
-_PQ_CACHE: dict[tuple[int, str], tuple] = {}
+def _pq_index(spark, sf_dir) -> tuple:
+    """Build-once PQ codebooks + persisted codes per (session, dataset)."""
+
+    def build() -> tuple:
+        emb = _t(spark, sf_dir)["embeddings"]
+        books = sim.pq_codebooks(emb, m=8, k=16)
+        codes = sim.pq_encode(emb, books).persist()
+        codes.count()
+        return books, codes
+
+    return session_cached(spark, ("pq", sf_dir), build)
 
 
 @q("sim_pq_topk", _TOPK_GRADE_SQL)
@@ -2054,13 +2055,7 @@ def sim_pq_topk(spark, sf_dir):
     # pq_*); codebooks+codes cached per dataset (build-once index artifacts).
     # Graded via _topk_grade; recall rides sim_pq_recall.
     emb = _t(spark, sf_dir)["embeddings"]
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CACHE:
-        books = sim.pq_codebooks(emb, m=8, k=16)
-        codes = sim.pq_encode(emb, books).persist()
-        codes.count()
-        _PQ_CACHE[key] = (books, codes)
-    books, codes = _PQ_CACHE[key]
+    books, codes = _pq_index(spark, sf_dir)
     qv = _query_vec(spark, sf_dir)
     out = sim.pq_topk_rerank(codes, emb, books, qv, k=10)
     return _topk_grade(spark, sf_dir, out, qv, k=10)
@@ -3979,18 +3974,13 @@ def text_token_bpe(spark, sf_dir):
 
 # Trained-BPE merge list cached per (session, dataset): train once, apply
 # in the same session — the build-once artifact shape (_vstore precedent)
-_BPE_CACHE: dict = {}
-
-
 def _bpe_merges(spark, sf_dir):
-    key = (id(spark), sf_dir)
-    if key not in _BPE_CACHE:
-        from ophidia_server_spark.pipeline import bpe
+    from ophidia_server_spark.pipeline import bpe
 
-        _BPE_CACHE[key] = bpe.bpe_train(
-            _t(spark, sf_dir)["documents"], num_merges=200
-        )
-    return _BPE_CACHE[key]
+    return session_cached(
+        spark, ("bpe", sf_dir),
+        lambda: bpe.bpe_train(_t(spark, sf_dir)["documents"], num_merges=200),
+    )
 
 
 @q(
@@ -7187,8 +7177,8 @@ def events_attribution_position(spark, sf_dir):
 
 def triangle_gate_edges(spark, sf_dir):
     """The triangle gate's parts-bought-together edge list (parts sharing
-    an order) — shared with scripts/triangle_estimate_probe.py so the
-    decade probe can never drift from what the gate actually counts."""
+    an order); the decade wedge estimates in BASELINE.md counted this
+    same edge list."""
     li = _t(spark, sf_dir)["lineitem"].select("l_orderkey", "l_partkey")
     a, b = li.alias("a"), li.alias("b")
     return a.join(
@@ -8605,13 +8595,7 @@ def sim_pq_recall(spark, sf_dir):
     codes over 64 dims are a 32x compression, so the floor is the
     useful-approximation bar)."""
     emb = _t(spark, sf_dir)["embeddings"]
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CACHE:
-        books = sim.pq_codebooks(emb, m=8, k=16)
-        codes = sim.pq_encode(emb, books).persist()
-        codes.count()
-        _PQ_CACHE[key] = (books, codes)
-    books, codes = _PQ_CACHE[key]
+    books, codes = _pq_index(spark, sf_dir)
     rows = _recall_rounds(
         spark, emb,
         lambda qv: sim.pq_topk_rerank(codes, emb, books, qv, k=10,
@@ -9401,177 +9385,19 @@ def dedup_removal_grade(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# bench variants: raw-operator plans for gate entries that became verdict
-# grades
-# ---------------------------------------------------------------------------
-#
-# Round 7 converted the approximate-path gate entries (LSH pairs, ANN
-# probes, occupancy audits) from output dumps into oracle-pinned invariant
-# grades. The grade costs one operator run PLUS verdict aggregates — a
-# different workload than rounds 1-6 benched. bench.py uses these raw
-# variants for those names so the recorded per-query numbers keep
-# measuring the same operator work across rounds; the gate (queries())
-# still serves the graded versions.
-
-BENCH_VARIANTS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-
-def _bench_variant(name: str):
-    def deco(fn):
-        def wrapped(spark, sf_dir):
-            ship_package(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = fn.__name__
-        BENCH_VARIANTS[name] = wrapped
-        return fn
-
-    return deco
-
-
-@_bench_variant("dedup_minhash_pairs")
-def _bench_minhash_pairs(spark, sf_dir):
-    return dd.minhash_lsh_pairs(
-        _dup_input(spark, sf_dir), num_hashes=32, bands=8, jaccard_threshold=0.5
-    )
-
-
-@_bench_variant("sim_ivf_build")
-def _bench_ivf_build(spark, sf_dir):
-    idx = _vstore(spark, sf_dir, "ivf")
-    return (
-        spark.read.parquet(idx.path)
-        .groupBy("__cell").agg(F.count("*").alias("n_vectors"))
-        .orderBy("__cell")
-    )
-
-
-@_bench_variant("sim_lsh_build")
-def _bench_lsh_build(spark, sf_dir):
-    idx = _vstore(spark, sf_dir, "lsh")
-    return (
-        spark.read.parquet(idx.path)
-        .groupBy("__sig").agg(F.count("*").alias("n_vectors"))
-        .orderBy("__sig")
-    )
-
-
-@_bench_variant("sim_ivf_topk")
-def _bench_ivf_topk(spark, sf_dir):
-    return vs.ivf_probe(
-        spark, _vstore(spark, sf_dir, "ivf"), _query_vec(spark, sf_dir),
-        k=10, nprobe=4,
-    )
-
-
-@_bench_variant("sim_ivfpq_topk")
-def _bench_ivfpq_topk(spark, sf_dir):
-    # same nprobe as the float-IVF probe row so the two bench numbers
-    # isolate the code-scan-vs-float-scan cost at identical pruning
-    return vs.ivf_probe(
-        spark, _vstore(spark, sf_dir, "ivfpq"), _query_vec(spark, sf_dir),
-        k=10, nprobe=4,
-    )
-
-
-@_bench_variant("sim_lsh_topk")
-def _bench_lsh_topk(spark, sf_dir):
-    return vs.lsh_probe(
-        spark, _vstore(spark, sf_dir, "lsh"), _query_vec(spark, sf_dir), k=10
-    )
-
-
-@_bench_variant("sim_probe_concurrent_pruned")
-def _bench_probe_concurrent_pruned(spark, sf_dir):
-    return _run_concurrent_probes(spark, sf_dir, nprobe=4)
-
-
-@_bench_variant("dedup_simhash")
-def _bench_simhash(spark, sf_dir):
-    return dd.simhash(_dup_input(spark, sf_dir))
-
-
-@_bench_variant("dedup_simhash_pairs")
-def _bench_simhash_pairs(spark, sf_dir):
-    return dd.simhash_pairs(_dup_input(spark, sf_dir), max_hamming=3)
-
-
-@_bench_variant("dedup_ngram_jaccard")
-def _bench_ngram_jaccard(spark, sf_dir):
-    return dd.ngram_jaccard_pairs(_dup_input(spark, sf_dir), threshold=0.8)
-
-
-@_bench_variant("dedup_minhash_clusters")
-def _bench_minhash_clusters(spark, sf_dir):
-    return dd.cluster_pairs(dd.minhash_lsh_pairs(_dup_input(spark, sf_dir)))
-
-
-@_bench_variant("dedup_near_removal")
-def _bench_near_removal(spark, sf_dir):
-    return dd.dedup_near(_dup_input(spark, sf_dir)).select("doc_id")
-
-
-@_bench_variant("dedup_simhash_removal")
-def _bench_simhash_removal(spark, sf_dir):
-    docs = _dup_input(spark, sf_dir)
-    clusters = dd.cluster_pairs(dd.simhash_pairs(docs, max_hamming=3))
-    losers = clusters.filter(F.col("doc_id") != F.col("cluster_rep")).select("doc_id")
-    return docs.join(losers, "doc_id", "left_anti").select("doc_id")
-
-
-@_bench_variant("sim_allpairs_lsh")
-def _bench_allpairs_lsh(spark, sf_dir):
-    return sim.allpairs_above(_t(spark, sf_dir)["embeddings"], threshold=0.2, bits=4)
-
-
-@_bench_variant("sim_pq_topk")
-def _bench_pq_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir)["embeddings"]
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CACHE:
-        books = sim.pq_codebooks(emb, m=8, k=16)
-        codes = sim.pq_encode(emb, books).persist()
-        codes.count()
-        _PQ_CACHE[key] = (books, codes)
-    books, codes = _PQ_CACHE[key]
-    return sim.pq_topk_rerank(codes, emb, books, _query_vec(spark, sf_dir), k=10)
-
-
-@_bench_variant("text_bpe_apply")
-def _bench_bpe_apply(spark, sf_dir):
-    from ophidia_server_spark.pipeline import bpe
-
-    docs = _t(spark, sf_dir)["documents"]
-    return bpe.bpe_apply(docs, _bpe_merges(spark, sf_dir))
-
-
-# ---------------------------------------------------------------------------
 # incremental near-dup: materialized MinHash index + batch novelty filter
 # ---------------------------------------------------------------------------
-
-_MHIDX_CACHE: dict = {}
-
 
 def _minhash_index(spark, sf_dir) -> str:
     """Build-once MinHash index over the documents corpus (the ingest-side
     artifact of dedup.minhash_index_build; _vstore precedent)."""
-    import os as _os
-    import tempfile
 
-    import hashlib as _hashlib
-
-    key = (id(spark), sf_dir)
-    if key not in _MHIDX_CACHE:
-        # hash the FULL sf_dir into the path: two dirs sharing a basename
-        # (/a/sf10 vs /b/sf10) must never overwrite each other's index
-        tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = _os.path.join(
-            tempfile.gettempdir(),
-            f"ophspark_mhidx_{tag}_{_os.getpid()}",
-        )
+    def build() -> str:
+        path = _scratch_dir("mhidx", sf_dir)
         dd.minhash_index_build(_t(spark, sf_dir)["documents"], path)
-        _MHIDX_CACHE[key] = path
-    return _MHIDX_CACHE[key]
+        return path
+
+    return session_cached(spark, ("mhidx", sf_dir), build)
 
 
 @q(
@@ -9633,16 +9459,6 @@ def dedup_incremental_novelty(spark, sf_dir):
         "injected_flagged int, injected_exact int, novel_pass int, "
         "partition_ok int",
     )
-
-
-@_bench_variant("dedup_incremental_novelty")
-def _bench_incremental_novelty(spark, sf_dir):
-    docs = _t(spark, sf_dir)["documents"]
-    idx = _minhash_index(spark, sf_dir)
-    batch = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 200000).alias("doc_id"), "text"
-    )
-    return dd.dedup_incremental(batch, idx)
 
 
 @q(
@@ -9858,94 +9674,6 @@ def ml_kmeans_grade(spark, sf_dir):
     )
 
 
-@_bench_variant("ml_kmeans_grade")
-def _bench_kmeans(spark, sf_dir):
-    from ophidia_server_spark.pipeline import clustering as cl
-
-    emb = _t(spark, sf_dir)["embeddings"]
-    assigned = cl.kmeans_lloyd(emb, k=8, iters=5).assignments
-    return assigned.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.round(F.sum("dist2"), 6).alias("sum_dist2"),
-    )
-
-
-@_bench_variant("ml_als_grade")
-def _bench_als(spark, sf_dir):
-    """Raw-operator bench twin: train + score, skip the verdict math."""
-    from ophidia_server_spark.pipeline import als as alsm
-
-    li = _t(spark, sf_dir)["lineitem"]
-    orders = _t(spark, sf_dir)["orders"]
-    ratings = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy(
-            F.col("o_custkey").alias("user"),
-            F.col("l_partkey").alias("item"),
-        )
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double").alias("rating")
-        )
-        .persist()
-    )
-    res = alsm.als(ratings, k=4, iters=3, reg=0.1)
-    out = alsm.predict(res, ratings).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("prediction"), 6).alias("avg_pred"),
-    )
-    out.collect()
-    ratings.unpersist()
-    return out
-
-
-@_bench_variant("graph_kcore_grade")
-def _bench_kcore(spark, sf_dir):
-    """Raw-operator bench twin: one peel, skip the verdict recomputes."""
-    from ophidia_server_spark.pipeline.graph import kcore
-
-    li = _t(spark, sf_dir)["lineitem"].select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-    )
-    return kcore(edges, k=60).groupBy().agg(
-        F.count(F.lit(1)).alias("core_size"),
-        F.sum("core_degree").alias("total_degree"),
-    )
-
-
-@_bench_variant("pack_bins_grade")
-def _bench_pack_bins(spark, sf_dir):
-    from ophidia_server_spark.pipeline.packing import pack_bins
-
-    docs = _t(spark, sf_dir)["documents"].select("doc_id", "text")
-    return pack_bins(docs, max_len=300, n_buckets=8).groupBy("bucket").agg(
-        F.countDistinct("bin_id").alias("bins"),
-        F.sum("n_tokens").alias("tokens"),
-    )
-
-
-@_bench_variant("graph_pagerank_grade")
-def _bench_pagerank(spark, sf_dir):
-    from ophidia_server_spark.pipeline.graph import pagerank
-
-    li = _t(spark, sf_dir)["lineitem"]
-    edges = li.select(
-        F.col("l_orderkey").alias("src"),
-        (F.col("l_partkey") + F.lit(10_000_000)).alias("dst"),
-    )
-    ranks, _, _ = pagerank(edges, iters=6)
-    return ranks.agg(
-        F.count(F.lit(1)).alias("nodes"),
-        F.round(F.sum("rank"), 3).alias("total_rank"),
-    )
-
-
 @q(
     "io_avro_roundtrip",
     "SELECT doc_id, text, lang, source, n_chars FROM documents",
@@ -10003,7 +9731,10 @@ def layout_merge_upsert(spark, sf_dir):
     lay.zorder_write(li, path, ["l_orderkey", "l_partkey"], files=16, bits=10)
     updates = (
         li.filter(F.col("l_orderkey") % 50 == 0)
-        .withColumn("qty", F.col("qty") + F.lit(1000).cast(DEC))
+        # back to the store's decimal(18,2): the sum widens to (19,2), and
+        # merge files of another type than the Z-order files make the
+        # store's read fail whenever schema inference picks a Z-order footer
+        .withColumn("qty", (F.col("qty") + F.lit(1000).cast(DEC)).cast(DEC))
         .unionByName(
             spark.createDataFrame(
                 [(99999991, 1, 5, 7.0)],
@@ -12247,21 +11978,6 @@ def text_canonical_keys(spark, sf_dir):
     non-ASCII cases are pinned in pytest against DuckDB directly)."""
     docs = _t(spark, sf_dir)["documents"]
     return tx.canonicalize(docs).select("doc_id", "canon_text", "canon_key")
-
-
-@_bench_variant("join_cardinality_cms")
-def _bench_join_cardinality(spark, sf_dir):
-    # the production shape: two map-side sketches + the 4096-row inner
-    # product — WITHOUT the exact-join ground-truth column the gate keeps
-    # (documented gate-only; at 100 TB only this path runs)
-    from ophidia_server_spark.functions import sketches as sk
-
-    t = _t(spark, sf_dir)
-    o = t["orders"].select(F.col("o_orderkey").cast("string").alias("k"))
-    li = t["lineitem"].select(F.col("l_orderkey").cast("string").alias("k"))
-    ska = sk.cms_sketch(o, "k", d=4, w=1024, salt="cmsj")
-    skb = sk.cms_sketch(li, "k", d=4, w=1024, salt="cmsj")
-    return sk.cms_join_cardinality(ska, skb)
 
 
 @q(

@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, the one session-scoped cache (`session_cached` /
+`clear`) and the strict boolean env-knob parse (`env_flag`).
 
 Tuned for the local[32] test harness but cluster-safe: AQE on (runtime re-plan,
 skew-join splitting, partition coalescing), Arrow on (fast pandas interchange for
@@ -10,9 +11,15 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
+import weakref
 import zipfile
+from collections import OrderedDict
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+_V = TypeVar("_V")
 
 # SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle width from thread count:
 # the sf10 decade probe measured the per-event window/join family at 2x the
@@ -69,6 +76,77 @@ def ship_package(spark: SparkSession) -> None:
         return
     sc.addPyFile(_build_pkg_zip())
     sc._ophidia_pkg_shipped = True
+
+
+_TRUE_WORDS = frozenset({"1", "true", "yes", "on"})
+_FALSE_WORDS = frozenset({"0", "false", "no", "off"})
+
+
+def env_flag(name: str) -> bool:
+    """Strict boolean env knob, off by default: 1/true/yes/on and
+    0/false/no/off (any case, surrounding blanks ignored); unset or empty
+    is off. Anything else raises instead of silently reading as off."""
+    raw = os.environ.get(name, "").strip().lower()
+    if raw in _TRUE_WORDS:
+        return True
+    if not raw or raw in _FALSE_WORDS:
+        return False
+    raise ValueError(
+        f"{name}={os.environ[name]!r}: expected one of 1/true/yes/on "
+        "or 0/false/no/off"
+    )
+
+
+# ---------------------------------------------------------------------------
+# session-scoped caches
+# ---------------------------------------------------------------------------
+
+# Most entries one session's cache holds before the least recently used is
+# evicted. A bench pass over two dataset dirs fills about 20 (tables, four
+# vector stores, snapshot catalog, PQ codes, BPE merges and MinHash index
+# per dir, plus a few ALS expression bundles).
+SESSION_CACHE_MAX_ENTRIES = 32
+
+_CACHE_ATTR = "_ophidia_session_cache"
+_CACHED_SESSIONS: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+_CACHE_LOCK = threading.Lock()
+
+
+def session_cached(spark: SparkSession, key: tuple, build: Callable[[], _V]) -> _V:
+    """The value cached under `key` for this session; `build()` fills a miss.
+
+    `key` is a tuple whose first item names its namespace ("tables",
+    "vstore", ...), the unit `clear` drops. The cache is keyed on the
+    session OBJECT and stored on it, so a new session (or
+    `spark.newSession()`) never sees another session's DataFrames, and a
+    session's entries die with it even though cached DataFrames point back
+    at their session. `build` runs outside the lock, so it may itself use
+    the cache; two threads missing the same key both build, last one wins.
+    """
+    with _CACHE_LOCK:
+        entries = vars(spark).get(_CACHE_ATTR)
+        if entries is not None and key in entries:
+            entries.move_to_end(key)
+            return entries[key]
+    value = build()
+    with _CACHE_LOCK:
+        entries = vars(spark).setdefault(_CACHE_ATTR, OrderedDict())
+        _CACHED_SESSIONS.add(spark)
+        entries[key] = value
+        entries.move_to_end(key)
+        while len(entries) > SESSION_CACHE_MAX_ENTRIES:
+            entries.popitem(last=False)
+    return value
+
+
+def clear(namespace: str | None = None) -> None:
+    """Drop every live session's cached entries in `namespace`, or all of
+    them when `namespace` is None."""
+    with _CACHE_LOCK:
+        for spark in list(_CACHED_SESSIONS):
+            entries = vars(spark).get(_CACHE_ATTR, {})
+            for key in [k for k in entries if namespace is None or k[0] == namespace]:
+                del entries[key]
 
 
 def get_spark(app_name: str = "ophidia_server_spark", shuffle_partitions: str | None = None) -> SparkSession:
@@ -142,7 +220,7 @@ def get_spark(app_name: str = "ophidia_server_spark", shuffle_partitions: str | 
         # debugging a query interactively.
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
+            str(env_flag("SPARK_GRAFT_DF_DEBUGGING")).lower(),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -4,9 +4,10 @@ Usage: python scripts/capture_plans.py <tag-dir-suffix> <query> [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<tag>.txt (round defaults to
 r14; tag = "before" / "after").
 
-Uses the BENCH variant when one exists (that is the plan the bench times);
-multi-action lifecycle queries capture the plan of the RETURNED DataFrame
-(the other actions' plans are a lifecycle property, noted inline).
+Captures the plan of `QUERIES[name]`, the callable the gate checks and the
+bench times; multi-action lifecycle and verdict-grade queries capture the
+plan of the RETURNED DataFrame (the other actions' plans are a lifecycle
+property, noted inline).
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ophidia_server_spark.registry import BENCH_VARIANTS, QUERIES  # noqa: E402
+from ophidia_server_spark.registry import QUERIES  # noqa: E402
 from ophidia_server_spark.session import get_spark  # noqa: E402
 
 
@@ -30,8 +31,7 @@ def main() -> int:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
     for name in names:
-        fn = BENCH_VARIANTS.get(name, QUERIES[name])
-        df = fn(spark, sf_dir)
+        df = QUERIES[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ophidia_server_spark.registry import BENCH_VARIANTS, QUERIES  # noqa: E402
+from ophidia_server_spark.registry import QUERIES  # noqa: E402
 from ophidia_server_spark.session import get_spark  # noqa: E402
 
 
@@ -86,11 +86,10 @@ def main() -> None:
     rows = []
     for name in sorted(QUERIES):
         try:
-            # audit the raw-operator variant where the gate entry is an
-            # eager verdict grade (same mapping bench.py uses): the grade's
-            # returned DataFrame is a one-row LocalTableScan, and auditing
-            # it would silently drop the real operator's plan from PLANS.md
-            df = BENCH_VARIANTS.get(name, QUERIES[name])(spark, sf_dir)
+            # the gate's own callable (what bench.py times); an eager
+            # verdict grade returns a small local frame, so its row audits
+            # that frame, not the operator work done before the return
+            df = QUERIES[name](spark, sf_dir)
             df.collect()  # drive AQE to the final plan
             m = audit_plan(df)
             flags = []

@@ -95,14 +95,13 @@ def test_als_empty_ratings_zero_objective(spark):
 def test_als_expr_bundle_cache_identity_and_gate_key(spark, rank1_ratings,
                                                      monkeypatch):
     """Round-14: the half-step's (k, reg) Column trees are cached per live
-    session (_expr_bundle). Pins (a) the cache actually hits — same object
-    back for a repeated key; (b) the solver gate is part of the key, so
-    monkeypatching _JVM_SOLVE_MAX_K (the Cholesky-vs-Arrow equivalence
-    test's technique) gets a fresh Arrow-path bundle instead of silently
-    reusing the cached JVM one; (c) warm-cache results are bit-identical
-    to a cold-cache run."""
-    from weakref import WeakKeyDictionary
-
+    session (_expr_bundle via session.session_cached). Pins (a) the cache
+    actually hits — same object back for a repeated key; (b) the solver
+    gate is part of the key, so monkeypatching _JVM_SOLVE_MAX_K (the
+    Cholesky-vs-Arrow equivalence test's technique) gets a fresh
+    Arrow-path bundle instead of silently reusing the cached JVM one;
+    (c) warm-cache results are bit-identical to a cold-cache run."""
+    from ophidia_server_spark import session
     from ophidia_server_spark.pipeline import als as A
 
     b1 = A._expr_bundle(spark, 2, 0.05)
@@ -119,7 +118,8 @@ def test_als_expr_bundle_cache_identity_and_gate_key(spark, rank1_ratings,
 
     cold = A.als(rank1_ratings, k=2, iters=2, reg=0.05)
     cold_f = {r["id"]: r["factors"] for r in cold.user_factors.collect()}
-    monkeypatch.setattr(A, "_BUNDLES", WeakKeyDictionary())  # drop the cache
+    session.clear("als")                                  # drop the cache
+    assert A._expr_bundle(spark, 2, 0.05) is not b1
     fresh = A.als(rank1_ratings, k=2, iters=2, reg=0.05)
     fresh_f = {r["id"]: r["factors"] for r in fresh.user_factors.collect()}
     assert cold_f == fresh_f                              # (c) bit-identical
