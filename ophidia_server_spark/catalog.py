@@ -9,11 +9,15 @@ as plain DataFrames/tables:
   metadata(cube_id, key, value)
   lineage(out_cube, task, in_cube)
 
-In production these are Delta/Parquet tables maintained by operator wrappers;
-they are tiny relative to the data (one row per cube) and always broadcast-
-joined against. For oracle-checked tests the catalog is *derived
-deterministically from the `part` fixture table* so the DuckDB oracle can
-reconstruct the exact same rows with plain SQL (see catalog_sql_* strings).
+Two shapes carry these relations. `Catalog` holds them as DataFrames: the
+tables a massive filter is compiled against with Spark (the snapshot-store
+backend below, and the oracle-checked catalog *derived deterministically
+from the `part` fixture table*, so the DuckDB oracle can reconstruct the
+exact same rows with plain SQL — see the CATALOG_SQL_* strings).
+`RowCatalog` holds them as driver-side Python rows: the live CubeStore's
+snapshot, which filters.expand_massive evaluates without any Spark job,
+the way the reference answers a massive filter with one small query to
+its metadata database and never touches the analytics cluster.
 """
 
 from __future__ import annotations
@@ -31,6 +35,18 @@ class Catalog:
     cubes: DataFrame
     metadata: DataFrame
     lineage: DataFrame
+    session_prefix: str = SESSION_PREFIX
+
+
+@dataclass
+class RowCatalog:
+    """The Catalog relations as driver-side row tuples, in Catalog's
+    column order: cubes (cube_id, container_id, container, path, level,
+    measure), metadata (cube_id, key, value), lineage (out_cube, task,
+    in_cube)."""
+    cubes: list[tuple]
+    metadata: list[tuple]
+    lineage: list[tuple]
     session_prefix: str = SESSION_PREFIX
 
 

@@ -1,5 +1,5 @@
 """Massive-operation selection algebra: the reference server's own query
-language, compiled to catalog DataFrame predicates.
+language, evaluated against the cube catalog.
 
 Grammar (studied at /root/reference/src/oph_massive_operations.c:409-585 and
 oph_parser.h:89-94): a task argument of the form
@@ -14,9 +14,18 @@ key may be negated with a trailing '!' (OPH_MF_SYMBOL_NOT, oph_filters.h:62;
 applied oph_filters.c:567-569). Multivalue `a|b` lists OR-combine, and
 AND-combine when negated (oph_filters.c:61-76). The reference compiles all of
 this into one catalog SQL `SELECT DISTINCT datacube.iddatacube, ...`
-(oph_filters.c:718-721); here each filter becomes a Column predicate or a
-semi-join against the metadata/lineage tables — Catalyst then pushes the
-predicates into the (tiny, broadcastable) catalog scans.
+(oph_filters.c:718-721) and runs it on its metadata database, never on the
+analytics cluster.
+
+Two evaluators share the parser and the per-key semantics, chosen by the
+catalog's type in `expand_massive`:
+
+- a `RowCatalog` (the live CubeStore's snapshot) is evaluated in the driver
+  over plain rows: no DataFrame, no Spark job;
+- a `Catalog` of DataFrames (catalog tables: the part-derived fixture, the
+  snapshot-store backend) is compiled by `compile_group` into Column
+  predicates and semi-joins against the metadata/lineage tables, which
+  Catalyst pushes into the (tiny, broadcastable) catalog scans.
 
 Supported filter keys (oph_filters.c): level, measure, container,
 container_pid, cube_filter, parent_cube, metadata_key, metadata_value, path
@@ -28,12 +37,13 @@ executing (oph_massive_operations.c:151-153).
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ophidia_server_spark.catalog import Catalog
-from ophidia_server_spark.subset import subset_predicate
+from ophidia_server_spark.catalog import Catalog, RowCatalog
+from ophidia_server_spark.subset import parse_subset, subset_predicate
 
 NOT = "!"
 _KNOWN = {
@@ -114,6 +124,51 @@ def pid_cube_id(pid: str) -> int:
     return int(str(pid).rstrip("/").rsplit("/", 1)[-1])
 
 
+def _group_flags(kv: dict[str, str]) -> tuple[int, bool]:
+    """Reject the groups the reference answers with "No query expected" and
+    return the group's (depth, recursive) path options."""
+    if not kv:
+        # "[]" yields no query in the reference (oph_server_test.c case 22:
+        # "No query expected") — an empty group is a caller error, not
+        # select-all
+        raise ValueError("empty massive filter group []")
+    stripped = {_split_neg(k)[0] for k in kv}
+    if "metadata_value" in stripped and not kv.get("metadata_key"):
+        # metadata_value (negated or not) is only meaningful paired with
+        # metadata_key (oph_server_test.c case 9 -> "No query expected")
+        raise ValueError("metadata_value requires metadata_key")
+    depth = int(kv.get("depth", "0") or 0)
+    recursive = kv.get("recursive", "no").lower() == "yes"
+    return depth, recursive
+
+
+def _container_pid(value: str) -> int:
+    """container PID = http://server/<idcontainer>; tolerate a full cube PID
+    (<idcontainer>/<iddatacube>) by taking the container component
+    (oph_filters.c:272-305 parses the id from the URL)."""
+    nums = [p for p in str(value).rstrip("/").split("/") if p.isdigit()]
+    return int(nums[-2]) if len(nums) >= 2 else int(nums[-1])
+
+
+def _path_base(value: str, session_prefix: str) -> str:
+    """A path filter's folder, prefixed with the session prefix
+    (oph_filters.c:576-601)."""
+    base = value if value.startswith(session_prefix) else session_prefix + (
+        "" if value.startswith("/") else "/"
+    ) + value
+    return base.rstrip("/")
+
+
+def _metadata_pairs(kv: dict[str, str], value: str) -> list[tuple[str | None, str]]:
+    """metadata_value's (key, substring) pairs: the i-th value pairs with
+    the i-th metadata_key, or with any key past the end of that list."""
+    keys = kv.get("metadata_key", "").split("|") if kv.get("metadata_key") else [None]
+    return [
+        (keys[i] if i < len(keys) and keys[i] else None, v)
+        for i, v in enumerate(value.split("|"))
+    ]
+
+
 def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
     """Compile one bracket group into a DataFrame of matching cube_ids.
 
@@ -134,19 +189,11 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
         nonlocal pred
         pred = p if pred is None else (pred & p)
 
-    if not kv:
-        # "[]" yields no query in the reference (oph_server_test.c case 22:
-        # "No query expected") — an empty group is a caller error, not
-        # select-all
-        raise ValueError("empty massive filter group []")
-    stripped = {_split_neg(k)[0] for k in kv}
-    if "metadata_value" in stripped and not kv.get("metadata_key"):
-        # metadata_value (negated or not) is only meaningful paired with
-        # metadata_key (oph_server_test.c case 9 -> "No query expected")
-        raise ValueError("metadata_value requires metadata_key")
+    def semi(hit: DataFrame, neg: bool) -> None:
+        nonlocal df
+        df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
 
-    depth = int(kv.get("depth", "0") or 0)
-    recursive = kv.get("recursive", "no").lower() == "yes"
+    depth, recursive = _group_flags(kv)
 
     for rawk, value in kv.items():
         key, neg = _split_neg(rawk)
@@ -159,12 +206,7 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
         elif key == "container":
             add(_multival(F.col("container"), value, neg))
         elif key == "container_pid":
-            # container PID = http://server/<idcontainer>; tolerate a full
-            # cube PID (<idcontainer>/<iddatacube>) by taking the container
-            # component (oph_filters.c:272-305 parses the id from the URL)
-            nums = [p for p in str(value).rstrip("/").split("/") if p.isdigit()]
-            cid = int(nums[-2]) if len(nums) >= 2 else int(nums[-1])
-            p = F.col("container_id") == cid
+            p = F.col("container_id") == _container_pid(value)
             add(~p if neg else p)
         elif key == "cube_filter":
             # "[*]" / "[all]" select everything in scope (reference cases 0
@@ -185,13 +227,9 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
             kids = cat.lineage.filter(F.col("in_cube") == parent).select(
                 F.col("out_cube").alias("cube_id")
             )
-            how = "left_anti" if neg else "left_semi"
-            df = df.join(F.broadcast(kids), on="cube_id", how=how)
+            semi(kids, neg)
         elif key == "path":
-            base = value if value.startswith(cat.session_prefix) else cat.session_prefix + (
-                "" if value.startswith("/") else "/"
-            ) + value
-            base = base.rstrip("/")
+            base = _path_base(value, cat.session_prefix)
             if recursive:
                 p = (F.col("path") == base) | F.col("path").startswith(base + "/")
                 if depth > 0:
@@ -209,26 +247,117 @@ def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
             # every listed key must exist for the cube (AND-combined,
             # oph_filters.c:307-369); negation: none may exist
             for k in value.split("|"):
-                hit = cat.metadata.filter(F.col("key") == k).select("cube_id").distinct()
-                df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
+                semi(cat.metadata.filter(F.col("key") == k).select("cube_id").distinct(), neg)
         elif key == "metadata_value":
-            keys = kv.get("metadata_key", "").split("|") if kv.get("metadata_key") else [None]
-            for i, v in enumerate(value.split("|")):
-                k = keys[i] if i < len(keys) and keys[i] else None
+            for k, v in _metadata_pairs(kv, value):
                 cond = F.col("value").contains(v)
                 if k:
                     cond = cond & (F.col("key") == k)
-                hit = cat.metadata.filter(cond).select("cube_id").distinct()
-                df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
+                semi(cat.metadata.filter(cond).select("cube_id").distinct(), neg)
         elif key not in _KNOWN:
             # free key=value -> metadata LIKE filter (oph_filters.c:545-555)
             hit = cat.metadata.filter(
                 (F.col("key") == key) & F.col("value").contains(value)
             ).select("cube_id").distinct()
-            df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
+            semi(hit, neg)
     if pred is not None:
         df = df.filter(pred)
     return df.select("cube_id").distinct()
+
+
+def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
+    """compile_group's semantics over a RowCatalog, in the driver. Each key
+    becomes a test on one cubes column; a row matches when every test holds.
+    A None field fails its test whether or not the key is negated, as a SQL
+    NULL fails both `=` and `!=`."""
+    cid, cont_id, cont, path, level, measure = range(6)
+    tests: list[tuple[int, Callable[[object], bool]]] = []
+
+    def add(col: int, test: Callable[[object], bool], neg: bool = False) -> None:
+        tests.append((col, (lambda v: not test(v)) if neg else test))
+
+    def md_hit(match: Callable[[str, str], bool]) -> set:
+        return {c for c, k, v in cat.metadata if match(k, v)}
+
+    sp = (cat.session_prefix or "").rstrip("/")
+    if sp:
+        add(path, lambda p: p == sp or p.startswith(sp + "/"))
+    depth, recursive = _group_flags(kv)
+
+    for rawk, value in kv.items():
+        key, neg = _split_neg(rawk)
+        if key in ("recursive", "depth", "run"):
+            continue
+        if key in ("level", "measure", "container"):
+            # multivalue OR; negated, an AND of != (oph_filters.c:61-76)
+            vals = set(value.split("|"))
+            if key == "level":  # compared as a string, like the cast above
+                add(level, lambda v, vals=vals: str(v) in vals, neg)
+            else:
+                add(measure if key == "measure" else cont, lambda v, vals=vals: v in vals, neg)
+        elif key == "container_pid":
+            want = _container_pid(value)
+            add(cont_id, lambda v, want=want: v == want, neg)
+        elif key == "cube_filter":
+            if str(value).strip().lower() in ("*", "all"):
+                if neg:  # not-all selects nothing, not everything
+                    add(cid, lambda v: False)
+                continue
+            clauses = [
+                c.resolved(None) for item in str(value).split("|") for c in parse_subset(item)
+            ]
+            add(cid, lambda v, cs=clauses: any(
+                c.start <= v <= c.end and (v - c.start) % c.stride == 0 for c in cs
+            ), neg)
+        elif key == "parent_cube":
+            parent = pid_cube_id(value)
+            kids = {o for o, _, i in cat.lineage if i == parent}
+            add(cid, lambda v, s=kids: v in s, neg)
+        elif key == "path":
+            base = _path_base(value, cat.session_prefix)
+            if recursive:
+                maxslash = base.count("/") + depth
+                add(path, lambda p, b=base, m=maxslash: (
+                    (p == b or p.startswith(b + "/")) and (depth <= 0 or p.count("/") <= m)
+                ), neg)
+            else:
+                add(path, lambda p, b=base: p == b, neg)
+        elif key == "metadata_key":
+            for k in value.split("|"):
+                hit = md_hit(lambda mk, _, k=k: mk == k)
+                add(cid, lambda v, s=hit: v in s, neg)
+        elif key == "metadata_value":
+            for k, sub in _metadata_pairs(kv, value):
+                hit = md_hit(lambda mk, mv, k=k, sub=sub: (
+                    mv is not None and sub in mv and (not k or mk == k)
+                ))
+                add(cid, lambda v, s=hit: v in s, neg)
+        elif key not in _KNOWN:
+            hit = md_hit(lambda mk, mv, k=key, sub=value: (
+                mk == k and mv is not None and sub in mv
+            ))
+            add(cid, lambda v, s=hit: v in s, neg)
+    return {
+        r[cid] for r in cat.cubes
+        if all(r[col] is not None and test(r[col]) for col, test in tests)
+    }
+
+
+def expand_massive(cat: Catalog | RowCatalog, arg: str) -> list[int]:
+    """Sorted, distinct cube ids a massive argument selects: the union of
+    its bracket groups plus its explicit PIDs. A RowCatalog is evaluated in
+    the driver; a Catalog of DataFrames goes through compile_massive and
+    one collect."""
+    if not isinstance(cat, RowCatalog):
+        return sorted(r.cube_id for r in compile_massive(cat, arg).collect())
+    groups, pids = parse_massive(arg)
+    out: set[int] = set()
+    for g in groups:
+        out |= _evaluate_group(cat, g)
+    out.update(pid_cube_id(p) for p in pids)
+    if not groups and not pids:
+        raise ValueError(f"empty massive argument {arg!r}")
+    return sorted(out)
 
 
 def compile_massive(cat: Catalog, arg: str) -> DataFrame:

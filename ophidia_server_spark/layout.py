@@ -194,6 +194,12 @@ def merge_upsert(
     store = spark.read.parquet(path)
     keys = [F.col(c) for c in key_cols]
     upd_keys = updates.select(*key_cols).distinct()
+    # update rows take the store's column types: a widened type (a decimal
+    # sum's extra digit) would write files whose footers disagree with the
+    # store's, and a later read fails whenever inference picks one of them
+    upd_rows = updates.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in store.schema]
+    )
 
     # AQE picks the join strategy — update-key sets are data-sized, so no
     # forced broadcast (the repo's standing hint policy)
@@ -211,9 +217,9 @@ def merge_upsert(
             spark.read.parquet(*touched_files)
             .join(upd_keys, key_cols, "left_anti")
         )
-        new_data = survivors.unionByName(updates.select(*store.columns))
+        new_data = survivors.unionByName(upd_rows)
     else:
-        new_data = updates.select(*store.columns)
+        new_data = upd_rows
     rows_before = store.count()
 
     tmp = path.rstrip("/") + f"__merge_g{generation}"

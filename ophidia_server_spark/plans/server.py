@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ophidia_server_spark.operators import cube_ops as C
 from ophidia_server_spark.operators import io_ops as IO
-from ophidia_server_spark.plans.workflow import WorkflowEngine
+from ophidia_server_spark.plans.workflow import WorkflowEngine, WorkflowError
 from ophidia_server_spark.store import CubeStore
 
 
@@ -1061,6 +1061,14 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             per_dim_chunks=str(args.get("per_dim_chunks", "no")).lower() == "yes",
         )
 
+    def resolve_pid(cid: str) -> str:
+        """Expanded cube id -> its PID; an explicit PID the store does not
+        hold is a named workflow error."""
+        for pid, e in store.entries.items():
+            if str(e.cube_id) == cid:
+                return pid
+        raise WorkflowError(f"massive selection names unknown cube {cid}")
+
     return WorkflowEngine(
         {
             "oph_importcsv": op_importcsv,
@@ -1123,7 +1131,5 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             "pipeline_vector_index": op_pipe_vector_index,
         },
         catalog=store.as_catalog,  # callable: re-snapshot per massive expansion
-        pid_resolver=lambda cid: next(
-            pid for pid, e in store.entries.items() if str(e.cube_id) == cid
-        ),
+        pid_resolver=resolve_pid,
     )

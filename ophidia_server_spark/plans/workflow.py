@@ -504,7 +504,9 @@ class WorkflowEngine:
         # the allow-listed command path); an explicit registration wins
         self.operators.setdefault("oph_generic", _op_external_command)
         self.operators.setdefault("oph_cdo", _op_external_command)
-        self.catalog = catalog  # Catalog for massive `cube=[...]` expansion
+        # Catalog or RowCatalog (or a zero-arg callable returning one) for
+        # massive `cube=[...]` expansion
+        self.catalog = catalog
         # maps expanded cube ids to full PIDs (the reference renders PID URLs
         # for light tasks, oph_massive_operations.c:342-348)
         self.pid_resolver = pid_resolver
@@ -779,13 +781,12 @@ class WorkflowEngine:
         if cube_arg and "[" in str(cube_arg):
             if self.catalog is None:
                 raise WorkflowError("massive cube argument but engine has no catalog")
-            from ophidia_server_spark.filters import compile_massive
+            from ophidia_server_spark.filters import expand_massive
 
             # catalog may be a zero-arg callable so live stores (CubeStore)
             # are re-snapshotted at expansion time, not engine-build time
             cat = self.catalog() if callable(self.catalog) else self.catalog
-            rows = compile_massive(cat, str(cube_arg)).collect()
-            items = [str(r.cube_id) for r in sorted(rows, key=lambda r: r.cube_id)]
+            items = [str(i) for i in expand_massive(cat, str(cube_arg))]
             if self.pid_resolver is not None:
                 items = [self.pid_resolver(i) for i in items]
             return "cube", items, None

@@ -9726,15 +9726,13 @@ def layout_merge_upsert(spark, sf_dir):
         "l_orderkey", "l_linenumber", "l_partkey",
         F.col("l_quantity").cast(DEC).alias("qty"),
     )
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"/tmp/ophidia_merge_{tag}"
+    path = _scratch_dir("merge", sf_dir)
     lay.zorder_write(li, path, ["l_orderkey", "l_partkey"], files=16, bits=10)
     updates = (
         li.filter(F.col("l_orderkey") % 50 == 0)
-        # back to the store's decimal(18,2): the sum widens to (19,2), and
-        # merge files of another type than the Z-order files make the
-        # store's read fail whenever schema inference picks a Z-order footer
-        .withColumn("qty", (F.col("qty") + F.lit(1000).cast(DEC)).cast(DEC))
+        # the sum widens to decimal(19,2); merge_upsert casts it back to the
+        # store's decimal(18,2)
+        .withColumn("qty", F.col("qty") + F.lit(1000).cast(DEC))
         .unionByName(
             spark.createDataFrame(
                 [(99999991, 1, 5, 7.0)],

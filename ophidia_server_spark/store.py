@@ -3,8 +3,9 @@
 The reference keeps cubes/containers/folders/metadata/provenance in MySQL
 (/root/reference/src/oph_ophidiadb_query.h) and fragments on I/O nodes; here
 cube payloads are parquet directories under a workspace and the catalog is
-driver-side state exposed as DataFrames (tiny — one row per cube — and
-always broadcast when joined against data).
+driver-side state (tiny — one row per cube). `as_catalog` snapshots it as
+plain rows (catalog.RowCatalog), so a massive-filter expansion is evaluated
+in the driver and launches no Spark job.
 
 Covers the lifecycle operator surface: importcsv/importparquet (oph_importnc
 analogue for the containerized environment — see io_ops for the NetCDF
@@ -24,6 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ophidia_server_spark.catalog import RowCatalog
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube, build_cube
 
 
@@ -359,36 +361,17 @@ class CubeStore:
             "edges": [{"from": i, "task": t, "to": o} for o, t, i in edges],
         }
 
-    # -- catalog as DataFrames (for the massive-filter compiler) ---------------
-    def as_catalog(self):
-        from ophidia_server_spark.catalog import Catalog
-
-        cube_rows = [
-            (e.cube_id, 0, e.container, e.path, e.level, e.measure)
-            for e in self.entries.values()
-        ]
-        md_rows = [
-            (cid, k, v) for cid, kv in self.metadata.items() for k, v in kv.items()
-        ]
-        lin_rows = list(self.lineage)
-        cubes = self.spark.createDataFrame(
-            cube_rows or [(0, 0, "", "", 0, "")],
-            "cube_id long, container_id long, container string, path string, level long, measure string",
-        )
-        if not cube_rows:
-            cubes = cubes.filter(F.lit(False))
-        metadata = self.spark.createDataFrame(
-            md_rows or [(0, "", "")], "cube_id long, key string, value string"
-        )
-        if not md_rows:
-            metadata = metadata.filter(F.lit(False))
-        lineage = self.spark.createDataFrame(
-            lin_rows or [(0, "", 0)], "out_cube long, task string, in_cube long"
-        )
-        if not lin_rows:
-            lineage = lineage.filter(F.lit(False))
-        return Catalog(
-            cubes=cubes, metadata=metadata, lineage=lineage,
+    # -- catalog snapshot (for the massive-filter evaluator) -----------------
+    def as_catalog(self) -> RowCatalog:
+        return RowCatalog(
+            cubes=[
+                (e.cube_id, 0, e.container, e.path, e.level, e.measure)
+                for e in self.entries.values()
+            ],
+            metadata=[
+                (cid, k, v) for cid, kv in self.metadata.items() for k, v in kv.items()
+            ],
+            lineage=list(self.lineage),
             session_prefix=self.session_prefix,
         )
 

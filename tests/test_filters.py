@@ -5,17 +5,48 @@ cube ids over the deterministic part-derived catalog)."""
 
 import pytest
 
-from ophidia_server_spark.catalog import catalog_from_part
-from ophidia_server_spark.filters import compile_massive, parse_massive, pid_cube_id
+from ophidia_server_spark.catalog import Catalog, RowCatalog, catalog_from_part
+from ophidia_server_spark.filters import expand_massive, parse_massive, pid_cube_id
 
 
-def ids(cat, arg):
-    return sorted(r.cube_id for r in compile_massive(cat, arg).collect())
+def row_catalog(cat: Catalog) -> RowCatalog:
+    """The same three relations, collected into driver-side rows."""
+    return RowCatalog(
+        cubes=[tuple(r) for r in cat.cubes.collect()],
+        metadata=[tuple(r) for r in cat.metadata.collect()],
+        lineage=[tuple(r) for r in cat.lineage.collect()],
+        session_prefix=cat.session_prefix,
+    )
+
+
+def both(cat: Catalog) -> dict:
+    """A catalog under both evaluators: the Spark compiler over its
+    DataFrames and the driver evaluator over its collected rows."""
+    return {"dataframe": cat, "rows": row_catalog(cat)}
+
+
+def ids(cats, arg):
+    """Expand `arg` on every evaluator in `cats`. They must return the same
+    ids, or raise the same exception type (which is then re-raised)."""
+    got = {}
+    for name, c in cats.items():
+        try:
+            got[name] = expand_massive(c, arg)
+        except Exception as exc:  # noqa: BLE001 - compared across evaluators
+            got[name] = exc
+    first, *rest = got.values()
+    assert all(
+        type(o) is type(first) and (isinstance(o, Exception) or o == first)
+        for o in rest
+    ), f"evaluators disagree on {arg!r}: {got}"
+    if isinstance(first, Exception):
+        raise first
+    return first
 
 
 @pytest.fixture(scope="module")
 def cat(tables):
-    return catalog_from_part(tables["part"])
+    return both(catalog_from_part(tables["part"]))
 
 
 @pytest.fixture(scope="module")
@@ -150,6 +181,8 @@ def test_path_depth_limit(cat, part_rows):
     deep = ids(cat, "[path=/;recursive=yes]")
     assert shallow == []
     assert deep == sorted(part_rows)
+    # depth=2 reaches exactly the container level: /sess1/<type>/<brand>
+    assert ids(cat, "[path=/;recursive=yes;depth=2]") == deep
 
 
 def test_metadata_key_only(cat, part_rows):
@@ -432,7 +465,7 @@ def snap_cat(spark, cat, tmp_path_factory):
     from ophidia_server_spark.catalog import snapshot_catalog_write
 
     base = str(tmp_path_factory.mktemp("snapcat"))
-    snapshot_catalog_write(cat, base)
+    snapshot_catalog_write(cat["dataframe"], base)
     return base
 
 
@@ -451,19 +484,63 @@ MF_BACKEND_CORPUS = [
 
 @pytest.mark.parametrize("arg", MF_BACKEND_CORPUS)
 def test_snapshot_backend_matches_in_memory(spark, cat, snap_cat, arg):
-    # the mf_* oracle contract on the new backend: every massive filter
+    # the mf_* oracle contract on every backend: each massive filter
     # expands to the same cube set whether the catalog is an in-memory
-    # DataFrame or the snapshot store with pruned reads
-    from ophidia_server_spark.filters import (
-        compile_massive, compile_massive_snapshot,
-    )
+    # DataFrame, its driver-side rows, or the snapshot store with pruned
+    # reads
+    from ophidia_server_spark.filters import compile_massive_snapshot
 
-    mem = {r["cube_id"] for r in compile_massive(cat, arg).collect()}
+    mem = set(ids(cat, arg))
     snap = {
         r["cube_id"]
         for r in compile_massive_snapshot(spark, snap_cat, arg).collect()
     }
     assert snap == mem and mem
+
+
+MF_ERROR_CASES = [
+    "[]",
+    "[metadata_value=x]",
+    "[cube_filter=1:end]",
+    "[wrong",
+]
+
+
+@pytest.mark.parametrize("arg", MF_ERROR_CASES)
+def test_error_cases_raise_same_type_on_every_backend(spark, cat, snap_cat, arg):
+    from ophidia_server_spark.filters import compile_massive_snapshot
+
+    with pytest.raises(Exception) as mem:
+        ids(cat, arg)  # the DataFrame and row evaluators agree on the type
+    with pytest.raises(Exception) as snap:
+        compile_massive_snapshot(spark, snap_cat, arg).collect()
+    assert type(mem.value) is type(snap.value) is ValueError
+
+
+def test_none_field_matches_neither_polarity(spark):
+    # a NULL field fails both `=` and `!=` in SQL; the row evaluator's None
+    # must do the same, and a NULL path is outside every session scope
+    cubes = spark.createDataFrame(
+        [(1, None, None, "/sess1/x", None, None),
+         (2, 5, "c", "/sess1/x", 1, "m"),
+         (3, 5, "c", None, 1, "m")],
+        "cube_id long, container_id long, container string, path string, "
+        "level long, measure string",
+    )
+    metadata = spark.createDataFrame(
+        [(1, "k", None), (2, "k", "v")], "cube_id long, key string, value string"
+    )
+    lineage = spark.createDataFrame([], "out_cube long, task string, in_cube long")
+    cats = both(Catalog(cubes=cubes, metadata=metadata, lineage=lineage))
+    assert ids(cats, "[cube_filter=*]") == [1, 2]
+    assert ids(cats, "[container=c]") == [2]
+    assert ids(cats, "[container!=d]") == [2]
+    assert ids(cats, "[level!=0]") == [2]
+    assert ids(cats, "[measure!=x|y]") == [2]
+    assert ids(cats, "[container_pid!=http://s/9]") == [2]
+    assert ids(cats, "[metadata_key=k]") == [1, 2]
+    assert ids(cats, "[k!=v]") == [1]
+    assert ids(cats, "[path!=/sess1/y]") == [1, 2]
 
 
 def test_snapshot_backend_prunes_files(spark, snap_cat):
@@ -538,9 +615,7 @@ def test_snapshot_backend_negated_parent_not_pruned(spark, tmp_path):
     # Constructed multi-parent lineage (cube 300 descends from BOTH 5 and
     # 7): [parent_cube=5; parent_cube!=7] must exclude 300.
     from ophidia_server_spark.catalog import Catalog, snapshot_catalog_write
-    from ophidia_server_spark.filters import (
-        compile_massive, compile_massive_snapshot,
-    )
+    from ophidia_server_spark.filters import compile_massive_snapshot
 
     cubes = spark.createDataFrame(
         [(300, 1, "c", "/sess1/x", 0, "m"), (301, 1, "c", "/sess1/x", 0, "m")],
@@ -558,7 +633,7 @@ def test_snapshot_backend_negated_parent_not_pruned(spark, tmp_path):
     base = str(tmp_path / "mpcat")
     snapshot_catalog_write(cat, base)
     arg = "[parent_cube=http://srv/0/5;parent_cube!=http://srv/0/7]"
-    mem = {r["cube_id"] for r in compile_massive(cat, arg).collect()}
+    mem = set(ids(both(cat), arg))
     snap = {
         r["cube_id"]
         for r in compile_massive_snapshot(spark, base, arg).collect()
@@ -572,7 +647,7 @@ def test_snapshot_backend_empty_container_not_pruned_away(spark, tmp_path):
     # narrowed past them)
     from ophidia_server_spark.catalog import Catalog, snapshot_catalog_write
     from ophidia_server_spark.filters import (
-        compile_massive, compile_massive_snapshot, group_prune_ranges,
+        compile_massive_snapshot, group_prune_ranges,
     )
 
     assert "container" not in group_prune_ranges(
@@ -590,7 +665,7 @@ def test_snapshot_backend_empty_container_not_pruned_away(spark, tmp_path):
     base = str(tmp_path / "emptycont")
     snapshot_catalog_write(cat, base)
     arg = "[container=|Brand#13]"
-    mem = {r["cube_id"] for r in compile_massive(cat, arg).collect()}
+    mem = set(ids(both(cat), arg))
     snap = {
         r["cube_id"]
         for r in compile_massive_snapshot(spark, base, arg).collect()
@@ -607,7 +682,7 @@ def test_snapshot_catalog_append_keeps_versions_aligned(spark, cat, tmp_path):
     )
 
     base = str(tmp_path / "aligned")
-    snapshot_catalog_write(cat, base)
+    snapshot_catalog_write(cat["dataframe"], base)
     new = spark.createDataFrame(
         [(910001, 40, "Brand#98", "/sess1/new/b98", 8, "m8")],
         "cube_id long, container_id long, container string, path string, "
@@ -619,6 +694,6 @@ def test_snapshot_catalog_append_keeps_versions_aligned(spark, cat, tmp_path):
     # row counts are consistent (metadata/lineage unchanged)
     got = load_snapshot_catalog(spark, base, version=2)
     assert got.cubes.filter("cube_id = 910001").count() == 1
-    assert got.metadata.count() == cat.metadata.count()
+    assert got.metadata.count() == cat["dataframe"].metadata.count()
     import os
     assert layout.snapshot_versions(os.path.join(base, "lineage")) == [1, 2]

@@ -179,6 +179,31 @@ def test_merge_upsert_converges_duplicate_keys(spark, tmp_path):
     assert got == [(1, 99.0), (2, 20.0)]
 
 
+def test_merge_upsert_casts_updates_to_store_types(spark, tmp_path):
+    # a decimal sum widens (18,2) -> (19,2); the merge must still write
+    # the store's (18,2), in every file, or a later read of the store
+    # fails whenever inference picks the wrong footer
+    import glob
+
+    from pyspark.sql.types import DecimalType
+
+    base = spark.createDataFrame([(1,), (2,), (3,)], "k long").select(
+        "k", (F.col("k") * 10).cast("decimal(18,2)").alias("v")
+    )
+    path = str(tmp_path / "dec")
+    base.repartition(2).write.parquet(path)
+    upd = base.filter("k = 2").withColumn("v", F.col("v") + F.lit(1).cast("decimal(18,2)"))
+    assert upd.schema["v"].dataType == DecimalType(19, 2)
+    L.merge_upsert(spark, path, upd, ["k"])
+    for f in glob.glob(f"{path}/*.parquet"):
+        assert spark.read.parquet(f).schema["v"].dataType == DecimalType(18, 2), f
+    got = spark.read.parquet(path)
+    assert got.schema["v"].dataType == DecimalType(18, 2)
+    assert sorted((r.k, float(r.v)) for r in got.collect()) == [
+        (1, 10.0), (2, 21.0), (3, 30.0)
+    ]
+
+
 def test_snapshot_time_travel_and_vacuum(spark, tables, tmp_path):
     from ophidia_server_spark.layout import (
         snapshot_read, snapshot_upsert, snapshot_versions, snapshot_write,

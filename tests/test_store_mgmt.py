@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.cube import build_cube
-from ophidia_server_spark.filters import compile_massive
+from ophidia_server_spark.filters import expand_massive
 from ophidia_server_spark.management import ManagementService, operators_list
 from ophidia_server_spark.store import CubeStore
 
@@ -88,8 +88,60 @@ def test_store_catalog_feeds_massive_filter(store):
     st, pid = store
     st.metadata_put(pid, "experiment", "exp42")
     cat = st.as_catalog()
-    got = [r.cube_id for r in compile_massive(cat, "[experiment=exp42]").collect()]
+    got = expand_massive(cat, "[experiment=exp42]")
     assert got == [st.entries[pid].cube_id]
+
+
+def _virtual_store(spark, tmp_path, n=6):
+    from ophidia_server_spark.cube import randcube
+
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    shape = randcube(spark, 3, 4)
+    pids = [st.register(shape, f"c{i % 2}") for i in range(n)]
+    return st, pids
+
+
+def test_massive_cubeschema_over_store_launches_no_spark_job(spark, tmp_path):
+    # the live store's catalog is evaluated in the driver: expanding the
+    # massive argument and describing virtual cubes runs no Spark job
+    from ophidia_server_spark.plans.server import build_default_engine
+
+    st, pids = _virtual_store(spark, tmp_path)
+    eng = build_default_engine(spark, st)
+    sc = spark.sparkContext
+    group = "massive-cubeschema-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        run = eng.run({"tasks": [{
+            "name": "schema", "operator": "oph_cubeschema",
+            "arguments": {"cube": "[container=c0]"},
+        }]})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    res = run.results["schema"]
+    assert res.status == "OPH_ODB_STATUS_COMPLETED"
+    assert [v["pid"] for v in res.value] == pids[0::2]
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+@pytest.mark.parametrize("max_workers", [1, 2])
+def test_massive_unknown_explicit_pid_is_named_error(spark, tmp_path, max_workers):
+    # an explicit PID the store does not hold fails by name, on the serial
+    # path and on the concurrent-wave pool path alike
+    from ophidia_server_spark.plans.server import build_default_engine
+    from ophidia_server_spark.plans.workflow import WorkflowError
+
+    st, pids = _virtual_store(spark, tmp_path, n=2)
+    eng = build_default_engine(spark, st)
+    wf = {"tasks": [
+        {"name": "massive", "operator": "oph_cubeschema",
+         "arguments": {"cube": "[container=c0]|http://spark-engine/c0/999"}},
+        {"name": "single", "operator": "oph_cubeschema",
+         "arguments": {"cube": pids[1]}},
+    ]}
+    with pytest.raises(WorkflowError, match="unknown cube 999"):
+        eng.run(wf, max_workers=max_workers)
 
 
 # -- management shims ---------------------------------------------------------
