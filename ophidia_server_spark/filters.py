@@ -147,6 +147,8 @@ def _container_pid(value: str) -> int:
     (<idcontainer>/<iddatacube>) by taking the container component
     (oph_filters.c:272-305 parses the id from the URL)."""
     nums = [p for p in str(value).rstrip("/").split("/") if p.isdigit()]
+    if not nums:
+        raise ValueError(f"container_pid {value!r} names no numeric container id")
     return int(nums[-2]) if len(nums) >= 2 else int(nums[-1])
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.ckpt import checkpoint as _ckpt
-from ophidia_server_spark.session import session_cached
+from ophidia_server_spark.session import BROADCAST_BUDGET_BYTES, session_cached
 
 
 class ALSResult(NamedTuple):
@@ -377,19 +377,13 @@ def _half_step(
     ), eager=False)
 
 
-# Broadcast budget for the fixed factor table in a half-step's gather join
-# (and predict's scoring joins): estimated bytes = rows x (8-byte id +
-# k doubles + per-row overhead). Default 64 MB — a comfortable executor/
-# driver footprint; a 100M-item factor table blows the gate and falls back
-# to the shuffle path automatically.
-_BROADCAST_MB = "SPARK_GRAFT_ALS_BROADCAST_MB"
-
-
 def _fits_broadcast(n_rows: int, k: int) -> bool:
-    import os
-
-    budget = float(os.environ.get(_BROADCAST_MB, "64")) * 1024 * 1024
-    return n_rows * (40 + 8 * k) <= budget
+    """Size gate for broadcasting the fixed factor table in a half-step's
+    gather join (and predict's scoring joins): estimated bytes = rows x
+    (8-byte id + k doubles + per-row overhead) against
+    session.BROADCAST_BUDGET_BYTES; a 100M-item factor table blows the
+    gate and falls back to the shuffle path automatically."""
+    return n_rows * (40 + 8 * k) <= BROADCAST_BUDGET_BYTES
 
 
 def als(

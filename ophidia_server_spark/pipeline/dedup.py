@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ophidia_server_spark.ckpt import checkpoint as _ckpt
 from ophidia_server_spark.pipeline.text import tokens
+from ophidia_server_spark.session import BROADCAST_BUDGET_BYTES
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -727,12 +728,10 @@ def _reps_fit_broadcast(reps: DataFrame) -> bool:
     (the big side) by __ra and again by __rb. One aggregate over the
     already-checkpointed reps estimates its broadcast footprint (row
     overhead + per-shingle array overhead + actual string bytes);
-    under SPARK_GRAFT_DEDUP_BROADCAST_MB (default 64) both verify
-    sides broadcast and the candidate table is never shuffled. Above
-    the budget the sort-merge path is untouched — the gate is
-    scale-adaptive, not a local fixture constant."""
-    import os
-
+    under session.BROADCAST_BUDGET_BYTES both verify sides broadcast
+    and the candidate table is never shuffled. Above the budget the
+    sort-merge path is untouched — the gate is scale-adaptive, not a
+    local fixture constant."""
     row = reps.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.size("shingles")), F.lit(0)).alias("toks"),
@@ -748,13 +747,10 @@ def _reps_fit_broadcast(reps: DataFrame) -> bool:
         ).alias("chars"),
     ).first()
     est = int(row["n"]) * 64 + int(row["toks"]) * 24 + int(row["chars"])
-    budget = float(
-        os.environ.get("SPARK_GRAFT_DEDUP_BROADCAST_MB", "64")
-    ) * 1024 * 1024
     # BOTH verify sides (sa and sb) are broadcast as separate relations
     # built from reps, so the realized executor/driver footprint is ~2x
     # one copy's estimate — gate on the doubled figure (ADVICE r13)
-    return 2 * est <= budget
+    return 2 * est <= BROADCAST_BUDGET_BYTES
 
 
 def _rep_prefixes(reps: DataFrame, threshold: float) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.ckpt import checkpoint as _ckpt
+from ophidia_server_spark.session import BROADCAST_BUDGET_BYTES
 
 
 _WEDGE_SPILL_BYTES = 64  # measured: sf10 probe, 4.1B wedges / 12 rounds
@@ -29,16 +30,11 @@ def _bc_rows_fit(n_rows: int, row_bytes: int = 48) -> bool:
     their joins as checkpoint or aggregate outputs with no Catalyst size
     statistics, so the planner always falls back to sort-merge — paying a
     shuffle+sort of the EDGE-sized side every round. When the node-sized
-    side provably fits the budget (SPARK_GRAFT_GRAPH_BROADCAST_MB,
-    default 64), an explicit broadcast hint removes that shuffle; above
-    the budget the shuffle path is untouched. Counts come free: every
-    caller already counts its node set per round."""
-    import os
-
-    budget = float(
-        os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_MB", "64")
-    ) * 1024 * 1024
-    return n_rows * row_bytes <= budget
+    side provably fits session.BROADCAST_BUDGET_BYTES, an explicit
+    broadcast hint removes that shuffle; above the budget the shuffle
+    path is untouched. Counts come free: every caller already counts its
+    node set per round."""
+    return n_rows * row_bytes <= BROADCAST_BUDGET_BYTES
 
 
 def clean_and_orient(
@@ -73,14 +69,6 @@ def clean_and_orient(
         F.when(fwd, F.col("__b")).otherwise(F.col("__a")).alias("__hi"),
     )
     return und, oriented
-
-
-def wedge_total(oriented: DataFrame) -> float:
-    """Exact total wedge count of a degree-oriented edge set — one cheap
-    aggregate (Σ d·(d−1)/2 over the oriented out-degrees). The auto-chunk
-    estimate's action: running it on a persisted `oriented` materializes
-    the cache the counting passes reuse."""
-    return _wedge_and_edge_total(oriented)[0]
 
 
 def _wedge_and_edge_total(oriented: DataFrame) -> tuple[float, int]:

@@ -108,26 +108,6 @@ def signature_udf(dim: int, bits: int = 8):
     return F.pandas_udf(_sig_fn, T.LongType())
 
 
-def hyperplane_signature(
-    vec_col: Column, dim: int, bits: int = 8
-) -> Column:
-    """Column-expression form of the hyperplane signature (kept for plans
-    that must stay pure-JVM; prefer signature_udf for bulk scoring)."""
-    sig = F.lit(0).cast("long")
-    for j in range(bits):
-        plane = F.array(
-            *[
-                F.lit((((j * dim + d) * 2654435761) % 1000003) / 1000003.0 - 0.5)
-                for d in range(dim)
-            ]
-        )
-        bit = F.when(_dot(vec_col, plane) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig.bitwiseOR(F.shiftleft(bit, j))
-    return sig
-
-
 def lsh_topk_cosine(
     df: DataFrame, query_vec: list[float], k: int = 10, bits: int = 8,
     id_col: str = "vec_id", vec_col: str = "embedding",

@@ -37,6 +37,8 @@ from collections import deque
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from ophidia_server_spark.session import fan_out
+
 VAR_RE = re.compile(r"@\{(\w+)\}|@(\w+)")
 IDX_RE = re.compile(r"&\{(\w+)\}|&(\w+)")
 
@@ -143,16 +145,6 @@ _ALLOWED_CMPS = {
     ast.Lt: _op.lt, ast.LtE: _op.le, ast.Gt: _op.gt, ast.GtE: _op.ge,
     ast.Eq: _op.eq, ast.NotEq: _op.ne,
 }
-
-
-def _active_spark_context():
-    """The live SparkContext if any (None for non-Spark engines/tests)."""
-    try:
-        from pyspark import SparkContext
-
-        return SparkContext._active_spark_context
-    except Exception:  # pragma: no cover - pyspark always importable here
-        return None
 
 
 def eval_condition(expr: str) -> float:
@@ -915,9 +907,11 @@ class WorkflowEngine:
     ) -> TaskResult:
         """Massive expansion -> light tasks (oph_workflow_engine.c:1010-1056);
         responses aggregate like oph_workflow_load_aggregate_response
-        (:454-507). ncores>1 runs light tasks concurrently (the reference's
-        ncores inheritance policy, oph_workflow_engine.c:1019 — Spark
-        schedules the concurrent jobs' stages fairly)."""
+        (:454-507). The light tasks run through `session.fan_out` on up to
+        `ncores` threads (the reference's ncores inheritance policy,
+        oph_workflow_engine.c:1019): concurrent ones share the FAIR pool
+        `mf_<task>`, so the fan-out competes fairly with other wave
+        members, and all of them stay in the caller's Spark job group."""
         name = t["name"]
         if str(args.get("run", "yes")).lower() == "no":
             return TaskResult(name, "OPH_ODB_STATUS_COMPLETED", {"expansion": items})
@@ -928,28 +922,21 @@ class WorkflowEngine:
         def one(item):
             largs = {**args, item_key: item, **by_item.get(item, {})}
             largs.pop("run", None)
-            sc = _active_spark_context()
-            if sc is not None:
-                # light tasks of one massive op share a pool: the fan-out
-                # competes fairly with other concurrent wave members
-                sc.setLocalProperty("spark.scheduler.pool", f"mf_{name}")
-            try:
-                return fn(self, largs, inputs)
-            finally:
-                if sc is not None:
-                    sc.setLocalProperty("spark.scheduler.pool", None)
+            return fn(self, largs, inputs)
 
         try:
-            if ncores > 1 and len(items) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=ncores) as pool:
-                    values = list(pool.map(one, items))
-            else:
-                values = [one(item) for item in items]
+            values = fan_out(one, items, ncores, lambda _: f"mf_{name}")
         except Exception as e:  # noqa: BLE001
             return TaskResult(name, "OPH_ODB_STATUS_ERROR", error=f"{type(e).__name__}: {e}")
         return TaskResult(name, "OPH_ODB_STATUS_COMPLETED", values)
+
+    def _dispatch(self, t: dict, fn: Callable, args: dict, inputs: dict) -> TaskResult:
+        """Run one compute task: fanned out to light tasks when an argument
+        is a massive selection, else as a single task."""
+        exp = self._massive_expand(args)
+        if exp is not None:
+            return self._exec_massive(t, fn, args, inputs, exp[1], exp[0], exp[2])
+        return self._exec_task(t, fn, args, inputs)
 
     # -- main entry ------------------------------------------------------------
     def run(
@@ -964,8 +951,10 @@ class WorkflowEngine:
         """Execute a workflow.
 
         max_workers > 1 executes each dependency wave's compute tasks
-        concurrently (the reference's ready-set fan-out,
-        oph_workflow_engine.c:1706 — Spark local/FAIR handles concurrent jobs).
+        concurrently through `session.fan_out` (the reference's ready-set
+        fan-out, oph_workflow_engine.c:1706): each concurrent task runs in
+        its own FAIR pool and keeps the caller's Spark job group, so a
+        cancel or a per-request job count sees every job.
         checkpoint_store collects completed TaskResults by name
         (oph_workflow_save semantics); resume_from seeds results from a prior
         store so finished tasks are not re-run (checkpoint restart,
@@ -1152,43 +1141,13 @@ class WorkflowEngine:
                 inputs = {d: run.results[d].value for d in deps if d in run.results}
                 compute_batch.append((t, fn, args, inputs))
 
-            # execute the wave's compute tasks (concurrently when asked)
-            if max_workers > 1 and len(compute_batch) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                def one(item):
-                    t, fn, args, inputs = item
-                    # per-task FAIR pool: concurrent wave members interleave
-                    # their Spark jobs instead of queueing FIFO (the session
-                    # factory sets spark.scheduler.mode=FAIR; local
-                    # properties are per-Python-thread in pinned-thread mode)
-                    sc = _active_spark_context()
-                    if sc is not None:
-                        sc.setLocalProperty(
-                            "spark.scheduler.pool", f"wf_{t.get('name', 'task')}"
-                        )
-                    try:
-                        exp = self._massive_expand(args)
-                        if exp is not None:
-                            return self._exec_massive(
-                                t, fn, args, inputs, exp[1], exp[0], exp[2]
-                            )
-                        return self._exec_task(t, fn, args, inputs)
-                    finally:
-                        if sc is not None:
-                            sc.setLocalProperty("spark.scheduler.pool", None)
-
-                with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                    results.extend(pool.map(one, compute_batch))
-            else:
-                for t, fn, args, inputs in compute_batch:
-                    exp = self._massive_expand(args)
-                    if exp is not None:
-                        results.append(
-                            self._exec_massive(t, fn, args, inputs, exp[1], exp[0], exp[2])
-                        )
-                    else:
-                        results.append(self._exec_task(t, fn, args, inputs))
+            # the wave's compute tasks, on up to max_workers threads, each
+            # concurrent one in its own FAIR pool wf_<task> so wave members
+            # interleave their Spark jobs instead of queueing FIFO
+            results.extend(fan_out(
+                lambda item: self._dispatch(*item), compute_batch, max_workers,
+                lambda item: f"wf_{item[0]['name']}",
+            ))
 
             for res in results:
                 record(res)

@@ -43,7 +43,7 @@ from ophidia_server_spark.pipeline import similarity as sim
 from ophidia_server_spark.pipeline import text as tx
 from ophidia_server_spark.pipeline import vector_store as vs
 from ophidia_server_spark.plans.workflow import WorkflowEngine
-from ophidia_server_spark.session import load_tables, session_cached, ship_package
+from ophidia_server_spark.session import fan_out, load_tables, session_cached, ship_package
 from ophidia_server_spark.streaming import windows as win
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2091,13 +2091,10 @@ def sim_probe_concurrent(spark, sf_dir):
 
 
 def _run_concurrent_probes(spark, sf_dir, nprobe: int | None):
-    """8 threads probe the one shared IVF store, each under its own FAIR
-    scheduler pool (local properties are per-Python-thread in pinned-thread
-    mode; cleared on the way out). nprobe=None probes every cell
+    """8 threads probe the one shared IVF store through `session.fan_out`,
+    each under its own FAIR scheduler pool. nprobe=None probes every cell
     (exhaustive, oracle-exact); an int prunes to that many cells (the
     serving path, approximate)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     idx = _vstore(spark, sf_dir, "ivf")
     emb = _t(spark, sf_dir)["embeddings"]
     qvecs = {
@@ -2107,16 +2104,11 @@ def _run_concurrent_probes(spark, sf_dir, nprobe: int | None):
     cells = idx.params["n_cells"] if nprobe is None else nprobe
 
     def probe(qid: int):
-        sc = spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", f"probe_{qid}")
-        try:
-            rows = vs.ivf_probe(spark, idx, qvecs[qid], k=5, nprobe=cells).collect()
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
+        rows = vs.ivf_probe(spark, idx, qvecs[qid], k=5, nprobe=cells).collect()
         return [(qid, int(r["vec_id"]), float(r["cosine_sim"])) for r in rows]
 
-    with ThreadPoolExecutor(max_workers=len(qvecs)) as ex:
-        rows = [r for part in ex.map(probe, sorted(qvecs)) for r in part]
+    parts = fan_out(probe, sorted(qvecs), len(qvecs), lambda qid: f"probe_{qid}")
+    rows = [r for part in parts for r in part]
     return spark.createDataFrame(
         rows, "query_id bigint, vec_id bigint, cosine_sim double"
     )

@@ -1,5 +1,6 @@
 """SparkSession factory, the one session-scoped cache (`session_cached` /
-`clear`) and the strict boolean env-knob parse (`env_flag`).
+`clear`), the one concurrent fan-out (`fan_out`), the broadcast-join
+budget and the strict boolean env-knob parse (`env_flag`).
 
 Tuned for the local[32] test harness but cluster-safe: AQE on (runtime re-plan,
 skew-join splitting, partition coalescing), Arrow on (fast pandas interchange for
@@ -15,10 +16,13 @@ import threading
 import weakref
 import zipfile
 from collections import OrderedDict
-from typing import Callable, TypeVar
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Sequence, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+_T = TypeVar("_T")
 _V = TypeVar("_V")
 
 # SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle width from thread count:
@@ -97,6 +101,13 @@ def env_flag(name: str) -> bool:
     )
 
 
+# Most bytes an explicitly broadcast join side may take, by its owner's own
+# estimate (als._fits_broadcast, dedup._reps_fit_broadcast,
+# graph._bc_rows_fit): a comfortable executor/driver footprint. A side
+# above it keeps the shuffle join.
+BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
+
+
 # ---------------------------------------------------------------------------
 # session-scoped caches
 # ---------------------------------------------------------------------------
@@ -147,6 +158,45 @@ def clear(namespace: str | None = None) -> None:
             entries = vars(spark).get(_CACHE_ATTR, {})
             for key in [k for k in entries if namespace is None or k[0] == namespace]:
                 del entries[key]
+
+
+# ---------------------------------------------------------------------------
+# concurrent fan-out
+# ---------------------------------------------------------------------------
+
+def fan_out(
+    fn: Callable[[_T], _V], items: Sequence[_T], workers: int,
+    pool: Callable[[_T], str],
+) -> list[_V]:
+    """`[fn(x) for x in items]`, on up to `workers` threads.
+
+    One item, or `workers <= 1`, runs on the calling thread and leaves its
+    Spark local properties alone. Otherwise each call runs on a pool
+    thread under its own copy of the caller's local properties (job group,
+    description, interrupt flag: captured here, on the calling thread,
+    because a new thread starts with none) and then its FAIR scheduler
+    pool `pool(x)`, so concurrent siblings interleave and every job they
+    launch stays in the caller's job group, where a cancel or a job count
+    finds it. Each call gets its own copy because `setLocalProperties`
+    keeps the object it is given. A worker thread ends with its
+    properties, so nothing is cleared. Results come back in item order;
+    the first exception in item order propagates.
+    """
+    items = list(items)
+    if workers <= 1 or len(items) <= 1:
+        return [fn(x) for x in items]
+    sc = SparkContext._active_spark_context
+    jvm_sc = sc._jsc.sc() if sc is not None else None
+    props = jvm_sc.getLocalProperties() if jvm_sc is not None else None
+
+    def call(x: _T) -> _V:
+        if jvm_sc is not None:
+            jvm_sc.setLocalProperties(props.clone())
+            jvm_sc.setLocalProperty("spark.scheduler.pool", pool(x))
+        return fn(x)
+
+    with ThreadPoolExecutor(max_workers=min(workers, len(items))) as ex:
+        return list(ex.map(call, items))
 
 
 def get_spark(app_name: str = "ophidia_server_spark", shuffle_partitions: str | None = None) -> SparkSession:

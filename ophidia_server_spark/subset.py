@@ -164,12 +164,3 @@ def time_sql(colname: str, subset: str) -> str:
         lo, hi = _expand_bound(s, False), _expand_bound(e, True)
         parts.append(f"({colname} >= DATE '{lo}' AND {colname} <= DATE '{hi}')")
     return "(" + " OR ".join(parts) + ")"
-
-
-def coord_predicate(col: Column, subset: str) -> Column:
-    """Coordinate-space subset (subset_type=coord, oph_subset2): clauses are
-    value ranges over the dimension's coordinate values instead of 1-based
-    indexes. `start:end` means a closed interval; single value means equality;
-    stride applies to integer coordinates only.
-    """
-    return subset_predicate(col, subset)

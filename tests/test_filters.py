@@ -503,6 +503,7 @@ MF_ERROR_CASES = [
     "[metadata_value=x]",
     "[cube_filter=1:end]",
     "[wrong",
+    "[container_pid=http://spark-engine/c01]",
 ]
 
 
