@@ -12,8 +12,9 @@ Enforcement points in this engine:
     `required_role` before execution;
   - ManagementService admin/owner checks on the server-level ops
     (service/cluster/log_info) and session grants (manage_session);
-  - catalog session scoping is structural (filters.compile_group restricts
-    every query to the session prefix, oph_filters.c:576-601 parity).
+  - catalog session scoping is structural (the massive-filter evaluator,
+    filters.compile_massive, restricts every bracket group to the session
+    prefix, oph_filters.c:576-601 parity).
 """
 
 from __future__ import annotations
@@ -156,38 +157,24 @@ def _b64url_dec(s: str) -> bytes:
     return _base64.urlsafe_b64decode(s + "=" * pad)
 
 
-class SignedTokenValidator(TokenValidator):
-    """HMAC-SHA256 signed tokens (the JWT HS256 shape): header.payload.sig
-    with claims sub (user), role, exp (unix seconds), aud. Checks, in
-    order: structure, declared algorithm, signature, expiry, audience,
-    black-list — each failure is its own named TokenError so the 401 tells
-    the operator which check refused (the reference logs the same
-    distinction, oph_auth.c token path). `clock` is injectable for tests."""
+class _JWTValidator(TokenValidator):
+    """The ladder both signed-token validators share: structure, declared
+    algorithm, payload shape, signature (each subclass's own check),
+    expiry, audience, subject, black-list, role. Each failure is its own
+    named TokenError so the 401 tells the operator which check refused
+    (the reference logs the same distinction, oph_auth.c token path).
+    `clock` is injectable for tests."""
 
-    def __init__(self, secret: bytes | str, audience: str | None = None,
-                 blacklist: tuple[str, ...] | set[str] = (),
-                 clock=_time.time):
-        self.secret = secret.encode() if isinstance(secret, str) else secret
+    alg = ""
+
+    def __init__(self, audience: str | None, blacklist, clock):
         self.audience = audience
         self.blacklist = set(blacklist)
         self.clock = clock
 
-    def issue(self, user: str, role: str = "read", ttl: float = 3600.0,
-              audience: str | None = None, **extra) -> str:
-        """Mint a token (test/ops convenience — a real IdP signs its own)."""
-        header = {"alg": "HS256", "typ": "JWT"}
-        payload = {"sub": user, "role": role,
-                   "exp": self.clock() + ttl, **extra}
-        aud = audience if audience is not None else self.audience
-        if aud is not None:
-            payload["aud"] = aud
-        signing = (
-            _b64url(_json.dumps(header, separators=(",", ":")).encode())
-            + "."
-            + _b64url(_json.dumps(payload, separators=(",", ":")).encode())
-        )
-        sig = _hmac.new(self.secret, signing.encode(), _hashlib.sha256)
-        return signing + "." + _b64url(sig.digest())
+    def _check_signature(self, header: dict, signing: bytes, sig: bytes) -> None:
+        """Raise TokenError unless `sig` signs `signing`."""
+        raise NotImplementedError
 
     def validate(self, token: str) -> tuple[str, str]:
         parts = token.split(".")
@@ -199,17 +186,16 @@ class SignedTokenValidator(TokenValidator):
             sig = _b64url_dec(parts[2])
         except Exception:
             raise TokenError("malformed token") from None
-        if not isinstance(header, dict) or header.get("alg") != "HS256":
-            # refuse unexpected algorithms outright (alg-confusion guard)
+        if not isinstance(header, dict) or header.get("alg") != self.alg:
+            # refuse unexpected algorithms outright (alg-confusion guard: an
+            # HS256 token must never reach the RSA path, where the classic
+            # attack signs with the PUBLIC key as HMAC secret)
             raise TokenError("unsupported token algorithm")
         if not isinstance(payload, dict):
             # a correctly-signed non-object payload must still be a named
             # 401, never an AttributeError from payload.get below
             raise TokenError("malformed token payload")
-        signing = f"{parts[0]}.{parts[1]}".encode()
-        good = _hmac.new(self.secret, signing, _hashlib.sha256).digest()
-        if not _hmac.compare_digest(sig, good):
-            raise TokenError("bad token signature")
+        self._check_signature(header, f"{parts[0]}.{parts[1]}".encode(), sig)
         exp = payload.get("exp")
         if exp is None:
             raise TokenError("token has no expiry claim")
@@ -234,6 +220,42 @@ class SignedTokenValidator(TokenValidator):
         except ValueError:
             raise TokenError(f"unknown role claim {role!r}") from None
         return (str(sub), role)
+
+
+class SignedTokenValidator(_JWTValidator):
+    """HMAC-SHA256 signed tokens (the JWT HS256 shape): header.payload.sig
+    with claims sub (user), role, exp (unix seconds), aud, checked by the
+    shared ladder."""
+
+    alg = "HS256"
+
+    def __init__(self, secret: bytes | str, audience: str | None = None,
+                 blacklist: tuple[str, ...] | set[str] = (),
+                 clock=_time.time):
+        self.secret = secret.encode() if isinstance(secret, str) else secret
+        super().__init__(audience, blacklist, clock)
+
+    def issue(self, user: str, role: str = "read", ttl: float = 3600.0,
+              audience: str | None = None, **extra) -> str:
+        """Mint a token (test/ops convenience — a real IdP signs its own)."""
+        header = {"alg": "HS256", "typ": "JWT"}
+        payload = {"sub": user, "role": role,
+                   "exp": self.clock() + ttl, **extra}
+        aud = audience if audience is not None else self.audience
+        if aud is not None:
+            payload["aud"] = aud
+        signing = (
+            _b64url(_json.dumps(header, separators=(",", ":")).encode())
+            + "."
+            + _b64url(_json.dumps(payload, separators=(",", ":")).encode())
+        )
+        sig = _hmac.new(self.secret, signing.encode(), _hashlib.sha256)
+        return signing + "." + _b64url(sig.digest())
+
+    def _check_signature(self, header: dict, signing: bytes, sig: bytes) -> None:
+        good = _hmac.new(self.secret, signing, _hashlib.sha256).digest()
+        if not _hmac.compare_digest(sig, good):
+            raise TokenError("bad token signature")
 
 
 # -- RS256 (asymmetric) verification against published keys ------------------
@@ -337,12 +359,13 @@ def rsa_keys_from_jwks(jwks: dict) -> dict[str, tuple[int, int]]:
     return out
 
 
-class RS256TokenValidator(TokenValidator):
+class RS256TokenValidator(_JWTValidator):
     """Provider-signed JWTs (RS256) verified against locally-configured
     public keys — the reference's OpenID verify path with the key fetch
     replaced by a pinned JWKS/PEM file. Same named-401 ladder as the HMAC
-    validator: structure, algorithm, key lookup (kid), signature, expiry,
-    audience, subject, black-list, role."""
+    validator, with the key lookup (kid) before the signature check."""
+
+    alg = "RS256"
 
     def __init__(self, keys: dict[str, tuple[int, int]],
                  audience: str | None = None,
@@ -351,9 +374,7 @@ class RS256TokenValidator(TokenValidator):
         if not keys:
             raise ValueError("RS256TokenValidator needs at least one key")
         self.keys = dict(keys)
-        self.audience = audience
-        self.blacklist = set(blacklist)
-        self.clock = clock
+        super().__init__(audience, blacklist, clock)
 
     @classmethod
     def from_jwks_file(cls, path: str, **kw) -> "RS256TokenValidator":
@@ -365,22 +386,7 @@ class RS256TokenValidator(TokenValidator):
         with open(path) as fh:
             return cls({kid: rsa_key_from_pem(fh.read())}, **kw)
 
-    def validate(self, token: str) -> tuple[str, str]:
-        parts = token.split(".")
-        if len(parts) != 3:
-            raise TokenError("malformed token")
-        try:
-            header = _json.loads(_b64url_dec(parts[0]))
-            payload = _json.loads(_b64url_dec(parts[1]))
-            sig = _b64url_dec(parts[2])
-        except Exception:
-            raise TokenError("malformed token") from None
-        if not isinstance(header, dict) or header.get("alg") != "RS256":
-            # an HS256 token must never reach the RSA path (alg confusion:
-            # the classic attack signs with the PUBLIC key as HMAC secret)
-            raise TokenError("unsupported token algorithm")
-        if not isinstance(payload, dict):
-            raise TokenError("malformed token payload")
+    def _check_signature(self, header: dict, signing: bytes, sig: bytes) -> None:
         kid = header.get("kid")
         if kid is not None:
             cand = [self.keys[kid]] if kid in self.keys else []
@@ -388,30 +394,5 @@ class RS256TokenValidator(TokenValidator):
                 raise TokenError(f"unknown signing key {kid!r}")
         else:
             cand = list(self.keys.values())
-        signing = f"{parts[0]}.{parts[1]}".encode()
         if not any(_rsa_pkcs1_v15_verify(n, e, signing, sig) for n, e in cand):
             raise TokenError("bad token signature")
-        exp = payload.get("exp")
-        if exp is None:
-            raise TokenError("token has no expiry claim")
-        try:
-            if self.clock() >= float(exp):
-                raise TokenError("token expired")
-        except (TypeError, ValueError):
-            raise TokenError("malformed expiry claim") from None
-        if self.audience is not None:
-            aud = payload.get("aud")
-            auds = aud if isinstance(aud, list) else [aud]
-            if self.audience not in auds:
-                raise TokenError("token audience mismatch")
-        sub = payload.get("sub")
-        if not sub:
-            raise TokenError("token has no subject claim")
-        if sub in self.blacklist:
-            raise TokenError(f"user {sub} is black-listed")
-        role = str(payload.get("role", "read"))
-        try:
-            role_bits(role)
-        except ValueError:
-            raise TokenError(f"unknown role claim {role!r}") from None
-        return (str(sub), role)

@@ -9,15 +9,17 @@ as plain DataFrames/tables:
   metadata(cube_id, key, value)
   lineage(out_cube, task, in_cube)
 
-Two shapes carry these relations. `Catalog` holds them as DataFrames: the
-tables a massive filter is compiled against with Spark (the snapshot-store
-backend below, and the oracle-checked catalog *derived deterministically
-from the `part` fixture table*, so the DuckDB oracle can reconstruct the
-exact same rows with plain SQL — see the CATALOG_SQL_* strings).
-`RowCatalog` holds them as driver-side Python rows: the live CubeStore's
-snapshot, which filters.expand_massive evaluates without any Spark job,
-the way the reference answers a massive filter with one small query to
-its metadata database and never touches the analytics cluster.
+Two shapes carry these relations. `RowCatalog` holds them as driver-side
+Python rows: what filters.compile_massive evaluates, the way the reference
+answers a massive filter with one small query to its metadata database
+and never touches the analytics cluster. The live CubeStore's snapshot is
+one, so its expansions launch no Spark job. `Catalog` holds them as
+DataFrames: catalog tables (the snapshot-store backend below, and the
+oracle-checked catalog *derived deterministically from the `part` fixture
+table*, so the DuckDB oracle can reconstruct the exact same rows with
+plain SQL — see the CATALOG_SQL_* strings). compile_massive narrows those
+in Spark to the rows each bracket group can match (filters.narrow) and
+collects them into a RowCatalog.
 """
 
 from __future__ import annotations
@@ -125,11 +127,11 @@ FROM part WHERE p_partkey > 100
 # versioned exactly-once appends, min-max file stats, pruned reads — so the
 # catalog rides it instead of growing a second metadata engine. The cubes
 # table records per-file (container, level, path, cube_id) stats; the
-# massive-filter compiler derives a predicate rectangle from each bracket
+# massive-filter evaluator derives a predicate rectangle from each bracket
 # group (filters.group_prune_ranges) and reads only intersecting files,
-# with compile_group re-applying the exact predicates afterward — pruning
-# is a performance lever, never a correctness dependency (layout.py's
-# standing contract).
+# with the driver evaluator applying the exact predicates afterward —
+# pruning is a performance lever, never a correctness dependency
+# (layout.py's standing contract).
 
 CUBES_STATS_COLS = ["container", "level", "path", "cube_id"]
 
@@ -210,7 +212,7 @@ def load_snapshot_catalog(
 ) -> Catalog:
     """Open the snapshot-backed catalog (latest version, or a time-travel
     `version` applied to every table). Full reads — the massive-filter
-    compiler's pruned path goes through filters.compile_massive_snapshot
+    evaluator's pruned path goes through filters.compile_massive_snapshot
     instead, which reads only the files each bracket group's predicate
     rectangle intersects."""
     import os as _os

@@ -17,15 +17,15 @@ this into one catalog SQL `SELECT DISTINCT datacube.iddatacube, ...`
 (oph_filters.c:718-721) and runs it on its metadata database, never on the
 analytics cluster.
 
-Two evaluators share the parser and the per-key semantics, chosen by the
-catalog's type in `expand_massive`:
+One evaluator, `compile_massive`, answers every catalog in the driver,
+the way the reference answers with one small metadata query:
 
-- a `RowCatalog` (the live CubeStore's snapshot) is evaluated in the driver
+- a `RowCatalog` (the live CubeStore's snapshot) is evaluated as it is,
   over plain rows: no DataFrame, no Spark job;
-- a `Catalog` of DataFrames (catalog tables: the part-derived fixture, the
-  snapshot-store backend) is compiled by `compile_group` into Column
-  predicates and semi-joins against the metadata/lineage tables, which
-  Catalyst pushes into the (tiny, broadcastable) catalog scans.
+- a `Catalog` of DataFrames (the part-derived fixture, the snapshot-store
+  backend) is first narrowed in Spark, per bracket group, to the rows that
+  group can match (`narrow`), and those rows are collected and evaluated
+  the same way.
 
 Supported filter keys (oph_filters.c): level, measure, container,
 container_pid, cube_filter, parent_cube, metadata_key, metadata_value, path
@@ -39,11 +39,10 @@ from __future__ import annotations
 import re
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.catalog import Catalog, RowCatalog
-from ophidia_server_spark.subset import parse_subset, subset_predicate
+from ophidia_server_spark.subset import parse_subset
 
 NOT = "!"
 _KNOWN = {
@@ -105,19 +104,6 @@ def _split_neg(key: str) -> tuple[str, bool]:
     return key, False
 
 
-def _multival(col: Column, value: str, negate: bool) -> Column:
-    """Multivalue 'a|b' => OR of equals; negated => AND of not-equals
-    (oph_filters.c:61-76)."""
-    vals = value.split("|")
-    if negate:
-        pred = None
-        for v in vals:
-            p = col != F.lit(v)
-            pred = p if pred is None else (pred & p)
-        return pred
-    return col.isin(vals)
-
-
 def pid_cube_id(pid: str) -> int:
     """PID URL -> cube id: last path component
     (oph_massive_operations.c:346 renders http://server/<container>/<cube>)."""
@@ -171,107 +157,14 @@ def _metadata_pairs(kv: dict[str, str], value: str) -> list[tuple[str | None, st
     ]
 
 
-def compile_group(cat: Catalog, kv: dict[str, str]) -> DataFrame:
-    """Compile one bracket group into a DataFrame of matching cube_ids.
-
-    Predicates AND-combine across keys (the reference emits one WHERE
-    conjunction). Session scoping: path filters are prefixed with the session
-    prefix (oph_filters.c:576-601) — enforced here for every query.
-    """
-    df = cat.cubes
-    # every catalog query is session-scoped (oph_filters.c:576-601): cubes
-    # outside the session prefix are invisible no matter which filter keys
-    # the caller supplies — the ACL boundary is structural, not opt-in
-    sp = (cat.session_prefix or "").rstrip("/")
-    if sp:
-        df = df.filter((F.col("path") == sp) | F.col("path").startswith(sp + "/"))
-    pred: Column | None = None
-
-    def add(p: Column) -> None:
-        nonlocal pred
-        pred = p if pred is None else (pred & p)
-
-    def semi(hit: DataFrame, neg: bool) -> None:
-        nonlocal df
-        df = df.join(F.broadcast(hit), "cube_id", "left_anti" if neg else "left_semi")
-
-    depth, recursive = _group_flags(kv)
-
-    for rawk, value in kv.items():
-        key, neg = _split_neg(rawk)
-        if key in ("recursive", "depth", "run"):
-            continue
-        if key == "level":
-            add(_multival(F.col("level").cast("string"), value, neg))
-        elif key == "measure":
-            add(_multival(F.col("measure"), value, neg))
-        elif key == "container":
-            add(_multival(F.col("container"), value, neg))
-        elif key == "container_pid":
-            p = F.col("container_id") == _container_pid(value)
-            add(~p if neg else p)
-        elif key == "cube_filter":
-            # "[*]" / "[all]" select everything in scope (reference cases 0
-            # and 21 compile to the bare folder-scoped query); otherwise each
-            # |-separated item is its own subset string, OR-combined (AND of
-            # complements when negated, oph_filters.c:61-76)
-            if str(value).strip().lower() in ("*", "all"):
-                if neg:  # not-all selects nothing, not everything
-                    add(F.lit(False))
-                continue
-            p = None
-            for item in str(value).split("|"):
-                q = subset_predicate(F.col("cube_id"), item)
-                p = q if p is None else (p | q)
-            add(~p if neg else p)
-        elif key == "parent_cube":
-            parent = pid_cube_id(value)
-            kids = cat.lineage.filter(F.col("in_cube") == parent).select(
-                F.col("out_cube").alias("cube_id")
-            )
-            semi(kids, neg)
-        elif key == "path":
-            base = _path_base(value, cat.session_prefix)
-            if recursive:
-                p = (F.col("path") == base) | F.col("path").startswith(base + "/")
-                if depth > 0:
-                    # depth-limited recursion (oph_filters.c:476-489): path may
-                    # be at most `depth` components below the base
-                    maxslash = base.count("/") + depth
-                    p = p & (
-                        F.length("path") - F.length(F.replace(F.col("path"), F.lit("/"), F.lit("")))
-                        <= maxslash
-                    )
-            else:
-                p = F.col("path") == base
-            add(~p if neg else p)
-        elif key == "metadata_key":
-            # every listed key must exist for the cube (AND-combined,
-            # oph_filters.c:307-369); negation: none may exist
-            for k in value.split("|"):
-                semi(cat.metadata.filter(F.col("key") == k).select("cube_id").distinct(), neg)
-        elif key == "metadata_value":
-            for k, v in _metadata_pairs(kv, value):
-                cond = F.col("value").contains(v)
-                if k:
-                    cond = cond & (F.col("key") == k)
-                semi(cat.metadata.filter(cond).select("cube_id").distinct(), neg)
-        elif key not in _KNOWN:
-            # free key=value -> metadata LIKE filter (oph_filters.c:545-555)
-            hit = cat.metadata.filter(
-                (F.col("key") == key) & F.col("value").contains(value)
-            ).select("cube_id").distinct()
-            semi(hit, neg)
-    if pred is not None:
-        df = df.filter(pred)
-    return df.select("cube_id").distinct()
-
-
 def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
-    """compile_group's semantics over a RowCatalog, in the driver. Each key
-    becomes a test on one cubes column; a row matches when every test holds.
-    A None field fails its test whether or not the key is negated, as a SQL
-    NULL fails both `=` and `!=`."""
+    """One bracket group's cube ids over a RowCatalog, in the driver.
+    Each key becomes a test on one cubes column; a row matches when every
+    test holds (the reference emits one WHERE conjunction). A None field
+    fails its test whether or not the key is negated, as a SQL NULL fails
+    both `=` and `!=`. Every group is session-scoped: cubes outside the
+    session prefix are invisible whatever keys the caller supplies
+    (oph_filters.c:576-601), so the boundary is structural, not opt-in."""
     cid, cont_id, cont, path, level, measure = range(6)
     tests: list[tuple[int, Callable[[object], bool]]] = []
 
@@ -293,7 +186,7 @@ def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
         if key in ("level", "measure", "container"):
             # multivalue OR; negated, an AND of != (oph_filters.c:61-76)
             vals = set(value.split("|"))
-            if key == "level":  # compared as a string, like the cast above
+            if key == "level":  # compared as a string
                 add(level, lambda v, vals=vals: str(v) in vals, neg)
             else:
                 add(measure if key == "measure" else cont, lambda v, vals=vals: v in vals, neg)
@@ -301,6 +194,10 @@ def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
             want = _container_pid(value)
             add(cont_id, lambda v, want=want: v == want, neg)
         elif key == "cube_filter":
+            # "[*]" / "[all]" select everything in scope (reference cases 0
+            # and 21 compile to the bare folder-scoped query); otherwise each
+            # |-separated item is its own subset string, OR-combined (AND of
+            # complements when negated, oph_filters.c:61-76)
             if str(value).strip().lower() in ("*", "all"):
                 if neg:  # not-all selects nothing, not everything
                     add(cid, lambda v: False)
@@ -318,6 +215,8 @@ def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
         elif key == "path":
             base = _path_base(value, cat.session_prefix)
             if recursive:
+                # depth-limited recursion (oph_filters.c:476-489): path may
+                # be at most `depth` components below the base
                 maxslash = base.count("/") + depth
                 add(path, lambda p, b=base, m=maxslash: (
                     (p == b or p.startswith(b + "/")) and (depth <= 0 or p.count("/") <= m)
@@ -325,6 +224,8 @@ def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
             else:
                 add(path, lambda p, b=base: p == b, neg)
         elif key == "metadata_key":
+            # every listed key must exist for the cube (AND-combined,
+            # oph_filters.c:307-369); negation: none may exist
             for k in value.split("|"):
                 hit = md_hit(lambda mk, _, k=k: mk == k)
                 add(cid, lambda v, s=hit: v in s, neg)
@@ -335,6 +236,7 @@ def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
                 ))
                 add(cid, lambda v, s=hit: v in s, neg)
         elif key not in _KNOWN:
+            # free key=value -> metadata LIKE filter (oph_filters.c:545-555)
             hit = md_hit(lambda mk, mv, k=key, sub=value: (
                 mk == k and mv is not None and sub in mv
             ))
@@ -345,52 +247,7 @@ def _evaluate_group(cat: RowCatalog, kv: dict[str, str]) -> set[int]:
     }
 
 
-def expand_massive(cat: Catalog | RowCatalog, arg: str) -> list[int]:
-    """Sorted, distinct cube ids a massive argument selects: the union of
-    its bracket groups plus its explicit PIDs. A RowCatalog is evaluated in
-    the driver; a Catalog of DataFrames goes through compile_massive and
-    one collect."""
-    if not isinstance(cat, RowCatalog):
-        return sorted(r.cube_id for r in compile_massive(cat, arg).collect())
-    groups, pids = parse_massive(arg)
-    out: set[int] = set()
-    for g in groups:
-        out |= _evaluate_group(cat, g)
-    out.update(pid_cube_id(p) for p in pids)
-    if not groups and not pids:
-        raise ValueError(f"empty massive argument {arg!r}")
-    return sorted(out)
-
-
-def compile_massive(cat: Catalog, arg: str) -> DataFrame:
-    """Full massive expansion: union of all bracket groups plus explicit PIDs,
-    DISTINCT — mirroring `SELECT DISTINCT datacube.iddatacube ...`
-    (oph_filters.c:718-721). Returns DataFrame[cube_id]."""
-    groups, pids = parse_massive(arg)
-    parts: list[DataFrame] = [compile_group(cat, g) for g in groups]
-    return _finish_expansion(cat.cubes.sparkSession, parts, pids, arg)
-
-
-def _finish_expansion(spark, parts: list[DataFrame], pids: list[str],
-                      arg: str) -> DataFrame:
-    """Shared expansion tail for both catalog backends: explicit PIDs
-    union in as literal ids, empty expansions are caller errors, and the
-    result is DISTINCT cube_ids — `SELECT DISTINCT datacube.iddatacube`
-    (oph_filters.c:718-721) either way."""
-    if pids:
-        ids = [pid_cube_id(p) for p in pids]
-        parts = parts + [
-            spark.createDataFrame([(i,) for i in ids], "cube_id long")
-        ]
-    if not parts:
-        raise ValueError(f"empty massive argument {arg!r}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
-
-
-# --- Snapshot-backed compilation (round 10) ---------------------------------
+# --- Narrowing: the rectangle a group implies ------------------------------
 
 def _subset_envelope(value: str) -> tuple[int, int] | None:
     """Conservative [lo, hi] integer envelope of a cube_filter subset
@@ -412,19 +269,20 @@ def _subset_envelope(value: str) -> tuple[int, int] | None:
 
 
 def group_prune_ranges(kv: dict[str, str], session_prefix: str) -> dict:
-    """The predicate rectangle a bracket group IMPLIES on the cubes table —
-    the min-max file-skipping lever for the snapshot-backed catalog.
+    """The predicate rectangle a bracket group IMPLIES on the cubes table:
+    the `between` filter `narrow` applies to a DataFrame catalog, and the
+    min-max file-skipping lever for the snapshot-backed one.
     Only non-negated keys contribute (a negation implies no bound); a
     multivalue list contributes its envelope. Keys map to the stats
     columns snapshot_catalog_write records: level (numeric), container
     (string), path (string prefix range), cube_filter -> cube_id
-    (integer envelope). Everything else contributes nothing — pruning
-    must only ever be narrower than compile_group's exact predicates,
-    which re-apply afterward."""
+    (integer envelope). Everything else contributes nothing — the
+    rectangle must only ever keep more rows than _evaluate_group's exact
+    tests, which run afterward."""
     ranges: dict = {}
     sp = (session_prefix or "").rstrip("/")
-    # session scoping is structural (compile_group enforces it for every
-    # query), so the path envelope starts at the session prefix
+    # session scoping is structural (_evaluate_group enforces it for every
+    # group), so the path envelope starts at the session prefix
     if sp:
         ranges["path"] = (sp, sp + "￿")
     for rawk, value in kv.items():
@@ -439,15 +297,12 @@ def group_prune_ranges(kv: dict[str, str], session_prefix: str) -> dict:
         elif key == "container":
             # all-or-nothing like level: dropping empty items before the
             # envelope would exclude empty-string containers the exact
-            # isin matches (missing rows, not an error)
+            # test matches (missing rows, not an error)
             items = str(value).split("|")
             if items and all(items):
                 ranges["container"] = (min(items), max(items))
         elif key == "path":
-            base = value if value.startswith(sp) else sp + (
-                "" if value.startswith("/") else "/"
-            ) + value
-            base = base.rstrip("/")
+            base = _path_base(value, session_prefix or "")
             recursive = kv.get("recursive", "no").lower() == "yes"
             ranges["path"] = (base, base + "￿") if recursive else (
                 base, base
@@ -461,6 +316,77 @@ def group_prune_ranges(kv: dict[str, str], session_prefix: str) -> dict:
     return ranges
 
 
+# --- Expansion ----------------------------------------------------------------
+
+def narrow(cat: Catalog, kv: dict[str, str]) -> RowCatalog:
+    """The rows of a DataFrame catalog that bracket group `kv` can match,
+    cut in Spark and collected for _evaluate_group:
+
+    - cubes: the group's group_prune_ranges rectangle, which only ever
+      keeps more rows than the exact tests accept;
+    - metadata: the rows under a key the group names (metadata_key values
+      and free keys); every row when a metadata_value pairs with no key;
+      none when the group names no key;
+    - lineage: the rows whose in_cube is a parent_cube the group names,
+      of either polarity.
+    """
+    _group_flags(kv)  # a group the reference rejects launches no job
+    keys: set[str] = set()
+    every_key = False
+    parents: set[int] = set()
+    for rawk, value in kv.items():
+        key = _split_neg(rawk)[0]
+        if key == "metadata_key":
+            keys.update(value.split("|"))
+        elif key == "metadata_value":
+            every_key |= any(k is None for k, _ in _metadata_pairs(kv, value))
+        elif key == "parent_cube":
+            parents.add(pid_cube_id(value))
+        elif key not in _KNOWN:
+            keys.add(key)
+    cubes = cat.cubes
+    for c, (lo, hi) in group_prune_ranges(kv, cat.session_prefix).items():
+        cubes = cubes.filter(F.col(c).between(F.lit(lo), F.lit(hi)))
+    metadata = cat.metadata if every_key else cat.metadata.filter(
+        F.col("key").isin(sorted(keys))
+    )
+    lineage = cat.lineage.filter(F.col("in_cube").isin(sorted(parents)))
+    return RowCatalog(
+        cubes=cubes.select(
+            "cube_id", "container_id", "container", "path", "level", "measure"
+        ).collect(),
+        metadata=metadata.select("cube_id", "key", "value").collect()
+        if every_key or keys else [],
+        lineage=lineage.select("out_cube", "task", "in_cube").collect()
+        if parents else [],
+        session_prefix=cat.session_prefix,
+    )
+
+
+def _expand(arg: str, rows_for: Callable[[int, dict[str, str]], RowCatalog]) -> list[int]:
+    """The union of the argument's bracket groups, each evaluated over
+    rows_for(group_index, group), plus its explicit PIDs: sorted, distinct
+    cube ids, as `SELECT DISTINCT datacube.iddatacube` returns them
+    (oph_filters.c:718-721)."""
+    groups, pids = parse_massive(arg)
+    if not groups and not pids:
+        raise ValueError(f"empty massive argument {arg!r}")
+    out = {pid_cube_id(p) for p in pids}
+    for gi, g in enumerate(groups):
+        out |= _evaluate_group(rows_for(gi, g), g)
+    return sorted(out)
+
+
+def compile_massive(cat: Catalog | RowCatalog, arg: str) -> list[int]:
+    """Sorted, distinct cube ids a massive argument selects. A RowCatalog
+    (the live store's snapshot) is evaluated as it is, with no Spark job;
+    a Catalog of DataFrames is narrowed per group, then evaluated the same
+    way."""
+    if isinstance(cat, RowCatalog):
+        return _expand(arg, lambda _, g: cat)
+    return _expand(arg, lambda _, g: narrow(cat, g))
+
+
 def compile_massive_snapshot(
     spark,
     base_path: str,
@@ -468,60 +394,39 @@ def compile_massive_snapshot(
     session_prefix: str | None = None,
     version: int | None = None,
     prune_report: list | None = None,
-) -> DataFrame:
+) -> list[int]:
     """compile_massive over the snapshot-store catalog backend
     (catalog.snapshot_catalog_write layout): per bracket group, the cubes
     table is opened as a PRUNED snapshot read — only files whose recorded
     (container, level, path, cube_id) min-max envelope intersects the
-    group's predicate rectangle are scanned — then the ordinary
-    compile_group applies the exact filter semantics on what survived.
-    Same rows as the in-memory backend by construction (pruning is
-    layout.py's conservative contract); at millions of cubes the win is
-    reading O(matching files) of a continuously-appended catalog instead
-    of all of it. The lineage table prunes on in_cube when the group names
-    a non-negated parent_cube; metadata reads stay full (semi-joined,
-    broadcast). `prune_report` (when a list) receives one
-    (group_index, files_read, files_total) triple per group — the pruning
-    visibility hook the plan-assertion tests use."""
+    group's predicate rectangle are scanned — then narrowed and evaluated
+    like any DataFrame catalog. Same ids as the in-memory backend by
+    construction (pruning is layout.py's conservative contract); at
+    millions of cubes the win is reading O(matching files) of a
+    continuously-appended catalog instead of all of it. `prune_report`
+    (when a list) receives one (group_index, files_read, files_total)
+    triple per group — the pruning visibility hook the plan-assertion
+    tests use."""
     import os as _os
 
     from ophidia_server_spark import layout
     from ophidia_server_spark.catalog import SESSION_PREFIX
 
     sp = SESSION_PREFIX if session_prefix is None else session_prefix
-    groups, pids = parse_massive(arg)
-    metadata = layout.snapshot_read(
-        spark, _os.path.join(base_path, "metadata"), version
+    metadata, lineage = (
+        layout.snapshot_read(spark, _os.path.join(base_path, t), version)
+        for t in ("metadata", "lineage")
     )
-    parts: list[DataFrame] = []
-    for gi, g in enumerate(groups):
-        ranges = group_prune_ranges(g, sp)
+
+    def rows_for(gi: int, g: dict[str, str]) -> RowCatalog:
         cubes, fr, ft = layout.snapshot_pruned_read(
-            spark, _os.path.join(base_path, "cubes"), ranges, version
+            spark, _os.path.join(base_path, "cubes"),
+            group_prune_ranges(g, sp), version,
         )
         if prune_report is not None:
             prune_report.append((gi, fr, ft))
-        pc = {k: v for k, v in g.items() if _split_neg(k)[0] == "parent_cube"}
-        parent = next(
-            (v for k, v in pc.items() if not _split_neg(k)[1]), None
-        )
-        # prune ONLY when the group's sole parent_cube use is the positive
-        # one: a co-present negated parent_cube! needs the OTHER parent's
-        # lineage rows for its left_anti — a row-filtered read would hand
-        # it an empty kids set and silently keep cubes it must exclude
-        if parent is not None and len(pc) == 1:
-            pid = pid_cube_id(parent)
-            lineage, _, _ = layout.snapshot_pruned_read(
-                spark, _os.path.join(base_path, "lineage"),
-                {"in_cube": (pid, pid)}, version,
-            )
-        else:
-            lineage = layout.snapshot_read(
-                spark, _os.path.join(base_path, "lineage"), version
-            )
-        cat = Catalog(
-            cubes=cubes, metadata=metadata, lineage=lineage,
-            session_prefix=sp,
-        )
-        parts.append(compile_group(cat, g))
-    return _finish_expansion(spark, parts, pids, arg)
+        return narrow(Catalog(
+            cubes=cubes, metadata=metadata, lineage=lineage, session_prefix=sp,
+        ), g)
+
+    return _expand(arg, rows_for)

@@ -27,16 +27,18 @@ from ophidia_server_spark.plans.workflow import WorkflowEngine, WorkflowError
 from ophidia_server_spark.store import CubeStore
 
 
-def _resolve_cube_arg(args: dict, inputs: dict) -> str:
-    """The reference propagates the parent task's output cube into the `cube`
-    argument when the task does not set one (dep type `single`/`embedded`)."""
-    pid = args.get("cube")
-    if pid:
-        return str(pid)
+def _input_arg(args: dict, inputs: dict, key: str) -> str:
+    """The task's `key` argument (`cube` or `src_path`), else the first
+    parent output that is a non-empty string: the reference propagates the
+    parent task's output into the argument the task does not set (dep type
+    `single`/`embedded`)."""
+    value = args.get(key)
+    if value:
+        return str(value)
     for v in inputs.values():
         if isinstance(v, str) and v:
             return v
-    raise ValueError("no cube argument and no parent cube to inherit")
+    raise ValueError(f"no {key} argument and no parent output to inherit")
 
 
 def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngine:
@@ -78,7 +80,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         return store.register(cube, args.get("container", "default"), task="randcube")
 
     def op_subset(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         dims = str(args["subset_dims"]).split("|")
         filters = str(args["subset_filter"]).split("|")
         cube = store.get(pid)
@@ -92,7 +94,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                               parents=[pid], task="subset")
 
     def op_reduce(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
         out = C.oph_reduce(cube, str(args.get("operation", "avg")))
         # reduce collapses the implicit dim; re-pack the scalar per row as a
@@ -110,7 +112,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                               parents=[pid], task="reduce")
 
     def op_aggregate(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         out = C.oph_aggregate(
             store.get(pid), str(args.get("operation", "sum")),
             str(args["group_dims"]).split("|") if args.get("group_dims") else
@@ -134,7 +136,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_reduce2(engine, args, inputs):
         from ophidia_server_spark.functions.hierarchy import concept_level
 
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
         out = C.oph_reduce2(
             cube,
@@ -147,7 +149,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_aggregate2(engine, args, inputs):
         from ophidia_server_spark.functions.hierarchy import concept_level
 
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         out = C.oph_aggregate2(
             store.get(pid),
             str(args.get("operation", "sum")),
@@ -158,13 +160,13 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                               parents=[pid], task="aggregate2")
 
     def op_rollup(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         out = C.oph_rollup(store.get(pid), args["dim"])
         return store.register(out, args.get("container", "default"),
                               parents=[pid], task="rollup")
 
     def op_drilldown(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         # drilldown explodes to the long form; returned as a response value
         # (the reference renders it as a grid)
         from ophidia_server_spark.plans.response import grid
@@ -173,7 +175,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                     limit=int(args.get("limit", 1000)))
 
     def op_permute(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         out = C.oph_permute(store.get(pid), str(args["dim_order"]).split("|"))
         return store.register(out, args.get("container", "default"),
                               parents=[pid], task="permute")
@@ -190,7 +192,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_apply(engine, args, inputs):
         from ophidia_server_spark.functions.primitives import PRIMITIVES
 
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         name = str(args.get("query", "oph_mul_scalar"))
         if name not in PRIMITIVES:
             raise KeyError(f"unknown primitive {name!r}; known: {sorted(PRIMITIVES)}")
@@ -204,14 +206,14 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                               parents=[pid], task="apply")
 
     def op_duplicate(engine, args, inputs):
-        return store.duplicate(_resolve_cube_arg(args, inputs))
+        return store.duplicate(_input_arg(args, inputs, "cube"))
 
     def op_delete(engine, args, inputs):
-        store.delete(_resolve_cube_arg(args, inputs))
+        store.delete(_input_arg(args, inputs, "cube"))
         return None
 
     def op_metadata(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         mode = str(args.get("mode", "read"))
         if mode == "insert":
             store.metadata_put(pid, args["metadata_key"], args["metadata_value"])
@@ -222,15 +224,15 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         return store.metadata_get(pid, args.get("metadata_key"))
 
     def op_cubeschema(engine, args, inputs):
-        return store.cubeschema(_resolve_cube_arg(args, inputs))
+        return store.cubeschema(_input_arg(args, inputs, "cube"))
 
     def op_explorecube(engine, args, inputs):
         return store.explorecube_response(
-            _resolve_cube_arg(args, inputs), limit=int(args.get("limit", 100))
+            _input_arg(args, inputs, "cube"), limit=int(args.get("limit", 100))
         )
 
     def op_publish(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         out = IO.oph_publish(
             store.get(pid), args["publish_dir"], args.get("name", f"cube_{store.entries[pid].cube_id}"),
             limit=int(args.get("limit", 1000)),
@@ -256,7 +258,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         }
 
     def op_exportcsv(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         IO.oph_exportcsv(store.get(pid), args["output_path"])
         return pid
 
@@ -265,9 +267,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark.pipeline.dedup import dedup_exact
         from ophidia_server_spark.pipeline.packing import dedup_lines
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         level = args.get("level", "document")
         if level == "document":
@@ -288,9 +288,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_quality_filter(engine, args, inputs):
         from ophidia_server_spark.pipeline.text import quality_score
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
         scored = quality_score(docs, args.get("text_col", "text"))
@@ -307,9 +305,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_minhash(engine, args, inputs):
         from ophidia_server_spark.pipeline.dedup import minhash_lsh_pairs
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         minhash_lsh_pairs(
             spark.read.parquet(src),
@@ -321,9 +317,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_chunk(engine, args, inputs):
         from ophidia_server_spark.pipeline.text import chunk_documents
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         chunk_documents(
             spark.read.parquet(src),
@@ -340,9 +334,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             weighted_sample,
         )
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
         mode = args.get("mode", "bernoulli")
@@ -397,9 +389,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         action = str(args.get("action", "build"))
         path = str(args["index_path"])
         if action == "build":
-            src = args.get("src_path") or next(
-                v for v in inputs.values() if isinstance(v, str)
-            )
+            src = _input_arg(args, inputs, "src_path")
             df = spark.read.parquet(src)
             kind = args.get("kind", "ivf")
             if kind == "ivf":
@@ -420,9 +410,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         if action == "probe":
             out = str(args["output_path"])
             idx = vstore.load_index(path)
-            qsrc = args.get("query_path") or args.get("src_path") or next(
-                v for v in inputs.values() if isinstance(v, str)
-            )
+            qsrc = args.get("query_path") or _input_arg(args, inputs, "src_path")
             qid = int(args["query_id"])
             qrow = (
                 spark.read.parquet(qsrc)
@@ -444,9 +432,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_features(engine, args, inputs):
         # feature-engineering stage: clip / standardize / scale / encode /
         # rolling windows over a tabular stage
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
         mode = args.get("mode", "standardize")
@@ -500,9 +486,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         )
         from ophidia_server_spark.pipeline.dedup import ngram_jaccard_pairs
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
         thr = float(args.get("threshold", 0.5))
@@ -537,9 +521,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark.pipeline import classifier as clf
         from ophidia_server_spark.pipeline.dsir import hashed_gram_counts
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         m = int(args.get("m", 256))
         labeled = spark.read.parquet(src)
@@ -581,15 +563,11 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         path = str(args["table_path"])
         action = str(args.get("action", "write"))
         if action == "write":
-            src = args.get("src_path") or next(
-                v for v in inputs.values() if isinstance(v, str)
-            )
+            src = _input_arg(args, inputs, "src_path")
             v = lay.snapshot_write(spark.read.parquet(src), path)
             return f"{path}@v{v}"
         if action == "upsert":
-            src = args.get("src_path") or next(
-                v for v in inputs.values() if isinstance(v, str)
-            )
+            src = _input_arg(args, inputs, "src_path")
             keys = args["key_cols"]
             if isinstance(keys, str):
                 keys = [k for k in keys.split("|") if k]
@@ -615,9 +593,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # DSIR target-domain selection: keep the k most target-like docs
         from ophidia_server_spark.pipeline.dsir import dsir_select
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
         res = dsir_select(
@@ -637,9 +613,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # round-robin training order across sources/languages/clusters
         from ophidia_server_spark.pipeline.sampling import interleave_groups
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
         res = interleave_groups(
@@ -655,11 +629,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark.pipeline.audit import drift_report
 
         ref = spark.read.parquet(str(args["ref_path"]))
-        new = spark.read.parquet(
-            args.get("src_path") or next(
-                v for v in inputs.values() if isinstance(v, str)
-            )
-        )
+        new = spark.read.parquet(_input_arg(args, inputs, "src_path"))
         out = str(args["output_path"])
         rep = drift_report(
             ref, new, args.get("value_col", "value"),
@@ -678,9 +648,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark.pipeline.dedup import shingle_sets
         from ophidia_server_spark.pipeline.text import contamination_flags
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
         probe_src = spark.read.parquet(str(args["probe_path"]))
@@ -699,9 +667,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # write the redacted corpus (text column swapped in place)
         from ophidia_server_spark.pipeline.text import redact_pii
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         tc = args.get("text_col", "text")
         docs = spark.read.parquet(src)
@@ -712,9 +678,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_pack(engine, args, inputs):
         from ophidia_server_spark.pipeline.packing import pack_sequences
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         pack_sequences(
             spark.read.parquet(src),
@@ -727,9 +691,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_shuffle(engine, args, inputs):
         from ophidia_server_spark.pipeline.packing import global_shuffle
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         global_shuffle(
             spark.read.parquet(src),
@@ -743,9 +705,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # the surviving corpus rows (score columns ride along for audit)
         from ophidia_server_spark.pipeline.packing import quality_logistic
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
         scored = quality_logistic(
@@ -762,9 +722,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_pipe_semantic_dedup(engine, args, inputs):
         from ophidia_server_spark.pipeline.similarity import semantic_dedup
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         semantic_dedup(
             spark.read.parquet(src),
@@ -780,9 +738,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # target file size (io_ops.repack_parquet)
         from ophidia_server_spark.operators.io_ops import repack_parquet
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         repack_parquet(
             spark.read.parquet(src), out,
@@ -796,9 +752,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # jobs combine per-stage sketches instead of re-scanning the corpus
         from ophidia_server_spark.functions import sketches as sk
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
         kind = str(args.get("kind", "hll"))
@@ -835,9 +789,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark.pipeline.dedup import (
             minhash_index_append, minhash_index_build)
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         fn = (
             minhash_index_append
             if str(args.get("mode", "build")) == "append"
@@ -854,9 +806,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # docs (the filter stage a daily crawl chains before append)
         from ophidia_server_spark.pipeline.dedup import dedup_incremental
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         batch = spark.read.parquet(src)
         verdicts = dedup_incremental(
@@ -879,9 +829,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # the downstream trainer consumes (executor-sharded sinks)
         from ophidia_server_spark.operators import io_ops
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         fmt = str(args.get("format", "tfrecord"))
         df = spark.read.parquet(src)
@@ -906,9 +854,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # file manifest next to it for pruned reads
         from ophidia_server_spark import layout as lay
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         cols = args["columns"]
         if isinstance(cols, str):
@@ -927,9 +873,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # for downstream per-cluster sampling / SemDeDup-style pruning
         from ophidia_server_spark.pipeline import clustering as cl
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         res = cl.kmeans_lloyd(
             spark.read.parquet(src),
@@ -948,9 +892,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         from ophidia_server_spark.pipeline import bpe
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
         if args.get("merges_path"):
@@ -975,9 +917,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # pipeline chains between stages)
         from ophidia_server_spark.pipeline.audit import corpus_audit
 
-        src = args.get("src_path") or next(
-            v for v in inputs.values() if isinstance(v, str)
-        )
+        src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         rules = [(r["name"], r["kind"], r) for r in args["rules"]]
         report = corpus_audit(
@@ -1001,7 +941,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                               task="importarrow")
 
     def op_exportarrow(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         return IO.oph_exportarrow(
             store.get(pid), str(args["output_path"]),
             shards=int(args.get("shards", 8)),
@@ -1027,7 +967,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         return store.register(cube, args.get("container", "default"), task="importnc")
 
     def op_exportnc(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         return IO.oph_exportnc(
             store.get(pid), str(args["output_path"]),
             per_dim_files=str(args.get("per_dim_files", "no")).lower() == "yes",
@@ -1054,7 +994,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         return store.register(cube, args.get("container", "default"), task="importzarr")
 
     def op_exportzarr(engine, args, inputs):
-        pid = _resolve_cube_arg(args, inputs)
+        pid = _input_arg(args, inputs, "cube")
         return IO.oph_exportzarr(
             store.get(pid), str(args["output_path"]),
             compress=int(args["compress"]) if args.get("compress") else None,

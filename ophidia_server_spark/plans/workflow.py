@@ -773,12 +773,13 @@ class WorkflowEngine:
         if cube_arg and "[" in str(cube_arg):
             if self.catalog is None:
                 raise WorkflowError("massive cube argument but engine has no catalog")
-            from ophidia_server_spark.filters import expand_massive
+            from ophidia_server_spark import filters
 
             # catalog may be a zero-arg callable so live stores (CubeStore)
-            # are re-snapshotted at expansion time, not engine-build time
+            # are re-snapshotted at expansion time, not engine-build time;
+            # compile_massive is looked up on the module at call time too
             cat = self.catalog() if callable(self.catalog) else self.catalog
-            items = [str(i) for i in expand_massive(cat, str(cube_arg))]
+            items = [str(i) for i in filters.compile_massive(cat, str(cube_arg))]
             if self.pid_resolver is not None:
                 items = [self.pid_resolver(i) for i in items]
             return "cube", items, None

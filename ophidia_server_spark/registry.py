@@ -776,8 +776,7 @@ def workflow_massive_expansion(spark, sf_dir):
             ]
         }
     )
-    ids = run.results["massive"].value
-    return spark.createDataFrame([(i,) for i in ids], "cube_id long")
+    return _cube_ids(spark, run.results["massive"].value)
 
 
 @q(
@@ -1200,9 +1199,18 @@ def io_zarr_subset_import(spark, sf_dir):
 # massive-filter / catalog queries  (§2.B selection algebra)
 # ---------------------------------------------------------------------------
 
+def _cube_ids(spark, ids: list[int]) -> DataFrame:
+    """An id list as an inline table: a local relation, so collecting it
+    launches no Spark job, where createDataFrame's RDD launches one
+    (0.04 vs 0.37 s for 300 ids, 0.27 vs 0.35 s for 20,000; 4 cores)."""
+    rows = ",".join(f"({int(i)})" for i in ids) or "(NULL)"
+    df = spark.sql(f"SELECT CAST(c AS BIGINT) AS cube_id FROM VALUES {rows} AS t(c)")
+    return df if ids else df.limit(0)
+
+
 def _mf(spark, sf_dir, arg: str) -> DataFrame:
     cat = catalog_from_part(_t(spark, sf_dir)["part"])
-    return flt.compile_massive(cat, arg).select(F.col("cube_id").cast("long").alias("cube_id"))
+    return _cube_ids(spark, flt.compile_massive(cat, arg))
 
 
 def _snapcat(spark, sf_dir) -> str:
@@ -1241,14 +1249,14 @@ def mf_snapshot_pruned(spark, sf_dir):
     """mf_level_container's oracle on the SNAPSHOT-STORE catalog backend
     (round 10): the catalog persisted via layout.py's versioned store, the
     bracket group's (level, container) predicate rectangle pruning cube
-    files by manifest min-max stats, compile_group re-applying the exact
+    files by manifest min-max stats, the driver evaluator applying the exact
     semantics — identical expansion to the in-memory backend, asserted
-    here by the shared oracle and in pytest by a 9-arg two-backend corpus
-    plus a files_read < files_total pruning assertion."""
+    here by the shared oracle and in pytest by a 13-arg three-backend
+    corpus plus a files_read < files_total pruning assertion."""
     base = _snapcat(spark, sf_dir)
-    return flt.compile_massive_snapshot(
+    return _cube_ids(spark, flt.compile_massive_snapshot(
         spark, base, "[level=1|2;container=Brand#13]"
-    ).select(F.col("cube_id").cast("long").alias("cube_id"))
+    ))
 
 
 @q(

@@ -4,8 +4,9 @@ The reference keeps cubes/containers/folders/metadata/provenance in MySQL
 (/root/reference/src/oph_ophidiadb_query.h) and fragments on I/O nodes; here
 cube payloads are parquet directories under a workspace and the catalog is
 driver-side state (tiny — one row per cube). `as_catalog` snapshots it as
-plain rows (catalog.RowCatalog), so a massive-filter expansion is evaluated
-in the driver and launches no Spark job.
+plain rows (catalog.RowCatalog), which filters.compile_massive evaluates
+in the driver as they are, so a massive-filter expansion launches no Spark
+job.
 
 Covers the lifecycle operator surface: importcsv/importparquet (oph_importnc
 analogue for the containerized environment — see io_ops for the NetCDF

@@ -147,14 +147,14 @@ def test_catalog_queries_are_session_scoped(spark, tables):
     from ophidia_server_spark.filters import compile_massive
 
     cat = catalog_from_part(tables["part"])
-    visible = compile_massive(cat, "[level=1]").count()
+    visible = len(compile_massive(cat, "[level=1]"))
     assert visible > 0
     # the same cubes under another session's prefix are invisible to every
     # filter key — the scope is structural, not an opt-in path filter
     cat_other = catalog_from_part(tables["part"])
     cat_other.session_prefix = "/sess_other"
-    assert compile_massive(cat_other, "[level=1]").count() == 0
-    assert compile_massive(cat_other, "[measure=economy anodized steel]").count() == 0
+    assert len(compile_massive(cat_other, "[level=1]")) == 0
+    assert len(compile_massive(cat_other, "[measure=economy anodized steel]")) == 0
 
 
 def test_facade_workflow_under_read_only_role(spark, tables, tmp_path):

@@ -6,7 +6,7 @@ cube ids over the deterministic part-derived catalog)."""
 import pytest
 
 from ophidia_server_spark.catalog import Catalog, RowCatalog, catalog_from_part
-from ophidia_server_spark.filters import expand_massive, parse_massive, pid_cube_id
+from ophidia_server_spark.filters import compile_massive, parse_massive, pid_cube_id
 
 
 def row_catalog(cat: Catalog) -> RowCatalog:
@@ -20,25 +20,26 @@ def row_catalog(cat: Catalog) -> RowCatalog:
 
 
 def both(cat: Catalog) -> dict:
-    """A catalog under both evaluators: the Spark compiler over its
-    DataFrames and the driver evaluator over its collected rows."""
+    """A catalog in both shapes: its DataFrames, which compile_massive
+    narrows per group before evaluating, and all of its rows, evaluated
+    as they are."""
     return {"dataframe": cat, "rows": row_catalog(cat)}
 
 
 def ids(cats, arg):
-    """Expand `arg` on every evaluator in `cats`. They must return the same
+    """Expand `arg` on every catalog in `cats`. They must return the same
     ids, or raise the same exception type (which is then re-raised)."""
     got = {}
     for name, c in cats.items():
         try:
-            got[name] = expand_massive(c, arg)
+            got[name] = compile_massive(c, arg)
         except Exception as exc:  # noqa: BLE001 - compared across evaluators
             got[name] = exc
     first, *rest = got.values()
     assert all(
         type(o) is type(first) and (isinstance(o, Exception) or o == first)
         for o in rest
-    ), f"evaluators disagree on {arg!r}: {got}"
+    ), f"catalogs disagree on {arg!r}: {got}"
     if isinstance(first, Exception):
         raise first
     return first
@@ -479,6 +480,14 @@ MF_BACKEND_CORPUS = [
     "[size=3]",
     "[level=0;container!=Brand#13|Brand#21]",
     "[cube_filter=*]",
+    # a metadata_value past the end of metadata_key pairs with any key
+    "[metadata_key=brand;metadata_value=Brand#1|3]",
+    # the lineage of a negated parent is read alongside the positive one
+    "[parent_cube=http://srv/0/5;parent_cube!=http://srv/0/6]",
+    # negated level/container next to positive ones: only the positive
+    # values bound the narrowing rectangle
+    "[level=1|2;level!=2;container!=Brand#13]",
+    "[container=Brand#13|Brand#21;container!=Brand#21;level!=0]",
 ]
 
 
@@ -491,10 +500,7 @@ def test_snapshot_backend_matches_in_memory(spark, cat, snap_cat, arg):
     from ophidia_server_spark.filters import compile_massive_snapshot
 
     mem = set(ids(cat, arg))
-    snap = {
-        r["cube_id"]
-        for r in compile_massive_snapshot(spark, snap_cat, arg).collect()
-    }
+    snap = set(compile_massive_snapshot(spark, snap_cat, arg))
     assert snap == mem and mem
 
 
@@ -512,9 +518,9 @@ def test_error_cases_raise_same_type_on_every_backend(spark, cat, snap_cat, arg)
     from ophidia_server_spark.filters import compile_massive_snapshot
 
     with pytest.raises(Exception) as mem:
-        ids(cat, arg)  # the DataFrame and row evaluators agree on the type
+        ids(cat, arg)  # the DataFrame and row catalogs agree on the type
     with pytest.raises(Exception) as snap:
-        compile_massive_snapshot(spark, snap_cat, arg).collect()
+        compile_massive_snapshot(spark, snap_cat, arg)
     assert type(mem.value) is type(snap.value) is ValueError
 
 
@@ -544,6 +550,36 @@ def test_none_field_matches_neither_polarity(spark):
     assert ids(cats, "[path!=/sess1/y]") == [1, 2]
 
 
+def test_narrow_collects_only_what_the_group_names(spark, cat):
+    # a DataFrame catalog is cut per group before the driver sees it: a
+    # metadata-free, lineage-free group collects no metadata or lineage
+    # rows (one Spark job, for the cubes), and the cubes it collects are
+    # inside the group's rectangle
+    from ophidia_server_spark.filters import narrow
+
+    df, sc = cat["dataframe"], spark.sparkContext
+    group = "narrow-metadata-free"
+    sc.setJobGroup(group, group)
+    try:
+        rows = narrow(df, {"level": "1|2", "container": "Brand#13"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows.metadata == [] and rows.lineage == []
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert rows.cubes and all(
+        r[4] in (1, 2) and r[2] == "Brand#13" for r in rows.cubes
+    )
+    # named keys only, and the lineage of either parent polarity
+    rows = narrow(df, {"metadata_key!": "brand", "size": "3",
+                       "parent_cube!": "http://s/0/5"})
+    assert {r[1] for r in rows.metadata} == {"brand", "size"}
+    assert {r[2] for r in rows.lineage} == {5}
+    # a metadata_value pairing with no key reads every key
+    rows = narrow(df, {"metadata_key": "brand", "metadata_value": "Brand#1|3"})
+    assert {r[1] for r in rows.metadata} == {"brand", "type", "size"}
+
+
 def test_snapshot_backend_prunes_files(spark, snap_cat):
     # the pruned-read plan assertion: a level+container group's predicate
     # rectangle must skip files (the write range-clusters on exactly those
@@ -554,7 +590,7 @@ def test_snapshot_backend_prunes_files(spark, snap_cat):
     compile_massive_snapshot(
         spark, snap_cat, "[level=1|2;container=Brand#13]",
         prune_report=report,
-    ).collect()
+    )
     (gi, files_read, files_total), = report
     assert gi == 0
     assert 0 < files_read < files_total
@@ -566,11 +602,7 @@ def test_snapshot_backend_continuous_registration(spark, cat, snap_cat):
     from ophidia_server_spark.catalog import snapshot_catalog_append
     from ophidia_server_spark.filters import compile_massive_snapshot
 
-    before = {
-        r["cube_id"] for r in compile_massive_snapshot(
-            spark, snap_cat, "[level=9]"
-        ).collect()
-    }
+    before = set(compile_massive_snapshot(spark, snap_cat, "[level=9]"))
     assert before == set()
     new = spark.createDataFrame(
         [(900001, 40, "Brand#99", "/sess1/new/brand_99", 9, "newmeasure")],
@@ -578,17 +610,11 @@ def test_snapshot_backend_continuous_registration(spark, cat, snap_cat):
         "level int, measure string",
     )
     snapshot_catalog_append(snap_cat, cubes=new)
-    after = {
-        r["cube_id"] for r in compile_massive_snapshot(
-            spark, snap_cat, "[level=9]"
-        ).collect()
-    }
+    after = set(compile_massive_snapshot(spark, snap_cat, "[level=9]"))
     assert after == {900001}
-    pinned = {
-        r["cube_id"] for r in compile_massive_snapshot(
-            spark, snap_cat, "[level=9]", version=1
-        ).collect()
-    }
+    pinned = set(compile_massive_snapshot(
+        spark, snap_cat, "[level=9]", version=1
+    ))
     assert pinned == set()
 
 
@@ -635,10 +661,7 @@ def test_snapshot_backend_negated_parent_not_pruned(spark, tmp_path):
     snapshot_catalog_write(cat, base)
     arg = "[parent_cube=http://srv/0/5;parent_cube!=http://srv/0/7]"
     mem = set(ids(both(cat), arg))
-    snap = {
-        r["cube_id"]
-        for r in compile_massive_snapshot(spark, base, arg).collect()
-    }
+    snap = set(compile_massive_snapshot(spark, base, arg))
     assert mem == snap == {301}
 
 
@@ -667,10 +690,7 @@ def test_snapshot_backend_empty_container_not_pruned_away(spark, tmp_path):
     snapshot_catalog_write(cat, base)
     arg = "[container=|Brand#13]"
     mem = set(ids(both(cat), arg))
-    snap = {
-        r["cube_id"]
-        for r in compile_massive_snapshot(spark, base, arg).collect()
-    }
+    snap = set(compile_massive_snapshot(spark, base, arg))
     assert mem == snap == {1, 2}
 
 

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.cube import build_cube
-from ophidia_server_spark.filters import expand_massive
+from ophidia_server_spark.filters import compile_massive
 from ophidia_server_spark.management import ManagementService, operators_list
 from ophidia_server_spark.store import CubeStore
 
@@ -88,7 +88,7 @@ def test_store_catalog_feeds_massive_filter(store):
     st, pid = store
     st.metadata_put(pid, "experiment", "exp42")
     cat = st.as_catalog()
-    got = expand_massive(cat, "[experiment=exp42]")
+    got = compile_massive(cat, "[experiment=exp42]")
     assert got == [st.entries[pid].cube_id]
 
 
@@ -546,3 +546,20 @@ def test_cluster_partition_reservation_lifecycle(spark):
     assert m.cluster("info", user="alice")["partitions"] == []
     with pytest.raises(ValueError, match="no host partition"):
         m.cluster("undeploy", user="alice", host_partition="ghost")
+
+
+def test_pipeline_task_without_input_is_named_error(spark, tmp_path):
+    # a pipeline task with neither src_path nor a string parent output
+    # fails by naming the missing argument (was an empty StopIteration)
+    from ophidia_server_spark.plans.server import build_default_engine
+
+    eng = build_default_engine(spark, CubeStore(spark=spark, workspace=str(tmp_path)))
+    run = eng.run({"tasks": [{
+        "name": "chunk", "operator": "pipeline_chunk",
+        "arguments": {"output_path": str(tmp_path / "chunks")},
+    }]})
+    res = run.results["chunk"]
+    assert res.status == "OPH_ODB_STATUS_ERROR"
+    assert res.error == (
+        "ValueError: no src_path argument and no parent output to inherit"
+    )
