@@ -21,6 +21,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
 from ophidia_server_spark.operators import cube_ops as C
 from ophidia_server_spark.operators import io_ops as IO
 from ophidia_server_spark.plans.workflow import WorkflowEngine, WorkflowError
@@ -97,26 +98,24 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
         out = C.oph_reduce(cube, str(args.get("operation", "avg")))
-        # reduce collapses the implicit dim; re-pack the scalar per row as a
-        # length-1 array so the result stays a cube (the reference keeps
-        # reduced cubes addressable like any other)
-        from ophidia_server_spark.cube import build_cube
-
+        # reduce collapses the implicit dim; pack each row's scalar in place
+        # as a length-1 array over implicit dim `__r` = [0], so the result
+        # stays a cube (the reference keeps reduced cubes addressable). Exact
+        # with no re-aggregation: a cube holds one row per explicit-dim key.
         reduced_col = out.columns[-1]  # named <operation>_<measure>
-        packed = build_cube(
-            out.withColumn("__r", F.lit(0)),
-            list(cube.explicit_dims), "__r", F.col(reduced_col),
-            measure=cube.measure,
-        )
+        packed = Cube(out.select(*cube.explicit_dims, F.array(F.lit(0)).alias(DIM_COL),
+                                 F.array(F.col(reduced_col)).alias(MEASURE_COL)),
+                      cube.explicit_dims, ("__r",), measure=cube.measure)
         return store.register(packed, args.get("container", "default"),
                               parents=[pid], task="reduce")
 
     def op_aggregate(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
+        cube = store.get(pid)
         out = C.oph_aggregate(
-            store.get(pid), str(args.get("operation", "sum")),
+            cube, str(args.get("operation", "sum")),
             str(args["group_dims"]).split("|") if args.get("group_dims") else
-            list(store.get(pid).explicit_dims)[1:],
+            list(cube.explicit_dims)[1:],
         )
         return store.register(out, args.get("container", "default"),
                               parents=[pid], task="aggregate")

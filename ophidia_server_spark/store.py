@@ -3,7 +3,9 @@
 The reference keeps cubes/containers/folders/metadata/provenance in MySQL
 (/root/reference/src/oph_ophidiadb_query.h) and fragments on I/O nodes; here
 cube payloads are parquet directories under a workspace and the catalog is
-driver-side state (tiny — one row per cube). `as_catalog` snapshots it as
+driver-side state (tiny — one row per cube). A materialized cube is read
+once: the first `get` memoizes its DataFrame on the entry, so later fetches
+list no files and read no footer. `as_catalog` snapshots the catalog as
 plain rows (catalog.RowCatalog), which filters.compile_massive evaluates
 in the driver as they are, so a massive-filter expansion launches no Spark
 job.
@@ -42,6 +44,9 @@ class CubeEntry:
     implicit_dims: tuple[str, ...]
     storage: str | None = None  # parquet dir if materialized
     cube: Cube | None = None  # lazy plan if virtual
+    # the read of `storage`, made by the first get() and reused (the files
+    # never change); it dies with the entry, so delete() drops it too
+    df: DataFrame | None = None
 
 
 @dataclass
@@ -216,18 +221,11 @@ class CubeStore:
         e = self.entries[pid]
         if e.cube is not None:
             return e.cube
-        if e.storage and e.storage.startswith("table:"):
-            df = self.spark.table(e.storage[len("table:"):])  # bucketed table
-        else:
-            df = self.spark.read.parquet(e.storage)
-        return Cube(
-            df=df,
-            explicit_dims=e.explicit_dims,
-            implicit_dims=e.implicit_dims,
-            measure=e.measure,
-            pid=pid,
-            level=e.level,
-        )
+        if e.df is None:  # racing first fetches build equivalent reads
+            e.df = (self.spark.table(e.storage[len("table:"):])  # bucketed table
+                    if e.storage.startswith("table:") else self.spark.read.parquet(e.storage))
+        return Cube(df=e.df, explicit_dims=e.explicit_dims, implicit_dims=e.implicit_dims,
+                    measure=e.measure, pid=pid, level=e.level)
 
     # -- lifecycle ------------------------------------------------------------
     def duplicate(self, pid: str) -> str:

@@ -5,9 +5,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ophidia_server_spark.cube import build_cube
+from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, build_cube
 from ophidia_server_spark.filters import compile_massive
 from ophidia_server_spark.management import ManagementService, operators_list
+from ophidia_server_spark.operators.cube_ops import REDUCE_OPS, oph_reduce
 from ophidia_server_spark.store import CubeStore
 
 
@@ -123,6 +124,108 @@ def test_massive_cubeschema_over_store_launches_no_spark_job(spark, tmp_path):
     assert res.status == "OPH_ODB_STATUS_COMPLETED"
     assert [v["pid"] for v in res.value] == pids[0::2]
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def _window_workflow(pid):
+    return {"tasks": [
+        {"name": "sub", "operator": "oph_subset", "arguments": {
+            "cube": pid, "subset_dims": "month", "subset_filter": "3:9",
+            "subset_type": "coord"}},
+        {"name": "apply", "operator": "oph_apply", "dependencies": ["sub"],
+         "arguments": {"query": "oph_mul_scalar", "parameters": "2.0"}},
+        {"name": "reduce", "operator": "oph_reduce", "dependencies": ["apply"],
+         "arguments": {"operation": "avg"}},
+        {"name": "explore", "operator": "oph_explorecube",
+         "dependencies": ["reduce"], "arguments": {"limit": "50"}},
+    ]}
+
+
+def test_window_request_over_materialized_cube_runs_one_spark_job(store, spark):
+    # subset -> apply -> reduce -> explore over a materialized cube is one
+    # scan-and-project job once the cube has been read: reduce packs each
+    # row in place (no shuffle) and the store reuses its read of the files
+    from ophidia_server_spark.plans.server import build_default_engine
+
+    st, pid = store
+    eng = build_default_engine(spark, st)
+    warm = eng.run(_window_workflow(pid))  # first fetch reads the parquet
+    assert warm.status == "OPH_ODB_STATUS_COMPLETED", {
+        n: (r.status, r.error) for n, r in warm.results.items()
+    }
+    sc = spark.sparkContext
+    group = "window-request-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        run = eng.run(_window_workflow(pid))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert run.status == "OPH_ODB_STATUS_COMPLETED"
+    grid = {k: v for k, v in run.results["explore"].value.items() if k != "title"}
+    assert grid == {k: v for k, v in warm.results["explore"].value.items() if k != "title"}
+    assert len(grid["rowvalues"]) == 6 and grid["colvalues"] == [0]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.parametrize("operation", sorted(REDUCE_OPS))
+def test_facade_reduce_packs_each_row_in_place(store, spark, operation):
+    # the facade's oph_reduce wraps each row's reduced scalar as a length-1
+    # cube over implicit dim `__r` = [0], keeping the row and the metadata
+    from ophidia_server_spark.plans.server import build_default_engine
+
+    st, pid = store
+    cube = st.get(pid)
+    # the operator itself, so the kernel alias `mean` (not in the oph_reduce
+    # descriptor's allowed set) is covered too
+    op = build_default_engine(spark, st).operators["oph_reduce"]
+    out_pid = op(None, {"cube": pid, "operation": operation}, {})
+    out = st.get(out_pid)
+    keys = list(cube.explicit_dims)
+    kernel = oph_reduce(cube, operation)
+    want = {tuple(r[k] for k in keys): r[kernel.columns[-1]] for r in kernel.collect()}
+    rows = out.df.collect()
+    assert len(rows) == len(want) == cube.df.count()
+    for r in rows:
+        assert r[DIM_COL] == [0]
+        assert r[MEASURE_COL] == [want[tuple(r[k] for k in keys)]]
+    mtype = "array<bigint>" if operation == "count" else "array<double>"
+    assert dict(out.df.dtypes)[MEASURE_COL] == mtype
+    assert out.explicit_dims == cube.explicit_dims
+    assert out.implicit_dims == ("__r",)
+    assert out.measure == cube.measure == "qty"
+    assert out.level == st.entries[out_pid].level == 0
+    assert (st.entries[out_pid].cube_id, "reduce", st.entries[pid].cube_id) in st.lineage
+
+
+def test_materialized_cube_is_read_once(store, spark, tables, tmp_path):
+    from ophidia_server_spark.store import load_store, save_store
+
+    st, pid = store
+    assert st.get(pid).df is st.get(pid).df
+    schema = st.cubeschema(pid)
+    assert schema["measure_type"] == "array<decimal(28,2)>"
+    assert schema["implicit_dims"] == ["month"]
+    grid = st.explorecube_response(pid, limit=3)
+    assert len(grid["rowvalues"]) == 3 and len(grid["measurevalues"][0]) == 12
+    li = tables["lineitem"].withColumn("month", F.month("l_shipdate"))
+    bucketed = st.register_bucketed(
+        build_cube(li, ["l_returnflag"], "month", "l_quantity", measure="qty"),
+        "cb", n_buckets=2)
+    try:
+        assert st.get(bucketed).df is st.get(bucketed).df
+        assert st.get(bucketed).df.count() == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cube_b_%d" % st.entries[bucketed].cube_id)
+    # a save/load round trip reads the cube afresh from its files, once
+    cat_path = str(tmp_path / "catalog")
+    save_store(st, cat_path)
+    st2 = load_store(spark, cat_path, workspace=st.workspace)
+    assert st2.get(pid).df is st2.get(pid).df
+    assert st2.get(pid).df is not st.get(pid).df
+    assert st2.get(pid).df.count() == 6
+    st.delete(pid)
+    with pytest.raises(KeyError):
+        st.get(pid)
 
 
 @pytest.mark.parametrize("max_workers", [1, 2])
