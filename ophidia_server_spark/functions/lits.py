@@ -12,9 +12,9 @@ into plan construction).
 Bit-exactness: ``repr(float)`` is Python's shortest round-trip rendering
 and Java's ``Double.parseDouble`` is correctly rounded, so the parsed
 literal is the identical IEEE-754 double — including -0.0 and extreme
-exponents (pinned by tests/test_lits.py). Non-finite values have no SQL
-double literal, and an empty list would type as array<void> under the
-old construction — both fall back to the per-element path unchanged.
+exponents (pinned by tests/test_lits.py). NaN and the infinities have no
+literal and render as ``CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)``;
+``array()`` types as array<void>, exactly like ``F.array()``.
 """
 
 from __future__ import annotations
@@ -25,28 +25,25 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _render(vals: list[float]) -> str:
-    return "array(" + ",".join(repr(v) + "D" for v in vals) + ")"
+def double_sql(value: float) -> str:
+    """SQL text of one double literal."""
+    v = float(value)
+    if math.isfinite(v):
+        return repr(v) + "D"
+    return "CAST('" + ("NaN" if v != v else "Infinity" if v > 0 else "-Infinity") + "' AS DOUBLE)"
+
+
+def _render(vals) -> str:
+    return "array(" + ",".join(double_sql(v) for v in vals) + ")"
 
 
 def const_double_array(values) -> Column:
-    """array<double> literal Column from a Python sequence — one py4j
-    call on the finite fast path, the classic per-element build otherwise
-    (same Column either way, bit-identical values)."""
-    vals = [float(v) for v in values]
-    if not vals or not all(map(math.isfinite, vals)):
-        return F.array(*[F.lit(v) for v in vals])
-    return F.expr(_render(vals))
+    """array<double> literal Column from a Python sequence, in one py4j
+    call (bit-identical to the per-element F.array of F.lit)."""
+    return F.expr(_render(values))
 
 
 def const_double_matrix(rows) -> Column:
     """array<array<double>> literal Column (row-major) — the nested twin
     of const_double_array, one py4j call for the whole matrix."""
-    mat = [[float(v) for v in row] for row in rows]
-    if not mat or not all(
-        row and all(map(math.isfinite, row)) for row in mat
-    ):
-        return F.array(*[
-            F.array(*[F.lit(v) for v in row]) for row in mat
-        ])
-    return F.expr("array(" + ",".join(_render(row) for row in mat) + ")")
+    return F.expr("array(" + ",".join(_render(row) for row in rows) + ")")

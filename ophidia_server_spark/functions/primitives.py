@@ -3,10 +3,17 @@
 The reference applies MySQL-UDF "primitives" (oph_predicate, oph_boxcar,
 oph_moving_avg, oph_gsl_fft, ... — listed via primitives_list,
 /root/reference/src/oph_json_objkeys.h:74-75) to each row's packed measure
-array. Here each primitive is a Column -> Column function over an ArrayType
-column. The common ones are pure Spark higher-order expressions (JVM-side,
+array. Here each primitive maps an ArrayType column's name to a Column. The
+common ones are pure Spark higher-order expressions (JVM-side,
 whole-stage-codegen'd, zero Python in the hot path); numpy-only kernels (FFT)
 fall back to Arrow-batched Pandas UDFs.
+
+A Python-lambda higher-order function costs dozens of py4j round trips,
+so the float-parameter element-wise primitives (`scale`, `mask_above`,
+`clip`, `quantize`) render `transform(<arr>, x -> ...)` as one SQL text for
+`F.expr` (one call). Parameters follow the functions/lits.py literal rule:
+`repr` + `D`, and `nan`/`inf` (which `float()` accepts from HTTP) as
+`CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)`.
 
 Usage: `oph_apply(cube, moving_avg(3))`.
 """
@@ -19,13 +26,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ArrayPrimitive = Callable[[Column], Column]
+from ophidia_server_spark.functions.lits import double_sql
 
-_D0 = "CAST(0.0 AS DOUBLE)"
+ArrayPrimitive = Callable[[str], Column]
 
 
 def _dbl(x: Column) -> Column:
     return x.cast("double")
+
+
+def _col(arr: Column | str) -> Column:
+    return F.col(arr) if isinstance(arr, str) else arr
 
 
 # -- oph_predicate: element-wise conditional --------------------------------
@@ -38,14 +49,19 @@ def predicate(cond: Callable[[Column], Column], if_true: float | Column, if_fals
 
 
 def mask_above(threshold: float) -> ArrayPrimitive:
-    return predicate(lambda x: x > threshold, 1.0, 0.0)
+    """oph_mask: x -> 1.0 where x > threshold else 0.0."""
+    t = double_sql(threshold)
+    return lambda arr: F.expr(
+        f"transform({arr}, x -> CASE WHEN CAST(x AS DOUBLE) > {t} THEN 1.0D ELSE 0.0D END)"
+    )
 
 
 # -- scalar arithmetic ------------------------------------------------------
 
 def scale(mul: float = 1.0, add: float = 0.0) -> ArrayPrimitive:
     """oph_mul_scalar / oph_sum_scalar: x -> x*mul + add."""
-    return lambda arr: F.transform(arr, lambda x: (_dbl(x) * F.lit(mul) + F.lit(add)))
+    m, a = double_sql(mul), double_sql(add)
+    return lambda arr: F.expr(f"transform({arr}, x -> CAST(x AS DOUBLE) * {m} + {a})")
 
 
 def math_fn(name: str) -> ArrayPrimitive:
@@ -166,16 +182,14 @@ def rotate(n: int = 1) -> ArrayPrimitive:
 
 def clip(lo: float, hi: float) -> ArrayPrimitive:
     """oph_clip: clamp values into [lo, hi]."""
-    return lambda arr: F.transform(
-        arr, lambda x: F.least(F.greatest(_dbl(x), F.lit(float(lo))), F.lit(float(hi)))
-    )
+    lo, hi = double_sql(lo), double_sql(hi)
+    return lambda arr: F.expr(f"transform({arr}, x -> least(greatest(CAST(x AS DOUBLE), {lo}), {hi}))")
 
 
 def quantize(step: float) -> ArrayPrimitive:
     """oph_quantize: snap values to multiples of `step` (floor binning)."""
-    return lambda arr: F.transform(
-        arr, lambda x: F.floor(_dbl(x) / F.lit(float(step))) * F.lit(float(step))
-    )
+    st = double_sql(step)
+    return lambda arr: F.expr(f"transform({arr}, x -> FLOOR(CAST(x AS DOUBLE) / {st}) * {st})")
 
 
 def zscore() -> ArrayPrimitive:
@@ -420,7 +434,7 @@ def interpolate_nan() -> ArrayPrimitive:
 
     _interp_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
     _interp = F.pandas_udf(_interp_fn, T.ArrayType(T.DoubleType()))
-    return lambda arr: _interp(arr.cast(T.ArrayType(T.DoubleType())))
+    return lambda arr: _interp(_col(arr).cast(T.ArrayType(T.DoubleType())))
 
 def fft_magnitude() -> ArrayPrimitive:
     """oph_gsl_fft analogue: per-row |FFT| magnitudes via numpy, Arrow-batched.
@@ -440,7 +454,7 @@ def fft_magnitude() -> ArrayPrimitive:
     _fft_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
     _fft = F.pandas_udf(_fft_fn, T.ArrayType(T.DoubleType()))
 
-    return lambda arr: _fft(arr.cast(T.ArrayType(T.DoubleType())))
+    return lambda arr: _fft(_col(arr).cast(T.ArrayType(T.DoubleType())))
 
 
 PRIMITIVES: dict[str, Callable[..., ArrayPrimitive]] = {

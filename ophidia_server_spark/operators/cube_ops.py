@@ -13,6 +13,12 @@ scale path: per-row array ops are embarrassingly parallel (no shuffle); explicit
 aggregation uses partial+final hash agg; intercube joins hash-partition both
 sides on the explicit dims (co-partitioned if both cubes came from the same
 build_cube shuffle).
+
+The window operators (oph_subset, oph_apply, oph_reduce) are one select each,
+built from SQL text for `F.expr`/`selectExpr` — one py4j call per array
+kernel, where a Python-lambda higher-order function costs dozens. Predicates
+come from subset.py's renderers; double literals follow functions/lits.py
+(`repr` + `D`; NaN/±inf as `CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)`).
 """
 
 from __future__ import annotations
@@ -24,56 +30,40 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
-from ophidia_server_spark.subset import subset_predicate, time_predicate
+from ophidia_server_spark.subset import quote_ident, subset_sql, time_sql, values_sql
 
 # ---------------------------------------------------------------------------
-# reduction kernels over the measure array (implicit dimension)
+# reduction kernels over the measure array (implicit dimension): SQL text over
+# an array column, parsed by the JVM in one F.expr/selectExpr call
 # ---------------------------------------------------------------------------
 
 _D = "CAST(0.0 AS DOUBLE)"
 
 
-def _arr_sum(col: str = MEASURE_COL) -> Column:
-    return F.expr(f"aggregate({col}, {_D}, (a, x) -> a + CAST(x AS DOUBLE))")
+def _arr_sum(col: str) -> str:
+    return f"aggregate({col}, {_D}, (a, x) -> a + CAST(x AS DOUBLE))"
 
 
-def _arr_count(col: str = MEASURE_COL) -> Column:
-    return F.size(F.col(col)).cast("long")
+def _arr_avg(col: str) -> str:
+    return f"{_arr_sum(col)} / size({col})"
 
 
-def _arr_avg(col: str = MEASURE_COL) -> Column:
-    return _arr_sum(col) / F.size(F.col(col))
-
-
-def _arr_max(col: str = MEASURE_COL) -> Column:
-    return F.array_max(F.col(col)).cast("double")
-
-
-def _arr_min(col: str = MEASURE_COL) -> Column:
-    return F.array_min(F.col(col)).cast("double")
-
-
-def _arr_var(col: str = MEASURE_COL) -> Column:
+def _arr_var(col: str) -> str:
     # sample variance, matching SQL VAR_SAMP
-    n = F.size(F.col(col)).cast("double")
-    s = _arr_sum(col)
-    s2 = F.expr(f"aggregate({col}, {_D}, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-    return (s2 - s * s / n) / (n - 1)
+    n, s = f"CAST(size({col}) AS DOUBLE)", _arr_sum(col)
+    s2 = f"aggregate({col}, {_D}, (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    return f"({s2} - {s} * {s} / {n}) / ({n} - 1)"
 
 
-def _arr_std(col: str = MEASURE_COL) -> Column:
-    return F.sqrt(_arr_var(col))
-
-
-REDUCE_OPS: dict[str, Callable[[str], Column]] = {
+REDUCE_OPS: dict[str, Callable[[str], str]] = {
     "sum": _arr_sum,
-    "count": _arr_count,
+    "count": lambda col: f"CAST(size({col}) AS BIGINT)",
     "avg": _arr_avg,
     "mean": _arr_avg,
-    "max": _arr_max,
-    "min": _arr_min,
+    "max": lambda col: f"CAST(array_max({col}) AS DOUBLE)",
+    "min": lambda col: f"CAST(array_min({col}) AS DOUBLE)",
     "var": _arr_var,
-    "std": _arr_std,
+    "std": lambda col: f"SQRT({_arr_var(col)})",
 }
 
 AGG_FNS: dict[str, Callable[[Column], Column]] = {
@@ -101,9 +91,12 @@ def oph_subset(
     """Slice the cube (oph_subset/oph_subset2, oph_json_objkeys.h:94-95).
 
     subset_dims maps dim name -> subset string ("start:stride:end,..."). Explicit
-    dims become row filters (pushed to the parquet scan by Catalyst); the
-    implicit dim becomes an aligned array filter via `F.filter` over the zipped
-    (coordinate, value) pairs — per-row, shuffle-free.
+    dims become row filters (pushed to the parquet scan by Catalyst); implicit
+    dims become aligned array filters in one select,
+      __dim = filter(__dim, (d, i) -> P(d)),
+      __m   = filter(__m, (m, i) -> P(element_at(__dim, i + 1))),
+    then rows whose arrays emptied are dropped — per-row, shuffle-free. P is
+    the subset.py SQL rendering (on `d.<dim>` for a composite implicit dim).
 
     subset_type="index": clauses address 1-based positions (implicit dim) or the
     dimension's own integer values (explicit dims, per reference cube_filter
@@ -111,50 +104,51 @@ def oph_subset(
     coordinate ranges. subset_type="time": clauses are `start_end` date ranges
     with partial-date expansion (time_filter=yes semantics).
     """
-    def pred_fn(col, ss):
+    def pred(col: str, ss: str) -> str:
         if subset_type == "time":
-            return time_predicate(col, ss)
+            return time_sql(col, ss)
         try:
-            return subset_predicate(col, ss, offset=offset)
+            return subset_sql(col, ss, offset=offset)
         except ValueError:
             # non-numeric coordinates (string dims): clauses are literal
             # values, OR-combined
-            vals = [v for v in str(ss).replace("|", ",").split(",") if v]
-            return col.isin(vals)
+            return values_sql(col, ss)
 
-    df = cube.df
+    composite = len(cube.implicit_dims) != 1
+    rows: list[str] = []
+    cells: list[tuple[str, str]] = []
     for dim, ss in subset_dims.items():
         if dim in cube.explicit_dims:
-            df = df.filter(pred_fn(F.col(dim), ss))
+            rows.append(pred(quote_ident(dim), ss))
         elif dim in cube.implicit_dims:
-            composite = len(cube.implicit_dims) != 1
-            zipped = F.arrays_zip(F.col(DIM_COL).alias("d"), F.col(MEASURE_COL).alias("m"))
-            if subset_type == "index":
-                if composite:
-                    raise NotImplementedError(
-                        "index subset on composite implicit dim is ambiguous: "
-                        "use coord subsets per named dim, or drilldown first"
-                    )
-                # positions are 1-based over the packed array
-                n = F.size(F.col(DIM_COL))
-                idx = F.sequence(F.lit(1), n)
-                z3 = F.arrays_zip(idx.alias("i"), F.col(DIM_COL).alias("d"), F.col(MEASURE_COL).alias("m"))
-                kept = F.filter(z3, lambda s: subset_predicate(s["i"], ss, offset=offset))
-            elif composite:
-                # composite implicit dim (post-rollup/mergecubes): coordinates
-                # are structs — subset on the named field of each struct
-                kept = F.filter(zipped, lambda s: pred_fn(s["d"][dim], ss))
-            else:
-                kept = F.filter(zipped, lambda s: pred_fn(s["d"], ss))
-            df = (
-                df.withColumn("__z", kept)
-                .withColumn(DIM_COL, F.col("__z.d"))
-                .withColumn(MEASURE_COL, F.col("__z.m"))
-                .drop("__z")
-                .filter(F.size(MEASURE_COL) > 0)
-            )
+            if subset_type == "index" and composite:
+                raise NotImplementedError(
+                    "index subset on composite implicit dim is ambiguous: "
+                    "use coord subsets per named dim, or drilldown first"
+                )
+            cells.append((dim, ss))
         else:
             raise KeyError(f"unknown dimension {dim!r}")
+
+    def cell_pred(coord: str) -> str:
+        # positions are 1-based over the packed array
+        return " AND ".join(
+            subset_sql("(i + 1)", ss, offset=offset) if subset_type == "index"
+            else pred(f"{coord}.{quote_ident(dim)}" if composite else coord, ss)
+            for dim, ss in cells
+        )
+
+    df = cube.df
+    if cells:
+        df = df.withColumns({
+            DIM_COL: F.expr(f"filter({DIM_COL}, (d, i) -> {cell_pred('d')})"),
+            MEASURE_COL: F.expr(
+                f"filter({MEASURE_COL}, (m, i) -> {cell_pred(f'element_at({DIM_COL}, i + 1)')})"
+            ),
+        })
+        rows.append(f"size({MEASURE_COL}) > 0")
+    if rows:
+        df = df.filter(F.expr(" AND ".join(rows)))
     return cube.with_df(df)
 
 
@@ -170,8 +164,9 @@ def oph_reduce(cube: Cube, operation: str, out_name: str | None = None) -> DataF
     Per-row array kernel, zero shuffle.
     """
     out = out_name or f"{operation}_{cube.measure}"
-    kernel = REDUCE_OPS[operation.lower()]
-    return cube.df.select(*cube.explicit_dims, kernel(MEASURE_COL).alias(out))
+    kernel = REDUCE_OPS[operation.lower()](MEASURE_COL)
+    return cube.df.selectExpr(*map(quote_ident, cube.explicit_dims),
+                              f"{kernel} AS {quote_ident(out)}")
 
 
 def oph_reduce2(
@@ -398,37 +393,7 @@ def oph_mergecubes(a: Cube, b: Cube, source_dim: str = "src") -> Cube:
     same explicit dims, arrays concatenated. The merged implicit coordinate is
     tagged with the source index (0 = first cube) to keep coordinates unique —
     the reference likewise extends the implicit dimension's index space."""
-    if a.explicit_dims != b.explicit_dims:
-        raise ValueError("mergecubes requires identical explicit dims")
-    if len(a.implicit_dims) != 1 or len(b.implicit_dims) != 1:
-        raise NotImplementedError("mergecubes on composite implicit dims")
-
-    inner = a.implicit_dims[0]
-
-    def tag(dim_col: Column, idx: int) -> Column:
-        return F.transform(dim_col, lambda d: F.struct(F.lit(idx).alias(source_dim), d.alias(inner)))
-
-    bt = b.df.select(
-        *b.explicit_dims,
-        F.col(DIM_COL).alias("__dim_b"),
-        F.col(MEASURE_COL).alias("__m_b"),
-    )
-    j = a.df.join(bt, on=list(a.explicit_dims), how="inner")
-    out = j.select(
-        *a.explicit_dims,
-        F.concat(tag(F.col(DIM_COL), 0), tag(F.col("__dim_b"), 1)).alias(DIM_COL),
-        F.concat(
-            F.transform(MEASURE_COL, lambda x: x.cast("double")),
-            F.transform("__m_b", lambda x: x.cast("double")),
-        ).alias(MEASURE_COL),
-    )
-    return Cube(
-        df=out,
-        explicit_dims=a.explicit_dims,
-        implicit_dims=(source_dim, a.implicit_dims[0]),
-        measure=a.measure,
-        level=max(a.level, b.level) + 1,
-    )
+    return oph_mergecubes_n([a, b], source_dim)
 
 
 def oph_intercube_corr(a: Cube, b: Cube, out: str = "corr") -> DataFrame:
@@ -467,14 +432,15 @@ def oph_intercube_corr(a: Cube, b: Cube, out: str = "corr") -> DataFrame:
 # oph_apply — array primitive application
 # ---------------------------------------------------------------------------
 
-def oph_apply(cube: Cube, primitive: Callable[[Column], Column], measure: str | None = None) -> Cube:
+def oph_apply(cube: Cube, primitive: Callable[[str], Column], measure: str | None = None) -> Cube:
     """Apply an array primitive to each row's measure array (oph_apply,
-    oph_json_objkeys.h:103). `primitive` is a Column->Column function from
-    ophidia_server_spark.functions.primitives taking the array column and
-    returning the transformed array — native higher-order expressions stay
-    JVM-side; numpy-backed kernels (fft...) use Pandas UDFs internally.
+    oph_json_objkeys.h:103), one select. `primitive` is a function from
+    ophidia_server_spark.functions.primitives taking the measure column's
+    name and returning the transformed array — native higher-order
+    expressions stay JVM-side; numpy-backed kernels (fft...) use Pandas UDFs
+    internally.
     """
-    df = cube.df.withColumn(MEASURE_COL, primitive(F.col(MEASURE_COL)))
+    df = cube.df.withColumn(MEASURE_COL, primitive(MEASURE_COL))
     return replace(cube, df=df, measure=measure or cube.measure, level=cube.level + 1)
 
 
@@ -540,7 +506,7 @@ def oph_mergecubes_n(cubes: list[Cube], source_dim: str = "src") -> Cube:
     if len(cubes) < 2:
         raise ValueError("mergecubes needs at least 2 cubes")
     dims = cubes[0].explicit_dims
-    for c in cubes[1:]:
+    for c in cubes:
         if c.explicit_dims != dims:
             raise ValueError("mergecubes requires identical explicit dims")
         if len(c.implicit_dims) != 1:

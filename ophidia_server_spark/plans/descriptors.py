@@ -44,6 +44,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from ophidia_server_spark.operators.cube_ops import AGG_FNS, REDUCE_OPS
+
 __all__ = [
     "ParamSpec",
     "OperatorDescriptor",
@@ -535,23 +537,22 @@ _d("oph_subset", "Subset a cube along dimensions (index/coord filters).",
    _p("offset", type="real", default="0"),
    _CONTAINER)
 
-_REDUCE_OPS = ("avg", "sum", "min", "max", "std", "var", "count")
 _TIME_LEVELS = ("hour", "day", "week", "month", "quarter", "season", "year")
 
 _d("oph_reduce", "Reduce the implicit dimension with an aggregate.",
-   _CUBE, _p("operation", default="avg", values=_REDUCE_OPS), _CONTAINER)
+   _CUBE, _p("operation", default="avg", values=tuple(REDUCE_OPS)), _CONTAINER)
 
 _d("oph_reduce2", "Grouped reduction of the implicit dimension by concept level.",
-   _CUBE, _p("operation", default="avg", values=_REDUCE_OPS),
+   _CUBE, _p("operation", default="avg", values=tuple(AGG_FNS)),
    _p("concept_level", default="month", values=_TIME_LEVELS),
    _CONTAINER)
 
 _d("oph_aggregate", "Aggregate over explicit dimensions.",
-   _CUBE, _p("operation", default="sum", values=_REDUCE_OPS),
+   _CUBE, _p("operation", default="sum", values=tuple(AGG_FNS)),
    _p("group_dims", multivalue=True), _CONTAINER)
 
 _d("oph_aggregate2", "Grouped aggregation over an explicit time dimension.",
-   _CUBE, _p("operation", default="sum", values=_REDUCE_OPS),
+   _CUBE, _p("operation", default="sum", values=tuple(AGG_FNS)),
    _p("dim", mandatory=True),
    _p("concept_level", default="month", values=_TIME_LEVELS), _CONTAINER)
 

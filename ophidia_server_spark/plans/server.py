@@ -26,6 +26,7 @@ from ophidia_server_spark.operators import cube_ops as C
 from ophidia_server_spark.operators import io_ops as IO
 from ophidia_server_spark.plans.workflow import WorkflowEngine, WorkflowError
 from ophidia_server_spark.store import CubeStore
+from ophidia_server_spark.subset import quote_ident
 
 
 def _input_arg(args: dict, inputs: dict, key: str) -> str:
@@ -97,14 +98,15 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_reduce(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
-        out = C.oph_reduce(cube, str(args.get("operation", "avg")))
+        kernel = C.REDUCE_OPS[str(args.get("operation", "avg")).lower()](MEASURE_COL)
         # reduce collapses the implicit dim; pack each row's scalar in place
-        # as a length-1 array over implicit dim `__r` = [0], so the result
-        # stays a cube (the reference keeps reduced cubes addressable). Exact
-        # with no re-aggregation: a cube holds one row per explicit-dim key.
-        reduced_col = out.columns[-1]  # named <operation>_<measure>
-        packed = Cube(out.select(*cube.explicit_dims, F.array(F.lit(0)).alias(DIM_COL),
-                                 F.array(F.col(reduced_col)).alias(MEASURE_COL)),
+        # as a length-1 array over implicit dim `__r` = [0], in the kernel's
+        # own select, so the result stays a cube (the reference keeps reduced
+        # cubes addressable). Exact with no re-aggregation: a cube holds one
+        # row per explicit-dim key.
+        packed = Cube(cube.df.selectExpr(*map(quote_ident, cube.explicit_dims),
+                                         f"array(0) AS {DIM_COL}",
+                                         f"array({kernel}) AS {MEASURE_COL}"),
                       cube.explicit_dims, ("__r",), measure=cube.measure)
         return store.register(packed, args.get("container", "default"),
                               parents=[pid], task="reduce")
@@ -195,6 +197,9 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         name = str(args.get("query", "oph_mul_scalar"))
         if name not in PRIMITIVES:
             raise KeyError(f"unknown primitive {name!r}; known: {sorted(PRIMITIVES)}")
+        if name in ("oph_predicate", "oph_math", "oph_find"):  # no float form
+            raise ValueError(f"primitive {name!r} takes a Python callable or function "
+                             "name, not numeric parameters: not served by oph_apply")
         # primitive parameters come as |-separated floats, e.g. query=
         # oph_mul_scalar;parameters=2.0|1.0 (mirrors the reference's
         # primitive-call strings without embedding a SQL-ish parser)

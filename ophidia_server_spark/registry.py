@@ -787,11 +787,11 @@ WHERE ((CAST(ts AS DATE) >= DATE '2024-01-05' AND CAST(ts AS DATE) <= DATE '2024
 GROUP BY event_type""",
 )
 def events_time_filter(spark, sf_dir):
-    from ophidia_server_spark.subset import time_predicate
+    from ophidia_server_spark.subset import time_sql
 
     ev = _t(spark, sf_dir)["events"]
     return (
-        ev.filter(time_predicate(F.col("ts").cast("date"), "2024-01-05_2024-01-10"))
+        ev.filter(F.expr(time_sql("CAST(`ts` AS DATE)", "2024-01-05_2024-01-10")))
         .groupBy("event_type")
         .agg(F.count("*").alias("n_events"))
     )

@@ -60,12 +60,18 @@ class CubeStore:
     metadata: dict[int, dict[str, str]] = field(default_factory=dict)
     lineage: list[tuple[int, str, int]] = field(default_factory=list)  # (out, task, in)
     folders: set[str] = field(default_factory=set)
+    # container name -> id (first use, never reused) for [container_pid=...]
+    containers: dict[str, int] = field(default_factory=dict)
 
     # -- containers / folders -------------------------------------------------
+    def container_id(self, container: str) -> int:
+        return self.containers.setdefault(container, max(self.containers.values(), default=0) + 1)
+
     def createcontainer(self, container: str, path: str = "/") -> str:
         """oph_createcontainer (oph_json_objkeys.h:122): register a namespace."""
         full = self._scoped(path).rstrip("/") + "/" + container
         self.folders.add(full)
+        self.container_id(container)
         return full
 
     def folder(self, action: str, path: str, to: str | None = None) -> None:
@@ -150,6 +156,7 @@ class CubeStore:
     ) -> str:
         cid = self._next_id
         self._next_id += 1
+        self.container_id(container)
         pid = f"{self.base_url}/{container}/{cid}"
         storage = None
         if materialize:
@@ -182,6 +189,7 @@ class CubeStore:
         the table name prefixed with 'table:'."""
         cid = self._next_id
         self._next_id += 1
+        self.container_id(container)
         pid = f"{self.base_url}/{container}/{cid}"
         tbl = f"{table_prefix}_{cid}"
         (
@@ -364,7 +372,8 @@ class CubeStore:
     def as_catalog(self) -> RowCatalog:
         return RowCatalog(
             cubes=[
-                (e.cube_id, 0, e.container, e.path, e.level, e.measure)
+                (e.cube_id, self.container_id(e.container), e.container, e.path, e.level,
+                 e.measure)
                 for e in self.entries.values()
             ],
             metadata=[
@@ -388,14 +397,15 @@ def save_store(store: CubeStore, path: str) -> None:
         (
             e.pid, e.cube_id, e.container, e.path, e.level, e.measure,
             _json.dumps(list(e.explicit_dims)), _json.dumps(list(e.implicit_dims)),
-            e.storage,
+            e.storage, store.container_id(e.container),
         )
         for e in store.entries.values()
     ]
     spark.createDataFrame(
         ent_rows or [],
         "pid string, cube_id int, container string, path string, level int, "
-        "measure string, explicit_dims string, implicit_dims string, storage string",
+        "measure string, explicit_dims string, implicit_dims string, storage string, "
+        "container_id int",
     ).write.mode("overwrite").parquet(os.path.join(path, "entries"))
     md_rows = [
         (cid, k, v) for cid, kv in store.metadata.items() for k, v in kv.items()
@@ -426,6 +436,7 @@ def load_store(spark, path: str, workspace: str) -> CubeStore:
             implicit_dims=tuple(_json.loads(r.implicit_dims)),
             storage=r.storage, cube=None,
         )
+        st.containers[r.container] = r.container_id
     for r in spark.read.parquet(os.path.join(path, "metadata")).collect():
         st.metadata.setdefault(r.cube_id, {})[r.key] = r.value
     st.lineage = [

@@ -1,5 +1,5 @@
-"""Subset-string algebra: parse and apply `start:stride:end` index/coordinate
-filters.
+"""Subset-string algebra: parse `start:stride:end` index/coordinate filters
+and render them as SQL predicates.
 
 Reference semantics (studied, not copied): /root/reference/src/oph_subset_library.c
 :64-190 — a subset string is a comma-separated list of clauses, each one of
@@ -12,17 +12,25 @@ known (oph_subset_library.c:116-122). Indexes are 1-based longs
 `mysql.oph_is_in_subset(id, start, stride, end)` per triplet, OR-combined
 (/root/reference/src/oph_filters.c:173-243).
 
-Spark mapping: each triplet becomes the pure Column predicate
-  (id >= start) & (id <= end) & ((id - start) % stride == 0)
-OR-combined across clauses — no UDF, fully pushdown-able by Catalyst.
+One SQL renderer per grammar, the only predicate builders: `subset_sql`
+(triplets, `x >= s AND x <= e AND ((x - s) % st) = 0` OR-combined),
+`values_sql` (non-numeric coordinates, `x IN ('a', 'b')`) and `time_sql`
+(`start_end` date ranges). Spark callers parse the text with `F.expr`: one
+py4j call, no UDF, pushdown-able by Catalyst.
+
+Subset strings arrive from HTTP, so no unparsed or unescaped request text
+reaches SQL: triplet bounds are rendered from parsed Python ints, time bounds
+must be `YYYY[-MM[-DD]]` naming a real date (else ValueError), and string
+coordinates become Spark string literals with `\\` and `'` backslash-escaped.
+Column arguments are built from known dimension names (`quote_ident`).
 """
 
 from __future__ import annotations
 
+import calendar
+import datetime
+import re
 from dataclasses import dataclass
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 END_KEYWORD = "end"
 
@@ -83,30 +91,22 @@ def _parse_bound(tok: str, allow_end: bool) -> int | None:
     return int(tok)
 
 
-def subset_predicate(
-    col: Column, subset: str, max_index: int | None = None, offset: int = 0
-) -> Column:
-    """Compile a subset string into a Column predicate over an integer index column.
-
-    OR across clauses (multivalue OR-combine, oph_filters.c:61-76); each clause is
-    range + stride arithmetic. Catalyst can push the range bounds to the scan.
-    `offset` widens every clause to [start-offset, end+offset] (the reference's
-    subset offset parameter; widened bounds ignore the stride).
-    """
-    clauses = [c.resolved(max_index) for c in parse_subset(subset)]
-    pred = None
-    for c in clauses:
-        lo, hi = c.start - offset, c.end + offset
-        p = (col >= F.lit(lo)) & (col <= F.lit(hi))
-        if c.stride != 1 and not offset:
-            p = p & (((col - F.lit(c.start)) % F.lit(c.stride)) == 0)
-        pred = p if pred is None else (pred | p)
-    return pred
+def quote_ident(name: str) -> str:
+    """A column name as a backquoted SQL identifier."""
+    return "`" + str(name).replace("`", "``") + "`"
 
 
 def subset_sql(colname: str, subset: str, max_index: int | None = None, offset: int = 0) -> str:
-    """ANSI-SQL rendering of the same predicate (for oracle parity checks)."""
+    """Render a subset string as a predicate over the integer SQL expression
+    `colname`.
+
+    OR across clauses (multivalue OR-combine, oph_filters.c:61-76); each clause
+    is range + stride arithmetic. `offset` widens every clause to
+    [start-offset, end+offset] (the reference's subset offset parameter;
+    widened bounds ignore the stride).
+    """
     clauses = [c.resolved(max_index) for c in parse_subset(subset)]
+    offset = int(offset)
     parts = []
     for c in clauses:
         p = f"({colname} >= {c.start - offset} AND {colname} <= {c.end + offset}"
@@ -116,47 +116,43 @@ def subset_sql(colname: str, subset: str, max_index: int | None = None, offset: 
     return "(" + " OR ".join(parts) + ")"
 
 
-def time_predicate(col: Column, subset: str) -> Column:
+def values_sql(colname: str, subset: str) -> str:
+    """Render non-numeric coordinates (`a,b` or `a|b`) as `colname IN (...)`
+    of Spark string literals; no values matches nothing."""
+    vals = [v for v in str(subset).replace("|", ",").split(",") if v]
+    lits = ", ".join("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals)
+    return f"({colname} IN ({lits}))" if vals else "FALSE"
+
+
+_TIME_BOUND = re.compile(r"\d{4}(-\d{2}(-\d{2})?)?", re.ASCII)
+
+
+def _expand_bound(tok: str, end: bool) -> str:
+    """A `YYYY[-MM[-DD]]` bound as a full date: start expands to the period
+    floor, end to the period's last day."""
+    tok = tok.strip()
+    if not _TIME_BOUND.fullmatch(tok):
+        raise ValueError(f"time bound {tok!r} is not YYYY[-MM[-DD]]")
+    y, m, d = [*map(int, tok.split("-")), None, None][:3]
+    try:
+        datetime.date(y, 1 if m is None else m, 1 if d is None else d)
+    except ValueError as exc:
+        raise ValueError(f"time bound {tok!r} names no date: {exc}") from None
+    if end and d is None:
+        m = m or 12
+        return f"{y:04d}-{m:02d}-{calendar.monthrange(y, m)[1]:02d}"
+    return f"{y:04d}-{m or 1:02d}-{d or 1:02d}"
+
+
+def time_sql(colname: str, subset: str) -> str:
     """time_filter=yes subsetting (oph_subset/oph_wait time filters; the
     reference parses '%Y-%m-%d %H:%M:%S' bounds,
     oph_flow_control_operators.c:2190): clauses are `start_end` date ranges
     over a date/timestamp dimension, comma-separated (OR).
 
     Bounds may be partial — '1997' (whole year), '1997-03' (whole month),
-    '1997-03-15' (whole day) — start expands to the period floor, end to the
-    period's last day. A clause without '_' selects the whole period.
+    '1997-03-15' (whole day). A clause without '_' selects the whole period.
     """
-    pred = None
-    for raw in str(subset).split(","):
-        raw = raw.strip()
-        if "_" in raw:
-            s, e = raw.split("_", 1)
-        else:
-            s = e = raw
-        lo = _expand_bound(s, end=False)
-        hi = _expand_bound(e, end=True)
-        p = (col >= F.lit(lo)) & (col <= F.lit(hi))
-        pred = p if pred is None else (pred | p)
-    return pred
-
-
-def _expand_bound(tok: str, end: bool) -> str:
-    tok = tok.strip()
-    parts = tok.split("-")
-    if len(parts) == 1:  # year
-        return f"{tok}-12-31" if end else f"{tok}-01-01"
-    if len(parts) == 2:  # year-month
-        if not end:
-            return f"{tok}-01"
-        y, m = int(parts[0]), int(parts[1])
-        days = [31, 29 if y % 4 == 0 and (y % 100 != 0 or y % 400 == 0) else 28,
-                31, 30, 31, 30, 31, 31, 30, 31, 30, 31][m - 1]
-        return f"{tok}-{days:02d}"
-    return tok
-
-
-def time_sql(colname: str, subset: str) -> str:
-    """ANSI-SQL rendering of time_predicate for oracle parity."""
     parts = []
     for raw in str(subset).split(","):
         raw = raw.strip()

@@ -62,10 +62,6 @@ def test_sql_rendering():
 
 
 def test_offset_widens_bounds():
-    from pyspark.sql import functions as F
-
-    from ophidia_server_spark.subset import subset_predicate, subset_sql
-
     assert subset_sql("x", "5:6", offset=1) == "((x >= 4 AND x <= 7))"
     # offset disables stride arithmetic (widened window is contiguous)
     assert "%" not in subset_sql("x", "2:2:8", offset=1)
