@@ -54,6 +54,14 @@ class Cube:
     lineage: tuple[str, ...] = field(default_factory=tuple)
 
     # -- helpers ---------------------------------------------------------------
+    def dim_field(self, name: str) -> Column:
+        """Column expr for one implicit dim's coordinate array."""
+        if len(self.implicit_dims) == 1:
+            if name != self.implicit_dims[0]:
+                raise KeyError(name)
+            return F.col(DIM_COL)
+        return F.col(f"{DIM_COL}.{name}")
+
     def with_df(self, df: DataFrame, **kw) -> "Cube":
         return replace(self, df=df, level=self.level + 1, **kw)
 

@@ -3,15 +3,16 @@
 The reference applies MySQL-UDF "primitives" (oph_predicate, oph_boxcar,
 oph_moving_avg, oph_gsl_fft, ... — listed via primitives_list,
 /root/reference/src/oph_json_objkeys.h:74-75) to each row's packed measure
-array. Here each primitive maps an ArrayType column's name to a Column. The
-common ones are pure Spark higher-order expressions (JVM-side,
+array. Here each primitive maps an ArrayType column (a Column or its name)
+to a Column. The common ones are pure Spark higher-order expressions (JVM-side,
 whole-stage-codegen'd, zero Python in the hot path); numpy-only kernels (FFT)
 fall back to Arrow-batched Pandas UDFs.
 
 A Python-lambda higher-order function costs dozens of py4j round trips,
 so the float-parameter element-wise primitives (`scale`, `mask_above`,
 `clip`, `quantize`) render `transform(<arr>, x -> ...)` as one SQL text for
-`F.expr` (one call). Parameters follow the functions/lits.py literal rule:
+`F.expr` (one call); they take the column's name only and refuse a Column
+with a TypeError. Parameters follow the functions/lits.py literal rule:
 `repr` + `D`, and `nan`/`inf` (which `float()` accepts from HTTP) as
 `CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)`.
 
@@ -27,8 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ophidia_server_spark.functions.lits import double_sql
+from ophidia_server_spark.subset import quote_ident
 
-ArrayPrimitive = Callable[[str], Column]
+ArrayPrimitive = Callable[[Column | str], Column]
 
 
 def _dbl(x: Column) -> Column:
@@ -37,6 +39,17 @@ def _dbl(x: Column) -> Column:
 
 def _col(arr: Column | str) -> Column:
     return F.col(arr) if isinstance(arr, str) else arr
+
+
+def _transform_sql(body: str) -> ArrayPrimitive:
+    """A primitive mapping the array column named `arr` to the SQL text
+    `transform(arr, x -> body)`."""
+    def prim(arr: str) -> Column:
+        if not isinstance(arr, str):
+            raise TypeError(f"this primitive renders SQL text: pass the array column's "
+                            f"name, not {type(arr).__name__}")
+        return F.expr(f"transform({quote_ident(arr)}, x -> {body})")
+    return prim
 
 
 # -- oph_predicate: element-wise conditional --------------------------------
@@ -51,17 +64,14 @@ def predicate(cond: Callable[[Column], Column], if_true: float | Column, if_fals
 def mask_above(threshold: float) -> ArrayPrimitive:
     """oph_mask: x -> 1.0 where x > threshold else 0.0."""
     t = double_sql(threshold)
-    return lambda arr: F.expr(
-        f"transform({arr}, x -> CASE WHEN CAST(x AS DOUBLE) > {t} THEN 1.0D ELSE 0.0D END)"
-    )
+    return _transform_sql(f"CASE WHEN CAST(x AS DOUBLE) > {t} THEN 1.0D ELSE 0.0D END")
 
 
 # -- scalar arithmetic ------------------------------------------------------
 
 def scale(mul: float = 1.0, add: float = 0.0) -> ArrayPrimitive:
     """oph_mul_scalar / oph_sum_scalar: x -> x*mul + add."""
-    m, a = double_sql(mul), double_sql(add)
-    return lambda arr: F.expr(f"transform({arr}, x -> CAST(x AS DOUBLE) * {m} + {a})")
+    return _transform_sql(f"CAST(x AS DOUBLE) * {double_sql(mul)} + {double_sql(add)}")
 
 
 def math_fn(name: str) -> ArrayPrimitive:
@@ -182,14 +192,13 @@ def rotate(n: int = 1) -> ArrayPrimitive:
 
 def clip(lo: float, hi: float) -> ArrayPrimitive:
     """oph_clip: clamp values into [lo, hi]."""
-    lo, hi = double_sql(lo), double_sql(hi)
-    return lambda arr: F.expr(f"transform({arr}, x -> least(greatest(CAST(x AS DOUBLE), {lo}), {hi}))")
+    return _transform_sql(f"least(greatest(CAST(x AS DOUBLE), {double_sql(lo)}), {double_sql(hi)})")
 
 
 def quantize(step: float) -> ArrayPrimitive:
     """oph_quantize: snap values to multiples of `step` (floor binning)."""
     st = double_sql(step)
-    return lambda arr: F.expr(f"transform({arr}, x -> FLOOR(CAST(x AS DOUBLE) / {st}) * {st})")
+    return _transform_sql(f"FLOOR(CAST(x AS DOUBLE) / {st}) * {st}")
 
 
 def zscore() -> ArrayPrimitive:

@@ -156,6 +156,12 @@ def oph_subset(
 # oph_reduce / oph_reduce2
 # ---------------------------------------------------------------------------
 
+def reduce_exprs(cube: Cube, operation: str) -> tuple[list[str], str]:
+    """The SQL text of a reduce's select: the cube's explicit dims, and the
+    `operation` kernel over its measure array."""
+    return [*map(quote_ident, cube.explicit_dims)], REDUCE_OPS[operation.lower()](MEASURE_COL)
+
+
 def oph_reduce(cube: Cube, operation: str, out_name: str | None = None) -> DataFrame:
     """Collapse the implicit dimension (oph_reduce, oph_json_objkeys.h:96).
 
@@ -163,10 +169,9 @@ def oph_reduce(cube: Cube, operation: str, out_name: str | None = None) -> DataF
     terms the result cube has an empty implicit dim, which is just a plain table.
     Per-row array kernel, zero shuffle.
     """
+    dims, kernel = reduce_exprs(cube, operation)
     out = out_name or f"{operation}_{cube.measure}"
-    kernel = REDUCE_OPS[operation.lower()](MEASURE_COL)
-    return cube.df.selectExpr(*map(quote_ident, cube.explicit_dims),
-                              f"{kernel} AS {quote_ident(out)}")
+    return cube.df.selectExpr(*dims, f"{kernel} AS {quote_ident(out)}")
 
 
 def oph_reduce2(
@@ -393,7 +398,37 @@ def oph_mergecubes(a: Cube, b: Cube, source_dim: str = "src") -> Cube:
     same explicit dims, arrays concatenated. The merged implicit coordinate is
     tagged with the source index (0 = first cube) to keep coordinates unique —
     the reference likewise extends the implicit dimension's index space."""
-    return oph_mergecubes_n([a, b], source_dim)
+    if a.explicit_dims != b.explicit_dims:
+        raise ValueError("mergecubes requires identical explicit dims")
+    if len(a.implicit_dims) != 1 or len(b.implicit_dims) != 1:
+        raise NotImplementedError("mergecubes on composite implicit dims")
+
+    inner = a.implicit_dims[0]
+
+    def tag(dim_col: Column, idx: int) -> Column:
+        return F.transform(dim_col, lambda d: F.struct(F.lit(idx).alias(source_dim), d.alias(inner)))
+
+    bt = b.df.select(
+        *b.explicit_dims,
+        F.col(DIM_COL).alias("__dim_b"),
+        F.col(MEASURE_COL).alias("__m_b"),
+    )
+    j = a.df.join(bt, on=list(a.explicit_dims), how="inner")
+    out = j.select(
+        *a.explicit_dims,
+        F.concat(tag(F.col(DIM_COL), 0), tag(F.col("__dim_b"), 1)).alias(DIM_COL),
+        F.concat(
+            F.transform(MEASURE_COL, lambda x: x.cast("double")),
+            F.transform("__m_b", lambda x: x.cast("double")),
+        ).alias(MEASURE_COL),
+    )
+    return Cube(
+        df=out,
+        explicit_dims=a.explicit_dims,
+        implicit_dims=(source_dim, a.implicit_dims[0]),
+        measure=a.measure,
+        level=max(a.level, b.level) + 1,
+    )
 
 
 def oph_intercube_corr(a: Cube, b: Cube, out: str = "corr") -> DataFrame:
@@ -506,7 +541,7 @@ def oph_mergecubes_n(cubes: list[Cube], source_dim: str = "src") -> Cube:
     if len(cubes) < 2:
         raise ValueError("mergecubes needs at least 2 cubes")
     dims = cubes[0].explicit_dims
-    for c in cubes:
+    for c in cubes[1:]:
         if c.explicit_dims != dims:
             raise ValueError("mergecubes requires identical explicit dims")
         if len(c.implicit_dims) != 1:

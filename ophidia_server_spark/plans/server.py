@@ -26,7 +26,6 @@ from ophidia_server_spark.operators import cube_ops as C
 from ophidia_server_spark.operators import io_ops as IO
 from ophidia_server_spark.plans.workflow import WorkflowEngine, WorkflowError
 from ophidia_server_spark.store import CubeStore
-from ophidia_server_spark.subset import quote_ident
 
 
 def _input_arg(args: dict, inputs: dict, key: str) -> str:
@@ -98,14 +97,13 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_reduce(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
-        kernel = C.REDUCE_OPS[str(args.get("operation", "avg")).lower()](MEASURE_COL)
+        dims, kernel = C.reduce_exprs(cube, str(args.get("operation", "avg")))
         # reduce collapses the implicit dim; pack each row's scalar in place
         # as a length-1 array over implicit dim `__r` = [0], in the kernel's
         # own select, so the result stays a cube (the reference keeps reduced
         # cubes addressable). Exact with no re-aggregation: a cube holds one
         # row per explicit-dim key.
-        packed = Cube(cube.df.selectExpr(*map(quote_ident, cube.explicit_dims),
-                                         f"array(0) AS {DIM_COL}",
+        packed = Cube(cube.df.selectExpr(*dims, f"array(0) AS {DIM_COL}",
                                          f"array({kernel}) AS {MEASURE_COL}"),
                       cube.explicit_dims, ("__r",), measure=cube.measure)
         return store.register(packed, args.get("container", "default"),

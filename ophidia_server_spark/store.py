@@ -60,12 +60,16 @@ class CubeStore:
     metadata: dict[int, dict[str, str]] = field(default_factory=dict)
     lineage: list[tuple[int, str, int]] = field(default_factory=list)  # (out, task, in)
     folders: set[str] = field(default_factory=set)
-    # container name -> id (first use, never reused) for [container_pid=...]
+    # container name -> id for [container_pid=...]; names are never removed,
+    # so an id is never given to a second container
     containers: dict[str, int] = field(default_factory=dict)
 
     # -- containers / folders -------------------------------------------------
     def container_id(self, container: str) -> int:
-        return self.containers.setdefault(container, max(self.containers.values(), default=0) + 1)
+        """The container's id, assigned on first use."""
+        if container not in self.containers:
+            self.containers[container] = len(self.containers) + 1
+        return self.containers[container]
 
     def createcontainer(self, container: str, path: str = "/") -> str:
         """oph_createcontainer (oph_json_objkeys.h:122): register a namespace."""
@@ -372,8 +376,7 @@ class CubeStore:
     def as_catalog(self) -> RowCatalog:
         return RowCatalog(
             cubes=[
-                (e.cube_id, self.container_id(e.container), e.container, e.path, e.level,
-                 e.measure)
+                (e.cube_id, self.containers[e.container], e.container, e.path, e.level, e.measure)
                 for e in self.entries.values()
             ],
             metadata=[
@@ -385,8 +388,8 @@ class CubeStore:
 
 
 def save_store(store: CubeStore, path: str) -> None:
-    """Persist the catalog state (entries/metadata/lineage/folders) as parquet
-    tables — the OphidiaDB durability analogue (MySQL catalog in the
+    """Persist the catalog state (entries/metadata/lineage/folders/containers)
+    as parquet tables — the OphidiaDB durability analogue (MySQL catalog in the
     reference; Delta tables on a production cluster). Cube payloads already
     live on disk (materialized parquet / bucketed tables); this makes the
     *catalog* itself restartable."""
@@ -397,16 +400,18 @@ def save_store(store: CubeStore, path: str) -> None:
         (
             e.pid, e.cube_id, e.container, e.path, e.level, e.measure,
             _json.dumps(list(e.explicit_dims)), _json.dumps(list(e.implicit_dims)),
-            e.storage, store.container_id(e.container),
+            e.storage,
         )
         for e in store.entries.values()
     ]
     spark.createDataFrame(
         ent_rows or [],
         "pid string, cube_id int, container string, path string, level int, "
-        "measure string, explicit_dims string, implicit_dims string, storage string, "
-        "container_id int",
+        "measure string, explicit_dims string, implicit_dims string, storage string",
     ).write.mode("overwrite").parquet(os.path.join(path, "entries"))
+    spark.createDataFrame(
+        list(store.containers.items()), "container string, container_id int"
+    ).write.mode("overwrite").parquet(os.path.join(path, "containers"))
     md_rows = [
         (cid, k, v) for cid, kv in store.metadata.items() for k, v in kv.items()
     ]
@@ -428,6 +433,11 @@ def load_store(spark, path: str, workspace: str) -> CubeStore:
     import json as _json
 
     st = CubeStore(spark=spark, workspace=workspace)
+    if os.path.isdir(os.path.join(path, "containers")):  # absent in older catalogs
+        st.containers = {
+            r.container: r.container_id
+            for r in spark.read.parquet(os.path.join(path, "containers")).collect()
+        }
     for r in spark.read.parquet(os.path.join(path, "entries")).collect():
         st.entries[r.pid] = CubeEntry(
             pid=r.pid, cube_id=r.cube_id, container=r.container, path=r.path,
@@ -436,7 +446,8 @@ def load_store(spark, path: str, workspace: str) -> CubeStore:
             implicit_dims=tuple(_json.loads(r.implicit_dims)),
             storage=r.storage, cube=None,
         )
-        st.containers[r.container] = r.container_id
+    for e in sorted(st.entries.values(), key=lambda e: e.cube_id):
+        st.container_id(e.container)  # in first-use order where none was saved
     for r in spark.read.parquet(os.path.join(path, "metadata")).collect():
         st.metadata.setdefault(r.cube_id, {})[r.key] = r.value
     st.lineage = [

@@ -20,8 +20,9 @@ py4j call, no UDF, pushdown-able by Catalyst.
 
 Subset strings arrive from HTTP, so no unparsed or unescaped request text
 reaches SQL: triplet bounds are rendered from parsed Python ints, time bounds
-must be `YYYY[-MM[-DD]]` naming a real date (else ValueError), and string
-coordinates become Spark string literals with `\\` and `'` backslash-escaped.
+must be `YYYY[-MM[-DD[ HH:MM:SS]]]` naming a real date or time (else
+ValueError), and string coordinates become Spark string literals with `\\`
+and `'` backslash-escaped.
 Column arguments are built from known dimension names (`quote_ident`).
 """
 
@@ -124,20 +125,25 @@ def values_sql(colname: str, subset: str) -> str:
     return f"({colname} IN ({lits}))" if vals else "FALSE"
 
 
-_TIME_BOUND = re.compile(r"\d{4}(-\d{2}(-\d{2})?)?", re.ASCII)
+_TIME_BOUND = re.compile(r"\d{4}(-\d{2}(-\d{2}( \d{2}:\d{2}:\d{2})?)?)?", re.ASCII)
 
 
 def _expand_bound(tok: str, end: bool) -> str:
     """A `YYYY[-MM[-DD]]` bound as a full date: start expands to the period
-    floor, end to the period's last day."""
+    floor, end to the period's last day. A full `YYYY-MM-DD HH:MM:SS`
+    timestamp is returned as it is."""
     tok = tok.strip()
     if not _TIME_BOUND.fullmatch(tok):
-        raise ValueError(f"time bound {tok!r} is not YYYY[-MM[-DD]]")
-    y, m, d = [*map(int, tok.split("-")), None, None][:3]
+        raise ValueError(f"time bound {tok!r} is not YYYY[-MM[-DD[ HH:MM:SS]]]")
+    date, _, clock = tok.partition(" ")
+    y, m, d = [*map(int, date.split("-")), None, None][:3]
     try:
-        datetime.date(y, 1 if m is None else m, 1 if d is None else d)
+        datetime.datetime(y, 1 if m is None else m, 1 if d is None else d,
+                          *(map(int, clock.split(":")) if clock else ()))
     except ValueError as exc:
         raise ValueError(f"time bound {tok!r} names no date: {exc}") from None
+    if clock:
+        return tok
     if end and d is None:
         m = m or 12
         return f"{y:04d}-{m:02d}-{calendar.monthrange(y, m)[1]:02d}"
@@ -151,12 +157,15 @@ def time_sql(colname: str, subset: str) -> str:
     over a date/timestamp dimension, comma-separated (OR).
 
     Bounds may be partial — '1997' (whole year), '1997-03' (whole month),
-    '1997-03-15' (whole day). A clause without '_' selects the whole period.
+    '1997-03-15' (whole day) — and render as DATE literals; a full
+    '1997-03-15 12:00:00' bound renders as a TIMESTAMP literal. A clause
+    without '_' selects the whole period.
     """
     parts = []
     for raw in str(subset).split(","):
         raw = raw.strip()
         s, e = (raw.split("_", 1) if "_" in raw else (raw, raw))
         lo, hi = _expand_bound(s, False), _expand_bound(e, True)
-        parts.append(f"({colname} >= DATE '{lo}' AND {colname} <= DATE '{hi}')")
+        lo, hi = (("TIMESTAMP " if " " in b else "DATE ") + f"'{b}'" for b in (lo, hi))
+        parts.append(f"({colname} >= {lo} AND {colname} <= {hi})")
     return "(" + " OR ".join(parts) + ")"

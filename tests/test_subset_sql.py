@@ -3,6 +3,7 @@ oph_reduce outputs, hostile request text, literal rendering, and the plan
 shape each operator adds."""
 
 import math
+import shutil
 
 import pytest
 from pyspark.sql import Row
@@ -30,6 +31,7 @@ def cubes(spark):
         "strc": build_cube(df, ["g", "month"], "h", F.col("v"), measure="v"),
         "rolled": C.oph_rollup(build_cube(df, ["g", "h"], "month", F.col("v"), measure="v"), "h"),
         "timec": build_cube(tdf, ["g", "h"], "d", F.col("v"), measure="v"),
+        "timex": build_cube(tdf, ["g", "d"], "h", F.col("v"), measure="v"),
     }
 
 
@@ -65,6 +67,16 @@ FORMS = {
         [["g", "int"], ["h", "string"], ["__dim", "array<date>"], ["__m", "array<double>"]],
         [[g, h, ["1997-12-01", "1998-01-01"], [g * 100.0 + (h == "y") * 10 + m for m in (1, 2)]]
          for g, h in _ALL]),
+    "time_timestamp": (
+        ("timec", {"d": "1997-12-01 00:00:00_1998-02-01 00:00:00,1998-04-01 00:00:00"}, "time", 0),
+        [["g", "int"], ["h", "string"], ["__dim", "array<date>"], ["__m", "array<double>"]],
+        [[g, h, ["1997-12-01", "1998-01-01", "1998-02-01", "1998-04-01"],
+          [g * 100.0 + (h == "y") * 10 + m for m in (1, 2, 3, 5)]] for g, h in _ALL]),
+    "time_timestamp_explicit": (
+        ("timex", {"d": "1998-01-01 00:00:00_1998-03-01 00:00:00"}, "time", 0),
+        [["g", "int"], ["d", "date"], ["__dim", "array<string>"], ["__m", "array<double>"]],
+        [[g, f"1998-0{m - 1}-01", ["x", "y"], [g * 100.0 + m, g * 100.0 + 10 + m]]
+         for g in (1, 2) for m in (2, 3, 4)]),
 }
 
 
@@ -111,14 +123,20 @@ def test_quotes_and_backslashes_round_trip_as_literals(spark):
 
 
 @pytest.mark.parametrize("bound", [
-    "1997-13", "1997-00", "1997-02-30", "97", "1997-1", "١٩٩٧", "1997-01-01 00:00:00",
-    "1997') OR TRUE OR ('", "1997-01_1998' OR '1'='1",
+    "1997-13", "1997-00", "1997-02-30", "97", "1997-1", "١٩٩٧", "1997-01 00:00:00",
+    "1997-01-01 24:00:00", "1997-01-01 00:00", "1997-01-01T00:00:00", "1997-01-01  00:00:00",
+    "1997-01-01 00:00:00' OR '1'='1", "1997') OR TRUE OR ('", "1997-01_1998' OR '1'='1",
 ])
 def test_malformed_time_bounds_are_value_errors(cubes, bound):
     with pytest.raises(ValueError, match="time bound"):
         time_sql("d", bound)
     with pytest.raises(ValueError, match="time bound"):
         C.oph_subset(cubes["timec"], {"d": bound}, "time")
+
+
+def test_timestamp_bounds_render_as_timestamp_literals():
+    assert time_sql("d", "1997-03_1997-03-15 12:30:00") == (
+        "((d >= DATE '1997-03-01' AND d <= TIMESTAMP '1997-03-15 12:30:00'))")
 
 
 def _engine(spark, tmp_path, cube):
@@ -191,6 +209,13 @@ def test_non_finite_primitive_parameters(cubes):
     assert first(prim.mask_above(float("-inf"))) == [1.0] * 6
     assert all(map(math.isnan, first(prim.quantize(float("nan")))))
     assert all(map(math.isnan, first(prim.scale(1.0, float("nan")))))
+
+
+@pytest.mark.parametrize("p", [prim.scale(2.0), prim.mask_above(1.0), prim.clip(0.0, 1.0),
+                               prim.quantize(1.0)])
+def test_sql_text_primitives_refuse_a_column(p):
+    with pytest.raises(TypeError, match="column's name"):
+        p(F.col(MEASURE_COL))
 
 
 @pytest.mark.parametrize("query", ["oph_predicate", "oph_math", "oph_find"])
@@ -282,9 +307,27 @@ def test_container_pid_selects_exactly_that_containers_cubes(spark, cubes, tmp_p
     assert st.containers["cB"] == 3 and st.containers["cD"] == 5
     assert selected("cB") == sorted(st.entries[p].cube_id for p in pids["cB"])
     st2 = CubeStore(spark=spark, workspace=str(tmp_path))
+    st2.createcontainer("cEmpty")
     st2.register(cubes["base"], "cZ", materialize=True)
+    st2.register(cubes["base"], "cGone", materialize=True)
+    st2.deletecontainer("cGone")
     save_store(st2, str(tmp_path / "catalog"))
     st2.register(cubes["base"], "cY")
     loaded = load_store(spark, str(tmp_path / "catalog"), str(tmp_path))
-    assert loaded.containers == {"cZ": 1}
-    assert loaded.container_id("cNew") == 2
+    # the ids of empty and emptied containers survive too, so none is reused
+    assert loaded.containers == {"cEmpty": 1, "cZ": 2, "cGone": 3}
+    assert loaded.container_id("cNew") == 4
+
+
+def test_catalog_without_container_ids_loads(spark, cubes, tmp_path):
+    # a catalog saved before container ids were kept has no `containers`
+    # table: ids are assigned to its entries' containers on load
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    for c in ("cA", "cB", "cA"):
+        st.register(cubes["base"], c, materialize=True)
+    save_store(st, str(tmp_path / "catalog"))
+    shutil.rmtree(tmp_path / "catalog" / "containers")
+    loaded = load_store(spark, str(tmp_path / "catalog"), str(tmp_path))
+    assert loaded.containers == {"cA": 1, "cB": 2}
+    got = compile_massive(loaded.as_catalog(), f"[container_pid={loaded.base_url}/1]")
+    assert got == sorted(e.cube_id for e in loaded.entries.values() if e.container == "cA")
