@@ -21,7 +21,8 @@ single row's array fits comfortably in an executor task (implicit card up to
 and rolled up on demand.
 
 All operators are Catalyst-native (higher-order functions / groupBy) — no Python
-row UDFs in any hot path.
+row UDFs in any hot path. Per-row array kernels are SQL text (`randcube`
+here, operators/cube_ops.py, functions/primitives.py).
 """
 
 from __future__ import annotations
@@ -30,6 +31,8 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ophidia_server_spark.subset import quote_ident
 
 DIM_COL = "__dim"
 MEASURE_COL = "__m"
@@ -138,15 +141,11 @@ def randcube(
     (Knuth multiplicative hash — plain BIGINT arithmetic, exactly reproducible
     in any SQL engine). Generated distributed via spark.range — no driver data.
     """
-    df = (
-        spark.range(nrows)
-        .select(
-            (F.col("id") + 1).alias(explicit_dim),
-            F.sequence(F.lit(1), F.lit(array_len)).alias(DIM_COL),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(array_len - 1)),
-                lambda i: ((F.col("id") * array_len + i) * F.lit(2654435761)) % F.lit(1000003) / F.lit(1000.0),
-            ).alias(MEASURE_COL),
-        )
+    n = int(array_len)
+    df = spark.range(nrows).selectExpr(
+        f"id + 1 AS {quote_ident(explicit_dim)}",
+        f"sequence(1, {n}) AS {DIM_COL}",
+        f"transform(sequence(0, {n - 1}), "
+        f"i -> ((id * {n} + i) * 2654435761) % 1000003 / 1000.0D) AS {MEASURE_COL}",
     )
     return Cube(df=df, explicit_dims=(explicit_dim,), implicit_dims=("index",), measure=measure)

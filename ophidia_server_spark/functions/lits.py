@@ -15,6 +15,12 @@ literal is the identical IEEE-754 double — including -0.0 and extreme
 exponents (pinned by tests/test_lits.py). NaN and the infinities have no
 literal and render as ``CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)``;
 ``array()`` types as array<void>, exactly like ``F.array()``.
+
+The same module holds the rule for every literal that request parameters
+put into SQL text: doubles through ``double_sql``, integers through
+``as_int`` (HTTP parameters arrive as floats, so ``3.0`` is the integer 3,
+while ``2.5``, NaN and the infinities are ValueErrors), and strings through
+``string_sql`` (backslash and quote escaped).
 """
 
 from __future__ import annotations
@@ -31,6 +37,22 @@ def double_sql(value: float) -> str:
     if math.isfinite(v):
         return repr(v) + "D"
     return "CAST('" + ("NaN" if v != v else "Infinity" if v > 0 else "-Infinity") + "' AS DOUBLE)"
+
+
+def as_int(value: float | int | str) -> int:
+    """An integer parameter: ints and integer text pass, an integral float
+    converts; anything else is a ValueError."""
+    if isinstance(value, (int, str)):
+        return int(value)
+    v = float(value)
+    if not v.is_integer():
+        raise ValueError(f"expected an integer parameter, got {value!r}")
+    return int(v)
+
+
+def string_sql(value: str) -> str:
+    """SQL text of one Spark string literal, `\\` and `'` backslash-escaped."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _render(vals) -> str:

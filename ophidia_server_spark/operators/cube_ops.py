@@ -14,11 +14,14 @@ aggregation uses partial+final hash agg; intercube joins hash-partition both
 sides on the explicit dims (co-partitioned if both cubes came from the same
 build_cube shuffle).
 
-The window operators (oph_subset, oph_apply, oph_reduce) are one select each,
-built from SQL text for `F.expr`/`selectExpr` — one py4j call per array
-kernel, where a Python-lambda higher-order function costs dozens. Predicates
-come from subset.py's renderers; double literals follow functions/lits.py
-(`repr` + `D`; NaN/±inf as `CAST('NaN'|'Infinity'|'-Infinity' AS DOUBLE)`).
+Every per-row array kernel is SQL text parsed by the JVM (`F.expr` /
+`selectExpr`), one py4j call each, where a Python-lambda higher-order
+function costs dozens: the window operators (oph_subset, oph_apply,
+oph_reduce) and oph_intercube, oph_intercube_corr, oph_permute and
+oph_mergecubes_n are one select each. Predicates come from subset.py's
+renderers; literals follow functions/lits.py (`double_sql`, `string_sql`).
+The binary oph_mergecubes keeps its Column lambdas: it is the independent
+reference the n-ary form is tested against.
 """
 
 from __future__ import annotations
@@ -28,8 +31,10 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, FractionalType, NumericType
 
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
+from ophidia_server_spark.functions.lits import string_sql
 from ophidia_server_spark.subset import quote_ident, subset_sql, time_sql, values_sql
 
 # ---------------------------------------------------------------------------
@@ -82,6 +87,15 @@ AGG_FNS: dict[str, Callable[[Column], Column]] = {
 # oph_subset / oph_subset2
 # ---------------------------------------------------------------------------
 
+def _coord_type(cube: Cube, dim: str) -> DataType:
+    """The type of dimension `dim`'s coordinates in the cube's schema."""
+    schema = cube.df.schema
+    if dim in cube.explicit_dims:
+        return schema[dim].dataType
+    coord = schema[DIM_COL].dataType.elementType
+    return coord if len(cube.implicit_dims) == 1 else coord[dim].dataType
+
+
 def oph_subset(
     cube: Cube,
     subset_dims: dict[str, str],
@@ -104,14 +118,25 @@ def oph_subset(
     coordinate ranges. subset_type="time": clauses are `start_end` date ranges
     with partial-date expansion (time_filter=yes semantics).
     """
-    def pred(col: str, ss: str) -> str:
+    def pred(dim: str, col: str, ss: str) -> str:
         if subset_type == "time":
             return time_sql(col, ss)
         try:
             return subset_sql(col, ss, offset=offset)
         except ValueError:
             # non-numeric coordinates (string dims): clauses are literal
-            # values, OR-combined
+            # values, OR-combined. A numeric coordinate takes them only as
+            # numbers of its own kind; anything else would fail as a cast
+            # in a later task, so it fails here
+            typ = _coord_type(cube, dim)
+            if isinstance(typ, NumericType):
+                kind = float if isinstance(typ, FractionalType) else int
+                try:
+                    for v in ss.replace("|", ",").split(","):
+                        kind(v)
+                except ValueError:
+                    raise ValueError(f"subset filter {ss!r} of the numeric dimension "
+                                     f"{dim!r} is not numeric") from None
             return values_sql(col, ss)
 
     composite = len(cube.implicit_dims) != 1
@@ -119,7 +144,7 @@ def oph_subset(
     cells: list[tuple[str, str]] = []
     for dim, ss in subset_dims.items():
         if dim in cube.explicit_dims:
-            rows.append(pred(quote_ident(dim), ss))
+            rows.append(pred(dim, quote_ident(dim), ss))
         elif dim in cube.implicit_dims:
             if subset_type == "index" and composite:
                 raise NotImplementedError(
@@ -134,7 +159,7 @@ def oph_subset(
         # positions are 1-based over the packed array
         return " AND ".join(
             subset_sql("(i + 1)", ss, offset=offset) if subset_type == "index"
-            else pred(f"{coord}.{quote_ident(dim)}" if composite else coord, ss)
+            else pred(dim, f"{coord}.{quote_ident(dim)}" if composite else coord, ss)
             for dim, ss in cells
         )
 
@@ -314,26 +339,26 @@ def oph_rollup(cube: Cube, dim: str) -> Cube:
 
 def oph_permute(cube: Cube, order: list[str]) -> Cube:
     """Reorder implicit dimensions inside the array (oph_permute,
-    oph_json_objkeys.h:93). Re-sorts each row's array by the permuted coordinate
-    key — per-row array_sort over re-built structs, shuffle-free."""
+    oph_json_objkeys.h:93). Re-keys each row's coordinates in the permuted
+    order and re-sorts by them, the measure following its coordinate —
+    per-row array_sort, shuffle-free, one select. The (key, measure) pairs
+    sort by key first, so sorting the keys alone gives `__dim` in the order
+    the sorted pairs give `__m`."""
     if sorted(order) != sorted(cube.implicit_dims):
         raise ValueError(f"order {order} must permute {cube.implicit_dims}")
     if len(cube.implicit_dims) == 1:
         return cube
-    zipped = F.arrays_zip(F.col(DIM_COL).alias("d"), F.col(MEASURE_COL).alias("m"))
-    rekeyed = F.transform(
-        zipped,
-        lambda s: F.struct(
-            F.struct(*[s["d"][n].alias(n) for n in order]).alias("d"), s["m"].alias("m")
-        ),
-    )
-    srt = F.array_sort(rekeyed)
-    df = (
-        cube.df.withColumn("__z", srt)
-        .withColumn(DIM_COL, F.col("__z.d"))
-        .withColumn(MEASURE_COL, F.col("__z.m"))
-        .drop("__z")
-    )
+
+    def key(d: str) -> str:
+        return "named_struct(" + ", ".join(
+            f"{string_sql(n)}, {d}.{quote_ident(n)}" for n in order) + ")"
+
+    pairs = (f"transform(arrays_zip({DIM_COL}, {MEASURE_COL}), "
+             f"z -> named_struct('d', {key(f'z.{DIM_COL}')}, 'm', z.{MEASURE_COL}))")
+    df = cube.df.withColumns({
+        DIM_COL: F.expr(f"array_sort(transform({DIM_COL}, d -> {key('d')}))"),
+        MEASURE_COL: F.expr(f"transform(array_sort({pairs}), z -> z.m)"),
+    })
     return replace(cube, df=df, implicit_dims=tuple(order), level=cube.level + 1)
 
 
@@ -341,20 +366,31 @@ def oph_permute(cube: Cube, order: list[str]) -> Cube:
 # oph_intercube / oph_mergecubes
 # ---------------------------------------------------------------------------
 
-_BINOPS: dict[str, Callable[[Column, Column], Column]] = {
+_BINOPS: dict[str, str] = {
+    # SQL text over the aligned elements x (first cube) and y (second).
     # mul keeps natural types: DECIMAL x DECIMAL multiplies exactly (then a
     # decimal ROUND is engine-portable), while ROUND(double, 2) at ~1e14
     # magnitude is implementation-defined noise past double precision.
     # The rest compute in double (div of decimals would otherwise pick an
     # engine-specific quotient scale).
-    "sum": lambda a, b: a.cast("double") + b.cast("double"),
-    "sub": lambda a, b: a.cast("double") - b.cast("double"),
-    "mul": lambda a, b: a * b,
-    "div": lambda a, b: a.cast("double") / b.cast("double"),
-    "abs": lambda a, b: F.abs(a.cast("double") - b.cast("double")),
-    "max": lambda a, b: F.greatest(a.cast("double"), b.cast("double")),
-    "min": lambda a, b: F.least(a.cast("double"), b.cast("double")),
+    "sum": "CAST(x AS DOUBLE) + CAST(y AS DOUBLE)",
+    "sub": "CAST(x AS DOUBLE) - CAST(y AS DOUBLE)",
+    "mul": "x * y",
+    "div": "CAST(x AS DOUBLE) / CAST(y AS DOUBLE)",
+    "abs": "abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))",
+    "max": "greatest(CAST(x AS DOUBLE), CAST(y AS DOUBLE))",
+    "min": "least(CAST(x AS DOUBLE), CAST(y AS DOUBLE))",
 }
+
+
+def _joined(a: Cube, b: Cube) -> DataFrame:
+    """a's rows inner-joined with b's on the explicit dims; b's arrays
+    renamed `__dim_b` / `__m_b`."""
+    if a.explicit_dims != b.explicit_dims:
+        raise ValueError("intercube requires identical explicit dims")
+    bt = b.df.selectExpr(*map(quote_ident, b.explicit_dims),
+                         f"{DIM_COL} AS __dim_b", f"{MEASURE_COL} AS __m_b")
+    return a.df.join(bt, on=list(a.explicit_dims), how="inner")
 
 
 def oph_intercube(a: Cube, b: Cube, operation: str, measure: str = "measure") -> Cube:
@@ -368,21 +404,10 @@ def oph_intercube(a: Cube, b: Cube, operation: str, measure: str = "measure") ->
     only one cube are dropped (inner-join semantics, matching the reference's
     same-structure requirement).
     """
-    if a.explicit_dims != b.explicit_dims:
-        raise ValueError("intercube requires identical explicit dims")
-    op = _BINOPS[operation.lower()]
-    bt = b.df.select(
-        *b.explicit_dims,
-        F.col(DIM_COL).alias("__dim_b"),
-        F.col(MEASURE_COL).alias("__m_b"),
-    )
-    j = a.df.join(bt, on=list(a.explicit_dims), how="inner")
-    out = j.select(
-        *a.explicit_dims,
-        F.col(DIM_COL),
-        F.zip_with(F.col(MEASURE_COL), F.col("__m_b"), lambda x, y: op(x, y)).alias(
-            MEASURE_COL
-        ),
+    body = _BINOPS[operation.lower()]
+    out = _joined(a, b).selectExpr(
+        *map(quote_ident, a.explicit_dims), DIM_COL,
+        f"zip_with({MEASURE_COL}, __m_b, (x, y) -> {body}) AS {MEASURE_COL}",
     )
     return Cube(
         df=out,
@@ -435,32 +460,19 @@ def oph_intercube_corr(a: Cube, b: Cube, out: str = "corr") -> DataFrame:
     """oph_intercube operation=corr: Pearson correlation of the two cubes'
     measure arrays per explicit-dim row. One broadcast-able join + per-row
     array folds; returns a relational DataFrame (explicit dims + corr)."""
-    if a.explicit_dims != b.explicit_dims:
-        raise ValueError("intercube requires identical explicit dims")
-    bt = b.df.select(
-        *b.explicit_dims,
-        F.col(MEASURE_COL).alias("__m_b"),
-    )
-    j = a.df.join(bt, on=list(a.explicit_dims), how="inner")
+    def fold(arr: str, term: str) -> str:
+        return f"aggregate({arr}, 0.0D, (acc, v) -> acc + {term})"
 
-    def fold(expr: Column) -> Column:
-        return F.aggregate(expr, F.lit(0.0), lambda acc, v: acc + v)
-
-    x = F.transform(F.col(MEASURE_COL), lambda v: v.cast("double"))
-    y = F.transform(F.col("__m_b"), lambda v: v.cast("double"))
-    staged = j.select(
-        *a.explicit_dims,
-        F.size(MEASURE_COL).cast("double").alias("__n"),
-        fold(x).alias("__sx"),
-        fold(y).alias("__sy"),
-        fold(F.zip_with(x, y, lambda u, v: u * v)).alias("__sxy"),
-        fold(F.transform(x, lambda u: u * u)).alias("__sxx"),
-        fold(F.transform(y, lambda v: v * v)).alias("__syy"),
-    )
-    n, sx, sy = F.col("__n"), F.col("__sx"), F.col("__sy")
-    num = n * F.col("__sxy") - sx * sy
-    den = F.sqrt((n * F.col("__sxx") - sx * sx) * (n * F.col("__syy") - sy * sy))
-    return staged.select(*a.explicit_dims, (num / den).alias(out))
+    x = f"transform({MEASURE_COL}, v -> CAST(v AS DOUBLE))"
+    y = "transform(__m_b, v -> CAST(v AS DOUBLE))"
+    n = f"CAST(size({MEASURE_COL}) AS DOUBLE)"
+    sx, sy = fold(x, "v"), fold(y, "v")
+    sxy = fold(f"zip_with({x}, {y}, (u, w) -> u * w)", "v")
+    sxx, syy = fold(x, "v * v"), fold(y, "v * v")
+    corr = (f"({n} * {sxy} - {sx} * {sy}) / "
+            f"SQRT(({n} * {sxx} - {sx} * {sx}) * ({n} * {syy} - {sy} * {sy}))")
+    return _joined(a, b).selectExpr(*map(quote_ident, a.explicit_dims),
+                                    f"{corr} AS {quote_ident(out)}")
 
 
 # ---------------------------------------------------------------------------
@@ -548,33 +560,21 @@ def oph_mergecubes_n(cubes: list[Cube], source_dim: str = "src") -> Cube:
             raise NotImplementedError("mergecubes on composite implicit dims")
     inner = cubes[0].implicit_dims[0]
 
-    j = cubes[0].df.select(
-        *dims, F.col(DIM_COL).alias("__d0"), F.col(MEASURE_COL).alias("__v0")
-    )
+    def arrays(i: int, c: Cube) -> DataFrame:
+        return c.df.selectExpr(*map(quote_ident, dims), f"{DIM_COL} AS __d{i}",
+                               f"{MEASURE_COL} AS __v{i}")
+
+    j = arrays(0, cubes[0])
     for i, c in enumerate(cubes[1:], 1):
-        j = j.join(
-            c.df.select(
-                *dims, F.col(DIM_COL).alias(f"__d{i}"), F.col(MEASURE_COL).alias(f"__v{i}")
-            ),
-            on=list(dims),
-            how="inner",
-        )
-
-    def tag(i: int) -> Column:
-        return F.transform(
-            F.col(f"__d{i}"),
-            lambda d: F.struct(F.lit(i).alias(source_dim), d.alias(inner)),
-        )
-
-    out = j.select(
-        *dims,
-        F.concat(*[tag(i) for i in range(len(cubes))]).alias(DIM_COL),
-        F.concat(
-            *[
-                F.transform(f"__v{i}", lambda x: x.cast("double"))
-                for i in range(len(cubes))
-            ]
-        ).alias(MEASURE_COL),
+        j = j.join(arrays(i, c), on=list(dims), how="inner")
+    src, coord = string_sql(source_dim), string_sql(inner)
+    idx = range(len(cubes))
+    out = j.selectExpr(
+        *map(quote_ident, dims),
+        "concat(" + ", ".join(f"transform(__d{i}, d -> named_struct({src}, {i}, {coord}, d))"
+                              for i in idx) + f") AS {DIM_COL}",
+        "concat(" + ", ".join(f"transform(__v{i}, x -> CAST(x AS DOUBLE))"
+                              for i in idx) + f") AS {MEASURE_COL}",
     )
     return Cube(
         df=out,

@@ -16,16 +16,59 @@ Argument conventions follow the reference XML descriptors: multivalue args are
 
 from __future__ import annotations
 
+import re
 from typing import Any
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
+from ophidia_server_spark.functions.lits import as_int, double_sql, string_sql
 from ophidia_server_spark.operators import cube_ops as C
 from ophidia_server_spark.operators import io_ops as IO
 from ophidia_server_spark.plans.workflow import WorkflowEngine, WorkflowError
 from ophidia_server_spark.store import CubeStore
+from ophidia_server_spark.subset import quote_ident
+
+
+# primitives whose result is not an array over the cube's implicit dim, or
+# whose parameter is program text: oph_apply refuses them by name
+_UNSERVED_PRIMITIVES = {
+    "oph_predicate": "its condition is program text, not numeric parameters",
+    "oph_math": "its function name is program text, not numeric parameters",
+    "oph_find": "its condition is program text, not numeric parameters",
+    "oph_gsl_sd": "it returns one scalar per row, not an array",
+    "oph_percentile": "it returns one scalar per row, not an array",
+}
+
+_FILTER_CLAUSE = re.compile(
+    r"\s*(?P<col>\w+)\s*(?P<op><>|!=|<=|>=|=|<|>)\s*"
+    r"(?:'(?P<str>(?:[^'\\]|\\.)*)'|(?P<num>[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?))"
+    r"\s*(?:(?P<more>AND)\b|\Z)", re.IGNORECASE | re.ASCII)
+
+
+def _target_filter_sql(text: str, columns: list[str]) -> str:
+    """A request's row filter as SQL text: `<column> <op> <literal>` clauses
+    joined by AND, op one of = != <> < <= > >=, the column one of
+    `columns`, the literal a quoted string or a number. Anything else is a
+    ValueError: the text never reaches the SQL parser as it came."""
+    clauses, pos = [], 0
+    while True:
+        m = _FILTER_CLAUSE.match(text, pos)
+        if m is None or m["col"] not in columns:
+            raise ValueError(
+                f"target_filter {text!r} is not `<column> <op> <literal>` clauses "
+                f"joined by AND over the columns {columns}")
+        if m["str"] is not None:
+            lit = string_sql(re.sub(r"\\(.)", r"\1", m["str"]))
+        elif re.fullmatch(r"[-+]?\d+", m["num"]):
+            lit = str(as_int(m["num"]))
+        else:
+            lit = double_sql(m["num"])
+        clauses.append(f"{quote_ident(m['col'])} {m['op']} {lit}")
+        pos = m.end()
+        if not m["more"]:
+            return " AND ".join(clauses)
 
 
 def _input_arg(args: dict, inputs: dict, key: str) -> str:
@@ -193,14 +236,15 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         pid = _input_arg(args, inputs, "cube")
         name = str(args.get("query", "oph_mul_scalar"))
+        if name in _UNSERVED_PRIMITIVES:
+            raise ValueError(f"primitive {name!r} is not served by oph_apply: "
+                             f"{_UNSERVED_PRIMITIVES[name]}")
         if name not in PRIMITIVES:
             raise KeyError(f"unknown primitive {name!r}; known: {sorted(PRIMITIVES)}")
-        if name in ("oph_predicate", "oph_math", "oph_find"):  # no float form
-            raise ValueError(f"primitive {name!r} takes a Python callable or function "
-                             "name, not numeric parameters: not served by oph_apply")
         # primitive parameters come as |-separated floats, e.g. query=
         # oph_mul_scalar;parameters=2.0|1.0 (mirrors the reference's
-        # primitive-call strings without embedding a SQL-ish parser)
+        # primitive-call strings without embedding a SQL-ish parser); integer
+        # parameters take integral floats (functions/lits.py as_int)
         params = [float(x) for x in str(args.get("parameters", "")).split("|") if x]
         prim_fn = PRIMITIVES[name](*params)
         out = C.oph_apply(store.get(pid), prim_fn)
@@ -601,7 +645,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         res = dsir_select(
             df,
             int(args["k"]),
-            F.expr(str(args["target_filter"])),
+            F.expr(_target_filter_sql(str(args["target_filter"]), df.columns)),
             m=int(args.get("m", 1024)),
             alpha=float(args.get("alpha", 1.0)),
             gumbel_scale=float(args.get("gumbel_scale", 0.0)),
@@ -776,7 +820,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             # the WAU/MAU dashboard table: trailing-N-day distinct estimates
             res = sk.hll_rolling_distinct(
                 df, col, args.get("ts_col", "ts"),
-                days=int(args.get("days", 7)), p=int(args.get("p", 8)),
+                days=int(args.get("days", 7)), p=int(args.get("p", 12)),
             )
         else:
             raise ValueError(f"unknown sketch kind: {kind}")

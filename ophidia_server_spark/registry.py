@@ -2916,7 +2916,7 @@ def cube_apply_histogram(spark, sf_dir):
     h = prim.histogram(5, 1.0, 51.0)
     return arrs.select(
         "l_returnflag", "l_linestatus",
-        F.posexplode(h(F.col("arr"))).alias("bin", "n"),
+        F.posexplode(h("arr")).alias("bin", "n"),
     ).select(
         "l_returnflag", "l_linestatus",
         F.col("bin").cast("long").alias("bin"), "n",
@@ -2949,7 +2949,7 @@ def cube_apply_percentile(spark, sf_dir):
     c = cube_qty(spark, sf_dir)
     out = c.df.select(
         *c.explicit_dims,
-        F.round(prim.percentile(0.5)(F.col(MEASURE_COL)), 4).alias("p50"),
+        F.round(prim.percentile(0.5)(MEASURE_COL), 4).alias("p50"),
     )
     return out
 
@@ -5249,9 +5249,7 @@ def cube_apply_find(spark, sf_dir):
     c = cube_qty(spark, sf_dir)
     return c.df.select(
         *c.explicit_dims,
-        prim.find_count(lambda x: x.cast("double") > 100000.0)(
-            F.col(MEASURE_COL)
-        ).alias("n_hits"),
+        prim.find_count("CAST(x AS DOUBLE) > 100000.0D")(MEASURE_COL).alias("n_hits"),
     )
 
 
@@ -5267,7 +5265,7 @@ def cube_apply_sd(spark, sf_dir):
     c = cube_qty(spark, sf_dir)
     return c.df.select(
         *c.explicit_dims,
-        F.round(prim.sd()(F.col(MEASURE_COL)), 4).alias("sd"),
+        F.round(prim.sd()(MEASURE_COL), 4).alias("sd"),
     )
 
 

@@ -128,18 +128,18 @@ def test_prim_nan_handling(spark):
         [("a", [1.0, float("nan"), 3.0])], "g string, arr array<double>"
     )
     out = df.select(
-        prim.count_nan(F.col("arr")).alias("n"),
+        prim.count_nan("arr").alias("n"),
     ).first()
     assert out.n == 1
-    rep = df.select(prim.replace_nan(0.0)(F.col("arr")).alias("r")).first().r
+    rep = df.select(prim.replace_nan(0.0)("arr").alias("r")).first().r
     assert [float(x) for x in rep] == [1.0, 0.0, 3.0]
 
 
 def test_prim_percentile(spark):
     df = spark.createDataFrame([("a", [1.0, 2.0, 3.0, 4.0])], "g string, arr array<double>")
-    p = df.select(prim.percentile(0.5)(F.col("arr")).alias("p")).first().p
+    p = df.select(prim.percentile(0.5)("arr").alias("p")).first().p
     assert abs(p - 2.5) < 1e-9
-    p25 = df.select(prim.percentile(0.25)(F.col("arr")).alias("p")).first().p
+    p25 = df.select(prim.percentile(0.25)("arr").alias("p")).first().p
     assert abs(p25 - 1.75) < 1e-9
 
 
@@ -148,17 +148,17 @@ def test_prim_edge_cases(spark):
         [("e", []), ("one", [7.0])], "g string, arr array<double>"
     )
     # percentile: null on empty, identity on singleton
-    rows = {r.g: r.p for r in df.select("g", prim.percentile(0.5)(F.col("arr")).alias("p")).collect()}
+    rows = {r.g: r.p for r in df.select("g", prim.percentile(0.5)("arr").alias("p")).collect()}
     assert rows["e"] is None and rows["one"] == 7.0
     # shift beyond length -> all fill
-    rows = {r.g: r.s for r in df.select("g", prim.shift(5, -1.0)(F.col("arr")).alias("s")).collect()}
+    rows = {r.g: r.s for r in df.select("g", prim.shift(5, -1.0)("arr").alias("s")).collect()}
     assert rows["e"] == [] and rows["one"] == [-1.0]
     # rotate by more than length wraps
     df2 = spark.createDataFrame([("x", [1.0, 2.0, 3.0])], "g string, arr array<double>")
-    got = df2.select(prim.rotate(4)(F.col("arr")).alias("r")).first().r
+    got = df2.select(prim.rotate(4)("arr").alias("r")).first().r
     assert [float(v) for v in got] == [3.0, 1.0, 2.0]
     # zscore of empty stays empty
-    z = df.filter(F.col("g") == "e").select(prim.zscore()(F.col("arr")).alias("z")).first().z
+    z = df.filter(F.col("g") == "e").select(prim.zscore()("arr").alias("z")).first().z
     assert z == []
 
 
@@ -168,12 +168,12 @@ def test_prim_haar_wavelet(spark):
         "g string, arr array<double>",
     )
     rows = {r.g: [float(x) for x in r.w] for r in
-            df.select("g", prim.haar_step()(F.col("arr")).alias("w")).collect()}
+            df.select("g", prim.haar_step()("arr").alias("w")).collect()}
     assert rows["ev"] == [2.0, 4.0, -1.0, -2.0]       # [a0, a1, d0, d1]
     assert rows["odd"] == [6.0, 5.0, -2.0]            # [a0, tail, d0]
     # empty array stays empty
     e = spark.createDataFrame([("e", [])], "g string, arr array<double>")
-    assert e.select(prim.haar_step()(F.col("arr")).alias("w")).first().w == []
+    assert e.select(prim.haar_step()("arr").alias("w")).first().w == []
 
 
 def test_mergecubes_n_ary(small):
@@ -210,16 +210,16 @@ def test_prim_subarray_padding_find_sd(spark):
     df = spark.createDataFrame(
         [("a", [1.0, 2.0, 3.0, 4.0, 5.0])], "g string, arr array<double>"
     )
-    sub = df.select(prim.get_subarray(2, 3)(F.col("arr")).alias("s")).first().s
+    sub = df.select(prim.get_subarray(2, 3)("arr").alias("s")).first().s
     assert [float(x) for x in sub] == [2.0, 3.0, 4.0]
-    pad = df.select(prim.padding(8, -1.0)(F.col("arr")).alias("p")).first().p
+    pad = df.select(prim.padding(8, -1.0)("arr").alias("p")).first().p
     assert [float(x) for x in pad] == [1.0, 2.0, 3.0, 4.0, 5.0, -1.0, -1.0, -1.0]
     # already long enough -> unchanged
-    same = df.select(prim.padding(3)(F.col("arr")).alias("p")).first().p
+    same = df.select(prim.padding(3)("arr").alias("p")).first().p
     assert [float(x) for x in same] == [1.0, 2.0, 3.0, 4.0, 5.0]
-    n = df.select(prim.find_count(lambda x: x > 2.5)(F.col("arr")).alias("n")).first().n
+    n = df.select(prim.find_count("x > 2.5")("arr").alias("n")).first().n
     assert n == 3
-    s = df.select(prim.sd()(F.col("arr")).alias("s")).first().s
+    s = df.select(prim.sd()("arr").alias("s")).first().s
     assert abs(s - 1.4142135623730951) < 1e-9
     import pytest as _pytest
 
@@ -238,7 +238,7 @@ def test_prim_interpolate(spark):
         ],
         "g string, arr array<double>",
     )
-    got = {r.g: r.i for r in df.select("g", prim.interpolate_nan()(F.col("arr")).alias("i")).collect()}
+    got = {r.g: r.i for r in df.select("g", prim.interpolate_nan()("arr").alias("i")).collect()}
     assert [float(x) for x in got["mid"]] == [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]
     assert [float(x) for x in got["edges"]] == [2.0, 2.0, 2.0]
     import math
@@ -260,11 +260,11 @@ def test_fit_linear_primitive_exact_line_and_coeffs(spark):
         [([1.0, 3.0, 5.0, 7.0],), ([2.0, 2.0, 2.0],), ([4.0],)],
         "arr array<double>",
     )
-    fit = df.select(fit_linear()(F.col("arr")).alias("f")).collect()
+    fit = df.select(fit_linear()("arr").alias("f")).collect()
     assert fit[0]["f"] == [1.0, 3.0, 5.0, 7.0]  # already a line: 1 + 2i
     assert fit[1]["f"] == [2.0, 2.0, 2.0]       # flat
     assert fit[2]["f"] == [4.0]                 # single point: slope 0
-    co = df.select(fit_linear_coeff()(F.col("arr")).alias("c")).collect()
+    co = df.select(fit_linear_coeff()("arr").alias("c")).collect()
     assert co[0]["c"] == [1.0, 2.0]
     assert co[1]["c"] == [2.0, 0.0]
     assert co[2]["c"] == [4.0, 0.0]
@@ -282,10 +282,10 @@ def test_histogram_primitive_clamps_and_counts(spark):
     )
     # [0, 10) in 2 bins of width 5: below-range clamps to bin 0,
     # at-or-above-range clamps to the last bin
-    got = df.select(histogram(2, 0.0, 10.0)(F.col("arr")).alias("h")).first()
+    got = df.select(histogram(2, 0.0, 10.0)("arr").alias("h")).first()
     # {-5, 0, 1, 2.5} -> bin 0 (y < 5); {5, 9.99, 10, 25} -> bin 1
     assert got["h"] == [4, 4]
-    one = df.select(histogram(1, 0.0, 10.0)(F.col("arr")).alias("h")).first()
+    one = df.select(histogram(1, 0.0, 10.0)("arr").alias("h")).first()
     assert one["h"] == [8]
     with _pytest.raises(ValueError):
         histogram(0, 0.0, 1.0)

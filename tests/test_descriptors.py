@@ -336,3 +336,46 @@ def test_massive_bracket_args_validate_against_descriptor():
     groups, pids = parse_massive("[level=150|200;experiment=rcp85;depth=2]")
     assert groups[0]["level"] == "150|200"
     assert groups[0]["experiment"] == "rcp85"
+
+
+def _facade_get_defaults():
+    """(operator, key, literal) of every `args.get("<key>", <literal>)` in
+    the facade's operator closures, read from the source."""
+    import ast
+
+    from ophidia_server_spark.plans import server
+
+    tree = ast.parse(open(server.__file__).read())
+    engine = next(n for n in tree.body
+                  if isinstance(n, ast.FunctionDef) and n.name == "build_default_engine")
+    closures = {n.name: n for n in engine.body if isinstance(n, ast.FunctionDef)}
+    table = next(n.value.args[0] for n in engine.body if isinstance(n, ast.Return))
+    for key, fn in zip(table.keys, table.values):
+        for call in ast.walk(closures[fn.id]):
+            f = getattr(call, "func", None)
+            if (isinstance(call, ast.Call) and isinstance(f, ast.Attribute) and f.attr == "get"
+                    and getattr(f.value, "id", None) == "args" and len(call.args) == 2
+                    and all(isinstance(a, ast.Constant) for a in call.args)):
+                yield key.value, call.args[0].value, call.args[1].value
+
+
+def _same(a, b) -> bool:
+    try:
+        return float(a) == float(b)
+    except (TypeError, ValueError):
+        return str(a) == str(b)
+
+
+def test_facade_literal_defaults_equal_the_descriptor_defaults():
+    """The engine does not pass descriptor defaults on: each facade closure
+    supplies its own, so its literal must be the documented one."""
+    checked, drifted = 0, []
+    for op, key, literal in _facade_get_defaults():
+        spec = DESCRIPTORS[op].by_name.get(key) if op in DESCRIPTORS else None
+        if spec is None or spec.default is None:
+            continue
+        checked += 1
+        if not _same(literal, spec.default):
+            drifted.append((op, key, literal, spec.default))
+    assert drifted == []
+    assert checked > 100  # the scan still sees the facade's defaults

@@ -193,12 +193,10 @@ def test_kcore_auto_budget_deep_peel(spark):
 
 
 def test_histogram_nulls_not_counted(spark):
-    from pyspark.sql import functions as F
-
     from ophidia_server_spark.functions.primitives import histogram
 
     df = spark.createDataFrame([([1.0, None, 5.0],)], "arr array<double>")
-    got = df.select(histogram(1, 0.0, 10.0)(F.col("arr")).alias("h")).first()
+    got = df.select(histogram(1, 0.0, 10.0)("arr").alias("h")).first()
     assert got["h"] == [2]  # documented: nulls vanish from the counts
 
 

@@ -1237,3 +1237,32 @@ def test_pipeline_sketch_hll_rolling_kind(env, spark, tables, tmp_path):
     assert wau.count() > 0
     assert set(wau.columns) == {"day", "estimate"}
     assert wau.filter("estimate <= 0").count() == 0
+
+
+_REFLECT = "reflect('java.lang.System', 'getProperty', 'java.version') IS NOT NULL"
+
+
+@pytest.mark.parametrize("bad", [
+    _REFLECT, "lang = 'en' OR " + _REFLECT, "lang = 'en' OR TRUE", "nope = 1",
+    "lang = 'en' AND", "lang IN ('en')", "lang = en", "",
+])
+def test_pipeline_select_target_filter_is_a_grammar_not_sql(env, tables, tmp_path, bad):
+    eng, _store, _src = env
+    docs = str(tmp_path / "docs_tf")
+    tables["documents"].write.mode("overwrite").parquet(docs)
+    run = eng.run({"tasks": [{
+        "name": "sel", "operator": "pipeline_select",
+        "arguments": {"src_path": docs, "k": "5", "m": "64", "target_filter": bad,
+                      "output_path": str(tmp_path / "sel")}}]})
+    assert run.status != "OPH_ODB_STATUS_COMPLETED"
+    err = run.results["sel"].error or ""
+    assert "ValueError" in err and "target_filter" in err
+
+
+def test_target_filter_renders_quoted_columns_and_literals():
+    from ophidia_server_spark.plans.server import _target_filter_sql
+
+    cols = ["lang", "n_chars", "score"]
+    assert _target_filter_sql("lang = 'en' and n_chars >= 10 AND score<>0.5", cols) == (
+        "`lang` = 'en' AND `n_chars` >= 10 AND `score` <> 0.5D")
+    assert _target_filter_sql(r"lang != 'o\'b\\r'", cols) == r"`lang` != 'o\'b\\r'"

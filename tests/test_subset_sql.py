@@ -157,13 +157,12 @@ def test_hostile_subset_filter_over_the_engine_is_data(spark, tmp_path, cubes, v
         "cube": pid, "subset_dims": "h", "subset_filter": value, "subset_type": "coord"})
     assert status == "OPH_ODB_STATUS_COMPLETED", res.error
     assert store.get(res.value).df.count() == 0
-    # over an int coordinate the literal is cast, and Spark names the bad input
+    # over an int coordinate the subset task itself refuses the text
     eng, store, pid = _engine(spark, tmp_path, cubes["base"])
     status, res = _run_one(eng, "oph_subset", {
         "cube": pid, "subset_dims": "month", "subset_filter": value, "subset_type": "coord"})
-    assert status == "OPH_ODB_STATUS_COMPLETED", res.error
-    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
-        store.get(res.value).df.count()
+    assert status != "OPH_ODB_STATUS_COMPLETED"
+    assert "ValueError" in res.error and "numeric dimension 'month'" in res.error
 
 
 def test_time_subset_is_refused_over_the_engine(spark, tmp_path, cubes):
@@ -211,11 +210,54 @@ def test_non_finite_primitive_parameters(cubes):
     assert all(map(math.isnan, first(prim.scale(1.0, float("nan")))))
 
 
+# valid `parameters` of every served primitive, as a request sends them
+SERVED = {
+    "oph_mul_scalar": "2.0|1.0", "oph_affine": "2.0|1.0", "oph_sum_scalar": "1.0",
+    "oph_moving_avg": "3", "oph_boxcar": "3", "oph_accumulate": "", "oph_deriv": "",
+    "oph_gsl_fft": "", "oph_shift": "2|0.0", "oph_reverse": "", "oph_rotate": "2",
+    "oph_clip": "1.0|5.0", "oph_quantize": "2.0", "oph_zscore": "", "oph_replace_nan": "0.0",
+    "oph_percentile": "0.5", "oph_wavelet": "", "oph_mask": "2.0",
+    "oph_get_subarray": "2|3", "oph_padding": "16|0.0", "oph_find": "1.0", "oph_gsl_sd": "",
+    "oph_gsl_fit_linear": "", "oph_gsl_fit_linear_coeff": "",
+    "oph_gsl_histogram": "4|0.0|1000.0", "oph_interpolate": "",
+}
+# refused by name: a scalar per row, or a condition that is program text
+UNSERVED = {"oph_find", "oph_gsl_sd", "oph_percentile"}
+
+
+def _built(name):
+    if name == "oph_find":
+        return prim.PRIMITIVES[name]("x > 1.0D")
+    return prim.PRIMITIVES[name](*(float(v) for v in SERVED[name].split("|") if v))
+
+
 @pytest.mark.parametrize("p", [prim.scale(2.0), prim.mask_above(1.0), prim.clip(0.0, 1.0),
-                               prim.quantize(1.0)])
+                               prim.quantize(1.0), prim.count_nan,
+                               *(_built(name) for name in sorted(SERVED))])
 def test_sql_text_primitives_refuse_a_column(p):
     with pytest.raises(TypeError, match="column's name"):
         p(F.col(MEASURE_COL))
+
+
+def test_every_primitive_has_served_parameters():
+    assert set(SERVED) == set(prim.PRIMITIVES)
+
+
+@pytest.mark.parametrize("query", sorted(SERVED))
+def test_every_served_primitive_runs_or_is_refused_at_apply(spark, tmp_path, query):
+    store = CubeStore(spark=spark, workspace=str(tmp_path))
+    run = build_default_engine(spark, store).run({"tasks": [
+        {"name": "r", "operator": "oph_randcube", "arguments": {"nrows": "3", "nvalues": "12"}},
+        {"name": "a", "operator": "oph_apply", "dependencies": ["r"],
+         "arguments": {"query": query, "parameters": SERVED[query]}},
+        {"name": "e", "operator": "oph_explorecube", "dependencies": ["a"], "arguments": {}},
+    ]})
+    if query in UNSERVED:
+        err = run.results["a"].error or ""
+        assert "ValueError" in err and query in err
+    else:
+        assert run.status == "OPH_ODB_STATUS_COMPLETED", {
+            n: r.error for n, r in run.results.items() if r.error}
 
 
 @pytest.mark.parametrize("query", ["oph_predicate", "oph_math", "oph_find"])
