@@ -1,1 +1,1 @@
-from ophidia_server_spark.functions import primitives  # noqa: F401
+"""Spark column-expression building blocks: array primitives, literals, sketches, hashing."""

@@ -204,19 +204,18 @@ count_nan: ArrayPrimitive = _sql(lambda a: f"size(filter({a}, x -> x IS NULL OR 
 def percentile(p: float) -> ArrayPrimitive:
     """Per-row percentile of the array (linear interpolation between closest
     ranks, the numpy default) — scalar output, null for an empty array.
-    Sorts each row's array (O(m log m) per row, shuffle-free)."""
+    Sorts each row's array once (O(m log m) per row, shuffle-free)."""
     if not 0.0 <= float(p) <= 1.0:
         raise ValueError(f"percentile needs 0 <= p <= 1, got {p}")
 
-    def render(a: str) -> str:
-        s = f"array_sort(transform({a}, x -> {_DBL}))"
-        # rank position h in [0, m-1]
-        h = f"((CAST(size({a}) AS DOUBLE) - 1) * {double_sql(p)})"
-        lo, hi = (f"CAST({fn}({h}) AS INT)" for fn in ("FLOOR", "CEIL"))
-        vlo, vhi = (f"element_at({s}, {r} + 1)" for r in (lo, hi))
-        # empty arrays: element_at(_, 0) is an ANSI error, so no ELSE (null)
-        return f"CASE WHEN size({a}) > 0 THEN {vlo} + ({vhi} - {vlo}) * ({h} - CAST({lo} AS DOUBLE)) END"
-    return _sql(render)
+    # the sorted array is bound once, as y, by a transform over array(it)
+    h = f"((CAST(size(y) AS DOUBLE) - 1) * {double_sql(p)})"  # rank in [0, m-1]
+    lo, hi = (f"CAST({fn}({h}) AS INT)" for fn in ("FLOOR", "CEIL"))
+    vlo, vhi = (f"element_at(y, {r} + 1)" for r in (lo, hi))
+    # empty arrays: element_at(_, 0) is an ANSI error, so no ELSE (null)
+    pick = f"CASE WHEN size(y) > 0 THEN {vlo} + ({vhi} - {vlo}) * ({h} - CAST({lo} AS DOUBLE)) END"
+    return _sql(lambda a: f"element_at(transform(array(array_sort(transform({a}, x -> {_DBL}))), "
+                          f"y -> {pick}), 1)")
 
 
 def get_subarray(start: int, size: int) -> ArrayPrimitive:
@@ -238,16 +237,14 @@ def padding(length: int, value: float = 0.0) -> ArrayPrimitive:
                           f"array_repeat({v}, greatest({length} - size({a}), 0)))")
 
 
-def _ols(a: str) -> tuple[str, str]:
+def _ols(a: str, sy: str, sxy: str) -> tuple[str, str]:
     """Shared OLS-vs-index machinery for the oph_gsl_fit_linear pair, as
     SQL text (intercept, slope): x = 0..n-1, y = the array; slope and
     intercept from the classic normal equations. Sigma_x and Sigma_x^2 come
-    from closed forms (exact integers in doubles), Sigma_y / Sigma_xy from
-    LEFT-TO-RIGHT array folds so any engine replaying the same order
-    reproduces the bits."""
+    from closed forms (exact integers in doubles); `sy` / `sxy` are the SQL
+    text of Sigma_y / Sigma_xy, LEFT-TO-RIGHT array sums so any engine
+    replaying the same order reproduces the bits."""
     n = f"CAST(size({a}) AS DOUBLE)"
-    sy = _fold(a)
-    sxy = _fold(f"transform({a}, (y, j) -> CAST(j AS DOUBLE) * CAST(y AS DOUBLE))", "y")
     sx = f"({n} * ({n} - 1.0D) / 2.0D)"
     sxx = f"(({n} - 1.0D) * {n} * (2.0D * {n} - 1.0D) / 6.0D)"
     den = f"({n} * {sxx} - {sx} * {sx})"
@@ -259,16 +256,24 @@ def _ols(a: str) -> tuple[str, str]:
 def fit_linear_coeff() -> ArrayPrimitive:
     """oph_gsl_fit_linear_coeff (ref primitive: least-squares line over the
     array vs its 0-based index): returns [intercept, slope]."""
-    return _sql(lambda a: "array({}, {})".format(*_ols(a)))
+    def render(a: str) -> str:
+        sxy = _fold(f"transform({a}, (y, j) -> CAST(j AS DOUBLE) * CAST(y AS DOUBLE))", "y")
+        return "array({}, {})".format(*_ols(a, _fold(a), sxy))
+    return _sql(render)
 
 
 def fit_linear() -> ArrayPrimitive:
     """oph_gsl_fit_linear (ref primitive): replace the array by its OLS
-    fitted line c0 + c1 * i — trend extraction on per-row series."""
+    fitted line c0 + c1 * i — trend extraction on per-row series. One fold
+    per row sums Sigma_y and Sigma_xy into a named struct accumulator (its
+    `j` counts the position), whose finish maps the fitted line: O(n)."""
     def render(a: str) -> str:
-        c0, c1 = _ols(a)
-        return (f"CASE WHEN size({a}) > 0 THEN transform(sequence(0, greatest(size({a}) - 1, 0)), "
-                f"j -> {c0} + {c1} * CAST(j AS DOUBLE)) ELSE CAST(array() AS array<double>) END")
+        c0, c1 = _ols(a, "acc.sy", "acc.sxy")
+        return (f"CASE WHEN size({a}) > 0 THEN aggregate({a}, named_struct('j', 0.0D, 'sy', 0.0D, "
+                f"'sxy', 0.0D), (acc, y) -> named_struct('j', acc.j + 1.0D, "
+                f"'sy', acc.sy + CAST(y AS DOUBLE), 'sxy', acc.sxy + acc.j * CAST(y AS DOUBLE)), "
+                f"acc -> transform(sequence(0, size({a}) - 1), j -> {c0} + {c1} * CAST(j AS DOUBLE))) "
+                f"ELSE CAST(array() AS array<double>) END")
     return _sql(render)
 
 
@@ -324,10 +329,16 @@ def sd() -> ArrayPrimitive:
 
 # -- numpy-backed kernels (Pandas UDF — the sanctioned slow path) -----------
 
-def _numpy_kernel(fn) -> ArrayPrimitive:
-    """A primitive applying `fn` (pd.Series of arrays -> pd.Series of lists)
-    as an Arrow-batched Pandas UDF over the array cast to doubles."""
-    import pandas as pd  # local import: Arrow path only
+def _numpy_kernel(one) -> ArrayPrimitive:
+    """A primitive applying `one` (float64 ndarray -> list) to each row's
+    array cast to doubles, as an Arrow-batched Pandas UDF. A null array
+    gives null and an empty one `[]`, as in the SQL-text kernels."""
+    import numpy as np  # local imports: Arrow path only
+    import pandas as pd
+
+    def fn(s):
+        return s.apply(lambda a: None if a is None else
+                       [] if len(a) == 0 else one(np.array(a, dtype="float64")))
 
     # `from __future__ import annotations` makes inline hints unresolvable
     # strings for pandas_udf inference — set real annotation objects
@@ -343,22 +354,17 @@ def interpolate_nan() -> ArrayPrimitive:
     np.interp, Arrow-batched (neighbor scans don't vectorize as array exprs).
     Leading/trailing NaNs take the nearest valid value; rows with no valid
     points come back as all-null (the Arrow boundary maps NaN to null)."""
-    def _interp_fn(s):
+    def one(v):
         import numpy as np
 
-        def one(a):
-            # copy: Arrow hands over read-only buffers
-            v = np.array(a, dtype="float64")
-            bad = np.isnan(v)
-            if not bad.any() or bad.all():
-                return v.tolist()
+        # v is a copy (np.array): Arrow hands over read-only buffers
+        bad = np.isnan(v)
+        if bad.any() and not bad.all():
             idx = np.arange(len(v))
             v[bad] = np.interp(idx[bad], idx[~bad], v[~bad])
-            return v.tolist()
+        return v.tolist()
 
-        return s.apply(one)
-
-    return _numpy_kernel(_interp_fn)
+    return _numpy_kernel(one)
 
 
 def fft_magnitude() -> ArrayPrimitive:
@@ -367,12 +373,12 @@ def fft_magnitude() -> ArrayPrimitive:
     Kept out of any oracle-checked path (floating point / engine specific); used
     by oph_apply when a genuinely numeric kernel is requested.
     """
-    def _fft_fn(s):
+    def one(v):
         import numpy as np
 
-        return s.apply(lambda a: np.abs(np.fft.rfft(np.asarray(a, dtype="float64"))).tolist())
+        return np.abs(np.fft.rfft(v)).tolist()
 
-    return _numpy_kernel(_fft_fn)
+    return _numpy_kernel(one)
 
 
 PRIMITIVES: dict[str, Callable[..., ArrayPrimitive]] = {

@@ -20,8 +20,8 @@ function costs dozens: the window operators (oph_subset, oph_apply,
 oph_reduce) and oph_intercube, oph_intercube_corr, oph_permute and
 oph_mergecubes_n are one select each. Predicates come from subset.py's
 renderers; literals follow functions/lits.py (`double_sql`, `string_sql`).
-The binary oph_mergecubes keeps its Column lambdas: it is the independent
-reference the n-ary form is tested against.
+oph_mergecubes_n serves every merge; the binary oph_mergecubes keeps its
+Column lambdas only as the independent reference it is tested against.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, FractionalType, NumericType
 
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
-from ophidia_server_spark.functions.lits import string_sql
+from ophidia_server_spark.functions.lits import as_int, string_sql
 from ophidia_server_spark.subset import quote_ident, subset_sql, time_sql, values_sql
 
 # ---------------------------------------------------------------------------
@@ -118,6 +118,8 @@ def oph_subset(
     coordinate ranges. subset_type="time": clauses are `start_end` date ranges
     with partial-date expansion (time_filter=yes semantics).
     """
+    offset = as_int(offset)  # before pred, whose ValueError means "not numeric"
+
     def pred(dim: str, col: str, ss: str) -> str:
         if subset_type == "time":
             return time_sql(col, ss)
@@ -372,11 +374,12 @@ _BINOPS: dict[str, str] = {
     # decimal ROUND is engine-portable), while ROUND(double, 2) at ~1e14
     # magnitude is implementation-defined noise past double precision.
     # The rest compute in double (div of decimals would otherwise pick an
-    # engine-specific quotient scale).
+    # engine-specific quotient scale). div is try_divide: a zero divisor
+    # makes that cell null, where `/` under ANSI mode fails the whole job.
     "sum": "CAST(x AS DOUBLE) + CAST(y AS DOUBLE)",
     "sub": "CAST(x AS DOUBLE) - CAST(y AS DOUBLE)",
     "mul": "x * y",
-    "div": "CAST(x AS DOUBLE) / CAST(y AS DOUBLE)",
+    "div": "try_divide(CAST(x AS DOUBLE), CAST(y AS DOUBLE))",
     "abs": "abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))",
     "max": "greatest(CAST(x AS DOUBLE), CAST(y AS DOUBLE))",
     "min": "least(CAST(x AS DOUBLE), CAST(y AS DOUBLE))",
@@ -553,7 +556,7 @@ def oph_mergecubes_n(cubes: list[Cube], source_dim: str = "src") -> Cube:
     if len(cubes) < 2:
         raise ValueError("mergecubes needs at least 2 cubes")
     dims = cubes[0].explicit_dims
-    for c in cubes[1:]:
+    for c in cubes:
         if c.explicit_dims != dims:
             raise ValueError("mergecubes requires identical explicit dims")
         if len(c.implicit_dims) != 1:

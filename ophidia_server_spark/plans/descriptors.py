@@ -16,6 +16,9 @@ reference's semantics, and one registry (`DESCRIPTORS`) that both the
 WorkflowEngine dispatch and the HTTP facade consult — and that oph_man /
 operators_list serve as documentation (single source of truth, like the
 reference serving its XMLs from OPH_SERVER_XML_EXT_PATH, oph_gather.h:184).
+At dispatch, `operator_args` hands the operator the validated dict: every
+default filled in and every `int`/`real` value already the number its range
+check read, so no operator restates a default or parses a number again.
 
 Reference semantics mirrored exactly:
 - missing mandatory parameter -> error; missing optional -> default value
@@ -51,6 +54,7 @@ __all__ = [
     "OperatorDescriptor",
     "ParamValidationError",
     "validate_params",
+    "operator_args",
     "DESCRIPTORS",
     "describe",
     "register_descriptor",
@@ -170,7 +174,7 @@ def validate_params(
     """Check `args` (raw request kwargs, values coerced to str) against the
     descriptor; returns the full validated parameter dict with defaults
     filled in and min==max constants forced, values kept as strings (the
-    reference's hashtable holds strings; operators coerce downstream).
+    reference's hashtable holds strings; `operator_args` types the numbers).
 
     strict=True (deviation, see module docstring) rejects unknown keys."""
     out: dict[str, str] = {}
@@ -256,6 +260,26 @@ def validate_task(
             out.update(held_back)
             return out
     return validate_params(desc, args, strict=strict)
+
+
+_NUMBER = {"int": _strtol, "real": _strtod}
+
+
+def operator_args(operator: str, args: dict) -> dict:
+    """The arguments `operator` runs with: `validate_task(operator, args)`
+    (defaults filled in, min==max values forced) with every single-valued
+    `int`/`real` parameter turned into the Python number its range check
+    read (strtol/strtod). Multivalue, string and JSON values stay as they
+    are; an operator with no descriptor gets `args` unchanged."""
+    out = validate_task(operator, args)
+    if out is None:
+        return args
+    by_name = DESCRIPTORS[operator].by_name
+    for key, value in out.items():
+        spec = by_name[key.rstrip("!")]
+        if spec.type in _NUMBER and not spec.multivalue:
+            out[key] = _NUMBER[spec.type](value)
+    return out
 
 
 # -- descriptor registry -----------------------------------------------------

@@ -99,7 +99,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             explicit_dims=str(args["explicit_dims"]).split("|"),
             implicit_dim=args["implicit_dim"],
             value=args["measure"],
-            container=args.get("container", "default"),
+            container=args["container"],
             schema=args.get("schema"),
         )
         return pid
@@ -111,36 +111,27 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             implicit_dim=args["implicit_dim"],
             value=args["measure"],
         )
-        return store.register(cube, args.get("container", "default"), task="importparquet")
+        return store.register(cube, args["container"], task="importparquet")
 
     def op_randcube(engine, args, inputs):
         from ophidia_server_spark.cube import randcube
 
-        cube = randcube(
-            spark,
-            nrows=int(args.get("nrows", 100)),
-            array_len=int(args.get("nvalues", 12)),
-        )
-        return store.register(cube, args.get("container", "default"), task="randcube")
+        cube = randcube(spark, nrows=args["nrows"], array_len=args["nvalues"])
+        return store.register(cube, args["container"], task="randcube")
 
     def op_subset(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         dims = str(args["subset_dims"]).split("|")
         filters = str(args["subset_filter"]).split("|")
         cube = store.get(pid)
-        out = C.oph_subset(
-            cube,
-            dict(zip(dims, filters)),
-            subset_type=str(args.get("subset_type", "index")),
-            offset=int(args.get("offset", 0) or 0),
-        )
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="subset")
+        out = C.oph_subset(cube, dict(zip(dims, filters)),
+                           subset_type=args["subset_type"], offset=args["offset"])
+        return store.register(out, args["container"], parents=[pid], task="subset")
 
     def op_reduce(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
-        dims, kernel = C.reduce_exprs(cube, str(args.get("operation", "avg")))
+        dims, kernel = C.reduce_exprs(cube, args["operation"])
         # reduce collapses the implicit dim; pack each row's scalar in place
         # as a length-1 array over implicit dim `__r` = [0], in the kernel's
         # own select, so the result stays a cube (the reference keeps reduced
@@ -149,19 +140,17 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         packed = Cube(cube.df.selectExpr(*dims, f"array(0) AS {DIM_COL}",
                                          f"array({kernel}) AS {MEASURE_COL}"),
                       cube.explicit_dims, ("__r",), measure=cube.measure)
-        return store.register(packed, args.get("container", "default"),
-                              parents=[pid], task="reduce")
+        return store.register(packed, args["container"], parents=[pid], task="reduce")
 
     def op_aggregate(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
         out = C.oph_aggregate(
-            cube, str(args.get("operation", "sum")),
+            cube, args["operation"],
             str(args["group_dims"]).split("|") if args.get("group_dims") else
             list(cube.explicit_dims)[1:],
         )
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="aggregate")
+        return store.register(out, args["container"], parents=[pid], task="aggregate")
 
     def op_intercube(engine, args, inputs):
         pids = str(args["cubes"]).split("|") if args.get("cubes") else [
@@ -169,43 +158,29 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         ]
         if len(pids) != 2:
             raise ValueError("oph_intercube needs exactly 2 cubes")
-        out = C.oph_intercube(
-            store.get(pids[0]), store.get(pids[1]), str(args.get("operation", "sub"))
-        )
-        return store.register(out, args.get("container", "default"),
-                              parents=pids, task="intercube")
+        out = C.oph_intercube(store.get(pids[0]), store.get(pids[1]), args["operation"])
+        return store.register(out, args["container"], parents=pids, task="intercube")
 
     def op_reduce2(engine, args, inputs):
         from ophidia_server_spark.functions.hierarchy import concept_level
 
         pid = _input_arg(args, inputs, "cube")
         cube = store.get(pid)
-        out = C.oph_reduce2(
-            cube,
-            str(args.get("operation", "avg")),
-            concept_level(str(args.get("concept_level", "month"))),
-        )
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="reduce2")
+        out = C.oph_reduce2(cube, args["operation"], concept_level(args["concept_level"]))
+        return store.register(out, args["container"], parents=[pid], task="reduce2")
 
     def op_aggregate2(engine, args, inputs):
         from ophidia_server_spark.functions.hierarchy import concept_level
 
         pid = _input_arg(args, inputs, "cube")
-        out = C.oph_aggregate2(
-            store.get(pid),
-            str(args.get("operation", "sum")),
-            args["dim"],
-            concept_level(str(args.get("concept_level", "month"))),
-        )
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="aggregate2")
+        out = C.oph_aggregate2(store.get(pid), args["operation"], args["dim"],
+                               concept_level(args["concept_level"]))
+        return store.register(out, args["container"], parents=[pid], task="aggregate2")
 
     def op_rollup(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         out = C.oph_rollup(store.get(pid), args["dim"])
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="rollup")
+        return store.register(out, args["container"], parents=[pid], task="rollup")
 
     def op_drilldown(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
@@ -214,28 +189,25 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark.plans.response import grid
 
         return grid(C.oph_drilldown(store.get(pid)), title=f"drilldown {pid}",
-                    limit=int(args.get("limit", 1000)))
+                    limit=args["limit"])
 
     def op_permute(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         out = C.oph_permute(store.get(pid), str(args["dim_order"]).split("|"))
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="permute")
+        return store.register(out, args["container"], parents=[pid], task="permute")
 
     def op_mergecubes(engine, args, inputs):
         pids = str(args["cubes"]).split("|") if args.get("cubes") else [
             v for v in inputs.values() if isinstance(v, str)
         ]
-        cubes = [store.get(p) for p in pids]
-        out = C.oph_mergecubes_n(cubes) if len(cubes) > 2 else C.oph_mergecubes(*cubes)
-        return store.register(out, args.get("container", "default"),
-                              parents=pids, task="mergecubes")
+        out = C.oph_mergecubes_n([store.get(p) for p in pids])
+        return store.register(out, args["container"], parents=pids, task="mergecubes")
 
     def op_apply(engine, args, inputs):
         from ophidia_server_spark.functions.primitives import PRIMITIVES
 
         pid = _input_arg(args, inputs, "cube")
-        name = str(args.get("query", "oph_mul_scalar"))
+        name = args["query"]
         if name in _UNSERVED_PRIMITIVES:
             raise ValueError(f"primitive {name!r} is not served by oph_apply: "
                              f"{_UNSERVED_PRIMITIVES[name]}")
@@ -248,8 +220,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         params = [float(x) for x in str(args.get("parameters", "")).split("|") if x]
         prim_fn = PRIMITIVES[name](*params)
         out = C.oph_apply(store.get(pid), prim_fn)
-        return store.register(out, args.get("container", "default"),
-                              parents=[pid], task="apply")
+        return store.register(out, args["container"], parents=[pid], task="apply")
 
     def op_duplicate(engine, args, inputs):
         return store.duplicate(_input_arg(args, inputs, "cube"))
@@ -260,7 +231,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
     def op_metadata(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
-        mode = str(args.get("mode", "read"))
+        mode = args["mode"]
         if mode == "insert":
             store.metadata_put(pid, args["metadata_key"], args["metadata_value"])
             return pid
@@ -273,15 +244,13 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         return store.cubeschema(_input_arg(args, inputs, "cube"))
 
     def op_explorecube(engine, args, inputs):
-        return store.explorecube_response(
-            _input_arg(args, inputs, "cube"), limit=int(args.get("limit", 100))
-        )
+        return store.explorecube_response(_input_arg(args, inputs, "cube"), limit=args["limit"])
 
     def op_publish(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         out = IO.oph_publish(
             store.get(pid), args["publish_dir"], args.get("name", f"cube_{store.entries[pid].cube_id}"),
-            limit=int(args.get("limit", 1000)),
+            limit=args["limit"],
         )
         return out
 
@@ -292,10 +261,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     def op_fs(engine, args, inputs):
         from ophidia_server_spark.plans.response import grid as _grid  # noqa: F401
 
-        entries = IO.oph_fs(
-            args["path"], file_filter=args.get("file"),
-            recursive=str(args.get("recursive", "no")).lower() == "yes",
-        )
+        entries = IO.oph_fs(args["path"], file_filter=args.get("file"),
+                            recursive=args["recursive"] == "yes")
         return {
             "objclass": "grid", "title": f"fs ls {args['path']}",
             "rowkeys": ["type", "name", "size"],
@@ -315,16 +282,16 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
-        level = args.get("level", "document")
+        level = args["level"]
         if level == "document":
             res = dedup_exact(
-                spark.read.parquet(src), args.get("text_col", "text")
+                spark.read.parquet(src), args["text_col"]
             )
         elif level == "line":
             res = dedup_lines(
-                spark.read.parquet(src), args.get("text_col", "text"),
-                args.get("key_col", "doc_id"),
-                scope=args.get("scope", "corpus"),
+                spark.read.parquet(src), args["text_col"],
+                args["key_col"],
+                scope=args["scope"],
             )
         else:
             raise ValueError(f"unknown dedup level: {level}")
@@ -337,9 +304,9 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
-        scored = quality_score(docs, args.get("text_col", "text"))
+        scored = quality_score(docs, args["text_col"])
         kept = docs.join(
-            scored.filter(F.col("quality") >= float(args.get("min_quality", 0.5))).select(
+            scored.filter(F.col("quality") >= args["min_quality"]).select(
                 "doc_id"
             ),
             "doc_id",
@@ -354,9 +321,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         minhash_lsh_pairs(
-            spark.read.parquet(src),
-            args.get("text_col", "text"),
-            jaccard_threshold=float(args.get("threshold", 0.5)),
+            spark.read.parquet(src), args["text_col"], jaccard_threshold=args["threshold"],
         ).write.mode("overwrite").parquet(out)
         return out
 
@@ -366,10 +331,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         chunk_documents(
-            spark.read.parquet(src),
-            int(args.get("chunk_tokens", 64)),
-            int(args.get("overlap_tokens", 16)),
-            args.get("text_col", "text"),
+            spark.read.parquet(src), args["chunk_tokens"], args["overlap_tokens"],
+            args["text_col"],
         ).write.mode("overwrite").parquet(out)
         return out
 
@@ -383,44 +346,33 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
-        mode = args.get("mode", "bernoulli")
+        mode = args["mode"]
         if mode == "bernoulli":
-            res = hash_sample(
-                df, float(args["frac"]), args.get("key_col", "doc_id"),
-                args.get("salt", ""),
-            )
+            res = hash_sample(df, args["frac"], args["key_col"], args.get("salt", ""))
         elif mode == "stratified":
             res = stratified_sample(
-                df, dict(args["fracs"]), args.get("strata_col", "source"),
-                args.get("key_col", "doc_id"),
-                float(args.get("default_frac", 0.0)), args.get("salt", "mix"),
+                df, dict(args["fracs"]), args["strata_col"], args["key_col"],
+                args["default_frac"], args.get("salt", "mix"),
             )
         elif mode == "split":
-            res = train_val_test_split(
-                df, float(args.get("val_frac", 0.1)),
-                float(args.get("test_frac", 0.1)),
-                args.get("key_col", "doc_id"), args.get("salt", "split"),
-            )
+            res = train_val_test_split(df, args["val_frac"], args["test_frac"],
+                                       args["key_col"], args.get("salt", "split"))
         elif mode == "fixed_k":
-            res = fixed_k_sample(
-                df, int(args["k"]), args.get("key_col", "doc_id"),
-                args.get("salt", "resv"),
-            )
+            res = fixed_k_sample(df, args["k"], args["key_col"], args.get("salt", "resv"))
         elif mode == "group_fixed_k":
             res = group_fixed_k_sample(
-                df, int(args["k"]), args.get("strata_col", "source"),
-                args.get("key_col", "doc_id"), args.get("salt", "gresv"),
+                df, args["k"], args["strata_col"],
+                args["key_col"], args.get("salt", "gresv"),
             )
         elif mode == "temperature":
             res = temperature_sample(
-                df, int(args["total"]), float(args.get("alpha", 0.5)),
-                args.get("strata_col", "source"),
-                args.get("key_col", "doc_id"), args.get("salt", "temp"),
+                df, args["total"], args["alpha"], args["strata_col"],
+                args["key_col"], args.get("salt", "temp"),
             )
         elif mode == "weighted":
             res = weighted_sample(
-                df, args["weight_col"], float(args.get("rate_scale", 1.0)),
-                args.get("key_col", "doc_id"), args.get("salt", "wsamp"),
+                df, args["weight_col"], args["rate_scale"],
+                args["key_col"], args.get("salt", "wsamp"),
             )
         else:
             raise ValueError(f"unknown sampling mode: {mode}")
@@ -432,24 +384,18 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         # probe an existing one (query vector by row id) into a parquet stage
         from ophidia_server_spark.pipeline import vector_store as vstore
 
-        action = str(args.get("action", "build"))
+        action = args["action"]
         path = str(args["index_path"])
         if action == "build":
             src = _input_arg(args, inputs, "src_path")
             df = spark.read.parquet(src)
-            kind = args.get("kind", "ivf")
+            kind = args["kind"]
             if kind == "ivf":
-                vstore.ivf_build(
-                    df, path, n_cells=int(args.get("n_cells", 16)),
-                    id_col=args.get("key_col", "vec_id"),
-                    vec_col=args.get("vec_col", "embedding"),
-                )
+                vstore.ivf_build(df, path, n_cells=args["n_cells"],
+                                 id_col=args["key_col"], vec_col=args["vec_col"])
             elif kind == "lsh":
-                vstore.lsh_build(
-                    df, path, bits=int(args.get("bits", 8)),
-                    id_col=args.get("key_col", "vec_id"),
-                    vec_col=args.get("vec_col", "embedding"),
-                )
+                vstore.lsh_build(df, path, bits=args["bits"],
+                                 id_col=args["key_col"], vec_col=args["vec_col"])
             else:
                 raise ValueError(f"unknown index kind: {kind}")
             return path
@@ -457,7 +403,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             out = str(args["output_path"])
             idx = vstore.load_index(path)
             qsrc = args.get("query_path") or _input_arg(args, inputs, "src_path")
-            qid = int(args["query_id"])
+            qid = args["query_id"]
             qrow = (
                 spark.read.parquet(qsrc)
                 .filter(F.col(idx.id_col) == qid)
@@ -468,9 +414,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                 raise ValueError(f"query id {qid} not found in {qsrc}")
             qvec = [float(x) for x in qrow[0]]
             probe = vstore.ivf_probe if idx.kind == "ivf" else vstore.lsh_probe
-            res = probe(
-                spark, idx, qvec, k=int(args.get("k", 10)),
-            )
+            res = probe(spark, idx, qvec, k=args["k"])
             res.write.mode("overwrite").parquet(out)
             return out
         raise ValueError(f"unknown vector-index action: {action}")
@@ -481,9 +425,9 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
-        mode = args.get("mode", "standardize")
-        vcol = args.get("value_col", "value")
-        gcol = args.get("group_col", "event_type")
+        mode = args["mode"]
+        vcol = args["value_col"]
+        gcol = args["group_col"]
         if mode == "standardize":
             from ophidia_server_spark.pipeline.features import (
                 standardize_by_group,
@@ -504,20 +448,13 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                 winsorize_by_group,
             )
 
-            res = winsorize_by_group(
-                df, vcol, gcol,
-                float(args.get("lower_q", 0.01)),
-                float(args.get("upper_q", 0.99)),
-            )
+            res = winsorize_by_group(df, vcol, gcol, args["lower_q"], args["upper_q"])
         elif mode == "rolling":
             from ophidia_server_spark.streaming.windows import (
                 rolling_user_window,
             )
 
-            res = rolling_user_window(
-                df, int(args.get("days", 7)), args.get("ts_col", "ts"),
-                args.get("key_col", "user_id"), vcol,
-            )
+            res = rolling_user_window(df, args["days"], args["ts_col"], args["key_col"], vcol)
         else:
             raise ValueError(f"unknown features mode: {mode}")
         res.write.mode("overwrite").parquet(out)
@@ -535,26 +472,23 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
-        thr = float(args.get("threshold", 0.5))
-        pairs = ngram_jaccard_pairs(
-            df, args.get("text_col", "text"), threshold=thr
-        )
-        hard_lo = float(args.get("hard_band_min", 0))
+        thr = args["threshold"]
+        pairs = ngram_jaccard_pairs(df, args["text_col"], threshold=thr)
+        hard_lo = args["hard_band_min"]
         if hard_lo > 0:
             hard = ngram_jaccard_pairs(
-                df, args.get("text_col", "text"), threshold=hard_lo
+                df, args["text_col"], threshold=hard_lo
             ).filter(F.col("jaccard") < thr).selectExpr(
                 "doc_a AS id_a", "doc_b AS id_b", "jaccard"
             )
             res = contrastive_triplets_hard(
                 df, pairs.selectExpr("doc_a AS id_a", "doc_b AS id_b", "jaccard"),
-                hard, args.get("key_col", "doc_id"),
-                int(args.get("n_buckets", 8)),
+                hard, args["key_col"], args["n_buckets"],
             )
         else:
             res = contrastive_triplets(
                 df, pairs.selectExpr("doc_a AS id_a", "doc_b AS id_b", "jaccard"),
-                args.get("key_col", "doc_id"), int(args.get("n_buckets", 8)),
+                args["key_col"], args["n_buckets"],
             )
         res.write.mode("overwrite").parquet(out)
         return out
@@ -569,12 +503,12 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
-        m = int(args.get("m", 256))
+        m = args["m"]
         labeled = spark.read.parquet(src)
-        text_col = args.get("text_col", "text")
-        id_col = args.get("key_col", "doc_id")
+        text_col = args["text_col"]
+        id_col = args["key_col"]
         feats = hashed_gram_counts(labeled, m, text_col, id_col)
-        if args.get("features", "presence") == "presence":
+        if args["features"] == "presence":
             feats = feats.select(
                 id_col, "bucket", F.lit(1.0).alias("c")
             ).distinct()
@@ -584,17 +518,17 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         try:
             res = clf.logreg_train(
                 feats,
-                labeled.select(id_col, args.get("label_col", "label")),
+                labeled.select(id_col, args["label_col"]),
                 m=m,
-                iters=int(args.get("iters", 8)),
-                lr=float(args.get("lr", 1.0)),
+                iters=args["iters"],
+                lr=args["lr"],
                 id_col=id_col,
-                label_col=args.get("label_col", "label"),
+                label_col=args["label_col"],
             )
             scored = clf.logreg_predict(
                 feats, labeled.select(id_col), res.weights, res.bias,
                 id_col=id_col,
-                threshold=float(args.get("threshold", 0.5)),
+                threshold=args["threshold"],
             )
             scored.write.mode("overwrite").parquet(out)
         finally:
@@ -607,7 +541,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         from ophidia_server_spark import layout as lay
 
         path = str(args["table_path"])
-        action = str(args.get("action", "write"))
+        action = args["action"]
         if action == "write":
             src = _input_arg(args, inputs, "src_path")
             v = lay.snapshot_write(spark.read.parquet(src), path)
@@ -627,11 +561,11 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
                 cols = [c for c in cols.split("|") if c]
             res = lay.snapshot_optimize(
                 spark, path, zorder_cols=list(cols) if cols else None,
-                target_mb=int(args.get("target_mb", 128)),
+                target_mb=args["target_mb"],
             )
             return f"{path}@v{res['version']}"
         if action == "vacuum":
-            lay.vacuum(path, keep_last=int(args.get("keep_last", 1)))
+            lay.vacuum(path, keep_last=args["keep_last"])
             return path
         raise ValueError(f"unknown snapshot action: {action}")
 
@@ -644,13 +578,13 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         df = spark.read.parquet(src)
         res = dsir_select(
             df,
-            int(args["k"]),
+            args["k"],
             F.expr(_target_filter_sql(str(args["target_filter"]), df.columns)),
-            m=int(args.get("m", 1024)),
-            alpha=float(args.get("alpha", 1.0)),
-            gumbel_scale=float(args.get("gumbel_scale", 0.0)),
-            text_col=args.get("text_col", "text"),
-            id_col=args.get("key_col", "doc_id"),
+            m=args["m"],
+            alpha=args["alpha"],
+            gumbel_scale=args["gumbel_scale"],
+            text_col=args["text_col"],
+            id_col=args["key_col"],
         )
         res.write.mode("overwrite").parquet(out)
         return out
@@ -662,10 +596,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
-        res = interleave_groups(
-            df, args.get("strata_col", "source"),
-            args.get("key_col", "doc_id"), args.get("salt", "ilv"),
-        )
+        res = interleave_groups(df, args["strata_col"], args["key_col"], args["salt"])
         res.write.mode("overwrite").parquet(out)
         return out
 
@@ -677,13 +608,10 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         ref = spark.read.parquet(str(args["ref_path"]))
         new = spark.read.parquet(_input_arg(args, inputs, "src_path"))
         out = str(args["output_path"])
-        rep = drift_report(
-            ref, new, args.get("value_col", "value"),
-            int(args.get("n_buckets", 10)),
-        )
+        rep = drift_report(ref, new, args["value_col"], args["n_buckets"])
         rep.write.mode("overwrite").parquet(out)
         psi = rep.select("psi").first()["psi"]
-        limit = float(args.get("max_psi", 0))
+        limit = args["max_psi"]
         if limit and psi > limit:
             raise ValueError(
                 f"drift gate failed: psi {psi} exceeds max_psi {limit}"
@@ -698,10 +626,10 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
         probe_src = spark.read.parquet(str(args["probe_path"]))
-        probe = shingle_sets(probe_src, args.get("text_col", "text")).select(
+        probe = shingle_sets(probe_src, args["text_col"]).select(
             F.explode("shingles").alias("s")
         )
-        flags = contamination_flags(docs, probe, args.get("text_col", "text"))
+        flags = contamination_flags(docs, probe, args["text_col"])
         kept = docs.join(
             flags.filter(~F.col("contaminated")).select("doc_id"), "doc_id", "left_semi"
         )
@@ -715,7 +643,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
-        tc = args.get("text_col", "text")
+        tc = args["text_col"]
         docs = spark.read.parquet(src)
         red = redact_pii(docs, tc).drop(tc).withColumnRenamed(f"{tc}_redacted", tc)
         red.select(*docs.columns).write.mode("overwrite").parquet(out)
@@ -727,10 +655,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         pack_sequences(
-            spark.read.parquet(src),
-            seq_len=int(args.get("seq_len", 2048)),
-            n_buckets=int(args.get("n_buckets", 64)),
-            text_col=args.get("text_col", "text"),
+            spark.read.parquet(src), seq_len=args["seq_len"], n_buckets=args["n_buckets"],
+            text_col=args["text_col"],
         ).write.mode("overwrite").parquet(out)
         return out
 
@@ -740,9 +666,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         global_shuffle(
-            spark.read.parquet(src),
-            n_shards=int(args.get("n_shards", 64)),
-            salt=args.get("salt", "epoch0"),
+            spark.read.parquet(src), n_shards=args["n_shards"], salt=args["salt"],
         ).write.mode("overwrite").parquet(out)
         return out
 
@@ -754,11 +678,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         docs = spark.read.parquet(src)
-        scored = quality_logistic(
-            docs,
-            keep_threshold=float(args.get("keep_threshold", 0.5)),
-            text_col=args.get("text_col", "text"),
-        )
+        scored = quality_logistic(docs, keep_threshold=args["keep_threshold"],
+                                  text_col=args["text_col"])
         kept = docs.join(
             scored.filter(F.col("keep") == 1).select("doc_id"), "doc_id", "left_semi"
         )
@@ -771,11 +692,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         semantic_dedup(
-            spark.read.parquet(src),
-            n_clusters=int(args.get("n_clusters", 64)),
-            threshold=float(args.get("threshold", 0.95)),
-            id_col=args.get("id_col", "vec_id"),
-            vec_col=args.get("vec_col", "embedding"),
+            spark.read.parquet(src), n_clusters=args["n_clusters"], threshold=args["threshold"],
+            id_col=args["id_col"], vec_col=args["vec_col"],
         ).write.mode("overwrite").parquet(out)
         return out
 
@@ -786,10 +704,7 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
-        repack_parquet(
-            spark.read.parquet(src), out,
-            target_mb=float(args.get("target_mb", 256)),
-        )
+        repack_parquet(spark.read.parquet(src), out, target_mb=args["target_mb"])
         return out
 
     def op_pipe_sketch(engine, args, inputs):
@@ -801,27 +716,19 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         df = spark.read.parquet(src)
-        kind = str(args.get("kind", "hll"))
+        kind = args["kind"]
         col = str(args["column"])
         if kind == "hll":
-            res = sk.hll_registers(df, col, p=int(args.get("p", 12)))
+            res = sk.hll_registers(df, col, p=args["p"])
         elif kind == "cms":
-            res = sk.cms_sketch(
-                df, col, d=int(args.get("d", 4)), w=int(args.get("w", 4096))
-            )
+            res = sk.cms_sketch(df, col, d=args["d"], w=args["w"])
         elif kind == "dds":
-            res = sk.dds_sketch(df, col, alpha=float(args.get("alpha", 0.01)))
+            res = sk.dds_sketch(df, col, alpha=args["alpha"])
         elif kind == "bloom":
-            res = sk.bloom_bits(
-                df, col,
-                m_bits=int(args.get("m_bits", 8192)), k=int(args.get("k", 4)),
-            )
+            res = sk.bloom_bits(df, col, m_bits=args["m_bits"], k=args["k"])
         elif kind == "hll_rolling":
             # the WAU/MAU dashboard table: trailing-N-day distinct estimates
-            res = sk.hll_rolling_distinct(
-                df, col, args.get("ts_col", "ts"),
-                days=int(args.get("days", 7)), p=int(args.get("p", 12)),
-            )
+            res = sk.hll_rolling_distinct(df, col, args["ts_col"], days=args["days"], p=args["p"])
         else:
             raise ValueError(f"unknown sketch kind: {kind}")
         res.write.mode("overwrite").parquet(out)
@@ -836,15 +743,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             minhash_index_append, minhash_index_build)
 
         src = _input_arg(args, inputs, "src_path")
-        fn = (
-            minhash_index_append
-            if str(args.get("mode", "build")) == "append"
-            else minhash_index_build
-        )
-        return fn(
-            spark.read.parquet(src), str(args["output_path"]),
-            args.get("text_col", "text"),
-        )
+        fn = minhash_index_append if args["mode"] == "append" else minhash_index_build
+        return fn(spark.read.parquet(src), str(args["output_path"]), args["text_col"])
 
     def op_pipe_novelty(engine, args, inputs):
         # continuous-ingest novelty gate: verdicts for a new batch against
@@ -855,12 +755,9 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         batch = spark.read.parquet(src)
-        verdicts = dedup_incremental(
-            batch, str(args["index_path"]),
-            args.get("text_col", "text"),
-            jaccard_threshold=float(args.get("threshold", 0.5)),
-        )
-        if str(args.get("keep", "verdicts")) == "novel":
+        verdicts = dedup_incremental(batch, str(args["index_path"]), args["text_col"],
+                                     jaccard_threshold=args["threshold"])
+        if args["keep"] == "novel":
             res = batch.join(
                 verdicts.filter(F.col("is_novel") == 1).select("doc_id"),
                 "doc_id", "left_semi",
@@ -877,19 +774,15 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
-        fmt = str(args.get("format", "tfrecord"))
+        fmt = args["format"]
         df = spark.read.parquet(src)
-        shards = int(args.get("shards", 8))
+        shards = args["shards"]
         if fmt == "tfrecord":
             io_ops.oph_exporttfrecord(df, out, shards=shards)
         elif fmt == "webdataset":
-            io_ops.oph_exportwebdataset(
-                df, out, str(args.get("key_col", "doc_id")), shards=shards
-            )
+            io_ops.oph_exportwebdataset(df, out, args["key_col"], shards=shards)
         elif fmt == "avro":
-            io_ops.oph_exportavro(
-                df, out, shards=shards, codec=str(args.get("codec", "deflate"))
-            )
+            io_ops.oph_exportavro(df, out, shards=shards, codec=args["codec"])
         else:
             raise ValueError(f"unknown export format: {fmt}")
         return out
@@ -905,10 +798,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         cols = args["columns"]
         if isinstance(cols, str):
             cols = [c for c in cols.split("|") if c]
-        lay.zorder_write(
-            spark.read.parquet(src), out, list(cols),
-            files=int(args.get("files", 16)), bits=int(args.get("bits", 16)),
-        )
+        lay.zorder_write(spark.read.parquet(src), out, list(cols),
+                         files=args["files"], bits=args["bits"])
         lay.build_file_index(spark, out, list(cols)).write.mode(
             "overwrite"
         ).parquet(out.rstrip("/") + "_index")
@@ -921,13 +812,8 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
 
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
-        res = cl.kmeans_lloyd(
-            spark.read.parquet(src),
-            k=int(args.get("k", 8)),
-            iters=int(args.get("iters", 10)),
-            vec_col=args.get("vec_col", "embedding"),
-            id_col=args.get("id_col", "vec_id"),
-        )
+        res = cl.kmeans_lloyd(spark.read.parquet(src), k=args["k"], iters=args["iters"],
+                              vec_col=args["vec_col"], id_col=args["id_col"])
         res.assignments.write.mode("overwrite").parquet(out)
         return out
 
@@ -945,16 +831,11 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             with open(str(args["merges_path"])) as fh:
                 merges = [tuple(m) for m in _json.load(fh)]
         else:
-            merges = bpe.bpe_train(
-                docs, args.get("text_col", "text"),
-                num_merges=int(args.get("num_merges", 200)),
-            )
+            merges = bpe.bpe_train(docs, args["text_col"], num_merges=args["num_merges"])
         if args.get("save_merges_path"):
             with open(str(args["save_merges_path"]), "w") as fh:
                 _json.dump([list(m) for m in merges], fh)
-        bpe.bpe_apply(
-            docs, merges, args.get("text_col", "text")
-        ).write.mode("overwrite").parquet(out)
+        bpe.bpe_apply(docs, merges, args["text_col"]).write.mode("overwrite").parquet(out)
         return out
 
     def op_pipe_audit(engine, args, inputs):
@@ -966,13 +847,11 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         src = _input_arg(args, inputs, "src_path")
         out = str(args["output_path"])
         rules = [(r["name"], r["kind"], r) for r in args["rules"]]
-        report = corpus_audit(
-            spark.read.parquet(src), rules,
-            max_violation_frac=float(args.get("max_violation_frac", 0.0)),
-        )
+        report = corpus_audit(spark.read.parquet(src), rules,
+                              max_violation_frac=args["max_violation_frac"])
         report.write.mode("overwrite").parquet(out)
         failed = [r.rule for r in report.collect() if not r.passed]
-        if failed and str(args.get("on_fail", "abort")) == "abort":
+        if failed and args["on_fail"] == "abort":
             raise ValueError(f"audit rules failed: {', '.join(failed)}")
         return out
 
@@ -983,15 +862,11 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             args["implicit_dim"], args["measure"],
             measure=args.get("measure"),
         )
-        return store.register(cube, args.get("container", "default"),
-                              task="importarrow")
+        return store.register(cube, args["container"], task="importarrow")
 
     def op_exportarrow(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
-        return IO.oph_exportarrow(
-            store.get(pid), str(args["output_path"]),
-            shards=int(args.get("shards", 8)),
-        )
+        return IO.oph_exportarrow(store.get(pid), str(args["output_path"]), shards=args["shards"])
 
     def op_importnc(engine, args, inputs):
         # src_path may come directly or from file-massive expansion (which
@@ -1008,17 +883,17 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             explicit_dims=[d for d in str(args.get("explicit_dims", "")).split("|") if d],
             implicit_dim=args["implicit_dim"],
             subset=subset,
-            subset_type=str(args.get("subset_type", "coord")),
+            subset_type=args["subset_type"],
         )
-        return store.register(cube, args.get("container", "default"), task="importnc")
+        return store.register(cube, args["container"], task="importnc")
 
     def op_exportnc(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         return IO.oph_exportnc(
             store.get(pid), str(args["output_path"]),
-            per_dim_files=str(args.get("per_dim_files", "no")).lower() == "yes",
-            nc_format=str(args.get("nc_format", "classic")),
-            compress=int(args["compress"]) if args.get("compress") else None,
+            per_dim_files=args["per_dim_files"] == "yes",
+            nc_format=args["nc_format"],
+            compress=args.get("compress"),
         )
 
     def op_explorenc(engine, args, inputs):
@@ -1035,16 +910,16 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
             explicit_dims=[d for d in str(args.get("explicit_dims", "")).split("|") if d],
             implicit_dim=args["implicit_dim"],
             subset=subset,
-            subset_type=str(args.get("subset_type", "coord")),
+            subset_type=args["subset_type"],
         )
-        return store.register(cube, args.get("container", "default"), task="importzarr")
+        return store.register(cube, args["container"], task="importzarr")
 
     def op_exportzarr(engine, args, inputs):
         pid = _input_arg(args, inputs, "cube")
         return IO.oph_exportzarr(
             store.get(pid), str(args["output_path"]),
-            compress=int(args["compress"]) if args.get("compress") else None,
-            per_dim_chunks=str(args.get("per_dim_chunks", "no")).lower() == "yes",
+            compress=args.get("compress"),
+            per_dim_chunks=args["per_dim_chunks"] == "yes",
         )
 
     def resolve_pid(cid: str) -> str:

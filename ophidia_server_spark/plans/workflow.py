@@ -94,14 +94,14 @@ def _op_external_command(engine, args: dict, inputs: dict) -> dict:
     error."""
     from ophidia_server_spark import management as _mgmt
 
-    cmd = str(args.get("command", "")).strip()
+    cmd = str(args["command"]).strip()
     if not cmd:
         raise WorkflowError("generic/cdo task without a command")
     # "-" is this engine's declared unset sentinel (the descriptor default;
     # cf. _wait_carry's unset tuple) — appending it would hand the command
     # a literal "-" argument (stdin to most tools)
-    src = args.get("src_path")
-    if src in ("", "-", None):
+    src = args["src_path"]
+    if src in ("", "-"):
         src = None
     if src is not None and "|" in str(src):
         # multivalue src_path only fans out through the massive [] grammar;
@@ -111,7 +111,7 @@ def _op_external_command(engine, args: dict, inputs: dict) -> dict:
             "generic/cdo src_path with '|' must use massive [...] syntax "
             "(e.g. src_path=[path=...;file=...]) to fan out per file"
         )
-    if str(args.get("run", "yes")).lower() == "no":
+    if args["run"] == "no":
         # dry run: validate the allow-list gate without executing
         _mgmt.resolve_command(cmd)
         return {
@@ -121,9 +121,9 @@ def _op_external_command(engine, args: dict, inputs: dict) -> dict:
     return _mgmt.run_command(
         cmd,
         src_path=src,
-        session_id=str(args.get("sessionid", "")),
-        workflow_id=int(args.get("workflowid", 0) or 0),
-        marker_id=int(args.get("markerid", 0) or 0),
+        session_id=args["sessionid"],
+        workflow_id=args["workflowid"],
+        marker_id=args["markerid"],
     )
 
 
@@ -921,9 +921,7 @@ class WorkflowEngine:
         by_item = dict(zip(items, extras)) if extras else {}
 
         def one(item):
-            largs = {**args, item_key: item, **by_item.get(item, {})}
-            largs.pop("run", None)
-            return fn(self, largs, inputs)
+            return fn(self, {**args, item_key: item, **by_item.get(item, {})}, inputs)
 
         try:
             values = fan_out(one, items, ncores, lambda _: f"mf_{name}")
@@ -1045,17 +1043,19 @@ class WorkflowEngine:
                 # descriptor (reference: oph_tp_task_params_parser,
                 # oph_task_parser_library.h:67, called before dispatch) —
                 # a bad parameter fails the task with a named error instead
-                # of surfacing as a deep TypeError inside the operator.
-                # The in-process flow operators (set/input/wait) are exempt:
-                # their implementations enforce the reference's own
-                # flow-control errors verbatim (oph_flow_control_operators.c
-                # messages), which must surface unchanged.
+                # of surfacing as a deep TypeError inside the operator; the
+                # operator gets the validated dict (defaults filled in,
+                # numbers parsed). The in-process flow operators
+                # (set/input/wait) are exempt: their implementations enforce
+                # the reference's own flow-control errors verbatim
+                # (oph_flow_control_operators.c messages), which must surface
+                # unchanged.
                 if op and op not in ("oph_set", "oph_input", "oph_wait"):
                     from ophidia_server_spark.plans.descriptors import (
-                        ParamValidationError, validate_task)
+                        ParamValidationError, operator_args)
 
                     try:
-                        validated = validate_task(op, args)
+                        args = operator_args(op, args)
                     except ParamValidationError as e:
                         # goes through the wave's result handling so the
                         # task's on_error policy applies (abort by default)
@@ -1064,13 +1064,6 @@ class WorkflowEngine:
                             error=f"ParamValidationError: {e}",
                         ))
                         continue
-                    if validated is not None:
-                        # apply corrected values (min==max constant forcing)
-                        # to the keys the request actually passed; operators
-                        # implement the descriptor defaults themselves
-                        for k, v in validated.items():
-                            if k in args:
-                                args[k] = v
                 if op in ("oph_set", "oph_input"):
                     # oph_input = oph_set + wake a waiting task
                     # (oph_flow_control_operators.c:3155-3262 shares oph_set_impl)
@@ -1178,6 +1171,8 @@ class WorkflowEngine:
         # the reference's best-effort final cleanup)
         deleter = ops.get("oph_delete")
         if deleter is not None:
+            from ophidia_server_spark.plans.descriptors import operator_args
+
             for t in tasks:
                 if str(t.get("on_exit", "")).lower() != "oph_delete":
                     continue
@@ -1185,7 +1180,7 @@ class WorkflowEngine:
                 if res is None or res.status != "OPH_ODB_STATUS_COMPLETED" or res.value is None:
                     continue
                 try:
-                    deleter(self, {"cube": res.value}, {})
+                    deleter(self, operator_args("oph_delete", {"cube": res.value}), {})
                 except Exception:  # noqa: BLE001 - GC is best-effort
                     pass
         return run

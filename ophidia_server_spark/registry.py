@@ -506,7 +506,7 @@ UNION ALL
 SELECT l_returnflag, l_linestatus, CAST(1 AS BIGINT) AS src, month, CAST(price AS DOUBLE) AS value FROM pbase""",
 )
 def cube_mergecubes(spark, sf_dir):
-    mc = C.oph_mergecubes(cube_qty(spark, sf_dir), cube_price(spark, sf_dir))
+    mc = C.oph_mergecubes_n([cube_qty(spark, sf_dir), cube_price(spark, sf_dir)])
     return mc.long().select(
         "l_returnflag", "l_linestatus",
         F.col("src").cast("long").alias("src"),

@@ -33,6 +33,8 @@ import datetime
 import re
 from dataclasses import dataclass
 
+from ophidia_server_spark.functions.lits import as_int, string_sql
+
 END_KEYWORD = "end"
 
 
@@ -104,10 +106,11 @@ def subset_sql(colname: str, subset: str, max_index: int | None = None, offset: 
     OR across clauses (multivalue OR-combine, oph_filters.c:61-76); each clause
     is range + stride arithmetic. `offset` widens every clause to
     [start-offset, end+offset] (the reference's subset offset parameter;
-    widened bounds ignore the stride).
+    widened bounds ignore the stride); `offset` is an integer by the
+    functions/lits.py rule, so 1.0 passes and 0.5 is a ValueError.
     """
     clauses = [c.resolved(max_index) for c in parse_subset(subset)]
-    offset = int(offset)
+    offset = as_int(offset)
     parts = []
     for c in clauses:
         p = f"({colname} >= {c.start - offset} AND {colname} <= {c.end + offset}"
@@ -121,7 +124,7 @@ def values_sql(colname: str, subset: str) -> str:
     """Render non-numeric coordinates (`a,b` or `a|b`) as `colname IN (...)`
     of Spark string literals; no values matches nothing."""
     vals = [v for v in str(subset).replace("|", ",").split(",") if v]
-    lits = ", ".join("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals)
+    lits = ", ".join(map(string_sql, vals))
     return f"({colname} IN ({lits}))" if vals else "FALSE"
 
 

@@ -11,6 +11,8 @@ operators are ported from its served XMLs (etc/xml/OPH_*_operator_1.0.xml).
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from ophidia_server_spark.plans.descriptors import (
@@ -18,6 +20,7 @@ from ophidia_server_spark.plans.descriptors import (
     OperatorDescriptor,
     ParamSpec,
     ParamValidationError,
+    operator_args,
     validate_params,
     validate_task,
 )
@@ -338,11 +341,8 @@ def test_massive_bracket_args_validate_against_descriptor():
     assert groups[0]["experiment"] == "rcp85"
 
 
-def _facade_get_defaults():
-    """(operator, key, literal) of every `args.get("<key>", <literal>)` in
-    the facade's operator closures, read from the source."""
-    import ast
-
+def _facade_closures():
+    """(operator, closure AST) of every facade operator, read from the source."""
     from ophidia_server_spark.plans import server
 
     tree = ast.parse(open(server.__file__).read())
@@ -351,31 +351,97 @@ def _facade_get_defaults():
     closures = {n.name: n for n in engine.body if isinstance(n, ast.FunctionDef)}
     table = next(n.value.args[0] for n in engine.body if isinstance(n, ast.Return))
     for key, fn in zip(table.keys, table.values):
-        for call in ast.walk(closures[fn.id]):
-            f = getattr(call, "func", None)
-            if (isinstance(call, ast.Call) and isinstance(f, ast.Attribute) and f.attr == "get"
-                    and getattr(f.value, "id", None) == "args" and len(call.args) == 2
+        yield key.value, closures[fn.id]
+
+
+def _args_get(node) -> bool:
+    f = getattr(node, "func", None)
+    return (isinstance(f, ast.Attribute) and f.attr == "get"
+            and getattr(f.value, "id", None) == "args")
+
+
+def _args_key(node):
+    """The key of an `args["k"]` / `args.get("k", ...)` read (also as the
+    left side of an `or`), else None."""
+    if isinstance(node, ast.BoolOp):
+        node = node.values[0]
+    if (isinstance(node, ast.Subscript) and getattr(node.value, "id", None) == "args"
+            and isinstance(node.slice, ast.Constant)):
+        return node.slice.value
+    if _args_get(node) and node.args and isinstance(node.args[0], ast.Constant):
+        return node.args[0].value
+    return None
+
+
+def _facade_get_defaults():
+    """(operator, key, literal) of every `args.get("<key>", <literal>)` in
+    the facade's operator closures."""
+    for op, fn in _facade_closures():
+        for call in ast.walk(fn):
+            if (_args_get(call) and len(call.args) == 2
                     and all(isinstance(a, ast.Constant) for a in call.args)):
-                yield key.value, call.args[0].value, call.args[1].value
+                yield op, call.args[0].value, call.args[1].value
 
 
-def _same(a, b) -> bool:
-    try:
-        return float(a) == float(b)
-    except (TypeError, ValueError):
-        return str(a) == str(b)
+def _number_spec(op, key):
+    spec = DESCRIPTORS[op].by_name.get(key)
+    return spec if spec is not None and spec.type in ("int", "real") else None
 
 
-def test_facade_literal_defaults_equal_the_descriptor_defaults():
-    """The engine does not pass descriptor defaults on: each facade closure
-    supplies its own, so its literal must be the documented one."""
-    checked, drifted = 0, []
-    for op, key, literal in _facade_get_defaults():
-        spec = DESCRIPTORS[op].by_name.get(key) if op in DESCRIPTORS else None
-        if spec is None or spec.default is None:
-            continue
-        checked += 1
-        if not _same(literal, spec.default):
-            drifted.append((op, key, literal, spec.default))
-    assert drifted == []
-    assert checked > 100  # the scan still sees the facade's defaults
+def test_facade_restates_no_descriptor_default():
+    """operator_args fills every descriptor default: a facade literal default
+    is only for a key the descriptor leaves unset (an operator's own)."""
+    literals = list(_facade_get_defaults())
+    restated = [(op, key) for op, key, _ in literals
+                if DESCRIPTORS[op].by_name[key].default is not None]
+    assert restated == []
+    assert ("pipeline_sample", "salt", "mix") in literals  # the scan sees them
+
+
+def test_facade_parses_no_descriptor_number():
+    """operator_args hands an int/real parameter over as the number the
+    range check read: no closure casts one again."""
+    casts, reads = [], 0
+    for op, fn in _facade_closures():
+        for node in ast.walk(fn):
+            key = _args_key(node)
+            reads += key is not None and _number_spec(op, key) is not None
+            if (isinstance(node, ast.Call) and getattr(node.func, "id", None) in ("int", "float")
+                    and node.args and _number_spec(op, _args_key(node.args[0]) or "") is not None):
+                casts.append((op, node.lineno))
+    assert casts == []
+    assert reads > 50  # the scan sees the facade's number reads
+
+
+def test_operator_args_fills_defaults_and_parses_numbers():
+    got = operator_args("pipeline_chunk", {"output_path": "o", "chunk_tokens": "32.9x",
+                                           "overlap_tokens": 4})
+    assert got == {"output_path": "o", "text_col": "text", "chunk_tokens": 32,
+                   "overlap_tokens": 4}
+    assert type(operator_args("oph_subset", {"subset_dims": "t", "subset_filter": "1"})
+                ["offset"]) is float
+    # strtod reads no number as 0.0; the range check saw that same number
+    assert operator_args("pipeline_minhash_pairs",
+                         {"output_path": "o", "threshold": "junk"})["threshold"] == 0.0
+    # multivalue and JSON values stay as they are; no descriptor: unchanged
+    assert operator_args("oph_wait", {"offset": "1|2"})["offset"] == "1|2"
+    rules = [{"name": "r", "kind": "not_null", "col": "text"}]
+    assert operator_args("pipeline_audit", {"output_path": "o", "rules": rules})["rules"] is rules
+    raw = {"nrows": "7"}
+    assert operator_args("no_such_operator", raw) is raw
+
+
+def test_dispatch_hands_the_operator_the_descriptor_defaults():
+    from ophidia_server_spark.plans.workflow import WorkflowEngine
+
+    seen = {}
+
+    def spy(engine, args, inputs):
+        seen.update(args)
+        return None
+
+    run = WorkflowEngine({"oph_explorecube": spy}).run({"tasks": [{
+        "name": "x", "operator": "oph_explorecube", "arguments": {"cube": "c1"}}]})
+    assert run.status == "OPH_ODB_STATUS_COMPLETED"
+    assert seen == {"cube": "c1", "limit": 100}
+    assert type(seen["limit"]) is int

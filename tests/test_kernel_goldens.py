@@ -5,15 +5,18 @@ that are null, empty, one element long, or hold a null or a NaN, with int,
 double and decimal elements. `kernel_goldens.json` was recorded from the
 Python-lambda implementation that the SQL text replaced (`record`)."""
 
+import copy
 import decimal
 import json
 import math
 import os
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import Row
 
-from ophidia_server_spark.cube import build_cube, randcube
+from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube, build_cube, randcube
 from ophidia_server_spark.functions import primitives as prim
 from ophidia_server_spark.operators import cube_ops as C
 
@@ -72,7 +75,9 @@ PRIMS = {
 }
 # primitives that are not factories
 DIRECT = {"count_nan": "count_nan"}
-# the numpy kernels fail on null and empty arrays: they run from row k = 2
+# the numpy kernels' goldens start at row k = 2, recorded when a null or an
+# empty array failed their job; test_numpy_kernels_keep_null_and_empty_rows
+# pins those two rows
 NUMPY = {"interpolate", "fft"}
 
 
@@ -213,6 +218,29 @@ def test_array_named_like_a_lambda_variable_is_refused(name):
 def test_cube_operators_match_golden(spark, golden):
     got = {case: build() for case, build in cube_cases(spark).items()}
     assert got == {case: golden[case] for case in got}
+
+
+@pytest.mark.parametrize("col", ["i", "d", "c"])
+@pytest.mark.parametrize("case", sorted(NUMPY))
+def test_numpy_kernels_keep_null_and_empty_rows(spark, golden, case, col):
+    # a null array gives null and an empty one [], as the SQL-text kernels
+    # do; the job runs on and the other rows are the recorded ones
+    cube = Cube(arrays_df(spark).selectExpr(
+        "k", f"transform(a{col}, (x, i) -> i + 1) AS {DIM_COL}", f"a{col} AS {MEASURE_COL}"),
+        ("k",), ("t",))
+    out = output(C.oph_apply(cube, _prim(case)).df.select("k", MEASURE_COL), ["k"])
+    assert out["rows"] == [[0, None], [1, []]] + golden[f"{case}/{col}"]["rows"]
+
+
+@pytest.mark.parametrize("typ", ["int", "double", "decimal(10,2)"])
+def test_intercube_div_by_zero_is_a_null_cell(spark, golden, typ):
+    a, b = cubes(spark)[typ]
+    zero = b.df.selectExpr("g", DIM_COL, f"CASE WHEN g = 'a' THEN transform({MEASURE_COL}, "
+                           f"(x, i) -> IF(i = 1, CAST(0 AS {typ}), x)) ELSE {MEASURE_COL} END "
+                           f"AS {MEASURE_COL}")
+    want = copy.deepcopy(golden[f"intercube_div_{typ}"])
+    want["rows"][0][2][1] = None  # row a, t = 2: the zero divisor
+    assert cube_output(C.oph_intercube(a, replace(b, df=zero), "div", "o")) == want
 
 
 _HOFS = {"transform", "filter", "aggregate", "zip_with", "exists", "forall", "array_sort"}

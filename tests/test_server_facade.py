@@ -1266,3 +1266,42 @@ def test_target_filter_renders_quoted_columns_and_literals():
     assert _target_filter_sql("lang = 'en' and n_chars >= 10 AND score<>0.5", cols) == (
         "`lang` = 'en' AND `n_chars` >= 10 AND `score` <> 0.5D")
     assert _target_filter_sql(r"lang != 'o\'b\\r'", cols) == r"`lang` != 'o\'b\\r'"
+
+
+@pytest.fixture()
+def bare(spark, tmp_path):
+    store = CubeStore(spark=spark, workspace=str(tmp_path))
+    return build_default_engine(spark, store), store
+
+
+def _run(eng, *tasks):
+    return eng.run({"tasks": [{"name": n, "operator": op, "arguments": a,
+                               "dependencies": deps} for n, op, a, deps in tasks]})
+
+
+def test_randcube_runs_with_the_number_the_descriptor_read(bare):
+    # strtol reads "10.0" as 10, and the operator gets that 10
+    eng, store = bare
+    run = _run(eng, ("r", "oph_randcube", {"nrows": "10.0", "nvalues": "3"}, []))
+    assert run.status == "OPH_ODB_STATUS_COMPLETED", run.results["r"].error
+    assert store.get(run.results["r"].value).df.count() == 10
+
+
+def test_subset_offset_is_an_integral_real(bare):
+    eng, store = bare
+    sub = {"subset_dims": "index", "subset_filter": "3"}
+    run = _run(eng, ("r", "oph_randcube", {"nrows": "2", "nvalues": "6"}, []),
+               *((f"s{i}", "oph_subset", {**sub, "offset": off}, ["r"])
+                 for i, off in enumerate(["1.0", "1", "0.5"])))
+    cells = [sorted(store.get(run.results[s].value).long().collect()) for s in ("s0", "s1")]
+    assert cells[0] == cells[1] and len(cells[0]) == 2 * 3
+    half = run.results["s2"]
+    assert half.status == "OPH_ODB_STATUS_ERROR"
+    assert half.error.startswith("ValueError: expected an integer parameter")
+
+
+def test_mergecubes_of_one_cube_is_a_named_error(bare):
+    eng, _ = bare
+    run = _run(eng, ("r", "oph_randcube", {"nrows": "2"}, []),
+               ("m", "oph_mergecubes", {}, ["r"]))
+    assert run.results["m"].error == "ValueError: mergecubes needs at least 2 cubes"

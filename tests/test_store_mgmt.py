@@ -171,14 +171,13 @@ def test_window_request_over_materialized_cube_runs_one_spark_job(store, spark):
 def test_facade_reduce_packs_each_row_in_place(store, spark, operation):
     # the facade's oph_reduce wraps each row's reduced scalar as a length-1
     # cube over implicit dim `__r` = [0], keeping the row and the metadata
+    from ophidia_server_spark.plans.descriptors import operator_args
     from ophidia_server_spark.plans.server import build_default_engine
 
     st, pid = store
     cube = st.get(pid)
-    # the operator itself, so the kernel alias `mean` (not in the oph_reduce
-    # descriptor's allowed set) is covered too
     op = build_default_engine(spark, st).operators["oph_reduce"]
-    out_pid = op(None, {"cube": pid, "operation": operation}, {})
+    out_pid = op(None, operator_args("oph_reduce", {"cube": pid, "operation": operation}), {})
     out = st.get(out_pid)
     keys = list(cube.explicit_dims)
     kernel = oph_reduce(cube, operation)

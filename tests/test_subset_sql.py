@@ -14,6 +14,7 @@ from ophidia_server_spark.filters import compile_massive
 from ophidia_server_spark.functions import primitives as prim
 from ophidia_server_spark.functions.lits import double_sql
 from ophidia_server_spark.operators import cube_ops as C
+from ophidia_server_spark.plans.descriptors import operator_args
 from ophidia_server_spark.plans.server import build_default_engine
 from ophidia_server_spark.store import CubeStore, load_store, save_store
 from ophidia_server_spark.subset import time_sql, values_sql
@@ -322,7 +323,7 @@ def test_apply_and_reduce_add_one_project(spark, tmp_path, cubes):
     store = CubeStore(spark=spark, workspace=str(tmp_path))
     pid = store.register(cube, "c")
     out = build_default_engine(spark, store).operators["oph_reduce"](
-        None, {"cube": pid, "operation": "avg"}, {})
+        None, operator_args("oph_reduce", {"cube": pid, "operation": "avg"}), {})
     assert _added(cube.df, store.get(out).df) == {"Project": 1}
 
 
