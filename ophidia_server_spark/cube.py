@@ -20,14 +20,20 @@ single row's array fits comfortably in an executor task (implicit card up to
 ~10^6 doubles/row); larger implicit dims should be imported exploded (long form)
 and rolled up on demand.
 
-All operators are Catalyst-native (higher-order functions / groupBy) — no Python
-row UDFs in any hot path. Per-row array kernels are SQL text (`randcube`
-here, operators/cube_ops.py, functions/primitives.py).
+Every cube made out of cells goes through one plan builder, `pack`: aggregate
+the cells per (keys, coordinate), then sort-collect each key's (coordinate,
+value) pairs into `__dim`/`__m`. build_cube and the explicit-dim operators
+(oph_aggregate, oph_aggregate2, oph_reduce2, oph_rollup in
+operators/cube_ops.py) are calls to it; `AGG_FNS` is the one table of the
+aggregates it runs. All operators are Catalyst-native (higher-order functions
+/ groupBy) — no Python row UDFs in any hot path. Per-row array kernels are SQL
+text (`randcube` here, operators/cube_ops.py, functions/primitives.py).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +42,18 @@ from ophidia_server_spark.subset import quote_ident
 
 DIM_COL = "__dim"
 MEASURE_COL = "__m"
+
+# the aggregates a cell group takes, by operation name
+AGG_FNS: dict[str, Callable[[Column], Column]] = {
+    "sum": F.sum,
+    "count": F.count,
+    "avg": F.avg,
+    "mean": F.avg,
+    "max": F.max,
+    "min": F.min,
+    "var": F.var_samp,
+    "std": F.stddev_samp,
+}
 
 
 @dataclass
@@ -51,20 +69,10 @@ class Cube:
     explicit_dims: tuple[str, ...]
     implicit_dims: tuple[str, ...]
     measure: str = "measure"
-    measure_type: str = "double"
     pid: str | None = None
     level: int = 0
-    lineage: tuple[str, ...] = field(default_factory=tuple)
 
     # -- helpers ---------------------------------------------------------------
-    def dim_field(self, name: str) -> Column:
-        """Column expr for one implicit dim's coordinate array."""
-        if len(self.implicit_dims) == 1:
-            if name != self.implicit_dims[0]:
-                raise KeyError(name)
-            return F.col(DIM_COL)
-        return F.col(f"{DIM_COL}.{name}")
-
     def with_df(self, df: DataFrame, **kw) -> "Cube":
         return replace(self, df=df, level=self.level + 1, **kw)
 
@@ -82,8 +90,40 @@ class Cube:
             dim_cols = [F.col(f"__c.d.{n}").alias(n) for n in self.implicit_dims]
         return e.select(*self.explicit_dims, *dim_cols, F.col("__c.m").alias(self.measure))
 
-    def cells(self) -> Column:
-        return F.size(F.col(MEASURE_COL))
+
+def pack(
+    cells: DataFrame,
+    keys: Sequence[str],
+    coord: Column | str,
+    value: Column | str,
+    agg: str | None,
+    implicit_dims: tuple[str, ...],
+    measure: str,
+    level: int,
+) -> Cube:
+    """The cube of a frame of cells, one row per distinct `keys`: `__dim` is
+    the sorted `coord`s of the row's cells and `__m` their `value`s.
+
+    The cells of one (keys, coord) are first aggregated with `AGG_FNS[agg]`;
+    `agg=None` takes each cell as it is (oph_rollup, whose coordinates are
+    distinct). Each groupBy is one shuffle, the cell aggregate's partial
+    running map-side; the result is partitioned by `keys`, which downstream
+    row-wise ops reuse.
+    """
+    coord = F.col(coord) if isinstance(coord, str) else coord
+    value = F.col(value) if isinstance(value, str) else value
+    if agg is None:
+        cells = cells.select(*keys, coord.alias("__d"), value.alias("__v"))
+    else:
+        cells = cells.groupBy(*keys, coord.alias("__d")).agg(
+            AGG_FNS[agg.lower()](value).alias("__v"))
+    df = (
+        cells.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("__d", "__v"))).alias("__z"))
+        .select(*keys, F.col("__z.__d").alias(DIM_COL), F.col("__z.__v").alias(MEASURE_COL))
+    )
+    return Cube(df=df, explicit_dims=tuple(keys), implicit_dims=tuple(implicit_dims),
+                measure=measure, level=level)
 
 
 def build_cube(
@@ -92,39 +132,11 @@ def build_cube(
     implicit_dim: str,
     value: Column | str,
     measure: str = "measure",
-    agg: str = "sum",
 ) -> Cube:
     """Import a relational DataFrame into cube form (the oph_importnc/importcsv
-    ingest shape, oph_json_objkeys.h:114-115 — here the source is any DataFrame).
-
-    Cells are aggregated per (explicit_dims, implicit_dim) with `agg`, then the
-    implicit dim is packed: sort-by-coordinate collect_list. One shuffle total
-    (partial aggregation is map-side); the result is partitioned by the groupBy
-    keys, which downstream row-wise ops reuse.
-    """
-    vcol = F.col(value) if isinstance(value, str) else value
-    aggfn = {
-        "sum": F.sum, "avg": F.avg, "max": F.max, "min": F.min, "count": F.count,
-    }[agg]
-    cells = (
-        df.groupBy(*explicit_dims, F.col(implicit_dim).alias("__d"))
-        .agg(aggfn(vcol).alias("__v"))
-    )
-    packed = (
-        cells.groupBy(*explicit_dims)
-        .agg(F.array_sort(F.collect_list(F.struct(F.col("__d"), F.col("__v")))).alias("__z"))
-        .select(
-            *explicit_dims,
-            F.col("__z.__d").alias(DIM_COL),
-            F.col("__z.__v").alias(MEASURE_COL),
-        )
-    )
-    return Cube(
-        df=packed,
-        explicit_dims=tuple(explicit_dims),
-        implicit_dims=(implicit_dim,),
-        measure=measure,
-    )
+    ingest shape, oph_json_objkeys.h:114-115 — here the source is any DataFrame):
+    the sum of the cells of each (explicit_dims, implicit_dim), packed."""
+    return pack(df, explicit_dims, implicit_dim, value, "sum", (implicit_dim,), measure, 0)
 
 
 def randcube(

@@ -9,10 +9,15 @@ dimensions; rollup/drilldown move a dimension between the two representations.
 
 Everything here is expressed with Spark built-ins (higher-order array functions,
 groupBy aggregation, joins) so Catalyst keeps whole-stage codegen and the 100 TB
-scale path: per-row array ops are embarrassingly parallel (no shuffle); explicit
-aggregation uses partial+final hash agg; intercube joins hash-partition both
-sides on the explicit dims (co-partitioned if both cubes came from the same
-build_cube shuffle).
+scale path: per-row array ops are embarrassingly parallel (no shuffle); intercube
+joins hash-partition both sides on the explicit dims (co-partitioned if both
+cubes came from the same build_cube shuffle).
+
+Every operator that makes a cube out of cells (oph_aggregate, oph_aggregate2,
+oph_reduce2, oph_rollup) explodes its input to the long form and hands the
+cells to `cube.pack`, the one builder that aggregates them per (keys,
+coordinate) with an `AGG_FNS` entry (partial+final hash agg) and packs each
+key's sorted pairs; they differ only in the keys and the coordinate they pass.
 
 Every per-row array kernel is SQL text parsed by the JVM (`F.expr` /
 `selectExpr`), one py4j call each, where a Python-lambda higher-order
@@ -33,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, FractionalType, NumericType
 
-from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
+from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube, pack
 from ophidia_server_spark.functions.lits import as_int, string_sql
 from ophidia_server_spark.subset import quote_ident, subset_sql, time_sql, values_sql
 
@@ -71,16 +76,6 @@ REDUCE_OPS: dict[str, Callable[[str], str]] = {
     "std": lambda col: f"SQRT({_arr_var(col)})",
 }
 
-AGG_FNS: dict[str, Callable[[Column], Column]] = {
-    "sum": F.sum,
-    "count": F.count,
-    "avg": F.avg,
-    "mean": F.avg,
-    "max": F.max,
-    "min": F.min,
-    "var": F.var_samp,
-    "std": F.stddev_samp,
-}
 
 
 # ---------------------------------------------------------------------------
@@ -211,30 +206,16 @@ def oph_reduce2(
     (oph_reduce2, oph_json_objkeys.h:97) — e.g. daily -> monthly means.
 
     concept_level maps an implicit coordinate to its group (e.g. month of a
-    day index). Implemented explode -> groupBy(explicit, group) -> re-pack;
-    one shuffle, partial agg map-side. For time hierarchies pass
+    day index). Implemented explode -> `pack` by (explicit dims, group).
+    For time hierarchies pass
     `lambda d: F.date_trunc('month', d)`-style mappings.
     """
     if len(cube.implicit_dims) != 1:
         raise NotImplementedError("reduce2 on composite implicit dim")
     dim = cube.implicit_dims[0]
-    lf = cube.long()
     grp = concept_level(F.col(dim)) if callable(concept_level) else concept_level
-    out = out_name or cube.measure
-    aggfn = AGG_FNS[operation.lower()]
-    cells = lf.groupBy(*cube.explicit_dims, grp.alias("__d")).agg(
-        aggfn(F.col(cube.measure)).alias("__v")
-    )
-    packed = (
-        cells.groupBy(*cube.explicit_dims)
-        .agg(F.array_sort(F.collect_list(F.struct("__d", "__v"))).alias("__z"))
-        .select(
-            *cube.explicit_dims,
-            F.col("__z.__d").alias(DIM_COL),
-            F.col("__z.__v").alias(MEASURE_COL),
-        )
-    )
-    return replace(cube, df=packed, implicit_dims=(dim,), measure=out, level=cube.level + 1)
+    return pack(cube.long(), cube.explicit_dims, grp, cube.measure, operation, (dim,),
+                out_name or cube.measure, cube.level + 1)
 
 
 # ---------------------------------------------------------------------------
@@ -245,33 +226,17 @@ def oph_aggregate(cube: Cube, operation: str, collapse_dims: list[str]) -> Cube:
     """Collapse explicit dimensions (oph_aggregate, oph_json_objkeys.h:98),
     applying `operation` element-wise across rows for each implicit coordinate.
 
-    Implemented as explode -> hash-agg by (kept dims, coordinate) -> re-pack.
-    This is the scalable strategy: Catalyst does partial aggregation map-side,
-    so the shuffle carries one partial per (kept, coord) per partition, not the
-    raw cells. (The alternative — collect_list of whole arrays then zip-reduce —
+    Implemented as explode -> `pack` by (kept dims, coordinate). This is the
+    scalable strategy: Catalyst does partial aggregation map-side, so the
+    shuffle carries one partial per (kept, coord) per partition, not the raw
+    cells. (The alternative — collect_list of whole arrays then zip-reduce —
     ships full arrays through the shuffle and skews on wide groups.)
     """
     kept = [d for d in cube.explicit_dims if d not in collapse_dims]
     if len(cube.implicit_dims) != 1:
         raise NotImplementedError("aggregate on composite implicit dim: permute/drilldown first")
-    lf = cube.long()
-    dim = cube.implicit_dims[0]
-    aggfn = AGG_FNS[operation.lower()]
-    cells = lf.groupBy(*kept, F.col(dim).alias("__d")).agg(
-        aggfn(F.col(cube.measure)).alias("__v")
-    )
-    packed = (
-        cells.groupBy(*kept)
-        .agg(F.array_sort(F.collect_list(F.struct("__d", "__v"))).alias("__z"))
-        .select(*kept, F.col("__z.__d").alias(DIM_COL), F.col("__z.__v").alias(MEASURE_COL))
-    )
-    return Cube(
-        df=packed,
-        explicit_dims=tuple(kept),
-        implicit_dims=cube.implicit_dims,
-        measure=cube.measure,
-        level=cube.level + 1,
-    )
+    return pack(cube.long(), kept, cube.implicit_dims[0], cube.measure, operation,
+                cube.implicit_dims, cube.measure, cube.level + 1)
 
 
 def oph_aggregate2(
@@ -283,28 +248,16 @@ def oph_aggregate2(
     if dim not in cube.explicit_dims:
         raise KeyError(dim)
     kept = [d for d in cube.explicit_dims if d != dim]
-    lf = cube.long()
-    idim = cube.implicit_dims[0]
-    aggfn = AGG_FNS[operation.lower()]
-    cells = lf.groupBy(
-        *kept, concept_level(F.col(dim)).alias(dim), F.col(idim).alias("__d")
-    ).agg(aggfn(F.col(cube.measure)).alias("__v"))
-    packed = (
-        cells.groupBy(*kept, dim)
-        .agg(F.array_sort(F.collect_list(F.struct("__d", "__v"))).alias("__z"))
-        .select(*kept, dim, F.col("__z.__d").alias(DIM_COL), F.col("__z.__v").alias(MEASURE_COL))
-    )
-    return Cube(
-        df=packed, explicit_dims=(*kept, dim), implicit_dims=cube.implicit_dims,
-        measure=cube.measure, level=cube.level + 1,
-    )
+    cells = cube.long().withColumn(dim, concept_level(F.col(dim)))
+    return pack(cells, (*kept, dim), cube.implicit_dims[0], cube.measure, operation,
+                cube.implicit_dims, cube.measure, cube.level + 1)
 
 
 # ---------------------------------------------------------------------------
 # oph_drilldown / oph_rollup / oph_permute
 # ---------------------------------------------------------------------------
 
-def oph_drilldown(cube: Cube, n: int = 1) -> DataFrame:
+def oph_drilldown(cube: Cube) -> DataFrame:
     """Implicit -> explicit (oph_drilldown, oph_json_objkeys.h:100): explode the
     packed array into rows. Returns the long form (all implicit dims exploded)."""
     return cube.long()
@@ -321,22 +274,10 @@ def oph_rollup(cube: Cube, dim: str) -> Cube:
     if dim not in cube.explicit_dims:
         raise KeyError(dim)
     kept = [d for d in cube.explicit_dims if d != dim]
-    lf = cube.long()
     new_implicit = (dim, *cube.implicit_dims)
     key = F.struct(*[F.col(d) for d in new_implicit])
-    cells = lf.groupBy(*kept).agg(
-        F.array_sort(F.collect_list(F.struct(key.alias("d"), F.col(cube.measure).alias("m")))).alias("__z")
-    )
-    packed = cells.select(
-        *kept, F.col("__z.d").alias(DIM_COL), F.col("__z.m").alias(MEASURE_COL)
-    )
-    return Cube(
-        df=packed,
-        explicit_dims=tuple(kept),
-        implicit_dims=new_implicit,
-        measure=cube.measure,
-        level=cube.level + 1,
-    )
+    return pack(cube.long(), kept, key, cube.measure, None, new_implicit, cube.measure,
+                cube.level + 1)
 
 
 def oph_permute(cube: Cube, order: list[str]) -> Cube:

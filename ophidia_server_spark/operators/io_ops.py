@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube, build_cube
+from ophidia_server_spark.subset import quote_ident
 
 
 def oph_importcsv(
@@ -638,32 +639,20 @@ def oph_concat(a: Cube, new_data: DataFrame, implicit_dim_col: str, value_col) -
     b = build_cube(
         new_data, list(a.explicit_dims), implicit_dim_col, value_col, measure=a.measure
     )
-    bt = b.df.select(
-        *b.explicit_dims,
-        F.col(DIM_COL).alias("__dim_b"),
-        F.col(MEASURE_COL).alias("__m_b"),
-    )
+    dims = [*map(quote_ident, a.explicit_dims)]
+    bt = b.df.selectExpr(*dims, f"{DIM_COL} AS __dim_b", f"{MEASURE_COL} AS __m_b")
     j = a.df.join(bt, on=list(a.explicit_dims), how="full")
-
-    def nz(c):  # full join: either side may be absent
-        return F.coalesce(c, F.array())
-
-    merged = F.array_sort(
-        F.arrays_zip(
-            F.concat(nz(F.col(DIM_COL)), nz(F.col("__dim_b"))).alias("d"),
-            F.concat(
-                F.transform(nz(F.col(MEASURE_COL)), lambda x: x.cast("double")),
-                F.transform(nz(F.col("__m_b")), lambda x: x.cast("double")),
-            ).alias("m"),
-        )
-    )
-    out = (
-        j.withColumn("__z", merged)
-        .select(
-            *a.explicit_dims,
-            F.col("__z.d").alias(DIM_COL),
-            F.col("__z.m").alias(MEASURE_COL),
-        )
+    # full join: either side may be absent
+    coords = f"concat(coalesce({DIM_COL}, array()), coalesce(__dim_b, array()))"
+    values = "concat(" + ", ".join(f"transform(coalesce({c}, array()), x -> CAST(x AS DOUBLE))"
+                                   for c in (MEASURE_COL, "__m_b")) + ")"
+    # the (coordinate, value) pairs sort by coordinate first, in the order
+    # sort_array gives the coordinates alone (nulls first), so the two align
+    out = j.selectExpr(
+        *dims,
+        f"sort_array({coords}) AS {DIM_COL}",
+        f"transform(array_sort(zip_with({coords}, {values}, "
+        f"(d, v) -> named_struct('d', d, 'v', v))), p -> p.v) AS {MEASURE_COL}",
     )
     return Cube(
         df=out, explicit_dims=a.explicit_dims, implicit_dims=a.implicit_dims,

@@ -47,7 +47,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from ophidia_server_spark.operators.cube_ops import AGG_FNS, REDUCE_OPS
+from ophidia_server_spark.cube import AGG_FNS
+from ophidia_server_spark.operators.cube_ops import REDUCE_OPS
 
 __all__ = [
     "ParamSpec",

@@ -94,15 +94,14 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
     """
 
     def op_importcsv(engine, args: dict[str, Any], inputs):
-        pid = store.importcsv(
-            args["src_path"],
+        cube = IO.oph_importcsv(
+            spark, args["src_path"],
             explicit_dims=str(args["explicit_dims"]).split("|"),
             implicit_dim=args["implicit_dim"],
             value=args["measure"],
-            container=args["container"],
             schema=args.get("schema"),
         )
-        return pid
+        return store.register(cube, args["container"])
 
     def op_importparquet(engine, args, inputs):
         cube = IO.oph_importparquet(

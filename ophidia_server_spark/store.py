@@ -10,11 +10,11 @@ plain rows (catalog.RowCatalog), which filters.compile_massive evaluates
 in the driver as they are, so a massive-filter expansion launches no Spark
 job.
 
-Covers the lifecycle operator surface: importcsv/importparquet (oph_importnc
-analogue for the containerized environment — see io_ops for the NetCDF
-gate), duplicate (oph_duplicate), delete (oph_delete), deletecontainer,
-createcontainer/folder ops, metadata CRUD (oph_metadata), cubeschema/
-cubesize/cubeelements, explorecube, list, and the provenance graph (cubeio).
+Covers the lifecycle operator surface: register (the imports of io_ops build
+the cubes it registers), duplicate (oph_duplicate), delete (oph_delete),
+deletecontainer, createcontainer/folder ops, metadata CRUD (oph_metadata),
+cubeschema/cubesize/cubeelements, explorecube, list, and the provenance graph
+(cubeio).
 Session scoping follows the reference's path-prefix model
 (oph_filters.c:576-601).
 """
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.catalog import RowCatalog
-from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube, build_cube
+from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
 
 
 @dataclass
@@ -211,22 +211,6 @@ class CubeStore:
             storage=f"table:{tbl}", cube=None,
         )
         return pid
-
-    def importcsv(
-        self, csv_path: str, explicit_dims: list[str], implicit_dim: str,
-        value: str, container: str, schema: str | None = None, **read_opts,
-    ) -> str:
-        """oph_importcsv (oph_json_objkeys.h:115): CSV -> cube."""
-        reader = self.spark.read.option("header", "true")
-        if schema:
-            reader = reader.schema(schema)
-        else:
-            reader = reader.option("inferSchema", "true")
-        for k, v in read_opts.items():
-            reader = reader.option(k, v)
-        df = reader.csv(csv_path)
-        cube = build_cube(df, explicit_dims, implicit_dim, F.col(value), measure=value)
-        return self.register(cube, container)
 
     # -- fetch ----------------------------------------------------------------
     def get(self, pid: str) -> Cube:

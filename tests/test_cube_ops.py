@@ -1,9 +1,13 @@
 """Cube operator semantics on a tiny hand-built cube (golden expectations)."""
 
+import datetime
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from ophidia_server_spark.cube import build_cube
+from ophidia_server_spark.cube import Cube, build_cube
+from ophidia_server_spark.functions.hierarchy import concept_level
 from ophidia_server_spark.functions import primitives as prim
 from ophidia_server_spark.operators import cube_ops as C
 
@@ -291,3 +295,31 @@ def test_histogram_primitive_clamps_and_counts(spark):
         histogram(0, 0.0, 1.0)
     with _pytest.raises(ValueError):
         histogram(4, 5.0, 5.0)
+
+
+def test_cubes_from_cells_keep_their_aggregates(spark):
+    """Each cube built from cells is one cell aggregate and one packing
+    aggregate (oph_rollup packs its distinct cells without the first), over
+    an input whose own plan holds none."""
+    df = spark.createDataFrame(
+        [("a", datetime.date(2020, 1, 15), [1, 2], [1.0, 2.0]),
+         ("b", datetime.date(2020, 2, 3), [1], [3.0])],
+        "g string, day date, __dim array<int>, __m array<double>")
+    gd = Cube(df, ("g", "day"), ("t",), "v")
+    dates = Cube(df.selectExpr("g", "transform(__dim, i -> date_add(day, i)) AS __dim", "__m"),
+                 ("g",), ("t",), "v")
+    month = concept_level("month")
+    cubes = {
+        "build_cube": build_cube(gd.long(), ["g"], "t", "v"),
+        "aggregate": C.oph_aggregate(gd, "avg", ["day"]),
+        "aggregate2": C.oph_aggregate2(gd, "sum", "day", month),
+        "reduce2": C.oph_reduce2(dates, "max", month),
+        "rollup": C.oph_rollup(gd, "day"),
+    }
+
+    def aggregates(cube):
+        plan = cube.df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(r"^[\s:|+-]*Aggregate \[", plan, re.M))
+
+    assert {k: aggregates(c) for k, c in cubes.items()} == {
+        "build_cube": 2, "aggregate": 2, "aggregate2": 2, "reduce2": 2, "rollup": 1}

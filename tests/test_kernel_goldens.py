@@ -3,7 +3,10 @@ outputs: values and dtypes of every primitive, and of oph_intercube,
 oph_intercube_corr, oph_permute, oph_mergecubes_n and randcube, over arrays
 that are null, empty, one element long, or hold a null or a NaN, with int,
 double and decimal elements. `kernel_goldens.json` was recorded from the
-Python-lambda implementation that the SQL text replaced (`record`)."""
+Python-lambda implementation that the SQL text replaced (`record`). The
+cubes built from cells (build_cube, oph_aggregate, oph_aggregate2,
+oph_reduce2, oph_rollup, oph_drilldown, oph_concat) were recorded from their
+hand-written groupBy plans, before `cube.pack` replaced them."""
 
 import copy
 import decimal
@@ -16,9 +19,11 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import Row
 
-from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube, build_cube, randcube
+from ophidia_server_spark.cube import AGG_FNS, DIM_COL, MEASURE_COL, Cube, build_cube, randcube
 from ophidia_server_spark.functions import primitives as prim
+from ophidia_server_spark.functions.hierarchy import concept_level
 from ophidia_server_spark.operators import cube_ops as C
+from ophidia_server_spark.operators import io_ops as IO
 
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "kernel_goldens.json")
 
@@ -130,6 +135,45 @@ def cubes(spark):
     return out
 
 
+# cells per element type, the `nd` ones with a null and a NaN cell: `dup`
+# repeats (g, t) pairs; `day` has date coordinates; `gd` has the explicit
+# dims (g, day). Every (g, t) group of `gd` holds at most two cells, so the
+# var and std of oph_aggregate are exact whatever order the partials merge in
+CELLS = {
+    "dup": ("g string, t int, v double", [
+        ("a", 1, 1.0), ("a", 1, 2.5), ("a", 2, 3.0), ("b", 1, 4.0), ("b", 1, -1.5),
+        ("b", 3, 0.5)]),
+    "day": ("g string, t string, v double", [
+        ("a", "2020-01-15", 1.0), ("a", "2020-01-20", 2.5), ("a", "2020-02-03", 4.0),
+        ("a", "2020-03-01", 8.0), ("a", "2020-12-05", 16.0), ("b", "2020-02-28", 3.0),
+        ("b", "2020-06-10", 5.5), ("b", "2021-01-01", 7.0)]),
+    "gd": ("g string, day string, t int, v double", [
+        ("a", "2020-01-15", 1, 1.5), ("a", "2020-01-15", 2, 2.0), ("a", "2020-02-03", 1, 4.0),
+        ("a", "2020-02-03", 2, 8.0), ("b", "2020-01-15", 1, 6.0), ("b", "2020-01-20", 1, 3.0),
+        ("b", "2020-01-20", 2, 5.0)]),
+}
+ND_CELLS = {  # shape -> (row index, value) overrides
+    "dup": {0: None, 2: _NAN},
+    "day": {1: None, 6: _NAN},
+    "gd": {2: None, 5: _NAN},
+}
+NEW_DATA = [("a", 4, 3.5), ("d", 1, 7.0), ("d", 2, -2.0)]  # overlapping key a, new key d
+
+
+def cells_df(spark, shape, typ):
+    """The `shape` cells with v cast to `typ` (`nd`: double, with its null
+    and NaN) and date strings cast to dates."""
+    schema, rows = CELLS[shape]
+    if typ == "nd":
+        nd = ND_CELLS[shape]
+        rows = [(*r[:-1], nd[i]) if i in nd else r for i, r in enumerate(rows)]
+        typ = "double"
+    df = spark.createDataFrame(rows, schema)
+    date = {"day": "t", "gd": "day"}.get(shape)
+    return df.selectExpr(*(f"CAST({c} AS DATE) AS {c}" if c == date else c
+                           for c in df.columns[:-1]), f"CAST(v AS {typ}) AS v")
+
+
 def cube_output(cube):
     return output(cube.df, list(cube.explicit_dims))
 
@@ -148,6 +192,29 @@ def cube_cases(spark):
             C.oph_permute(C.oph_rollup(a, "g"), ["t", "g"]))
         cases[f"mergecubes_n_{typ}"] = lambda a=a, b=b: cube_output(
             C.oph_mergecubes_n([a, b, a]))
+    for typ in cs:
+        def cube(shape, dims, t, typ=typ):
+            return build_cube(cells_df(spark, shape, typ), dims, t, "v", measure="v")
+        base = cs[typ][1] if typ == "nd" else cs[typ][0]
+        cases[f"build_cube_dup_{typ}"] = lambda cube=cube: cube_output(cube("dup", ["g"], "t"))
+        for op in AGG_FNS:
+            cases[f"aggregate_{op}_{typ}"] = lambda cube=cube, op=op: cube_output(
+                C.oph_aggregate(cube("gd", ["g", "day"], "t"), op, ["day"]))
+        cases[f"aggregate_all_sum_{typ}"] = lambda cube=cube: cube_output(
+            C.oph_aggregate(cube("gd", ["g", "day"], "t"), "sum", ["g", "day"]))
+        cases[f"aggregate2_month_{typ}"] = lambda cube=cube: cube_output(
+            C.oph_aggregate2(cube("gd", ["g", "day"], "t"), "avg", "day", concept_level("month")))
+        for level, op in (("month", "avg"), ("season", "sum")):
+            cases[f"reduce2_{level}_{typ}"] = lambda cube=cube, level=level, op=op: cube_output(
+                C.oph_reduce2(cube("day", ["g"], "t"), op, concept_level(level)))
+        cases[f"rollup_{typ}"] = lambda cube=cube: cube_output(
+            C.oph_rollup(cube("gd", ["g", "day"], "t"), "day"))
+        cases[f"drilldown_rolled_{typ}"] = lambda cube=cube: output(
+            C.oph_drilldown(C.oph_rollup(cube("gd", ["g", "day"], "t"), "day")),
+            ["g", "day", "t"])
+        cases[f"concat_{typ}"] = lambda base=base, typ=typ: cube_output(IO.oph_concat(
+            base, spark.createDataFrame(NEW_DATA, "g string, t int, v double").selectExpr(
+                "g", "t", f"CAST(v AS {'double' if typ == 'nd' else typ}) AS v"), "t", "v"))
     cases["mergecubes_n_mixed"] = lambda: cube_output(
         C.oph_mergecubes_n([cs["int"][0], cs["double"][1], cs["decimal(10,2)"][0]]))
     for n, m in ((3, 5), (2, 1)):
@@ -249,9 +316,9 @@ _HOFS = {"transform", "filter", "aggregate", "zip_with", "exists", "forall", "ar
 _LAMBDA_OWNERS = {("operators/cube_ops.py", "oph_mergecubes")}
 
 
-def _lambda_hofs(path):
-    """Top-level def of every call in `path` that passes a Python lambda to a
-    Spark higher-order function."""
+def _calls(path, names, with_lambda=False):
+    """Top-level def of every call in `path` to a function named in `names`
+    (only those passed a Python lambda when `with_lambda`)."""
     import ast
 
     found = set()
@@ -261,17 +328,30 @@ def _lambda_hofs(path):
                 f = node.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
                 args = [*node.args, *(k.value for k in node.keywords)]
-                if name in _HOFS and any(isinstance(a, ast.Lambda) for a in args):
+                if name in names and (
+                        not with_lambda or any(isinstance(a, ast.Lambda) for a in args)):
                     found.add(getattr(top, "name", "<module>"))
     return found
+
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "ophidia_server_spark")
 
 
 def test_array_kernels_pass_no_python_lambda_to_spark():
     """Array kernels are SQL text: no Python lambda reaches a Spark
     higher-order function in the kernel modules."""
-    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "ophidia_server_spark")
     found = {(rel, owner)
-             for rel in ("functions/primitives.py", "operators/cube_ops.py", "cube.py")
-             for owner in _lambda_hofs(os.path.join(pkg, rel))}
+             for rel in ("functions/primitives.py", "operators/cube_ops.py",
+                         "operators/io_ops.py", "cube.py")
+             for owner in _calls(os.path.join(PKG, rel), _HOFS, with_lambda=True)}
     assert found - _LAMBDA_OWNERS == set()
     assert found == _LAMBDA_OWNERS  # the scan still sees the one exception
+
+
+def test_cubes_are_packed_only_by_pack():
+    """cube.pack is the one builder of a cube from cells: no other code of the
+    cube modules collects cells into arrays."""
+    found = {(rel, owner)
+             for rel in ("cube.py", "operators/cube_ops.py", "operators/io_ops.py")
+             for owner in _calls(os.path.join(PKG, rel), {"collect_list"})}
+    assert found == {("cube.py", "pack")}  # and the scan still sees pack's
