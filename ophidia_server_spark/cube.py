@@ -69,7 +69,6 @@ class Cube:
     explicit_dims: tuple[str, ...]
     implicit_dims: tuple[str, ...]
     measure: str = "measure"
-    pid: str | None = None
     level: int = 0
 
     # -- helpers ---------------------------------------------------------------

@@ -3,12 +3,23 @@
 The reference keeps cubes/containers/folders/metadata/provenance in MySQL
 (/root/reference/src/oph_ophidiadb_query.h) and fragments on I/O nodes; here
 cube payloads are parquet directories under a workspace and the catalog is
-driver-side state (tiny — one row per cube). A materialized cube is read
-once: the first `get` memoizes its DataFrame on the entry, so later fetches
-list no files and read no footer. `as_catalog` snapshots the catalog as
-plain rows (catalog.RowCatalog), which filters.compile_massive evaluates
-in the driver as they are, so a massive-filter expansion launches no Spark
-job.
+driver-side state (tiny — one row per cube). `as_catalog` snapshots the
+catalog as plain rows (catalog.RowCatalog), which filters.compile_massive
+evaluates in the driver as they are, so a massive-filter expansion launches
+no Spark job.
+
+Hot cubes live in Spark's memory store. The first `get` of a cube
+materialized as parquet reads it and `cache()`s that read on the entry
+(`CubeEntry.df`), so later requests scan columnar blocks in executor memory
+instead of planning and scanning the files again. One byte budget,
+`CUBE_CACHE_BUDGET_BYTES`, bounds the cubes one store keeps there, each sized
+by its files; the least recently fetched cube is evicted first, and a cube
+larger than the whole budget is read but not cached. `delete`,
+`deletecontainer`, eviction and the end of the store (a finalizer over its
+cached frames) unpersist a cube, because the session's CacheManager would
+otherwise keep it past its owner. Bucketed `table:` cubes are read, not
+cached (they exist for exchange-free joins); virtual cubes are lazy plans
+and never cached.
 
 Covers the lifecycle operator surface: register (the imports of io_ops build
 the cubes it registers), duplicate (oph_duplicate), delete (oph_delete),
@@ -23,6 +34,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +44,12 @@ from pyspark.sql import functions as F
 
 from ophidia_server_spark.catalog import RowCatalog
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, Cube
+
+# File bytes of the materialized cubes one store keeps in Spark's memory
+# store. Cached cubes take more room than their zstd parquet: the perfbench
+# supplier x month cube (1,000 x 12) is 21.7 KB of files and 185 KB cached,
+# 8.5x, so 32 MB of files is about 270 MB of executor memory.
+CUBE_CACHE_BUDGET_BYTES = 32 << 20
 
 
 @dataclass
@@ -45,7 +65,9 @@ class CubeEntry:
     storage: str | None = None  # parquet dir if materialized
     cube: Cube | None = None  # lazy plan if virtual
     # the read of `storage`, made by the first get() and reused (the files
-    # never change); it dies with the entry, so delete() drops it too
+    # never change); cached in Spark's memory store when the entry is a
+    # parquet dir that fits the store's budget (CubeStore._tier), and
+    # unpersisted by delete() or eviction
     df: DataFrame | None = None
 
 
@@ -63,6 +85,16 @@ class CubeStore:
     # container name -> id for [container_pid=...]; names are never removed,
     # so an id is never given to a second container
     containers: dict[str, int] = field(default_factory=dict)
+    # pid -> (file bytes, cached read) of the cubes in Spark's memory store,
+    # least recently fetched first; the lock covers first fetches and this
+    _tier: OrderedDict[str, tuple[int, DataFrame]] = field(
+        default_factory=OrderedDict, repr=False, compare=False)
+    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
+
+    def __post_init__(self):
+        # the CacheManager is the session's, so a dropped store must release
+        # its cubes; the finalizer holds the tier, not the store
+        weakref.finalize(self, _unpersist_all, self._tier).atexit = False
 
     # -- containers / folders -------------------------------------------------
     def container_id(self, container: str) -> int:
@@ -217,11 +249,42 @@ class CubeStore:
         e = self.entries[pid]
         if e.cube is not None:
             return e.cube
-        if e.df is None:  # racing first fetches build equivalent reads
-            e.df = (self.spark.table(e.storage[len("table:"):])  # bucketed table
-                    if e.storage.startswith("table:") else self.spark.read.parquet(e.storage))
-        return Cube(df=e.df, explicit_dims=e.explicit_dims, implicit_dims=e.implicit_dims,
-                    measure=e.measure, pid=pid, level=e.level)
+        with self._lock:
+            if e.df is None:
+                e.df = self._read(e)
+            elif pid in self._tier:
+                self._tier.move_to_end(pid)
+            df = e.df  # an eviction after the lock resets e.df
+        return Cube(df=df, explicit_dims=e.explicit_dims, implicit_dims=e.implicit_dims,
+                    measure=e.measure, level=e.level)
+
+    def _read(self, e: CubeEntry) -> DataFrame:
+        """Read a materialized cube; a parquet dir that fits the budget is
+        cached, evicting the least recently fetched cubes to make room."""
+        if e.storage.startswith("table:"):  # bucketed table
+            return self.spark.table(e.storage[len("table:"):])
+        df = self.spark.read.parquet(e.storage)
+        size = _dir_bytes(self._files(e))
+        if size > CUBE_CACHE_BUDGET_BYTES:
+            return df
+        while sum(b for b, _ in self._tier.values()) + size > CUBE_CACHE_BUDGET_BYTES:
+            old = next(iter(self._tier))
+            self._uncache(old)
+            self.entries[old].df = None  # a later fetch reads it back in
+        self._tier[e.pid] = (size, df.cache())
+        return df
+
+    def _uncache(self, pid: str) -> None:
+        held = self._tier.pop(pid, None)
+        if held is not None:
+            held[1].unpersist()
+
+    def _files(self, e: CubeEntry) -> str | None:
+        """The directory holding a materialized cube's files: its parquet dir,
+        or a bucketed table's path (register_bucketed)."""
+        if e.storage and e.storage.startswith("table:"):
+            return os.path.join(self.workspace, e.storage[len("table:"):])
+        return e.storage
 
     # -- lifecycle ------------------------------------------------------------
     def duplicate(self, pid: str) -> str:
@@ -234,10 +297,15 @@ class CubeStore:
 
     def delete(self, pid: str) -> None:
         """oph_delete (oph_json_objkeys.h:105): drop storage + catalog row."""
-        e = self.entries.pop(pid)
+        with self._lock:
+            e = self.entries.pop(pid)
+            self._uncache(pid)
         self.metadata.pop(e.cube_id, None)
-        if e.storage and os.path.isdir(e.storage):
-            shutil.rmtree(e.storage)
+        if e.storage and e.storage.startswith("table:"):
+            self.spark.sql(f"DROP TABLE IF EXISTS {e.storage[len('table:'):]}")
+        files = self._files(e)
+        if files and os.path.isdir(files):
+            shutil.rmtree(files)
 
     def deletecontainer(self, container: str) -> int:
         """oph_deletecontainer (oph_json_objkeys.h:107): drop all cubes in it."""
@@ -281,13 +349,9 @@ class CubeStore:
     def cubesize(self, pid: str) -> int:
         """oph_cubesize (oph_json_objkeys.h:42): bytes on storage (materialized)
         or an 8-byte/cell estimate for virtual cubes."""
-        e = self.entries[pid]
-        if e.storage and os.path.isdir(e.storage):
-            return sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(e.storage)
-                for f in fs
-            )
+        files = self._files(self.entries[pid])
+        if files and os.path.isdir(files):
+            return _dir_bytes(files)
         return self.cubeelements(pid) * 8
 
     def explorecube(self, pid: str, limit: int = 100) -> DataFrame:
@@ -369,6 +433,16 @@ class CubeStore:
             lineage=list(self.lineage),
             session_prefix=self.session_prefix,
         )
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(dp, f)) for dp, _, fs in os.walk(path) for f in fs)
+
+
+def _unpersist_all(tier: OrderedDict) -> None:
+    for _, df in tier.values():
+        df.unpersist()
+    tier.clear()
 
 
 def save_store(store: CubeStore, path: str) -> None:

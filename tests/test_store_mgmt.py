@@ -1,8 +1,14 @@
 """CubeStore lifecycle + management shims (golden behavior tests)."""
 
+import ast
+import gc
 import os
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from ophidia_server_spark.cube import DIM_COL, MEASURE_COL, build_cube
@@ -12,16 +18,19 @@ from ophidia_server_spark.operators.cube_ops import REDUCE_OPS, oph_reduce
 from ophidia_server_spark.store import CubeStore
 
 
-@pytest.fixture()
-def store(spark, tables, tmp_path):
-    st = CubeStore(spark=spark, workspace=str(tmp_path))
+def _qty_cube(tables):
     li = tables["lineitem"].withColumn("month", F.month("l_shipdate"))
-    cube = build_cube(
+    return build_cube(
         li, ["l_returnflag", "l_linestatus"], "month",
         F.col("l_quantity").cast("decimal(18,2)"), measure="qty",
     )
+
+
+@pytest.fixture()
+def store(spark, tables, tmp_path):
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
     st.createcontainer("c1", "/exp")
-    pid = st.register(cube, "c1", path="/exp", materialize=True)
+    pid = st.register(_qty_cube(tables), "c1", path="/exp", materialize=True)
     return st, pid
 
 
@@ -225,6 +234,187 @@ def test_materialized_cube_is_read_once(store, spark, tables, tmp_path):
     st.delete(pid)
     with pytest.raises(KeyError):
         st.get(pid)
+
+
+def _cached(df):
+    return df.storageLevel != StorageLevel.NONE
+
+
+def _tier_bytes(st):
+    return sum(size for size, _ in st._tier.values())
+
+
+def _plan_nodes(plan):
+    """Node names of a physical plan, not descending into a cached
+    relation's own plan (InMemoryTableScan has no children)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def test_delete_and_deletecontainer_unpersist_the_cube(store):
+    st, pid = store
+    df = st.get(pid).df
+    assert _cached(df) and list(st._tier) == [pid]
+    other = st.register(st.get(pid), "c2", materialize=True)
+    other_df = st.get(other).df
+    st.delete(pid)
+    assert not _cached(df) and list(st._tier) == [other]
+    assert st.deletecontainer("c2") == 1
+    assert not _cached(other_df) and not st._tier
+
+
+def test_tier_evicts_least_recently_fetched_within_budget(spark, tables, tmp_path,
+                                                          monkeypatch):
+    from ophidia_server_spark import store as store_mod
+
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    cube = _qty_cube(tables)
+    pids = [st.register(cube, "c", materialize=True) for _ in range(3)]
+    sizes = [st.cubesize(p) for p in pids]
+    budget = sum(sizes) - 1  # any two cubes fit, all three do not
+    monkeypatch.setattr(store_mod, "CUBE_CACHE_BUDGET_BYTES", budget)
+    dfs = {}
+    for p in pids[:2]:
+        dfs[p] = st.get(p).df
+        assert _tier_bytes(st) <= budget
+    st.get(pids[0])  # pids[1] is now the least recently fetched
+    dfs[pids[2]] = st.get(pids[2]).df
+    assert list(st._tier) == [pids[0], pids[2]]
+    assert _tier_bytes(st) == sizes[0] + sizes[2] <= budget
+    assert not _cached(dfs[pids[1]])
+    assert _cached(dfs[pids[0]]) and _cached(dfs[pids[2]])
+    # an evicted cube is read back in on its next fetch, evicting in turn
+    again = st.get(pids[1]).df
+    assert again is not dfs[pids[1]] and _cached(again)
+    assert list(st._tier) == [pids[2], pids[1]] and not _cached(dfs[pids[0]])
+    assert _tier_bytes(st) <= budget
+    # a cube larger than the whole budget is read but not cached
+    monkeypatch.setattr(store_mod, "CUBE_CACHE_BUDGET_BYTES", min(sizes) - 1)
+    big = st.register(cube, "c", materialize=True)
+    big_df = st.get(big).df
+    assert big not in st._tier and not _cached(big_df)
+    assert big_df.count() == 6
+
+
+def test_racing_first_fetches_cache_the_cube_once(store):
+    # more threads than cores and a short switch interval: a first fetch
+    # outside the lock would cache the cube twice or count its bytes twice
+    st, pid = store
+    workers = 2 * (os.cpu_count() or 2)
+    barrier = threading.Barrier(workers, timeout=60)
+
+    def fetch(_):
+        barrier.wait()
+        return st.get(pid).df
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(workers) as pool:
+            futures = [pool.submit(fetch, i) for i in range(workers)]
+            dfs = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(df is dfs[0] for df in dfs) and _cached(dfs[0])
+    assert list(st._tier) == [pid] and _tier_bytes(st) == st.cubesize(pid)
+
+
+def test_fetch_keeps_its_frame_when_evicted_after_the_lock(spark, tables, tmp_path,
+                                                           monkeypatch):
+    # room for one cube: a fetch of the other one, run the moment a fetch
+    # releases the store's lock, evicts the cube that fetch is returning
+    from ophidia_server_spark import store as store_mod
+
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    cube = _qty_cube(tables)
+    pids = [st.register(cube, "c", materialize=True) for _ in range(2)]
+    monkeypatch.setattr(store_mod, "CUBE_CACHE_BUDGET_BYTES", max(map(st.cubesize, pids)))
+
+    class EvictOnRelease:
+        lock, armed = threading.Lock(), False
+
+        def __enter__(self):
+            self.lock.acquire()
+
+        def __exit__(self, *exc):
+            self.lock.release()
+            if self.armed:
+                self.armed = False
+                st.get(pids[1])
+
+    st._lock = EvictOnRelease()
+    st.get(pids[0])
+    st._lock.armed = True
+    got = st.get(pids[0])
+    assert list(st._tier) == [pids[1]] and st.entries[pids[0]].df is None
+    assert got.df is not None and got.df.count() == 6
+
+
+def test_dropped_store_releases_its_cubes(spark, tables, tmp_path):
+    st = CubeStore(spark=spark, workspace=str(tmp_path))
+    pid = st.register(_qty_cube(tables), "c", materialize=True)
+    df = st.get(pid).df
+    assert _cached(df)
+    del st
+    gc.collect()
+    assert not _cached(df)
+
+
+def test_window_request_caches_only_the_materialized_cube(store, spark):
+    from ophidia_server_spark.plans.server import build_default_engine
+
+    st, pid = store
+    eng = build_default_engine(spark, st)
+    cold = eng.run(_window_workflow(pid))
+    assert cold.status == "OPH_ODB_STATUS_COMPLETED"
+    assert list(st._tier) == [pid] and _cached(st.get(pid).df)
+    for name in ("sub", "apply", "reduce"):
+        virtual = cold.results[name].value
+        assert st.entries[virtual].cube is not None
+        assert not _cached(st.get(virtual).df)
+    warm = eng.run(_window_workflow(pid))
+    assert warm.status == "OPH_ODB_STATUS_COMPLETED"
+    reduced = st.get(warm.results["reduce"].value).df
+    nodes = _plan_nodes(reduced._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in nodes, nodes
+    assert not [n for n in nodes if n.startswith("Scan ")], nodes
+    assert list(st._tier) == [pid]
+
+
+def test_bucketed_cube_delete_and_cubesize_use_its_files(store, spark, tables):
+    st, _pid = store
+    li = tables["lineitem"].withColumn("month", F.month("l_shipdate"))
+    pid = st.register_bucketed(
+        build_cube(li, ["l_returnflag"], "month", "l_quantity", measure="qty"),
+        "cb", n_buckets=2)
+    table = st.entries[pid].storage[len("table:"):]
+    files = os.path.join(st.workspace, table)
+    on_disk = sum(os.path.getsize(os.path.join(dp, f))
+                  for dp, _, fs in os.walk(files) for f in fs)
+    assert st.cubesize(pid) == on_disk > st.cubeelements(pid) * 8
+    assert pid not in st._tier  # bucketed cubes are read, not cached
+    st.delete(pid)
+    assert not spark.catalog.tableExists(table)
+    assert not os.path.exists(files)
+
+
+def test_store_reads_no_environment_variable():
+    # the cache budget is a constant: the store has no env knob
+    from ophidia_server_spark import store as store_mod
+
+    tree = ast.parse(open(store_mod.__file__).read())
+    os_attrs = [n.attr for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+                and n.value.id == "os"]
+    assert "path" in os_attrs  # the scan sees the module's os calls
+    assert not {"environ", "environb", "getenv", "getenvb"} & set(os_attrs)
+    from_os = [a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+               and n.module == "os" for a in n.names]
+    assert from_os == []
 
 
 @pytest.mark.parametrize("max_workers", [1, 2])
