@@ -314,7 +314,11 @@ def _p(name, type="string", mandatory=False, default=None, minvalue=None,
 YN = ("yes", "no")
 
 # ---- flow-control / management operators: ported from the reference's own
-# ---- served XMLs (etc/xml/OPH_*_operator_1.0.xml; grammar ophidiaoperator.dtd)
+# ---- served XMLs (etc/xml/OPH_*_operator_1.0.xml; grammar ophidiaoperator.dtd).
+# ---- The served flow operators (set/input/wait) read "-" as unset. Two
+# ---- defaults are the engine's, not the XML's (1 and "Task 0"): oph_set
+# ---- widens no index unless `offset` asks, and an oph_input without a
+# ---- `taskname` wakes no task, setting its variables as oph_set does.
 
 _d("oph_for", "Loop over a set of values (flow control).",
    _p("key", mandatory=True, doc="loop variable name"),
@@ -344,13 +348,13 @@ _d("oph_set", "Set workflow variables.",
    _p("keys", default="-", multivalue=True),
    _p("value", default="-", multivalue=True),
    _p("subset_filter", default="no", values=("yes", "no", "real")),
-   _p("offset", type="real", default="1", minvalue=0),
+   _p("offset", type="real", default="0", minvalue=0),
    _p("id", type="int", minvalue=0),
    _p("save", default="yes", values=YN))
 
 _d("oph_input", "Send data to a waiting task.",
    _p("id", type="int", minvalue=0),
-   _p("taskname", default="Task 0"),
+   _p("taskname", default="-"),
    _p("action", default="continue", values=("continue", "abort", "wait")),
    _p("key", default="-", multivalue=True),
    _p("value", default="-", multivalue=True),

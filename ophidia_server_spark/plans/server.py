@@ -922,12 +922,12 @@ def build_default_engine(spark: SparkSession, store: CubeStore) -> WorkflowEngin
         )
 
     def resolve_pid(cid: str) -> str:
-        """Expanded cube id -> its PID; an explicit PID the store does not
-        hold is a named workflow error."""
-        for pid, e in store.entries.items():
-            if str(e.cube_id) == cid:
-                return pid
-        raise WorkflowError(f"massive selection names unknown cube {cid}")
+        """Expanded cube id -> its PID, one lookup; an explicit PID the store
+        does not hold is a named workflow error."""
+        pid = store.by_id.get(int(cid)) if cid.isdigit() else None
+        if pid is None:
+            raise WorkflowError(f"massive selection names unknown cube {cid}")
+        return pid
 
     return WorkflowEngine(
         {

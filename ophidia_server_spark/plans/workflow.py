@@ -20,6 +20,14 @@ plans; Spark parallelizes *within* each task, the engine walks the DAG in
 dependency order (ready set = indegree 0, exactly the reference's
 residual_deps_num countdown). Flow-control operators never touch Spark.
 
+`WorkflowEngine.run` is a loop over named steps: `_prepare` (parse,
+branches, loops, DAG), `_ready_wave`, `_task_args` (role check,
+substitution, wait carry, descriptor check), `_flow` (oph_set/oph_input/
+oph_wait served in-process), `_dispatch`, `_settle` (on_error) and `_exit`
+(exit actions). Every task's arguments pass its descriptor: an operator
+gets `operator_args`; a served flow operator gets `_flow_args`, the
+reference's strings, refused with the reference's own messages.
+
 Workflow JSON shape (mirrors the reference request schema):
   {"name": ..., "variables": {k: v},
    "tasks": [{"name": t, "operator": op, "arguments": {k: v},
@@ -35,16 +43,35 @@ import re
 import time
 from collections import deque
 from dataclasses import dataclass, field
+from datetime import datetime
 from typing import Any, Callable
 
+from ophidia_server_spark import auth
+from ophidia_server_spark.plans.descriptors import (
+    DESCRIPTORS, ParamValidationError, operator_args, validate_task)
+from ophidia_server_spark.plans.response import extract_from_json
 from ophidia_server_spark.session import fan_out
 
 VAR_RE = re.compile(r"@\{(\w+)\}|@(\w+)")
 IDX_RE = re.compile(r"&\{(\w+)\}|&(\w+)")
 
-FLOW_OPERATORS = {
-    "oph_for", "oph_endfor", "oph_if", "oph_elseif", "oph_else", "oph_endif",
-    "oph_set", "oph_input", "oph_wait",
+COMPLETED, ERROR, SKIPPED = (
+    "OPH_ODB_STATUS_COMPLETED", "OPH_ODB_STATUS_ERROR", "OPH_ODB_STATUS_SKIPPED")
+
+# the flow operators run() serves itself; oph_for/oph_if blocks are
+# unrolled and selected before the first wave
+FLOW_SERVED = ("oph_set", "oph_input", "oph_wait")
+
+# the reference's message for a flow operator's refused parameter
+# (oph_flow_control_operators.c), by (operator, parameter); any other
+# refusal raises the descriptor's named error
+_FLOW_MESSAGES = {
+    ("oph_wait", "type"): "Wrong type '{}'!",
+    ("oph_wait", "timeout_type"): "Wrong timeout type '{}'!",
+    ("oph_wait", "run"): "Wrong value '{}' for parameter 'run'!",
+    ("oph_set", "id"): "Wrong workflow identifier '{}'!",
+    ("oph_input", "id"): "Wrong workflow identifier '{}'!",
+    ("oph_input", "action"): "Wrong action '{}'!",
 }
 
 # Task types the reference's parser accepts (oph_workflow_define.h:109-112;
@@ -129,6 +156,32 @@ def _op_external_command(engine, args: dict, inputs: dict) -> dict:
 
 class WorkflowError(Exception):
     pass
+
+
+def _flow_args(op: str, args: dict) -> dict:
+    """A served flow operator's parameters as the reference hands them over:
+    the request's strings, extras kept (oph_set's `taskname`, oph_wait's
+    `input`, the ignored `cube`/`cwd`), checked against the descriptor with
+    its defaults filled (`strict=False`). A "-" default is unset and stays
+    out. A refused value raises the reference's message for it."""
+    try:
+        checked = validate_task(op, args, strict=False)
+    except ParamValidationError as e:
+        msg = _FLOW_MESSAGES.get((op, e.param))
+        raise WorkflowError(msg.format(args[e.param]) if msg else str(e)) from None
+    return {**args, **{k: v for k, v in checked.items() if k in args or v != "-"}}
+
+
+def _given(args: dict, key: str, unset: tuple) -> str | None:
+    """args[key] stripped, or None when absent, empty or one of `unset`."""
+    v = args.get(key)
+    s = str(v).strip() if v is not None else ""
+    return s if s and s.lower() not in unset else None
+
+
+def _split(value) -> list[str]:
+    """A multivalue parameter's '|'-separated items; an unset one has none."""
+    return [] if value is None else str(value).split("|")
 
 
 # ---------------------------------------------------------------------------
@@ -476,7 +529,31 @@ class TaskResult:
 class WorkflowRun:
     results: dict[str, TaskResult] = field(default_factory=dict)
     variables: dict[str, Any] = field(default_factory=dict)
-    status: str = "OPH_ODB_STATUS_COMPLETED"
+    status: str = COMPLETED
+
+
+@dataclass
+class _RunState:
+    """One run()'s state, shared by its steps."""
+
+    run: WorkflowRun
+    ops: dict[str, Callable]
+    tasks: list[dict]
+    by_name: dict[str, dict]
+    order: list[str]
+    role: str | int | None
+    checkpoint_store: dict | None
+    # failed tasks whose dependents are skipped (on_error skip/break)
+    blocked: set[str] = field(default_factory=set)
+    stopped: bool = False
+
+    def record(self, res: TaskResult) -> None:
+        self.run.results[res.name] = res
+        if self.checkpoint_store is not None and res.status == COMPLETED:
+            self.checkpoint_store[res.name] = res
+
+    def pending(self) -> list[str]:
+        return [n for n in self.order if n not in self.run.results]
 
 
 class WorkflowEngine:
@@ -650,15 +727,9 @@ class WorkflowEngine:
         it; `output` (the documented alias that "will be overwritten")
         overrides both; `input` is the fallback when nothing else is set
         (oph_flow_control_operators.c:2081-2135)."""
-        unset = ("", "-", "null")
-
-        def get(k):
-            v = args.get(k)
-            s = str(v).strip() if v is not None else ""
-            return s if s.lower() not in unset else None
-
-        filename = get("filename")
-        fileref = get("fileref")
+        unset = ("-", "null")
+        filename = _given(args, "filename", unset)
+        fileref = _given(args, "fileref", unset)
         if fileref:
             try:
                 with open(fileref) as fh:
@@ -667,12 +738,8 @@ class WorkflowEngine:
                     filename = first
             except OSError:
                 pass    # unreadable fileref: keep the explicit filename
-        output = get("output")
-        if output:
-            filename = output
-        if not filename:
-            filename = get("input")
-        return filename
+        return (_given(args, "output", unset) or filename
+                or _given(args, "input", unset))
 
     def _wait_carry(self, args: dict) -> dict | None:
         """Subset carry of a completed file wait: the reference forwards the
@@ -680,80 +747,57 @@ class WorkflowEngine:
         offset (and measure) to its dependent tasks' argument lists by
         appending them to the notify string (OPH_WAIT_operator_1.0.xml;
         oph_flow_control_operators.c:2136-2185 subset_params/add_to_notify).
-        Here the carry rides on the TaskResult value; run() injects each key
-        into a dependent task's arguments when that task's descriptor knows
-        the parameter and the request didn't set it explicitly."""
-        if str(args.get("type", "clock")).lower() != "file":
-            return None
-        unset = ("", "-", "null", "none", "all")
-        carry: dict[str, str] = {}
-        filename = self._resolve_wait_file(args)
-        if filename:
-            carry["src_path"] = filename
+        `args` are the ones the request gave: no wait default rides along.
+        _task_args puts each key into a dependent task's arguments that its
+        descriptor knows and the request left out."""
+        carry = {"src_path": self._resolve_wait_file(args)}
         for k in ("measure", "subset_dims", "subset_type", "subset_filter",
                   "time_filter", "offset"):
-            v = args.get(k)
-            s = str(v).strip() if v is not None else ""
-            if s and s.lower() not in unset:
-                carry[k] = s
-        return carry or None
+            carry[k] = _given(args, k, ("-", "null", "none", "all"))
+        return {k: v for k, v in carry.items() if v} or None
 
-    def _wait(self, args: dict, run: "WorkflowRun") -> str:
-        run_arg = str(args.get("run", "yes")).lower()
-        if run_arg not in ("yes", "no"):
-            raise WorkflowError(f"Wrong value '{run_arg}' for parameter 'run'!")
-        wtype = str(args.get("type", "clock")).lower()
-        if wtype not in ("clock", "file", "input"):
-            raise WorkflowError(f"Wrong type '{wtype}'!")
-        ttype = str(args.get("timeout_type", "duration")).lower()
-        if ttype not in ("duration", "deadline"):
-            raise WorkflowError(f"Wrong timeout type '{ttype}'!")
-        raw_timeout = str(args.get("timeout", 0) or 0)
-        if ttype == "deadline":
-            from datetime import datetime
-
-            deadline_dt = datetime.strptime(raw_timeout, "%Y-%m-%d %H:%M:%S")
+    def _wait(self, args: dict, run: WorkflowRun) -> str:
+        """Serve one oph_wait over its `_flow_args`, which fill every
+        parameter; one missing here (a direct call) is unset: no timeout and
+        a clock wait. Waits are capped at 30 s."""
+        wtype = args.get("type")
+        timeout = args.get("timeout")
+        if timeout is None:
+            remaining = 0.0
+        elif args.get("timeout_type") == "deadline":
+            deadline_dt = datetime.strptime(str(timeout), "%Y-%m-%d %H:%M:%S")
             remaining = (deadline_dt - datetime.now()).total_seconds()
         else:
-            remaining = float(raw_timeout)
+            remaining = float(timeout)
         if remaining < 0 and wtype != "input":
             # negative duration / past deadline: infinity is input-only
-            raise WorkflowError(
-                "Timeout can be infinity only for type 'input'. "
-                "Use a non-negative value!"
-            )
-        if wtype == "input" and args.get("key") is not None:
-            keys = [k for k in str(args.get("key", "")).split("|") if k]
+            raise WorkflowError("Timeout can be infinity only for type 'input'. "
+                                "Use a non-negative value!")
+        keys = [k for k in _split(args.get("key")) if k]
+        if wtype == "input" and keys:
             self._validate_var_keys(keys)
-            if len(keys) > 1:
-                vals = str(args.get("value", "")).split("|")
-                if len(vals) < len(keys):
-                    raise WorkflowError("Bad number of keys in parameter 'value'.")
+            if len(keys) > 1 and len(_split(args.get("value"))) < len(keys):
+                raise WorkflowError("Bad number of keys in parameter 'value'.")
         timeout = min(max(remaining, 0.0), 30.0)
-        if run_arg == "no":
-            return "OPH_ODB_STATUS_COMPLETED"  # validated dry run
-        if wtype == "clock":
-            time.sleep(timeout)
-            return "OPH_ODB_STATUS_COMPLETED"
+        if args.get("run") == "no":
+            return COMPLETED  # validated dry run
         if wtype == "file":
             deadline = time.time() + timeout
-            path = self._resolve_wait_file(args) or str(args.get("filename", ""))
-            import os
-
+            path = self._resolve_wait_file(args) or ""
             while not os.path.exists(path):
                 if time.time() >= deadline:
-                    return "OPH_ODB_STATUS_ERROR"
+                    return ERROR
                 time.sleep(min(0.05, timeout or 0.05))
-            return "OPH_ODB_STATUS_COMPLETED"
+            return COMPLETED
         if wtype == "input":
             # satisfied when the awaited variable exists (set by oph_input/
             # oph_set earlier in the DAG; the reference blocks on a condition
             # variable signalled by oph_notify)
-            key = str(args.get("key", ""))
-            return (
-                "OPH_ODB_STATUS_COMPLETED" if key in run.variables else "OPH_ODB_STATUS_ERROR"
-            )
-        raise WorkflowError(f"unknown wait type {wtype!r}")
+            return COMPLETED if args.get("key") in run.variables else ERROR
+        if wtype not in (None, "clock"):
+            raise WorkflowError(_FLOW_MESSAGES["oph_wait", "type"].format(wtype))
+        time.sleep(timeout)
+        return COMPLETED
 
     def _massive_expand(
         self, args: dict
@@ -834,32 +878,47 @@ class WorkflowEngine:
             return "src_path", files, extras
         return None
 
-    # -- oph_set value handling (subset_filter compression + response-cell
-    #    addressing, oph_flow_control_operators.c:1150-1571 / :674-988) --------
-    def _set_value(self, args: dict, run: "WorkflowRun") -> Any:
-        value = args.get("value")
-        src_task = str(args.get("taskname", "") or "")
-        if src_task:
-            # value is an address into a prior task's response
-            # (oph_extract_from_json semantics)
-            from ophidia_server_spark.plans.response import extract_from_json
-
-            if src_task not in run.results:
-                raise WorkflowError(f"oph_set taskname {src_task!r} has no result")
-            value = extract_from_json(run.results[src_task].value, str(value))
-        sf = str(args.get("subset_filter", "no")).lower()
-        if sf in ("yes", "real") and value is not None:
-            # compress a |-separated value list into a 1-based index subset
-            # string (the reference turns coordinate lists into index lists;
-            # offset widens each index)
-            items = str(value).split("|")
-            off = int(float(args.get("offset", 0) or 0))
-            idxs = []
-            for i, _ in enumerate(items, start=1):
-                lo, hi = max(1, i - off), i + off
-                idxs.append(f"{lo}:{hi}" if off else str(i))
-            value = "|".join(idxs)
-        return value
+    # -- oph_set / oph_input (oph_flow_control_operators.c:1150-1571; oph_input
+    #    shares oph_set_impl and wakes a waiting task, :3155-3262) -----------
+    def _flow(self, w: _RunState, t: dict, args: dict) -> TaskResult:
+        """Serve a flow operator over its `_flow_args`."""
+        name, op = t["name"], t["operator"]
+        if op == "oph_wait":
+            status = self._wait(args, w.run)
+            carry = None
+            if status == COMPLETED and args["type"] == "file":
+                carry = self._wait_carry({k: args[k] for k in t.get("arguments", {})})
+            return TaskResult(name, status, {"__wait_carry__": carry} if carry else None)
+        keys = [k for k in _split(args.get("key")) if k]
+        warning = self._validate_var_keys(keys)
+        value, src = args.get("value"), args.get("taskname")
+        if op == "oph_input" and src and src not in w.run.results:
+            # the oph_wait it wakes, matched by name (:1338)
+            if not any(x["name"] == src and x.get("operator") == "oph_wait" for x in w.tasks):
+                raise WorkflowError("Invalid task name, task not found or ambiguous!")
+            src = None
+        if src:
+            # `value` addresses that task's response (oph_extract_from_json,
+            # :674-988)
+            if src not in w.run.results:
+                raise WorkflowError(f"oph_set taskname {src!r} has no result")
+            value = extract_from_json(w.run.results[src].value, str(value))
+        if op == "oph_set" and args["subset_filter"] != "no" and value is not None:
+            # the value list becomes its 1-based index subset, each index
+            # widened by `offset`
+            off = int(float(args["offset"]))
+            value = "|".join(f"{max(1, i - off)}:{i + off}" if off else str(i)
+                             for i in range(1, len(_split(value)) + 1))
+        if len(keys) > 1:
+            # multi-key zip: each key gets its '|'-slot; fewer values than
+            # keys is the reference's exact error
+            vals = _split(value)
+            if len(vals) < len(keys):
+                raise WorkflowError("Bad number of keys in parameter 'value'.")
+            w.run.variables.update(zip(keys, vals))
+        else:
+            w.run.variables[keys[0]] = value
+        return TaskResult(name, COMPLETED, value, warning or None)
 
     @staticmethod
     def _backoff_delay(t: dict, attempt: int, cap: float = 2.0) -> float:
@@ -888,19 +947,15 @@ class WorkflowEngine:
         for attempt in range(1, retries + 1):
             try:
                 value = fn(self, args, inputs)
-                return TaskResult(
-                    name, "OPH_ODB_STATUS_COMPLETED", value, attempts=attempt,
-                    elapsed=round(time.perf_counter() - t0, 6),
-                )
+                return TaskResult(name, COMPLETED, value, attempts=attempt,
+                                  elapsed=round(time.perf_counter() - t0, 6))
             except Exception as e:  # noqa: BLE001 - operator errors feed on_error policy
                 last_err = f"{type(e).__name__}: {e}"
                 delay = self._backoff_delay(t, attempt)
                 if delay and attempt < retries:
                     time.sleep(delay)
-        return TaskResult(
-            name, "OPH_ODB_STATUS_ERROR", error=last_err, attempts=retries,
-            elapsed=round(time.perf_counter() - t0, 6),
-        )
+        return TaskResult(name, ERROR, error=last_err, attempts=retries,
+                          elapsed=round(time.perf_counter() - t0, 6))
 
     def _exec_massive(
         self, t: dict, fn: Callable, args: dict, inputs: dict, items: list[str],
@@ -915,9 +970,8 @@ class WorkflowEngine:
         members, and all of them stay in the caller's Spark job group."""
         name = t["name"]
         if str(args.get("run", "yes")).lower() == "no":
-            return TaskResult(name, "OPH_ODB_STATUS_COMPLETED", {"expansion": items})
+            return TaskResult(name, COMPLETED, {"expansion": items})
         ncores = int(t.get("ncores", 1) or 1)
-
         by_item = dict(zip(items, extras)) if extras else {}
 
         def one(item):
@@ -926,8 +980,8 @@ class WorkflowEngine:
         try:
             values = fan_out(one, items, ncores, lambda _: f"mf_{name}")
         except Exception as e:  # noqa: BLE001
-            return TaskResult(name, "OPH_ODB_STATUS_ERROR", error=f"{type(e).__name__}: {e}")
-        return TaskResult(name, "OPH_ODB_STATUS_COMPLETED", values)
+            return TaskResult(name, ERROR, error=f"{type(e).__name__}: {e}")
+        return TaskResult(name, COMPLETED, values)
 
     def _dispatch(self, t: dict, fn: Callable, args: dict, inputs: dict) -> TaskResult:
         """Run one compute task: fanned out to light tasks when an argument
@@ -937,7 +991,7 @@ class WorkflowEngine:
             return self._exec_massive(t, fn, args, inputs, exp[1], exp[0], exp[2])
         return self._exec_task(t, fn, args, inputs)
 
-    # -- main entry ------------------------------------------------------------
+    # -- run() and its steps -----------------------------------------------------
     def run(
         self,
         workflow: dict | str,
@@ -964,223 +1018,145 @@ class WorkflowEngine:
         with PermissionError through the normal on_error policy. None means
         a trusted driver-side caller (no enforcement).
         """
+        w = self._prepare(workflow, extra_operators, checkpoint_store, resume_from, role)
+        while not w.stopped and (wave := self._ready_wave(w)) is not None:
+            results, batch = [], []
+            for t in wave:
+                args = self._task_args(w, t)
+                if isinstance(args, TaskResult):
+                    results.append(args)
+                elif t.get("operator") in FLOW_SERVED:
+                    w.record(self._flow(w, t, args))
+                else:
+                    batch.append(self._compute(w, t, args))
+            # the wave's compute tasks, on up to max_workers threads, each
+            # concurrent one in its own FAIR pool wf_<task> so wave members
+            # interleave their Spark jobs instead of queueing FIFO
+            results += fan_out(lambda item: self._dispatch(*item), batch, max_workers,
+                               lambda item: f"wf_{item[0]['name']}")
+            self._settle(w, results)
+        self._exit(w)
+        return w.run
+
+    def _prepare(self, workflow, extra_operators, checkpoint_store, resume_from,
+                 role) -> _RunState:
+        """Parse the request, select if/else branches, unroll loops and order
+        the DAG; completed results of a resumed run count as done."""
         if isinstance(workflow, str):
             workflow = parse_request(workflow)
         run = WorkflowRun(variables=dict(workflow.get("variables", {})))
-        ops = {**self.operators, **(extra_operators or {})}
         tasks = rewrite_task_types(list(workflow.get("tasks", [])))
         tasks = self._select_branches(tasks, run.variables)
         tasks = self._expand_loops(tasks, run.variables)
         order = validate_dag(tasks)
         by_name = {t["name"]: t for t in tasks}
-        if resume_from:
-            for n, res in resume_from.items():
-                if n in by_name and getattr(res, "status", None) == "OPH_ODB_STATUS_COMPLETED":
-                    run.results[n] = res
+        for n, res in (resume_from or {}).items():
+            if n in by_name and getattr(res, "status", None) == COMPLETED:
+                run.results[n] = res
+        ops = {**self.operators, **(extra_operators or {})}
+        return _RunState(run, ops, tasks, by_name, order, role, checkpoint_store)
 
-        def record(res: TaskResult) -> None:
-            run.results[res.name] = res
-            if checkpoint_store is not None and res.status == "OPH_ODB_STATUS_COMPLETED":
-                checkpoint_store[res.name] = res
+    @staticmethod
+    def _ready_wave(w: _RunState) -> list[dict] | None:
+        """The pending tasks whose dependencies all have results, or None
+        when nothing is pending. A ready task behind a skipped dependency,
+        or behind a failure whose on_error blocks it, is recorded SKIPPED
+        instead (oph_workflow_define.h:63-70)."""
+        pending = w.pending()
+        if not pending:
+            return None
+        results = w.run.results
+        ready = [w.by_name[n] for n in pending
+                 if all(d in results for d in w.by_name[n].get("dependencies", []))]
+        if not ready:
+            raise WorkflowError("deadlock: no ready tasks")  # pragma: no cover
+        wave = []
+        for t in ready:
+            if any(results[d].status == SKIPPED
+                   or (results[d].status == ERROR and d in w.blocked)
+                   for d in t.get("dependencies", [])):
+                w.record(TaskResult(t["name"], SKIPPED))
+            else:
+                wave.append(t)
+        return wave
 
-        # block propagation: a failed task skips its dependents unless its
-        # on_error is continue/nop (oph_workflow_define.h:63-70)
-        blocked: set[str] = set()
-        stop_scheduling = False
-        pending = [n for n in order if n not in run.results]
-        while pending and not stop_scheduling:
-            wave: list[str] = []
-            for n in pending:
-                deps = by_name[n].get("dependencies", [])
-                if all(d in run.results for d in deps):
-                    wave.append(n)
-            if not wave:
-                raise WorkflowError("deadlock: no ready tasks")  # pragma: no cover
-            compute_batch: list[tuple[dict, Callable, dict, dict]] = []
-            results: list[TaskResult] = []
-            for name in wave:
-                t = by_name[name]
-                op = t.get("operator")
-                deps = t.get("dependencies", [])
-                if any(
-                    run.results[d].status == "OPH_ODB_STATUS_SKIPPED"
-                    or (run.results[d].status == "OPH_ODB_STATUS_ERROR" and d in blocked)
-                    for d in deps
-                ):
-                    record(TaskResult(name, "OPH_ODB_STATUS_SKIPPED"))
-                    continue
-                if role is not None and op:
-                    from ophidia_server_spark import auth as _auth
+    @staticmethod
+    def _task_args(w: _RunState, t: dict) -> dict | TaskResult:
+        """The arguments task `t` runs with, or the TaskResult of its
+        failure. In order: the role check; `@var` substitution, task
+        variables shadowing workflow ones (oph_workflow_utils.c:183-186);
+        the carry of a completed file wait it depends on (keys its
+        descriptor knows, never over an explicit argument); the check
+        against its descriptor before dispatch (oph_tp_task_params_parser,
+        oph_task_parser_library.h:67), which fills every default."""
+        name, op = t["name"], t.get("operator")
+        if w.role is not None and op:
+            try:
+                auth.check_role(w.role, op)
+            except PermissionError as e:
+                return TaskResult(name, ERROR, error=f"PermissionError: {e}")
+        scope = {**w.run.variables, **t.get("variables", {})}
+        args = {k: substitute(v, scope) for k, v in t.get("arguments", {}).items()}
+        desc = DESCRIPTORS.get(op)
+        for d in t.get("dependencies", []):
+            value = getattr(w.run.results[d], "value", None)
+            if isinstance(value, dict) and "__wait_carry__" in value:
+                for k, v in value["__wait_carry__"].items():
+                    if desc is None or k in desc.by_name:
+                        args.setdefault(k, v)
+        if op in FLOW_SERVED:
+            return _flow_args(op, args)
+        try:
+            return operator_args(op, args)
+        except ParamValidationError as e:
+            # the task's on_error policy applies (abort by default)
+            return TaskResult(name, ERROR, error=f"ParamValidationError: {e}")
 
-                    try:
-                        _auth.check_role(role, op)
-                    except PermissionError as e:
-                        results.append(TaskResult(
-                            name, "OPH_ODB_STATUS_ERROR",
-                            error=f"PermissionError: {e}",
-                        ))
-                        continue
-                # task-level variables shadow workflow variables during this
-                # task's substitution (oph_workflow_utils.c:183-186 scoping)
-                scope = {**run.variables, **t.get("variables", {})}
-                args = {k: substitute(v, scope) for k, v in t.get("arguments", {}).items()}
-                # file-wait subset carry: a completed oph_wait dependency
-                # forwards its watched file + subset params into this task's
-                # arguments (keys the descriptor knows, never overriding an
-                # explicit argument) — oph_flow_control_operators.c:2136-2185
-                for d in deps:
-                    wres = run.results.get(d)
-                    wval = getattr(wres, "value", None)
-                    if isinstance(wval, dict) and "__wait_carry__" in wval:
-                        from ophidia_server_spark.plans.descriptors import (
-                            DESCRIPTORS)
+    @staticmethod
+    def _compute(w: _RunState, t: dict, args: dict) -> tuple:
+        """A compute task's dispatch item: (task, operator, args, inputs)."""
+        fn = w.ops.get(t.get("operator"))
+        if fn is None:
+            raise WorkflowError(f"unknown operator {t.get('operator')!r}")
+        inputs = {d: w.run.results[d].value for d in t.get("dependencies", [])}
+        return t, fn, args, inputs
 
-                        wdesc = DESCRIPTORS.get(op)
-                        for k, cv in wval["__wait_carry__"].items():
-                            if wdesc is None or k in wdesc.by_name:
-                                args.setdefault(k, cv)
-                # submit-time parameter validation against the operator's
-                # descriptor (reference: oph_tp_task_params_parser,
-                # oph_task_parser_library.h:67, called before dispatch) —
-                # a bad parameter fails the task with a named error instead
-                # of surfacing as a deep TypeError inside the operator; the
-                # operator gets the validated dict (defaults filled in,
-                # numbers parsed). The in-process flow operators
-                # (set/input/wait) are exempt: their implementations enforce
-                # the reference's own flow-control errors verbatim
-                # (oph_flow_control_operators.c messages), which must surface
-                # unchanged.
-                if op and op not in ("oph_set", "oph_input", "oph_wait"):
-                    from ophidia_server_spark.plans.descriptors import (
-                        ParamValidationError, operator_args)
+    @staticmethod
+    def _settle(w: _RunState, results: list[TaskResult]) -> None:
+        """Record a wave's results and apply each failure's on_error
+        (oph_workflow_define.h:63-70): abort and repeat fail the workflow;
+        break stops scheduling and leaves it COMPLETED; skip and break skip
+        the task's dependents; continue and nop let them run."""
+        for res in results:
+            w.record(res)
+            if res.status != ERROR:
+                continue
+            on_error = str(w.by_name[res.name].get("on_error", "abort")).lower()
+            if on_error in ("abort", "repeat"):
+                w.run.status = ERROR
+                w.stopped = True
+            elif on_error in ("break", "skip"):
+                w.stopped = w.stopped or on_error == "break"
+                w.blocked.add(res.name)
 
-                    try:
-                        args = operator_args(op, args)
-                    except ParamValidationError as e:
-                        # goes through the wave's result handling so the
-                        # task's on_error policy applies (abort by default)
-                        results.append(TaskResult(
-                            name, "OPH_ODB_STATUS_ERROR",
-                            error=f"ParamValidationError: {e}",
-                        ))
-                        continue
-                if op in ("oph_set", "oph_input"):
-                    # oph_input = oph_set + wake a waiting task
-                    # (oph_flow_control_operators.c:3155-3262 shares oph_set_impl)
-                    keys = [k for k in str(args.get("key", "")).split("|") if k]
-                    warning = self._validate_var_keys(keys)
-                    set_args = args
-                    if op == "oph_input":
-                        wid = str(args.get("id", "")).strip()
-                        if wid:
-                            try:
-                                wid_ok = float(wid) >= 0
-                            except ValueError:
-                                wid_ok = False
-                            if not wid_ok:
-                                raise WorkflowError(
-                                    f"Wrong workflow identifier '{wid}'!"
-                                )
-                        action = str(args.get("action", "")).lower()
-                        if action and action not in ("continue", "wait", "abort"):
-                            raise WorkflowError(f"Wrong action '{action}'!")
-                        src = str(args.get("taskname", "") or "")
-                        if src and src not in run.results:
-                            # wake-target semantics: taskname must name an
-                            # oph_wait task (oph_flow_control_operators.c:1338
-                            # matches OPH_OPERATOR_WAIT by name)
-                            if any(
-                                x.get("name") == src
-                                and x.get("operator") == "oph_wait"
-                                for x in tasks
-                            ):
-                                set_args = {**args, "taskname": ""}
-                            else:
-                                raise WorkflowError(
-                                    "Invalid task name, task not found or ambiguous!"
-                                )
-                    value = self._set_value(set_args, run)
-                    if len(keys) > 1:
-                        # multi-key zip: each key gets its '|'-slot; fewer
-                        # values than keys is the reference's exact error
-                        vals = str(value).split("|") if value is not None else []
-                        if len(vals) < len(keys):
-                            raise WorkflowError(
-                                "Bad number of keys in parameter 'value'."
-                            )
-                        for k, v in zip(keys, vals):
-                            run.variables[k] = v
-                    else:
-                        run.variables[keys[0]] = value
-                    record(
-                        TaskResult(
-                            name, "OPH_ODB_STATUS_COMPLETED", value, warning or None
-                        )
-                    )
-                    continue
-                if op == "oph_wait":
-                    status = self._wait(args, run)
-                    carry = (
-                        self._wait_carry(args)
-                        if status == "OPH_ODB_STATUS_COMPLETED" else None
-                    )
-                    record(TaskResult(
-                        name, status,
-                        {"__wait_carry__": carry} if carry else None,
-                    ))
-                    continue
-                fn = ops.get(op)
-                if fn is None:
-                    raise WorkflowError(f"unknown operator {op!r}")
-                inputs = {d: run.results[d].value for d in deps if d in run.results}
-                compute_batch.append((t, fn, args, inputs))
-
-            # the wave's compute tasks, on up to max_workers threads, each
-            # concurrent one in its own FAIR pool wf_<task> so wave members
-            # interleave their Spark jobs instead of queueing FIFO
-            results.extend(fan_out(
-                lambda item: self._dispatch(*item), compute_batch, max_workers,
-                lambda item: f"wf_{item[0]['name']}",
-            ))
-
-            for res in results:
-                record(res)
-                if res.status == "OPH_ODB_STATUS_ERROR":
-                    on_error = str(by_name[res.name].get("on_error", "abort")).lower()
-                    if on_error in ("abort", "repeat"):
-                        run.status = "OPH_ODB_STATUS_ERROR"
-                        stop_scheduling = True
-                    elif on_error == "break":
-                        # leave the workflow COMPLETED but stop scheduling the
-                        # rest (loop-break semantics)
-                        stop_scheduling = True
-                        blocked.add(res.name)
-                    elif on_error == "skip":
-                        blocked.add(res.name)
-                    # continue / nop: dependents still run
-            pending = [n for n in order if n not in run.results]
-        if run.status != "OPH_ODB_STATUS_ERROR":
-            # break: unscheduled remainder is skipped; abort leaves it
-            # unrecorded (the reference stops the workflow outright)
-            for n in pending:
-                if n not in run.results:
-                    run.results[n] = TaskResult(n, "OPH_ODB_STATUS_SKIPPED")
-        # exit-action GC (oph_workflow_define.h:72-79): tasks marked
-        # on_exit=oph_delete get their output cube deleted at workflow end
-        # via the registered oph_delete operator (errors are non-fatal, like
-        # the reference's best-effort final cleanup)
-        deleter = ops.get("oph_delete")
-        if deleter is not None:
-            from ophidia_server_spark.plans.descriptors import operator_args
-
-            for t in tasks:
-                if str(t.get("on_exit", "")).lower() != "oph_delete":
-                    continue
-                res = run.results.get(t["name"])
-                if res is None or res.status != "OPH_ODB_STATUS_COMPLETED" or res.value is None:
-                    continue
+    def _exit(self, w: _RunState) -> None:
+        """After the last wave: what a break left unscheduled is SKIPPED (an
+        abort leaves it unrecorded; the reference stops the workflow
+        outright). Then each task marked on_exit=oph_delete has its output
+        cube deleted through the registered oph_delete
+        (oph_workflow_define.h:72-79), best-effort like the reference's
+        final cleanup."""
+        if w.run.status != ERROR:
+            for n in w.pending():
+                w.run.results[n] = TaskResult(n, SKIPPED)
+        deleter = w.ops.get("oph_delete")
+        if deleter is None:
+            return
+        for t in w.tasks:
+            res = w.run.results.get(t["name"])
+            if (str(t.get("on_exit", "")).lower() == "oph_delete" and res is not None
+                    and res.status == COMPLETED and res.value is not None):
                 try:
                     deleter(self, operator_args("oph_delete", {"cube": res.value}), {})
                 except Exception:  # noqa: BLE001 - GC is best-effort
                     pass
-        return run

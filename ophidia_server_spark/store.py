@@ -79,6 +79,9 @@ class CubeStore:
     base_url: str = "http://spark-engine"
     _next_id: int = 1
     entries: dict[str, CubeEntry] = field(default_factory=dict)
+    # cube id -> PID of every entry, kept with `entries` (_add, delete), so a
+    # massive expansion resolves each id without scanning the catalog
+    by_id: dict[int, str] = field(default_factory=dict, repr=False, compare=False)
     metadata: dict[int, dict[str, str]] = field(default_factory=dict)
     lineage: list[tuple[int, str, int]] = field(default_factory=list)  # (out, task, in)
     folders: set[str] = field(default_factory=set)
@@ -198,7 +201,7 @@ class CubeStore:
         if materialize:
             storage = os.path.join(self.workspace, f"cube_{cid}")
             cube.df.write.mode("overwrite").parquet(storage)
-        entry = CubeEntry(
+        self._add(CubeEntry(
             pid=pid,
             cube_id=cid,
             container=container,
@@ -209,8 +212,7 @@ class CubeStore:
             implicit_dims=cube.implicit_dims,
             storage=storage,
             cube=None if materialize else cube,
-        )
-        self.entries[pid] = entry
+        ))
         for p in parents or []:
             self.lineage.append((cid, task, self.entries[p].cube_id))
         return pid
@@ -235,14 +237,18 @@ class CubeStore:
             .option("path", os.path.join(self.workspace, tbl))
             .saveAsTable(tbl)
         )
-        self.entries[pid] = CubeEntry(
+        self._add(CubeEntry(
             pid=pid, cube_id=cid, container=container,
             path=self._scoped(path).rstrip("/") + "/" + container,
             level=cube.level, measure=cube.measure,
             explicit_dims=cube.explicit_dims, implicit_dims=cube.implicit_dims,
             storage=f"table:{tbl}", cube=None,
-        )
+        ))
         return pid
+
+    def _add(self, e: CubeEntry) -> None:
+        self.entries[e.pid] = e
+        self.by_id[e.cube_id] = e.pid
 
     # -- fetch ----------------------------------------------------------------
     def get(self, pid: str) -> Cube:
@@ -299,6 +305,7 @@ class CubeStore:
         """oph_delete (oph_json_objkeys.h:105): drop storage + catalog row."""
         with self._lock:
             e = self.entries.pop(pid)
+            del self.by_id[e.cube_id]
             self._uncache(pid)
         self.metadata.pop(e.cube_id, None)
         if e.storage and e.storage.startswith("table:"):
@@ -497,13 +504,13 @@ def load_store(spark, path: str, workspace: str) -> CubeStore:
             for r in spark.read.parquet(os.path.join(path, "containers")).collect()
         }
     for r in spark.read.parquet(os.path.join(path, "entries")).collect():
-        st.entries[r.pid] = CubeEntry(
+        st._add(CubeEntry(
             pid=r.pid, cube_id=r.cube_id, container=r.container, path=r.path,
             level=r.level, measure=r.measure,
             explicit_dims=tuple(_json.loads(r.explicit_dims)),
             implicit_dims=tuple(_json.loads(r.implicit_dims)),
             storage=r.storage, cube=None,
-        )
+        ))
     for e in sorted(st.entries.values(), key=lambda e: e.cube_id):
         st.container_id(e.container)  # in first-use order where none was saved
     for r in spark.read.parquet(os.path.join(path, "metadata")).collect():

@@ -445,3 +445,42 @@ def test_dispatch_hands_the_operator_the_descriptor_defaults():
     assert run.status == "OPH_ODB_STATUS_COMPLETED"
     assert seen == {"cube": "c1", "limit": 100}
     assert type(seen["limit"]) is int
+
+
+# the functions of workflow.py that read a served flow operator's parameters
+_FLOW_FUNCS = ("_flow", "_wait", "_wait_carry", "_resolve_wait_file")
+
+
+def _flow_functions():
+    from ophidia_server_spark.plans import workflow
+
+    tree = ast.parse(open(workflow.__file__).read())
+    found = {n.name: n for n in ast.walk(tree)
+             if isinstance(n, ast.FunctionDef) and n.name in _FLOW_FUNCS}
+    assert sorted(found) == sorted(_FLOW_FUNCS)  # a renamed one fails here
+    return found.values()
+
+
+def test_flow_operators_restate_no_descriptor_default():
+    """oph_set, oph_input and oph_wait take every default from their
+    descriptors (workflow._flow_args): no `args.get("<key>", <literal>)` and
+    no `args.get("<key>") or <literal>` for a key one of them defaults."""
+    from ophidia_server_spark.plans.workflow import FLOW_SERVED
+
+    defaulted = {k for op in FLOW_SERVED for k, spec in DESCRIPTORS[op].by_name.items()
+                 if spec.default is not None}
+    literals, reads = [], set()
+    for fn in _flow_functions():
+        for node in ast.walk(fn):
+            key = _args_key(node)
+            reads.add(key)
+            if (_args_get(node) and len(node.args) == 2
+                    and all(isinstance(a, ast.Constant) for a in node.args)):
+                literals.append(key)
+            if (isinstance(node, ast.BoolOp) and _args_get(node.values[0])
+                    and isinstance(node.values[-1], ast.Constant)):
+                literals.append(key)
+    assert [k for k in literals if k in defaulted] == []
+    # the scan sees the flow operators' reads
+    assert {"type", "timeout", "timeout_type", "run", "key", "value", "taskname",
+            "subset_filter", "offset"} <= reads

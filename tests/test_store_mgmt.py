@@ -436,6 +436,28 @@ def test_massive_unknown_explicit_pid_is_named_error(spark, tmp_path, max_worker
         eng.run(wf, max_workers=max_workers)
 
 
+def test_pid_map_follows_the_entries(spark, tmp_path):
+    # the PID resolver's cube id -> PID map agrees with a scan of the
+    # entries after every kind of change to them
+    from ophidia_server_spark.plans.server import build_default_engine
+    from ophidia_server_spark.store import load_store, save_store
+
+    def scan(st):
+        return {e.cube_id: pid for pid, e in st.entries.items()}
+
+    st, pids = _virtual_store(spark, tmp_path)
+    assert st.by_id == scan(st) and len(st.by_id) == 6
+    st.delete(pids[0])
+    assert st.deletecontainer("c1") == 3
+    kept = st.register(st.get(pids[2]), "c2", materialize=True)
+    assert st.by_id == scan(st) and sorted(st.by_id.values()) == sorted([pids[2], pids[4], kept])
+    save_store(st, str(tmp_path / "catalog"))
+    loaded = load_store(spark, str(tmp_path / "catalog"), str(tmp_path))
+    assert loaded.by_id == scan(loaded) == scan(st)
+    resolve = build_default_engine(spark, loaded).pid_resolver
+    assert resolve(str(loaded.entries[kept].cube_id)) == kept
+
+
 # -- management shims ---------------------------------------------------------
 
 def test_manage_session_roundtrip(spark):
